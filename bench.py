@@ -21,11 +21,8 @@ keep their old meaning on the best run (minima), so older tooling and
 ``bench_compare.py`` read the file unchanged. Pass ``--runs 1`` for
 the quick iteration loop.
 
-Note (ADVICE r11): the two e2e twins' RETURNED row counts are not
-cross-mode comparable — parquet mode returns range(tensors count) (its
-count() is part of the r10-continuity timed region), memory mode
-returns range(1) (its leaves are noop-forced). Cross-mode value parity
-is the oracle sweep's job (tests/test_r11_wave.py), not this counter's.
+The composed MIMIC pipeline is not in this battery: ``perfbench/run.py``
+times it warm and traces it per stage.
 """
 
 from __future__ import annotations
@@ -136,16 +133,6 @@ HEADLINE = [
     # (exercises the partition-local contraction fast path added in r8;
     # tracked so the clustered-layout CC plan is measured every round).
     "q210_geo_clusters",
-    # round-6: the reference's actual workload shape end-to-end
-    # (cohort -> cleaning -> windows -> dense grid -> features/tensors,
-    # six stage writes) — regression-guards the composed pipeline, not
-    # just operator micro-queries. Single-run (see ONCE).
-    "e2e_mimic_pipeline",
-    # round-11: the same composed pipeline with in-memory stage
-    # handoffs (localCheckpoint boundaries, lazy leaves) — the
-    # parquet/memory seam win tracked side by side with the
-    # file-handoff twin above. Single-run (see ONCE).
-    "e2e_mimic_pipeline_mem",
 ]
 
 
@@ -175,170 +162,10 @@ def _q180_bootstrap_xxhash(spark, sf_dir):
     )
 
 
-def _e2e_tables(spark, sf_dir):
-    """Declaratively generated MIMIC-shaped inputs scaled by sf (30k
-    stays / ~3M chart events at sf0.1 — the r1 PERF.md probe shape),
-    deterministic via xxhash64. Shared by both e2e handoff modes.
-
-    Built from parsed SQL strings (r12, guide §5): this builder runs
-    inside BOTH e2e entries' timed regions, and the Column-algebra form
-    cost ~0.9 s of single-threaded driver time per run (py4j chatter +
-    one eager JVM re-analysis per Dataset op). The expressions — and
-    therefore every generated value — are identical
-    (tests/test_r12_fixes.py pins old-form == new-form row multisets)."""
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    n_stays = max(1_000, int(300_000 * sf))
-    n_subjects = max(500, n_stays // 2)
-    base = "to_timestamp('2150-01-01 00:00:00')"
-
-    stays_sql = [
-        "id AS stay_id",
-        f"pmod(xxhash64(id), {n_subjects}) AS subject_id",
-        "CAST(NULL AS BIGINT) AS _pad",
-    ]
-    admit = (
-        f"timestamp_seconds(unix_timestamp({base})"
-        f" + pmod(xxhash64(stay_id, 1), {300 * 86400}))"
-    )
-    los_h = "CAST(pmod(xxhash64(stay_id, 2), 264) + 24 AS INT)"  # 1-12 d
-    icustays = spark.range(n_stays).selectExpr(*stays_sql).selectExpr(
-        "subject_id",
-        "stay_id AS hadm_id",
-        "stay_id",
-        f"{admit} AS intime",
-        f"timestamp_seconds(unix_timestamp({admit})"
-        f" + CAST({los_h} AS BIGINT) * 3600) AS outtime",
-        f"{los_h} / 24.0D AS los",
-    )
-    admissions = icustays.selectExpr(
-        "subject_id",
-        "hadm_id",
-        "intime AS admittime",
-        "outtime AS dischtime",
-        "CAST(NULL AS TIMESTAMP) AS deathtime",
-        "CAST(pmod(xxhash64(hadm_id, 3), 20) = 0 AS INT) AS hospital_expire_flag",
-        "'Private' AS insurance",
-        "'OTHER' AS ethnicity",
-    )
-    patients = icustays.select("subject_id").distinct().selectExpr(
-        "subject_id",
-        "CASE WHEN pmod(xxhash64(subject_id, 4), 2) = 0 THEN 'M' ELSE 'F' END"
-        " AS gender",
-        # ~15% minors, filtered by min_age
-        "CAST(pmod(xxhash64(subject_id, 5), 85) + 5 AS INT) AS anchor_age",
-        "CAST(2150 AS INT) AS anchor_year",
-        "'2008 - 2010' AS anchor_year_group",
-        "CAST(NULL AS TIMESTAMP) AS dod",
-    )
-    ev_per_stay = 100
-    events = (
-        spark.range(n_stays * ev_per_stay)
-        .selectExpr(f"CAST(id / {ev_per_stay} AS BIGINT) AS stay_id", "id AS eid")
-        .join(icustays.select("stay_id", "intime", "los"), "stay_id")
-        .selectExpr(
-            "stay_id",
-            "timestamp_seconds(unix_timestamp(intime)"
-            " + pmod(xxhash64(eid, 6), CAST(los * 86400 + 14400 AS BIGINT))"
-            " - 7200) AS charttime",
-            "pmod(xxhash64(eid, 7), 3) + 220045 AS itemid",
-            "CASE WHEN pmod(xxhash64(eid, 8), 50) = 0 THEN 9999.0D"
-            " ELSE 70.0D + pmod(xxhash64(eid, 9), 2000) / 100.0D END AS valuenum",
-            "CASE WHEN pmod(xxhash64(eid, 10), 30) = 0 THEN 'BPM' ELSE 'bpm' END"
-            " AS valueuom",
-        )
-    )
-    return {
-        "visits": icustays,
-        "patients": patients,
-        "admissions": admissions,
-        "events": events,
-    }
-
-
-def _run_e2e(spark, sf_dir, handoff):
-    import shutil
-    import tempfile
-
-    from mimic_iv_data_pipeline_spark.plans.pipeline import (
-        PipelineConfig,
-        run_pipeline,
-    )
-
-    out_dir = tempfile.mkdtemp(prefix="bench_e2e_")
-    try:
-        # Memory mode forces every leaf the parquet mode forces by
-        # writing — same stage set end to end — via run_pipeline's
-        # leaf_consumer overlap hook (optimization r12, guide §2.6):
-        # each leaf's noop job is submitted from the pipeline's own
-        # 2-thread pool the moment its input boundary is pinned, so
-        # summary's job back-fills executors WHILE the timeseries
-        # boundary computes (the parquet twin's async leaf writes have
-        # had this shape since r11; the mem twin used to serialize
-        # summary after the dense materialization and then force all
-        # three leaves post-hoc). Same DAGs computed, same noop sink.
-        #
-        # Measurement fix (optimization r11, guide §1.4): the leaves
-        # were previously forced with .count(), which lets the
-        # optimizer PRUNE the aggregate payloads — a count() over
-        # dl_tensor_frame computes only distinct ids, never the
-        # collect_list/sort_array tensors (verified by plan), so the
-        # mem twin under-measured exactly the work the parquet twin
-        # pays for by writing. The noop sink computes every column
-        # of every row without sink cost; pre-fix numbers are kept
-        # in bench_runs_r11/ (see OPTIMIZATION_r11.md).
-        def _force(df, _name):
-            df.write.format("noop").mode("overwrite").save()
-
-        staged = run_pipeline(
-            spark,
-            _e2e_tables(spark, sf_dir),
-            out_dir,
-            PipelineConfig(include_hours=48, bucket_hours=2),
-            handoff=handoff,
-            leaf_consumer=_force if handoff == "memory" else None,
-        )
-        if handoff == "memory":
-            n = 1
-        else:
-            n = staged["tensors"].count()
-        return spark.range(n)  # bench counts this (cheap, stable)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def _e2e_mimic_pipeline(spark, sf_dir):
-    """The reference's ACTUAL workload shape, end to end: cohort →
-    UoM/outlier cleaning → 48 h window → 2 h buckets → dense grid +
-    mean impute → feature matrix + tensor frame, six parquet stage
-    writes (plans/pipeline.py:run_pipeline — handoff="parquet", the
-    reference's csv.gz file-handoff semantics). Run ONCE per bench
-    (see ONCE below): the entry is eager (it writes its stages), so
-    warm-run timing would triple the cost while measuring the same DAG.
-    """
-    return _run_e2e(spark, sf_dir, "parquet")
-
-
-def _e2e_mimic_pipeline_mem(spark, sf_dir):
-    """The same composed pipeline with handoff="memory" (r10 verdict
-    item 6): multi-consumer stages pin via localCheckpoint instead of
-    parquet round-trips, leaves stay lazy. Benched next to the parquet
-    twin every round so the seam's win is a tracked number, not a
-    one-off probe. Values are mode-identical (tests/test_r11_wave.py).
-    """
-    return _run_e2e(spark, sf_dir, "memory")
-
-
 EXTRA = {
     "q92_edit_distance_nocap": _q92_edit_distance_nocap,
     "q180_bootstrap_xxhash": _q180_bootstrap_xxhash,
-    "e2e_mimic_pipeline": _e2e_mimic_pipeline,
-    "e2e_mimic_pipeline_mem": _e2e_mimic_pipeline_mem,
 }
-
-# Entries that are eager end-to-end plans (stage writes inside): timed
-# with a single run, no codegen warm-up — the warm-up would re-execute
-# the whole pipeline for the same measurement.
-ONCE = {"e2e_mimic_pipeline", "e2e_mimic_pipeline_mem"}
 
 
 def main() -> None:
@@ -390,8 +217,7 @@ def main() -> None:
     # Per-battery-run loop: run r's timings are min-of-2 timed
     # executions per query (after a codegen warm-up execution in run 1
     # only — the JVM's codegen cache persists across runs); the
-    # committed number is the min ACROSS runs. ONCE entries (eager
-    # end-to-end plans with stage writes) execute once total, in run 1.
+    # committed number is the min ACROSS runs.
     canaries: list[list[float]] = []
     run_totals: list[float] = []
     best_t: dict[str, float] = {}
@@ -400,20 +226,13 @@ def main() -> None:
         run_total = 0.0
         for name in HEADLINE:
             fn = queries[name]
-            if name in ONCE:
-                if run > 0:
-                    continue
+            if run == 0:
+                fn(spark, sf_dir).count()  # codegen warm-up run
+            best = float("inf")
+            for _ in range(2):
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
-                best = time.perf_counter() - t0
-            else:
-                if run == 0:
-                    fn(spark, sf_dir).count()  # codegen warm-up run
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).count()
-                    best = min(best, time.perf_counter() - t0)
+                best = min(best, time.perf_counter() - t0)
             dt = round(best, 3)
             run_total += dt
             best_t[name] = min(best_t.get(name, float("inf")), dt)
@@ -442,7 +261,7 @@ def main() -> None:
                 "canary_sec": canaries[run_totals.index(min(run_totals))][0],
                 "canary_end_sec": canaries[run_totals.index(min(run_totals))][1],
                 "runs": n_runs,
-                "run_totals": run_totals,  # ONCE entries count in run 1 only
+                "run_totals": run_totals,
                 "canaries": canaries,  # per-run (start, end) pairs
                 "sf": sf,
             }

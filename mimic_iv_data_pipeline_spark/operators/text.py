@@ -89,14 +89,6 @@ def with_quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_scores(text: Column) -> list[Column]:
-    """Per-language marker-hit counts, one aliased column per language."""
-    return [
-        marker_hits(text, words).alias(f"score_{lang}")
-        for lang, words in LANG_MARKERS.items()
-    ]
-
-
 def predict_language(df: DataFrame, text_col: str = "text", out_col: str = "pred_lang") -> DataFrame:
     """Language ID: argmax of marker-hit counts with deterministic
     alphabetical tie-break (ties → first language name in order).

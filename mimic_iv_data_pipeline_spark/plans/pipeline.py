@@ -133,7 +133,7 @@ def run_pipeline(
 
     ``leaf_consumer`` (memory mode only): optional ``fn(df, name)``
     submitted to the overlap pool per leaf stage, so a caller that is
-    going to FORCE the leaves anyway (the bench's noop sink; a user
+    going to FORCE the leaves anyway (perfbench's noop sink; a user
     writing them to their own store) gets the same §2.6 back-fill the
     parquet mode's async leaf writes already have — summary's job
     overlaps the timeseries boundary instead of serializing after it.
@@ -220,7 +220,7 @@ def run_pipeline(
     # The whole body runs under try/finally (ADVICE r11): if any stage
     # after a _leaf submit raises (e.g. the feature-vocab cap), the
     # in-flight leaf writes must be joined before the exception reaches
-    # the caller — otherwise caller cleanup (bench's rmtree of out_dir)
+    # the caller — otherwise caller cleanup (an rmtree of out_dir)
     # races the still-running writes and masks the original error with
     # confusing secondary failures. cancel_futures drops queued-but-
     # unstarted writes; shutdown(wait=True) joins the running ones.

@@ -38,149 +38,23 @@ _MODULES = [
     "stats",
 ]
 
-# Driver-window rotation schedule (standing; restructured in round 7 per
-# the r6 verdict — the old 15-query every-round core left only ~2 rotation
-# slots per round against a 219-query registry). The correctness driver
-# records rows for only the FIRST 50 registry entries per round, allocated:
-#   (a) REDS + never-driver-checked queries first (must-have rows),
-#   (b) new queries added this round,
-#   (c) an EVERY-ROUND 8-query regression core (one per §2 family):
-#       q03 q04 q18 q19 q20 q32 q34 q42, plus an ALTERNATE-round core
-#       (q08 q14 q15 q17 q26 q39 q45) that runs in even rounds —
-#       together the old 15-query baseline-comparable bench subset,
-#   (d) a ROTATING block filling the window to 50, drawn from the
-#       remaining oracled queries ordered by driver-row age (oldest
-#       first, name order within a round) — ~42 rotation slots in odd
-#       rounds, ~35 in even rounds (less any new queries), so the
-#       ~195 rotating oracled queries re-earn rows on a ≤5-round
-#       cycle, and NO slot may skip past a staler eligible query
-#       (pinned by tests/test_manifest.py).
+# Driver-window rotation rule. The correctness driver records rows for
+# only the FIRST 50 registry entries per round; _PRIORITY fills that
+# window in this order (pinned by tests/test_manifest.py):
+#   (a) queries that were red last round, then never-driver-checked ones;
+#   (b) queries new this round;
+#   (c) the every-round 8-query core, one per SURVEY §2 family (q03 q04
+#       q18 q19 q20 q32 q34 q42), plus in even rounds the alternate-round
+#       7 (q08 q14 q15 q17 q26 q39 q45);
+#   (d) every remaining slot to the oldest eligible (oracled) queries by
+#       driver-row age, oldest round first, name order within a round —
+#       no slot may skip past a staler query.
+# Each round's manifest, with its reasons, is recorded in CHANGES.md.
 #
-# r5 manifest: (a) q117-q123 (added after r4's window filled — 7 first
-#   driver rows); (b) q124-q138 (new this round: the fixed-parameter
-#   oracle family — ADC search/rerank, WordPiece + unigram encode,
-#   MinHash-LSH md5, exact-probe RAG, incremental-dedup md5, SimHash
-#   md5, hyperplane-LSH md5, IVF fixed-centroid, SemDeDup
-#   fixed-centroid, BPE fixed-merge-list, IVF-PQ fixed, one-step
-#   Lloyd fixed, PCA fixed-basis projection — 15 first driver rows),
-#   PLUS the r5 second-wave operators q139-q147 (SCD-2 history,
-#   table profile, expectations validation, PageRank, ANN recall@5,
-#   point-in-time join, Bloom-prefiltered join, incremental rollup
-#   merge, unpivot, retention cohorts, grouping sets, MMR re-rank — 12
-#   more first driver rows);
-#   (c) the
-#   core; (d) 1 of the 26 r1-aged queries: q16
-#   (q33 event-time normalize defers — q18/q19 core date arithmetic +
-#   q49 interval family; q37 lang-id defers — bench-tracked every round and its
-#   text-stat family is q109/q111/q86 r4-green; q21 sessionize defers — its event-window family is
-#   covered by q148 fresh this round plus the streaming sessionize
-#   tests). The rest held back to fit the window
-#   keep family coverage elsewhere (q02 filter/project ~ q03/q08
-#   core scans; q05 anti-join ~ q04 semi-join core + q141's FK
-#   anti-join fresh this round; q06 dedup-first ~ q34 dedup + q15
-#   window core;
-#   q07 clamp ~ q16 same clamp family in-window; q11 string fns ~
-#   q14 core substring/EPC family; q25 rank-AUC ~ q51/q52/q57 eval
-#   family; q27 global topk ~
-#   q17 per-group topk core; q29 hourly buckets ~ q31/q33 temporal
-#   rows (q33 in-window) + bench-tracked; q31 dense grid ~ q33
-#   in-window + q49 interval family; q09 unions ~ q45 set-ops core;
-#   q10 distinct counts ~ q01/q45 agg core; q22 quantile bins ~ q94
-#   source-quantiles r4-green; q23 calibration bins ~ q51/q52/q57
-#   eval family r3-green; q12 date fns ~
-#   q18/q19 core date arithmetic; q13 json ~ q11 scalar fns; q28
-#   rollup ~ q54 cube r3-green; q30 tumbling twin of q29; q35/q36
-#   token/quality stats ~ q109/q111/q86 fresh in r4; q38 fingerprint
-#   ~ q34 dedup core; q46 one-hot ~ q45; q47 label-encode ~ q26
-#   vocab core) and LEAD r6's (d) block with r3-aged/rows-only rows.
-# r6 manifest (EXECUTED below): (a) no r5 reds; the 56
-#   never-driver-checked q151-q206 minus 21 cuts = 35 first driver
-#   rows, then (c) the stable 15-query core = 50. Cut order (each cut
-#   is covered by a fresh green sibling family IN-WINDOW this round):
-#   q172/q174 (q171 RANGE frame + q173 fold in-window), q178/q179
-#   (q177 exact-sum stats), q188 (q153 funnel + q171 event windows),
-#   q191 (q176 shares the rank/ntile prefix engine), q175 (q176
-#   shares the prefix-sum engine), q164 (q153 funnel recurrence),
-#   q165/q166 (q167 KS + q157 MI cover the diagnostics family), q197
-#   (q158 CUPED shares the two-group moment shape), q185 (q168 shares
-#   the basket pair join), q183 (its windows are q194's cum shape),
-#   q187/q192 (q173's fold + q171's frame twins), q186 (q200 relaxes
-#   the same frontier with weights), q199 (q187's fold family via
-#   q173 + micro-quantized sums shared with q176), plus 4 more to fit
-#   the window: q184 (q157 MI shares the contingency/log-ratio
-#   shape), q169 (q168 shares the pair-count normalization), q195
-#   (q194 shares the per-bin class-stat shape), q202 (q173 shares the
-#   decay-weighted recurrence).
-# r7 manifest (EXECUTED below): (a) no r6 reds — CORRECTNESS_r06 was
-#   50/50 green; (b) ALL 33 never-driver-checked queries: the 21 r6
-#   window cuts (q164 q165 q166 q169 q172 q174 q175 q178 q179 q183
-#   q184 q185 q186 q187 q188 q191 q192 q195 q197 q199 q202) plus the
-#   r6-new q207-q218, plus r7's own q219 (notes-NLP oracle twin — the
-#   last SURVEY §2 surface without a driver row); (c) the every-round
-#   core, SHRUNK 15 → 8 per the r6 verdict (one per §2 family: q03
-#   joins/agg, q04 semi, q18 lookahead window, q19 as-of, q20
-#   ffill/bfill, q32 pivot, q34 dedup, q42 ANN) so rotation keeps
-#   pace with the 219-query registry; the 7 demoted core members (q08
-#   q14 q15 q17 q26 q39 q45) move to the ALTERNATE-round core,
-#   running in even rounds (r8, r10, ...); (d) the 8 OLDEST aged rows
-#   (all r2: q02 q05 q06 q07 q09 q10 q11 q12). Rows-only entries
-#   (q40 q41 q44 q53 q60 q87 q91 q93 q102-q107 q114 q115 q122) stay
-#   out of the window — each has a green fixed-parameter oracle twin
-#   (q124-q138) carrying its family.
-# r8 manifest (EXECUTED below): (a) no r7 reds — CORRECTNESS_r07 was
-#   50/50 green; (b) no never-checked queries remain (219/219 have
-#   rows after r7) and r8 adds no new oracled queries; (c) the 8-core
-#   + the 7 alternate-core members (r8 is even); (d) the 35 oldest
-#   aged rows: the full 18-query r2 remainder (q13 q21 q22 q23 q25
-#   q27 q28 q29 q30 q31 q33 q35 q36 q37 q38 q43 q46 q47) plus the 17
-#   oldest r3 rows (q24, then q48-q65 in name order, skipping the
-#   rows-only q53/q60). This clears the r2 block entirely.
-# r9 manifest (EXECUTED below): (a) no r8 reds — CORRECTNESS_r08 was
-#   50/50 green; (b) TWO never-checked queries lead the window: q220
-#   negative_sample and q221 hard_negatives (new this round); (c) the
-#   8-core only (alternate-7 sit out — odd round); (d) the 40 oldest
-#   aged rows: the full remaining r3 block (q66-q77, q79-q83 — 17
-#   rows; q78 took a fresh row in r4), then the 23 oldest r4 rows
-#   (q01 q100 q101 q108-q113 q116 q78 q84-q86 q88-q90 q92 q94-q98 in
-#   (round, name) order; q99 and q117 return to rotation in r10).
-#   After r9 no driver row is older than r4.
-# r10 manifest (EXECUTED below): (a) no r9 reds — CORRECTNESS_r09 was
-#   50/50 green; (b) ONE never-checked query leads the window: q222
-#   negative_sample over STRING doc ids (new this round — the r9
-#   verdict item 3 oracle twin); (c) the 8-core + alternate-7 (even
-#   round); (d) the 34 oldest aged rows: the 2-query r4 remainder
-#   (q99 q117, back in rotation as planned) then the 32 oldest r5
-#   rows (q118-q121, q123-q150 in name order — the fixed-twin block
-#   q123-q138 plus the warehouse/analytic r5 block). After r10 the
-#   oldest driver row is r5 (the q151+ tail).
-# r11 manifest (EXECUTED below): (a) no r10 reds — CORRECTNESS_r10
-#   was 50/50 green; (b) ONE never-checked query leads the window:
-#   q223 negative_sample over PREFIX-SKEWED url-style doc ids (new
-#   this round — the ADVICE-r10 range-bucketed-rank fallback's oracle
-#   twin); (c) the 8-core only (odd round — alternate-7 sit out);
-#   (d) the 41 oldest aged rows: the r5 remainder (q16 — q122 is
-#   rows-only, ineligible), the full r6 block (35 rows, name order),
-#   then the 5 oldest r7 rows (q02 q05 q06 q07 q09). After r11 the
-#   oldest driver row is r7.
-# r12 manifest (EXECUTED below): (a) no r11 reds — CORRECTNESS_r11
-#   was 50/50 green; (b) no r12-new queries (optimization round — no
-#   new features, so no never-checked rows exist); (c) the 8-core +
-#   alternate-7 (even round); (d) the 35 oldest aged rows: the full
-#   r7 remainder (q10 q11 q12 q164-q166 q169 q172 q174 q175 q178 q179
-#   q183-q188 q191 q192 q195 q197 q199 q202 q207-q217 in name order).
-#   After r12 the oldest driver row is r8.
-# r13 plan: (a) any r12 reds; (b) first rows for r13-new queries;
-#   (c) the 8-core only (odd round — alternate-7 sit out); (d) oldest-
-#   first aged rows to 50 — the r8 block next. Rotation policy
-#   (pinned by tests/test_manifest.py::test_aged_slots_are_oldest_first):
-#   after never-checked + core, every remaining slot goes to the oldest
-#   eligible (oracled) queries, oldest round first, name order within
-#   a round — no slot may skip past a staler query.
-# The round this manifest targets: tests/test_manifest.py evaluates
-# the oldest-first rotation against driver history STRICTLY BEFORE
-# this round, so the pin holds before and after the round's own
-# CORRECTNESS file lands (even a partial one from a crashed driver).
-# Bump together with the manifest each round.
+# _MANIFEST_ROUND is the round this manifest targets: the test evaluates
+# the rotation against driver history STRICTLY BEFORE this round, so the
+# pin holds before and after the round's own CORRECTNESS file lands (even
+# a partial one from a crashed driver). Bump it with the manifest.
 _MANIFEST_ROUND = 12
 
 _PRIORITY = [

@@ -14,6 +14,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_memory(ram_bytes: int) -> str:
+    """Driver heap for a host with ``ram_bytes`` of physical memory:
+    min(16g, RAM/2) in whole GiB, at least 1g. Half of RAM leaves room
+    for the JVM's off-heap memory, the Python workers and the OS page
+    cache; 16g is the ceiling measured as enough for the local[32]
+    harness (see the ``spark.driver.memory`` entry below)."""
+    return f"{max(1, min(16, ram_bytes // 2 // 2**30))}g"
+
+
 # Tuned for the local[32]/128GiB test harness; on a real cluster the
 # submitter overrides master/memory and shuffle partitions scale with
 # executor count (AQE coalesces the excess at runtime either way).
@@ -44,31 +54,23 @@ DEFAULT_CONFIG: dict[str, str] = {
     # localCheckpoint blocks evict, and the whole bench pays a constant
     # GC tax (measured: a 12-query battery at 16 g is 0.60-0.65× the
     # 1 GB default under identical interleaved conditions, every query
-    # at or below parity). 16 g is ~12% of the 128 GiB harness box. On
-    # a real cluster this conf is set at submit time per executor
-    # (spark.executor.memory) and this entry — honored only when the
-    # session actually creates the JVM — is simply superseded.
-    # Env-overridable (ADVICE r11: a consumer on a smaller machine can
-    # set SPARK_GRAFT_DRIVER_MEMORY without forking the library).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "16g"),
-    # GC (guide §5): back to the JDK-17 G1 default (optimization r12,
-    # third session). The r11 ParallelGC choice was adjudicated twice
-    # on cold-JVM MINIMA and both A/Bs read parity (PGC/G1 0.986 one
-    # round, G1/PGC 0.974 the next — inside the host's noise both
-    # times). What minima cannot see is the TAIL: per-query GC MXBean
-    # attribution over a full battery showed ParallelGC spending
-    # 25.5% of battery wall in GC (64.8 s / 253.7 s) with 15-25 s
-    # stop-the-world storms landing inside individual timed windows
-    # (q39 best 8.1 s vs 1.6 s, e2e_mem +6 s GC), vs 2.7% (6.6 s)
-    # under G1 — and the two e2e entries execute ONCE per bench, so a
-    # storm there goes straight into the committed number (observed:
-    # PGC e2e reps 14.0/14.2/17.3 s vs G1 13.3/12.9/13.7). Equal
-    # expected throughput + an order-of-magnitude thinner GC tail ⇒
-    # G1. Env-overridable so a cold-JVM A/B can toggle the collector
-    # per process (SPARK_GRAFT_GC_OPTS="-XX:+UseParallelGC").
-    "spark.driver.extraJavaOptions": os.environ.get(
-        "SPARK_GRAFT_GC_OPTS", "-XX:+UseG1GC"
+    # at or below parity). 16 g is ~12% of the 128 GiB harness box; a
+    # smaller host gets half its RAM (a 16 g heap on a 15 GiB host was
+    # OOM-killed). On a real cluster this conf is set at submit time per
+    # executor (spark.executor.memory) and this entry — honored only
+    # when the session actually creates the JVM — is simply superseded.
+    # SPARK_GRAFT_DRIVER_MEMORY overrides it per deployment.
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEMORY",
+        default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
     ),
+    # GC (guide §5): the JDK-17 G1 default. ParallelGC read parity on
+    # cold-JVM minima but spent 25.5% of a full battery's wall in GC
+    # (15-25 s stop-the-world storms inside single timed windows) against
+    # 2.7% under G1: equal throughput, an order-of-magnitude thinner GC
+    # tail (PERF.md). A caller that wants another collector passes the
+    # conf to get_spark.
+    "spark.driver.extraJavaOptions": "-XX:+UseG1GC",
     # DRIVER-side DataFrame construction cost (guide §5): with this
     # public conf at its default (true), EVERY classic Column/DataFrame
     # method pays a Python stack walk plus three extra py4j round-trips
@@ -79,10 +81,8 @@ DEFAULT_CONFIG: dict[str, str] = {
     # default for this engine (errors still carry the JVM stack and the
     # failing expression); scale-independent — this is per-op driver
     # latency, identical on a laptop or a 100 TB cluster submitter.
-    # Env-overridable for debugging sessions.
-    "spark.python.sql.dataFrameDebugging.enabled": os.environ.get(
-        "SPARK_GRAFT_DF_DEBUGGING", "false"
-    ),
+    # A debugging session passes it as true to get_spark.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -15,10 +15,10 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    # 16g heap: the default 1g survives sf0.01 but the optional sf0.1
-    # oracle sweep runs real workloads (in local mode ALL execution
-    # memory is the driver heap — same reasoning as the probe scripts)
-    s = get_spark("tests", **{"spark.driver.memory": "16g"})
+    # driver heap: the library default, min(16g, RAM/2). The optional
+    # sf0.1 oracle sweep runs real workloads and in local mode ALL
+    # execution memory is the driver heap (PERF.md, "r5 scale probes")
+    s = get_spark("tests")
     yield s
 
 

@@ -1,4 +1,4 @@
-"""The engine-defaults deployment seam (engine.py)."""
+"""The engine-defaults deployment seams (engine.py, session.py)."""
 
 from __future__ import annotations
 
@@ -6,6 +6,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from mimic_iv_data_pipeline_spark.engine import MATERIALIZE_CONF, materialize
+from mimic_iv_data_pipeline_spark.session import default_driver_memory
+
+GIB = 2**30
+
+
+def test_default_driver_memory_fits_the_host():
+    """The driver heap is min(16g, RAM/2), at least 1g: a 16g heap on a
+    15 GiB host gets the JVM OOM-killed, and the 128 GiB harness keeps
+    its measured 16g."""
+    assert default_driver_memory(1 * GIB) == "1g"
+    assert default_driver_memory(15 * GIB) == "7g"
+    assert default_driver_memory(128 * GIB) == "16g"
 
 
 def test_materialize_local_default(spark):

@@ -96,6 +96,16 @@ def mimic_fixture(spark):
     }
 
 
+def _pipeline_tables(fx):
+    """The fixture's tables under the names run_pipeline reads."""
+    return {
+        "visits": fx["icustays"],
+        "patients": fx["patients"],
+        "admissions": fx["admissions"],
+        "events": fx["chartevents"],
+    }
+
+
 def test_full_icu_mortality_pipeline(spark, mimic_fixture):
     fx = mimic_fixture
     # --- stage 1: cohort ---------------------------------------------------
@@ -190,12 +200,7 @@ def test_run_pipeline_orchestrator(spark, mimic_fixture, tmp_path):
     out = str(tmp_path / "pipe")
     stages = run_pipeline(
         spark,
-        {
-            "visits": mimic_fixture["icustays"],
-            "patients": mimic_fixture["patients"],
-            "admissions": mimic_fixture["admissions"],
-            "events": mimic_fixture["chartevents"],
-        },
+        _pipeline_tables(mimic_fixture),
         out,
         PipelineConfig(include_hours=24, bucket_hours=2, outlier_pcts=(0.05, 0.95)),
     )
@@ -233,12 +238,7 @@ def test_run_pipeline_handoff_modes_value_equal(spark, mimic_fixture, tmp_path):
         run_pipeline,
     )
 
-    tables = {
-        "visits": mimic_fixture["icustays"],
-        "patients": mimic_fixture["patients"],
-        "admissions": mimic_fixture["admissions"],
-        "events": mimic_fixture["chartevents"],
-    }
+    tables = _pipeline_tables(mimic_fixture)
     cfg = PipelineConfig(
         include_hours=24, bucket_hours=2, outlier_pcts=(0.05, 0.95)
     )
@@ -269,3 +269,71 @@ def test_run_pipeline_handoff_modes_value_equal(spark, mimic_fixture, tmp_path):
     dt = {r[0]: sorted(r["series"].items()) for r in disk["tensors"].collect()}
     mt = {r[0]: sorted(r["series"].items()) for r in mem["tensors"].collect()}
     assert dt == mt
+
+
+def test_run_pipeline_joins_leaf_writes_on_exception(spark, mimic_fixture, tmp_path):
+    """If a stage AFTER a leaf submit raises, run_pipeline must join the
+    in-flight leaf writes before propagating, so caller cleanup can't
+    race them. Trigger: a feature-vocab cap of 1 (the fixture has three
+    item codes) raises in _collect_feature_vocab, which runs after the
+    summary leaf submit."""
+    import os
+
+    from mimic_iv_data_pipeline_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    out_dir = str(tmp_path / "pipe")
+    cfg = PipelineConfig(include_hours=4, bucket_hours=2, max_feature_vocab=1)
+    with pytest.raises(ValueError, match="feature vocabulary exceeds"):
+        run_pipeline(spark, _pipeline_tables(mimic_fixture), out_dir, cfg, handoff="parquet")
+    # the summary leaf write was submitted before the raise; the finally
+    # must have joined it — its _SUCCESS marker is complete on disk
+    assert os.path.exists(os.path.join(out_dir, "summary", "_SUCCESS"))
+
+
+def test_run_pipeline_memory_leaf_consumer(spark, mimic_fixture, tmp_path):
+    """Memory mode with a leaf_consumer: the consumer sees every leaf
+    exactly once, its futures are joined before return, and the
+    returned leaves still carry the same values as a consumer-less run."""
+    import math
+
+    from mimic_iv_data_pipeline_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    tables = _pipeline_tables(mimic_fixture)
+    cfg = PipelineConfig(include_hours=12, bucket_hours=2)
+    seen: list[str] = []
+
+    def consumer(df, name):
+        seen.append(name)
+        df.write.format("noop").mode("overwrite").save()
+
+    staged = run_pipeline(
+        spark, tables, str(tmp_path / "unused"), cfg,
+        handoff="memory", leaf_consumer=consumer,
+    )
+    assert sorted(seen) == ["features", "summary", "tensors"]
+    plain = run_pipeline(
+        spark, tables, str(tmp_path / "unused2"), cfg, handoff="memory",
+    )
+    # summary is deterministic (long sums + dround-ed ratios of longs):
+    # exact compare. features carries UNROUNDED avg() of doubles whose
+    # partial-sum order follows shuffle fetch-arrival order — two plain
+    # runs of the SAME code differ in the last ulp — so compare to 1e-9
+    # relative.
+    a = sorted(map(tuple, staged["summary"].collect()))
+    b = sorted(map(tuple, plain["summary"].collect()))
+    assert a == b
+    fa = sorted(map(tuple, staged["features"].collect()))
+    fb = sorted(map(tuple, plain["features"].collect()))
+    assert len(fa) == len(fb)
+    for ra, rb in zip(fa, fb):
+        for va, vb in zip(ra, rb):
+            if isinstance(va, float):
+                assert math.isclose(va, vb, rel_tol=1e-9, abs_tol=1e-12)
+            else:
+                assert va == vb

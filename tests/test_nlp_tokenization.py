@@ -76,7 +76,7 @@ def lab_fixture(spark):
 
 
 def test_injected_model_factory_inits_once(spark):
-    """The factory must run ONCE per task (model-load cost), never per
+    """The factory must run once per task (model-load cost), never per
     row/batch. The fake extractor stamps each entity with the number of
     factory invocations seen in its worker process; with one partition
     every stamp must be 1."""

@@ -1,13 +1,11 @@
 """Focused pins for the round-12 ADVICE fixes (optimization round 2).
 
 Each test pins one behavioral contract the r12 fixes introduced:
-fan_out's probe guard, hash_split's temp-name collision guard, and
-run_pipeline's exception-path pool shutdown.
+fan_out's probe guard and hash_split's temp-name collision guard.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mimic_iv_data_pipeline_spark.engine import fan_out
@@ -76,30 +74,6 @@ def test_hash_split_temp_name_collision(spark):
     assert vals == {"keep-me"}
     # and the split itself still works / is deterministic
     assert {r["split"] for r in out.collect()} <= {"train", "test"}
-
-
-def test_run_pipeline_joins_leaf_writes_on_exception(spark, tmp_path):
-    """If a stage AFTER a leaf submit raises, run_pipeline must join the
-    in-flight leaf writes before propagating, so caller cleanup can't
-    race them (ADVICE r11). Trigger: a feature-vocab cap of 1 raises in
-    _collect_feature_vocab, which runs after the summary leaf submit."""
-    import os
-
-    from mimic_iv_data_pipeline_spark.plans.pipeline import (
-        PipelineConfig,
-        run_pipeline,
-    )
-
-    from bench import _e2e_tables
-
-    tables = _e2e_tables(spark, "/root/testdata/sf0.001")
-    out_dir = str(tmp_path / "pipe")
-    cfg = PipelineConfig(include_hours=4, bucket_hours=2, max_feature_vocab=1)
-    with pytest.raises(ValueError, match="feature vocabulary exceeds"):
-        run_pipeline(spark, tables, out_dir, cfg, handoff="parquet")
-    # the summary leaf write was submitted before the raise; the finally
-    # must have joined it — its _SUCCESS marker is complete on disk
-    assert os.path.exists(os.path.join(out_dir, "summary", "_SUCCESS"))
 
 
 def test_naive_bayes_grouping_sets_fold_matches_two_pass(spark, sf_smoke):
@@ -391,116 +365,3 @@ def test_schema_catalog_matches_inference_and_invalidates(spark, sf_smoke, tmp_p
     )
     s2 = readers.load_table(spark, str(tmp_path), "t").schema
     assert s2.fieldNames() == ["b", "c"]
-
-
-def test_e2e_tables_sql_form_matches_column_algebra(spark):
-    """r12: bench._e2e_tables is built from parsed SQL strings; pin that
-    every generated table is BIT-identical to the Column-algebra form it
-    replaced (schema + count + order-insensitive full-row hash)."""
-    from bench import _e2e_tables
-
-    def old_form(spark, sf_dir):
-        import os as _os
-
-        sf = float(_os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-        n_stays = max(1_000, int(300_000 * sf))
-        n_subjects = max(500, n_stays // 2)
-        base = F.to_timestamp(F.lit("2150-01-01 00:00:00"))
-
-        def h(*cols):
-            return F.xxhash64(*cols)
-
-        stays = spark.range(n_stays).select(
-            F.col("id").alias("stay_id"),
-            F.pmod(h("id"), F.lit(n_subjects)).alias("subject_id"),
-            F.lit(None).cast("long").alias("_pad"),
-        )
-        admit = F.timestamp_seconds(
-            F.unix_timestamp(base)
-            + F.pmod(h("stay_id", F.lit(1)), F.lit(300 * 86400))
-        )
-        los_h = (F.pmod(h("stay_id", F.lit(2)), F.lit(264)) + 24).cast("int")
-        icustays = stays.select(
-            "subject_id",
-            F.col("stay_id").alias("hadm_id"),
-            "stay_id",
-            admit.alias("intime"),
-            F.timestamp_seconds(
-                F.unix_timestamp(admit) + los_h.cast("long") * 3600
-            ).alias("outtime"),
-            (los_h / F.lit(24.0)).alias("los"),
-        )
-        admissions = icustays.select(
-            "subject_id",
-            "hadm_id",
-            F.col("intime").alias("admittime"),
-            F.col("outtime").alias("dischtime"),
-            F.lit(None).cast("timestamp").alias("deathtime"),
-            (F.pmod(h("hadm_id", F.lit(3)), F.lit(20)) == 0).cast("int").alias(
-                "hospital_expire_flag"
-            ),
-            F.lit("Private").alias("insurance"),
-            F.lit("OTHER").alias("ethnicity"),
-        )
-        patients = (
-            icustays.select("subject_id").distinct().select(
-                "subject_id",
-                F.when(F.pmod(h("subject_id", F.lit(4)), F.lit(2)) == 0, "M")
-                .otherwise("F")
-                .alias("gender"),
-                (F.pmod(h("subject_id", F.lit(5)), F.lit(85)) + 5)
-                .cast("int")
-                .alias("anchor_age"),
-                F.lit(2150).cast("int").alias("anchor_year"),
-                F.lit("2008 - 2010").alias("anchor_year_group"),
-                F.lit(None).cast("timestamp").alias("dod"),
-            )
-        )
-        ev_per_stay = 100
-        events = (
-            spark.range(n_stays * ev_per_stay)
-            .select((F.col("id") / ev_per_stay).cast("long").alias("stay_id"),
-                    F.col("id").alias("eid"))
-            .join(icustays.select("stay_id", "intime", "los"), "stay_id")
-            .select(
-                "stay_id",
-                F.timestamp_seconds(
-                    F.unix_timestamp("intime")
-                    + F.pmod(h("eid", F.lit(6)),
-                             (F.col("los") * 86400 + 14400).cast("long"))
-                    - F.lit(7200)
-                ).alias("charttime"),
-                (F.pmod(h("eid", F.lit(7)), F.lit(3)) + 220045).alias("itemid"),
-                F.when(
-                    F.pmod(h("eid", F.lit(8)), F.lit(50)) == 0, F.lit(9999.0)
-                ).otherwise(
-                    70.0 + F.pmod(h("eid", F.lit(9)), F.lit(2000)) / 100.0
-                ).alias("valuenum"),
-                F.when(F.pmod(h("eid", F.lit(10)), F.lit(30)) == 0, "BPM")
-                .otherwise("bpm")
-                .alias("valueuom"),
-            )
-        )
-        return {
-            "visits": icustays,
-            "patients": patients,
-            "admissions": admissions,
-            "events": events,
-        }
-
-    def digest(df):
-        # order-insensitive exact fingerprint: count + sum of full-row
-        # hashes (xxhash64 over every column, cast to decimal so the
-        # sum cannot overflow-wrap differently between the two sides)
-        row = df.selectExpr(
-            "count(*) AS n",
-            "sum(CAST(xxhash64(*) AS DECIMAL(38, 0))) AS h",
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    new = _e2e_tables(spark, "/root/testdata/sf0.001")
-    old = old_form(spark, "/root/testdata/sf0.001")
-    assert set(new) == set(old)
-    for name in new:
-        assert new[name].schema == old[name].schema, name
-        assert digest(new[name]) == digest(old[name]), name

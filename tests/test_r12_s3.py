@@ -1,5 +1,5 @@
-"""Round-12 third-session pins: funnel fused-count parity, pipeline
-boundary schema reuse, and the memory-mode leaf_consumer overlap hook.
+"""Round-12 third-session pins: funnel fused-count parity and pipeline
+boundary schema reuse.
 """
 
 from __future__ import annotations
@@ -108,51 +108,3 @@ def test_boundary_schema_reuse_matches_inferred_read(spark, tmp_path):
     a = sorted(inferred.collect())
     b = sorted(supplied.collect())
     assert a == b
-
-
-def test_run_pipeline_memory_leaf_consumer(spark, tmp_path):
-    """Memory mode with a leaf_consumer: the consumer sees every leaf
-    exactly once, its futures are joined before return, and the
-    returned leaves still carry the same values as a consumer-less run."""
-    import bench
-    from mimic_iv_data_pipeline_spark.plans.pipeline import (
-        PipelineConfig,
-        run_pipeline,
-    )
-
-    tables = bench._e2e_tables(spark, "/root/testdata/sf0.001")
-    cfg = PipelineConfig(include_hours=12, bucket_hours=2)
-    seen: list[str] = []
-
-    def consumer(df, name):
-        seen.append(name)
-        df.write.format("noop").mode("overwrite").save()
-
-    staged = run_pipeline(
-        spark, tables, str(tmp_path / "unused"), cfg,
-        handoff="memory", leaf_consumer=consumer,
-    )
-    assert sorted(seen) == ["features", "summary", "tensors"]
-    plain = run_pipeline(
-        spark, bench._e2e_tables(spark, "/root/testdata/sf0.001"),
-        str(tmp_path / "unused2"), cfg, handoff="memory",
-    )
-    # summary is deterministic (long sums + dround-ed ratios of longs):
-    # exact compare. features carries UNROUNDED avg() of doubles whose
-    # partial-sum order follows shuffle fetch-arrival order — two plain
-    # runs of the SAME code differ in the last ulp (pre-existing,
-    # observed without the consumer) — so compare to 1e-9 relative.
-    import math
-
-    a = sorted(map(tuple, staged["summary"].collect()))
-    b = sorted(map(tuple, plain["summary"].collect()))
-    assert a == b
-    fa = sorted(map(tuple, staged["features"].collect()))
-    fb = sorted(map(tuple, plain["features"].collect()))
-    assert len(fa) == len(fb)
-    for ra, rb in zip(fa, fb):
-        for va, vb in zip(ra, rb):
-            if isinstance(va, float):
-                assert math.isclose(va, vb, rel_tol=1e-9, abs_tol=1e-12)
-            else:
-                assert va == vb
