@@ -3,9 +3,10 @@
 From-scratch re-expression of the query/data-processing capabilities of
 healthylaife/MIMIC-IV-Data-Pipeline (a single-node pandas ETL +
 time-series-featurization pipeline; see SURVEY.md) as composable,
-Catalyst-friendly Spark DataFrame operators, plus the LLM-training-data
-operators (dedup, similarity search, text analysis, multimodal plumbing)
-a 100 TB-scale pipeline needs.
+Catalyst-friendly Spark DataFrame operators. The paper's workload is
+the batch pipeline ``plans.pipeline.run_pipeline``; the registered
+queries in ``queries/`` add the operators (dedup, similarity search,
+text analysis) a 100 TB-scale pipeline needs.
 
 Design rules (enforced throughout):
   * DataFrame/SQL first — declarative plans so Catalyst can push filters,

@@ -10,8 +10,8 @@ Deployment seams (set at submit time, no code changes):
 
 ``spark.graft.materialize`` (default ``local``)
     How iterative operators (connected components, PageRank, LPA,
-    BFS, Bellman-Ford, k-means, funnel recurrences, analytics plans)
-    cut lineage between rounds — every such operator routes through
+    BFS, Bellman-Ford, k-means, funnel recurrences) cut lineage
+    between rounds — every such operator routes through
     :func:`materialize`.
 
     * ``local`` — ``DataFrame.localCheckpoint``: blocks cached on
@@ -50,9 +50,10 @@ Deployment seams (set at submit time, no code changes):
     ``max_df`` on n-gram Jaccard) because AQE can only split a
     skewed JOIN, not un-skew a quadratic candidate set.
 
-``spark.driver.memory`` (harness: 16g — LOCAL ONLY)
+``spark.driver.memory`` (default: min(16g, RAM/2) — LOCAL ONLY)
     ``local[n]`` runs every task in the driver JVM; Spark's 1 GB
-    default starves 32 concurrent tasks (guide §5). On a cluster the
+    default starves 32 concurrent tasks (guide §5). Override with
+    ``SPARK_GRAFT_DRIVER_MEMORY``. On a cluster the
     equivalent knob is ``spark.executor.memory`` at submit time; this
     entry is only honored when the session creates the JVM.
 """
@@ -80,7 +81,7 @@ def materialize(df: DataFrame) -> DataFrame:
     between the harness's ``localCheckpoint`` and a fault-tolerant
     cluster ``checkpoint`` (see module docstring; selected by the
     ``spark.graft.materialize`` conf so a deployer flips ONE setting,
-    not 36 call sites).
+    not every call site).
 
     Used as ``df.transform(materialize)`` by every iterative operator
     and multi-consumer plan in the repo.
@@ -115,8 +116,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     single-threaded. Content-addressed operators are partitioning-
     independent by repo discipline, so values are unchanged.
     """
-    if df.isStreaming:  # no .rdd on streaming plans; micro-batches are
-        return df       # already sized by the source
     sc = df.sparkSession.sparkContext
     # Probe guard (ADVICE r11): df.rdd forces physical planning, and on
     # an AQE plan containing exchanges it MATERIALIZES the upstream

@@ -42,9 +42,6 @@ from mimic_iv_data_pipeline_spark.operators.text import tokens
 __all__ = [
     "bpe_train",
     "bpe_encode",
-    "bpe_encode_ids",
-    "bpe_vocab",
-    "corpus_alphabet",
     "train_merges_py",
 ]
 
@@ -209,95 +206,6 @@ def bpe_encode(
                     id_col: pdf[id_col].to_numpy(),
                     "tokens": toks,
                     "n_tokens": [len(t) for t in toks],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(encode, schema=out_schema)
-
-
-def corpus_alphabet(df: DataFrame, text_col: str = "text") -> list[str]:
-    """Sorted distinct non-whitespace characters of the corpus — the
-    base symbols of the BPE vocabulary. One distinct aggregate over an
-    exploded char stream; the result is bounded by the charset, not the
-    corpus."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        df.select(F.explode(F.split(F.lower(F.col(text_col)), "")).alias("ch"))
-        .filter((F.col("ch") != "") & ~F.col("ch").rlike(r"\s"))
-        .distinct()
-        .collect()
-    )
-    return sorted(r.ch for r in rows)
-
-
-def bpe_vocab(
-    merges: list[tuple[str, str]], alphabet: list[str]
-) -> dict[str, int]:
-    """Deterministic token→id table for a trained merge list.
-
-    Ids: ``</w>`` = 0, then the sorted alphabet, then each merge's
-    product in merge order — the standard BPE id layout, a pure
-    function of (merges, alphabet). Every token the encoder can emit is
-    either a base symbol, the EOW marker, or the product of its final
-    merge, so this table is closed over encoder outputs.
-    """
-    vocab = {EOW: 0}
-    for ch in alphabet:
-        vocab.setdefault(ch, len(vocab))
-    for a, b in merges:
-        vocab.setdefault(a + b, len(vocab))
-    return vocab
-
-
-def bpe_encode_ids(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[str, str]],
-    vocab: dict[str, int],
-) -> DataFrame:
-    """Tokenize to integer ids: ``(id, token_ids array<int>, n_tokens,
-    n_unk)``. Tokens outside ``vocab`` (characters unseen at training
-    time) map to -1 and are counted in ``n_unk`` — the caller decides
-    whether to drop, clamp, or extend the vocabulary. The vocab dict
-    rides inside the closure (|V| entries — broadcast-in-spirit)."""
-    import pandas as pd
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    raw_encoder = _make_word_encoder(ranks)
-    ws = _WS
-    vocab_local = dict(vocab)
-    out_schema = f"{_id_field(df, id_col)}, token_ids array<int>, n_tokens long, n_unk long"
-
-    def encode(batches):
-        cache: dict[str, list[int]] = {}
-
-        def enc_word(w: str) -> list[int]:
-            got = cache.get(w)
-            if got is None:
-                got = cache[w] = [
-                    vocab_local.get(t, -1) for t in raw_encoder(w)
-                ]
-            return got
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids_col, n_unk = [], []
-            for text in pdf[text_col]:
-                doc: list[int] = []
-                for w in ws.split((text or "").strip(" \t\n\r\f\x0b").lower()):
-                    if w:
-                        doc.extend(enc_word(w))
-                ids_col.append(doc)
-                n_unk.append(sum(1 for i in doc if i < 0))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "token_ids": ids_col,
-                    "n_tokens": [len(t) for t in ids_col],
-                    "n_unk": n_unk,
                 }
             )
 

@@ -47,37 +47,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str = "text") -> Da
     )
 
 
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from an ALREADY-MATERIALIZED token
-    array column.
-
-    ``toks`` must be a bound column (not an inline ``split(...)``
-    expression): higher-order lambdas are interpreted without common-
-    subexpression elimination, so an inline split would re-tokenize the
-    document once per ``try_element_at`` reference (~3n× per row — 15s
-    vs 0.5s on 5k docs). ``try_element_at`` is ANSI-safe out-of-range →
-    null; ``concat_ws`` skips nulls, so shorter-than-n docs yield one
-    partial gram (a canonical form of the whole doc).
-    """
-    k = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(k - n, F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.try_element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.array_distinct(grams)
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column. Convenience form
-    for single-expression use; pipelines should tokenize into a real
-    column first and call ``shingles_from_tokens`` (see its docstring
-    for the CSE pitfall)."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, shingle) distinct rows via posexplode + ``lead`` windows.
 
@@ -87,9 +56,8 @@ def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> Data
     per-element evaluation dominates (higher-order functions never enter
     codegen). One shuffle on doc for the window, one for the distinct.
 
-    Semantics identical to ``shingles_from_tokens``: positions
-    0..max(k−n, 0); shorter-than-n docs yield one partial gram
-    (``concat_ws`` skips the null leads).
+    Gram positions 0..max(k−n, 0); shorter-than-n docs yield one
+    partial gram (``concat_ws`` skips the null leads).
     """
     # NOT fanned out (optimization r11): an engine.fan_out here measured
     # 0.6× on q39/q88 in interleaved A/B probes but FLAT on both under

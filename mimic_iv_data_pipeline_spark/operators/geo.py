@@ -13,32 +13,19 @@ neighborhoods elsewhere in this repo, applied to the plane).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EARTH_RADIUS_M = 6_371_000.0
 
 
-def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Great-circle distance in meters (public: the standard haversine
-    formula) — a fixed IEEE sequence (radians → sin/cos → asin), so
-    distances are bit-identical across engines when the inputs are.
-    """
-    rl1, rl2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2 - lat1) / 2
-    dlon = F.radians(lon2 - lon1) / 2
-    a = (
-        F.sin(dlat) * F.sin(dlat)
-        + F.cos(rl1) * F.cos(rl2) * F.sin(dlon) * F.sin(dlon)
-    )
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
-
-
 def _haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    """SQL-string twin of :func:`haversine_m` (r12, guide §5): the same
-    expression tree — same literals, same IEEE order — produced by one
-    parser call instead of ~20 py4j round-trips. Args are SQL snippets
-    (column names or parenthesized expressions)."""
+    """Great-circle distance in meters (public: the standard haversine
+    formula) as a parsed SQL expression — one parser call instead of ~20
+    py4j round-trips for the Column form. A fixed IEEE sequence (radians
+    → sin/cos → asin), so distances are bit-identical across engines
+    when the inputs are. Args are SQL snippets (column names or
+    parenthesized expressions)."""
     dlat = f"RADIANS({lat2} - {lat1}) / 2"
     dlon = f"RADIANS({lon2} - {lon1}) / 2"
     a = (

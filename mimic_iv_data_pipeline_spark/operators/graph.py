@@ -86,7 +86,7 @@ _BY_VALUE_REGISTERED = False
 def _register_by_value_once() -> None:
     """Serialize this module by VALUE so executor closures referencing
     ``_driver_union_find`` never need the package on their import path
-    (the operators.multimodal/nlp registration pattern — the
+    (the operators.nlp registration pattern — the
     foreign-CWD driver simulation is exactly the consumer that breaks
     otherwise). Registration is a process-global cloudpickle side
     effect, so do it exactly once (r8 ADVICE: re-registering on every
@@ -399,38 +399,6 @@ def connected_components(
             .select("id", F.coalesce("component", "id").alias("component"))
         )
     return labels
-
-
-def dedup_keep_canonical(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-    local_contract: bool | str = "auto",
-) -> DataFrame:
-    """Corpus-level near-dup removal: keep the minimum-id document of
-    every connected component of ``pairs`` (the C4/Dolma "keep one per
-    cluster" step). Non-clustered documents pass through untouched —
-    the labels join is an equi-join on the id, broadcast when the
-    cluster set is small.
-
-    ``local_contract`` passes through to :func:`connected_components`:
-    the ``"auto"`` default contracts only when the pair set overflows
-    the driver cap — free for the common small-pair-set case, and a
-    measured 1.3x star-path win on duplicate-blob pair sets even AFTER
-    the producer's band/bucket layout has been destroyed by the
-    trailing (id_a, id_b) distinct (PERF r9 layout probes). Pass
-    ``True`` when ``pairs`` still carries producer partitioning (a
-    banded LSH join consumed before any distinct), ``False`` for
-    sparse uncorrelated graphs (~1% contraction loss)."""
-    labels = connected_components(pairs, src, dst, local_contract=local_contract)
-    keep = labels.where(F.col("id") == F.col("component")).select("id")
-    clustered = labels.select("id")
-    return (
-        docs.join(clustered.withColumnRenamed("id", id_col), id_col, "left_anti")
-        .unionByName(docs.join(keep.withColumnRenamed("id", id_col), id_col, "left_semi"))
-    )
 
 
 def pagerank(

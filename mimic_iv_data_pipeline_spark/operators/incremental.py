@@ -34,9 +34,7 @@ __all__ = [
     "band_buckets",
     "build_minhash_index",
     "dedup_against_index",
-    "dedup_banded_against_index",
     "estimated_jaccard",
-    "within_batch_pairs",
 ]
 
 
@@ -164,7 +162,7 @@ def dedup_against_index(
     Jaccard ≥ ``threshold``; distinct over bands. Anti-join the
     new batch against ``select(new_id)`` of this to keep survivors,
     then union survivors' own ``minhash_lsh_pairs`` for within-batch
-    dedup (see ``plans/llm_corpus``).
+    dedup.
 
     The hash family is deterministic (fixed seeds), so signatures
     computed today join correctly against an index written months ago —
@@ -175,22 +173,6 @@ def dedup_against_index(
         shingle_hash=shingle_hash,
     )
     new_banded = band_buckets(new_sig, num_hashes, bands, bucket=bucket)
-    return dedup_banded_against_index(
-        new_banded, index=index, threshold=threshold, num_hashes=num_hashes
-    )
-
-
-def dedup_banded_against_index(
-    new_banded: DataFrame,
-    *,
-    index: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """``dedup_against_index`` from an already-banded probe relation —
-    the plan-level entry point (``plans.llm_corpus.dedup_snapshot``
-    bands each snapshot ONCE and reuses the relation for the index
-    probe, the within-batch self-join, and the index append)."""
     cand = (
         new_banded.select(
             F.col("doc").alias("new_id"),
@@ -217,38 +199,6 @@ def dedup_banded_against_index(
             estimated_jaccard(
                 F.col("__new_sig"), F.col("__idx_sig"), num_hashes=num_hashes
             ),
-            6,
-        ).alias("est_jaccard"),
-    ).filter(F.col("est_jaccard") >= threshold)
-
-
-def within_batch_pairs(
-    banded: DataFrame, threshold: float = 0.5, num_hashes: int = 64
-) -> DataFrame:
-    """Flagged pairs WITHIN one banded batch: the ``minhash_lsh_pairs``
-    candidate join run in signature-estimate space (same estimator as
-    the index probe, so a snapshot pipeline scores same-batch and
-    cross-batch duplicates identically). Output ``(id_a, id_b,
-    est_jaccard)`` with ``id_a < id_b``."""
-    a = banded.select(
-        F.col("doc").alias("id_a"), "band", "bucket",
-        F.col("signature").alias("__sa"),
-    )
-    b = banded.select(
-        F.col("doc").alias("id_b"), "band", "bucket",
-        F.col("signature").alias("__sb"),
-    )
-    cand = (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "__sa", "__sb")
-        .distinct()
-    )
-    return cand.select(
-        "id_a",
-        "id_b",
-        dround(
-            estimated_jaccard(F.col("__sa"), F.col("__sb"), num_hashes=num_hashes),
             6,
         ).alias("est_jaccard"),
     ).filter(F.col("est_jaccard") >= threshold)

@@ -160,7 +160,7 @@ def extract_entities(
     factory = model_factory or (lambda: lexicon_model_factory(targets))
     # the default factory chain references module-level helpers; make
     # them serialize by value so executors never need the package on
-    # their import path (same registration as operators.multimodal)
+    # their import path (same registration as operators.graph)
     import sys
 
     from pyspark import cloudpickle

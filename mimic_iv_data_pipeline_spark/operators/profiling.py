@@ -33,8 +33,6 @@ from mimic_iv_data_pipeline_spark.functions.rounding import dround
 def profile_table(
     df: DataFrame,
     columns: list[str] | None = None,
-    *,
-    exact_distinct: bool = True,
 ) -> DataFrame:
     """Per-column profile: one row per column with
     ``(column, data_type, n_rows, n_nulls, n_distinct, min_value,
@@ -48,15 +46,11 @@ def profile_table(
     rendering (or exclude those columns from the hash compare); q140
     stays under the boundary by construction.
 
-    ``exact_distinct=True`` uses ``count(DISTINCT col)`` — Catalyst
-    plans the multi-distinct aggregate via EXPAND (one scan, rows
-    multiplied by the distinct-column count before the partial
-    aggregate). At 100 TB profile breadth that multiplication is the
-    cost driver, so the scale path is ``exact_distinct=False``:
-    ``approx_count_distinct`` (HyperLogLog++, mergeable sketch state)
-    keeps the plan a single no-EXPAND pass with O(columns) state per
-    partition. Everything else (nulls, min/max, mean, count) is plain
-    partial aggregation either way.
+    ``n_distinct`` is exact ``count(DISTINCT col)`` — Catalyst plans
+    the multi-distinct aggregate via EXPAND (one scan, rows multiplied
+    by the distinct-column count before the partial aggregate).
+    Everything else (nulls, min/max, mean, count) is plain partial
+    aggregation.
 
     The wide 1-row aggregate is unpivoted to one-row-per-column with a
     literal struct array + explode — driver-side plan construction
@@ -74,10 +68,7 @@ def profile_table(
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
     for c in cols:
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{c}"))
-        if exact_distinct:
-            aggs.append(F.countDistinct(F.col(c)).alias(f"__dist_{c}"))
-        else:
-            aggs.append(F.approx_count_distinct(F.col(c)).alias(f"__dist_{c}"))
+        aggs.append(F.countDistinct(F.col(c)).alias(f"__dist_{c}"))
         aggs.append(F.min(F.col(c)).cast("string").alias(f"__min_{c}"))
         aggs.append(F.max(F.col(c)).cast("string").alias(f"__max_{c}"))
         if isinstance(types[c], NumericType):

@@ -70,32 +70,16 @@ def heavy_hitters(df: DataFrame, text_col: str = "text", k: int = 50) -> DataFra
     )
 
 
-def _bucket(token: Column, row: int, width: int) -> Column:
-    """Row-``row``'s CM bucket for a token (standalone form — prefer
-    :func:`_digest_bucket` with a pre-materialized digest anywhere the
-    expression sits under a generate, where codegen CANNOT share the
-    md5 across rows).
+def _digest_bucket(digest: Column, token: Column, row: int, width: int) -> Column:
+    """Row-``row``'s CM bucket for a token, from a pre-materialized
+    ``md5(token)`` digest column.
 
     Rows 0-3 slice disjoint 32-bit windows out of ONE md5 digest (32
     hex chars = 4 independent 8-hex slices) — measured 2.7× faster at
-    100M hashed occurrences than per-row seeded digests, because the
-    single ``md5(token)`` is shared across rows by codegen subexpression
-    elimination. Rows ≥ 4 fall back to a seeded digest. Both forms stay
-    DuckDB-expressible (``substr(md5(token), row*8+1, 8)``).
+    100M hashed occurrences than per-row seeded digests. Rows ≥ 4 fall
+    back to a seeded digest. Both forms stay DuckDB-expressible
+    (``substr(md5(token), row*8+1, 8)``).
     """
-    if row < 4:
-        digest = F.md5(token)
-        h = F.conv(F.substring(digest, row * 8 + 1, 8), 16, 10).cast("long")
-    else:
-        digest = F.md5(F.concat(F.lit(f"{row}:"), token))
-        h = F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
-    return F.pmod(h, F.lit(width))
-
-
-def _digest_bucket(digest: Column, token: Column, row: int, width: int) -> Column:
-    """Bucket from a pre-materialized digest column (rows 0-3) or a
-    seeded per-row digest (rows ≥ 4) — same scheme as :func:`_bucket`
-    but without re-hashing the token per row."""
     if row < 4:
         h = F.conv(F.substring(digest, row * 8 + 1, 8), 16, 10).cast("long")
     else:
@@ -110,29 +94,20 @@ def cm_sketch(
     token_col: str = "token",
     depth: int = 4,
     width: int = 256,
-    pre_aggregate: bool = True,
 ) -> DataFrame:
     """Build a Count-Min sketch ``(depth, bucket, cnt)`` from a token-
     occurrence stream. State is O(depth × width) — independent of
-    corpus size — and both paths produce IDENTICAL sketches.
+    corpus size.
 
-    ``pre_aggregate=True`` (default): count per token FIRST, then hash
-    only the distinct vocabulary (weighted by count into the counters).
-    On Zipfian corpora this hashes orders of magnitude fewer rows —
-    measured 4.2× faster at 25M occurrences — at the cost of a
+    Counts per token FIRST, then hashes only the distinct vocabulary
+    (weighted by count into the counters). On Zipfian corpora this
+    hashes orders of magnitude fewer rows — measured 4.2× faster at 25M
+    occurrences than hashing every occurrence — at the cost of a
     token-keyed shuffle whose size is the per-partition-distinct
-    vocabulary. Set ``False`` when keys are near-unique (the classic
-    CM regime — URLs, 13-gram fingerprints): the explode-then-aggregate
-    path never shuffles more than ``depth × width`` rows per partition
-    (map-side combine), trading extra hashing for a tiny shuffle.
-    Streaming MUST use ``False`` (chained streaming aggregations are
-    unsupported); the construction stays incremental either way.
+    vocabulary.
     """
     tok = F.col(token_col)
-    if pre_aggregate:
-        base = occ.groupBy(token_col).agg(F.count("*").alias("__c"))
-    else:
-        base = occ.select(tok, F.lit(1).cast("long").alias("__c"))
+    base = occ.groupBy(token_col).agg(F.count("*").alias("__c"))
     # one md5 per row, sliced per depth (beats per-depth seeded digests
     # 2.7×: codegen does NOT eliminate repeated md5 inside a generate)
     hashed = base.withColumn("__dig", F.md5(tok))

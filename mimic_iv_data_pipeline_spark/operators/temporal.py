@@ -83,8 +83,7 @@ def bucketize_events(
     (``data_generation_icu.py:286-345``): for each bucket b it filters
     ``b*size <= t < (b+1)*size`` and aggregates. One ``floor(t/size)``
     derivation + ONE hash aggregate has identical semantics with a
-    single shuffle. The streaming twin is
-    ``streaming.events.stream_bucketize`` (``window(ts, '1 hour')``).
+    single shuffle.
     """
     binned = df.withColumn(
         bucket_col, F.floor(F.col(time_col) / F.lit(bucket_hours)).cast("long")

@@ -6,7 +6,7 @@ scoring, language ID, fingerprinting — so they run JVM-side in
 whole-stage codegen with zero Python in the hot path. The reference's
 only text surface is the medspacy notes pipeline
 (``preprocessing/notes_preproc.py:108-224``), which maps to
-mapInPandas (see operators/multimodal.py for the same plumbing pattern).
+mapInPandas (see operators/nlp.py for that plumbing pattern).
 """
 
 from __future__ import annotations

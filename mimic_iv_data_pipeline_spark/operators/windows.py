@@ -184,8 +184,7 @@ def sessionize(
 ) -> DataFrame:
     """Gap-based sessionization (scale extension; not in the reference).
 
-    ``lag`` + cumulative sum of gap-breaks per key — one shuffle. The
-    streaming twin is ``session_window`` in streaming/events.py.
+    ``lag`` + cumulative sum of gap-breaks per key — one shuffle.
     """
     parts = _cols(partition_by)
     order = [F.col(ts_col).asc()]

@@ -58,7 +58,7 @@ def golden_records(
     # materialize: base feeds the fuzzy join, the blocking relation,
     # AND the final labeled aggregate, while connected_components runs
     # its own eager jobs in between — without the pin the upstream
-    # input re-scans 3-4x per call (the analytics plan's q185 lesson)
+    # input re-scans 3-4x per call (the same re-scan q185 paid)
     pairs = edit_distance_join(base, "__id", "__name", max_dist=max_dist)
     # blocking: a fuzzy name match only counts WITHIN a block
     blk = base.select(F.col("__id"), F.col("__blk"))

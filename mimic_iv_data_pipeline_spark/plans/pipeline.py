@@ -5,8 +5,10 @@ function with Parquet stage boundaries.
 The reference hands off csv.gz files between stages and re-reads them
 (``feature_selection_*.py``); here each stage is a lazy DAG and the
 caller chooses which boundaries to materialize — by default each stage
-is written once (checkpointing the lineage, enabling stage-level
-restarts) exactly where the reference wrote its files (SURVEY.md §3).
+is written once (checkpointing the lineage, leaving an inspectable
+artifact per stage) exactly where the reference wrote its files
+(SURVEY.md §3). Every run recomputes and overwrites every stage; a
+re-run does not resume from earlier stage files.
 """
 
 from __future__ import annotations
@@ -115,9 +117,9 @@ def run_pipeline(
 
     * ``"parquet"`` (default) — write + re-read every stage, mirroring
       the reference's csv.gz file handoffs (mainPipeline.ipynb →
-      feature_selection_*.py re-reads): stage-level restartability and
-      an inspectable on-disk artifact per stage, at the cost of six
-      serialize/deserialize round-trips.
+      feature_selection_*.py re-reads): an inspectable on-disk
+      artifact per stage, at the cost of six serialize/deserialize
+      round-trips.
     * ``"memory"`` — no intermediate files: multi-consumer stages
       (cohort, events, timeseries) are pinned via
       :func:`~mimic_iv_data_pipeline_spark.engine.materialize`
@@ -125,7 +127,9 @@ def run_pipeline(
       ``spark.graft.materialize`` conf) so each is computed exactly
       once, and leaf stages (summary, features, tensors) stay lazy for
       the caller to consume or write. Same values as the parquet mode
-      (pinned by tests/test_r11_wave.py); ``out_dir`` is unused.
+      (pinned by tests/test_integration_pipeline.py::
+      test_run_pipeline_handoff_modes_value_equal); ``out_dir`` is
+      unused.
 
     ``tables`` needs: visits (icustays or admissions), patients,
     admissions, events (chart or lab shaped: id + charttime + itemid +

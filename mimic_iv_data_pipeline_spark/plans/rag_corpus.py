@@ -1,8 +1,7 @@
 """End-to-end retrieval-corpus build: chunk → embed → index → query.
 
-The second capstone composition next to ``plans/llm_corpus.py``
-(pretraining build): the RAG preparation pipeline every
-retrieval-augmented system runs over a curated corpus —
+The RAG preparation pipeline every retrieval-augmented system runs
+over a curated corpus —
 
   1. **chunk** the documents with stride/overlap
      (``text.chunk_documents`` — coverage-guaranteed windows);

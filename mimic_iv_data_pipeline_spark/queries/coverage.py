@@ -624,9 +624,7 @@ def q62_horizontal_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q140_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column profile of orders (nulls/distincts/min/max/mean) in a
-    single aggregate pass (operators/profiling.py:profile_table); the
-    approx_count_distinct variant is the 100 TB path, exercised by
-    pytest."""
+    single aggregate pass (operators/profiling.py:profile_table)."""
     from mimic_iv_data_pipeline_spark.operators.profiling import profile_table
 
     orders = _t(spark, sf_dir, "orders")

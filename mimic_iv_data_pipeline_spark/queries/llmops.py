@@ -222,7 +222,7 @@ def q66_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT unnest([0, 1, 2, 3]) AS depth
     ), hashed AS (
       -- rows 0-3 slice disjoint 32-bit windows of ONE md5(token)
-      -- (mirrors sketches._bucket's single-digest fast path)
+      -- (mirrors sketches._digest_bucket's single-digest fast path)
       SELECT token, depth,
              cast(concat('0x', substr(md5(token), depth*8 + 1, 8)) AS bigint) % 256 AS bucket
       FROM occ2 CROSS JOIN d

@@ -1,5 +1,4 @@
 from mimic_iv_data_pipeline_spark.sources.readers import (
-    load_tables,
     read_csv_gz,
     read_glob_csv,
     read_tsv_map,
@@ -11,7 +10,6 @@ from mimic_iv_data_pipeline_spark.sources.sinks import (
 )
 
 __all__ = [
-    "load_tables",
     "read_csv_gz",
     "read_glob_csv",
     "read_tsv_map",

@@ -15,7 +15,6 @@ S1/S3/S8 are one-liner declarative reads with *explicit* schemas — never
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -106,31 +105,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Iterable[str] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver's parquet star schema as a dict of DataFrames.
-
-    Parquet scans get column pruning and predicate pushdown for free;
-    callers should still ``.select`` early so ``ReadSchema`` stays narrow.
-    Routes through :func:`load_table` so ``events`` always gets the
-    nanos shim — a bare ``spark.read.parquet`` here made the result
-    depend on whether ``read_events`` had already set the session conf
-    (order-dependent public API).
-    """
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: Iterable[str] = TESTDATA_TABLES
-) -> None:
-    """Register every table as a temp view so callers can work purely in
-    SQL (``spark.sql("SELECT ... FROM lineitem")``) — the engine's SQL
-    surface; Catalyst treats views and DataFrames identically."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_csv_gz(
     spark: SparkSession,
     path: str,
@@ -171,55 +145,3 @@ def read_tsv_map(
 def read_glob_csv(spark: SparkSession, glob: str, schema: T.StructType) -> DataFrame:
     """S8: multi-file glob source (``glob(dataFile+'/*.csv')`` concat)."""
     return spark.read.schema(schema).option("header", "true").csv(glob)
-
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    mode: str = "PERMISSIVE",
-    corrupt_col: str | None = "_corrupt_record",
-) -> DataFrame:
-    """JSON-Lines corpus scan — the lingua franca of LLM training data
-    (Dolma, RedPajama, FineWeb all ship .jsonl/.jsonl.gz shards).
-
-    Schema is REQUIRED: inferring would double-scan 100 TB. gzip/zstd
-    shards decode via the codec from the extension; a .jsonl.gz file is
-    NOT splittable, so shard counts (not file sizes) bound parallelism
-    — keep shards ~256 MB compressed. ``PERMISSIVE`` mode routes
-    malformed lines into ``corrupt_col`` instead of failing the job
-    (crawl corpora always carry breakage); pass ``mode='DROPMALFORMED'``
-    to silently drop or ``'FAILFAST'`` to abort.
-    """
-    if corrupt_col and mode == "PERMISSIVE" and corrupt_col not in schema.names:
-        # fresh StructType: StructType.add mutates in place, which would
-        # silently grow a caller-owned (or module-constant) schema
-        schema = T.StructType(
-            list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
-        )
-    reader = spark.read.schema(schema).option("mode", mode)
-    if corrupt_col and mode == "PERMISSIVE":
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """ORC source — the other columnar interchange format warehouses
-    hand off (Hive/Trino lineage). Same pushdown/pruning behavior as
-    parquet under Catalyst; schema optional because ORC footers carry
-    types (pass one to skip footer reads on huge globs)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)

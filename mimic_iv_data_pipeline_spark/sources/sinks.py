@@ -31,29 +31,6 @@ def write_csv_gz(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", "true").option("codec", "gzip").csv(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: list[str],
-    n_buckets: int = 32,
-    sort_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed catalog table for shuffle-free co-located joins.
-
-    Two tables bucketed by the same key into the same bucket count
-    join/aggregate WITHOUT an exchange — the single biggest shuffle
-    saver for repeated fact×fact joins at 100 TB (e.g. chartevents ×
-    icustays on stay_id, re-joined by every downstream stage). Adding
-    ``sort_by`` on the join key also removes the sort from sort-merge
-    joins. Asserted shuffle-free in tests/test_bucketing.py.
-    """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_by)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
-
-
 def write_summary_text(lines: list[str], path: str) -> None:
     """S7: tiny driver-side text summary (cohort summary txt,
     ``day_intervals_cohort.py:355-365``). Inputs are already-aggregated
@@ -61,35 +38,3 @@ def write_summary_text(lines: list[str], path: str) -> None:
     """
     with open(path, "w") as fh:
         fh.write("\n".join(lines) + "\n")
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str | None = "gzip",
-    partition_by: list[str] | None = None,
-) -> None:
-    """JSON-Lines corpus sink (one JSON object per line, the standard
-    interchange format for LLM training corpora). Compressed shards by
-    default; ``partition_by`` gives hive-layout source/split directories
-    so downstream mixing jobs can partition-prune."""
-    writer = df.write.mode(mode)
-    if compression:
-        writer = writer.option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """ORC sink (zlib default; splittable, footer-indexed)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)

@@ -97,47 +97,3 @@ def test_encode_partition_invariant(spark, tiny_corpus):
         ).collect()
     )
     assert a == b
-
-
-def test_vocab_ids_closed_and_roundtrip(spark, tiny_corpus):
-    from mimic_iv_data_pipeline_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_vocab,
-        corpus_alphabet,
-    )
-
-    merges = bpe_train(tiny_corpus, "text", num_merges=20, max_words=1000)
-    alphabet = corpus_alphabet(tiny_corpus, "text")
-    vocab = bpe_vocab(merges, alphabet)
-    # deterministic layout: EOW first, then alphabet, then merge products
-    assert vocab[EOW] == 0
-    assert len(set(vocab.values())) == len(vocab)
-
-    out = {r.doc_id: r for r in bpe_encode_ids(
-        tiny_corpus, "doc_id", "text", merges, vocab).collect()}
-    inv = {i: t for t, i in vocab.items()}
-    str_out = {r.doc_id: r for r in bpe_encode(
-        tiny_corpus, "doc_id", "text", merges).collect()}
-    for r in tiny_corpus.collect():
-        ids = out[r.doc_id]
-        # trained corpus has no unknown symbols
-        assert ids.n_unk == 0
-        # id sequence decodes to exactly the string-token sequence
-        assert [inv[i] for i in ids.token_ids] == list(str_out[r.doc_id].tokens)
-        assert ids.n_tokens == str_out[r.doc_id].n_tokens
-
-
-def test_unknown_chars_map_to_unk(spark, tiny_corpus):
-    from mimic_iv_data_pipeline_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_vocab,
-        corpus_alphabet,
-    )
-
-    merges = bpe_train(tiny_corpus, "text", num_merges=5, max_words=1000)
-    vocab = bpe_vocab(merges, corpus_alphabet(tiny_corpus, "text"))
-    probe = spark.createDataFrame([(99, "zzz qqq")], "doc_id long, text string")
-    row = bpe_encode_ids(probe, "doc_id", "text", merges, vocab).collect()[0]
-    # 'z'/'q' never appear in the tiny corpus -> every non-EOW id is -1
-    assert row.n_unk == sum(1 for i in row.token_ids if i < 0)
-    assert row.n_unk >= 6

@@ -7,14 +7,12 @@ from __future__ import annotations
 import itertools
 
 import pytest
-from pyspark.sql import functions as F
 
 from mimic_iv_data_pipeline_spark.operators.dedup import (
     exact_dedup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
-    word_shingles,
 )
 
 
@@ -130,12 +128,6 @@ def test_exact_dedup_groups(spark, near_dup_docs):
     by_canonical = {r["canonical_id"]: r["group_size"] for r in groups}
     assert by_canonical[0] == 2  # docs 0 and 1 collapse
     assert len(groups) == 5
-
-
-def test_word_shingles_short_doc(spark):
-    df = spark.createDataFrame([(1, "two words")], "doc_id long, text string")
-    row = df.select(word_shingles(F.col("text"), 3).alias("s")).first()
-    assert row["s"] == ["two words"]  # partial gram for shorter-than-n docs
 
 
 def test_embedding_near_dup(spark, sf_dir):
@@ -277,17 +269,3 @@ def test_connected_components_random_graphs(spark):
             ).collect()
         }
         assert got_lc == expected, f"trial {trial} (local_contract)"
-
-
-def test_dedup_keep_canonical(spark):
-    from mimic_iv_data_pipeline_spark.operators.graph import dedup_keep_canonical
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(8)], ["doc_id", "text"]
-    )
-    # clusters {0,3,5}, {2,7}; 1,4,6 untouched
-    pairs = spark.createDataFrame(
-        [(3, 0), (5, 3), (7, 2)], ["id_a", "id_b"]
-    )
-    kept = sorted(r["doc_id"] for r in dedup_keep_canonical(docs, pairs).collect())
-    assert kept == [0, 1, 2, 4, 6]

@@ -98,18 +98,6 @@ def test_profile_table_stats(spark):
     assert p["id"].data_type == "bigint"
 
 
-def test_profile_table_approx_variant_single_pass(spark):
-    df = _orders_like(spark)
-    p = {
-        r.column: r
-        for r in profile_table(df, exact_distinct=False).collect()
-    }
-    # HLL++ is exact at this cardinality
-    assert p["id"].n_distinct == 4
-    plan = profile_table(df, exact_distinct=False)._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in plan  # the scale path avoids the EXPAND multiply
-
-
 def test_profile_table_validates(spark):
     with pytest.raises(ValueError):
         profile_table(_orders_like(spark), ["nope"])

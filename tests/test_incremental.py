@@ -1,6 +1,5 @@
-"""Incremental dedup: parquet MinHash index (batch) and cross-batch
-streaming LSH state — both checked against independent Python
-recomputation of the candidate/estimate logic."""
+"""Incremental dedup against a parquet MinHash index, checked against
+independent Python recomputation of the candidate/estimate logic."""
 
 from __future__ import annotations
 
@@ -83,83 +82,3 @@ def test_index_is_durable_same_family(spark, docs):
     self_rows = got.filter(F.col("new_id") == F.col("index_id")).collect()
     assert len(self_rows) == 60
     assert all(r["est_jaccard"] == 1.0 for r in self_rows)
-
-
-def test_stream_lsh_dedup_cross_batch(spark, tmp_path, docs):
-    """A doc arriving in micro-batch 2 must match its near-duplicate
-    from micro-batch 1 via bucket state; the emitted pair set equals an
-    independent Python recomputation over arrival order."""
-    from mimic_iv_data_pipeline_spark.operators.dedup import _minhash_perms
-    from mimic_iv_data_pipeline_spark.streaming.events import read_doc_stream
-    from mimic_iv_data_pipeline_spark.streaming.stateful import (
-        _py_sig_factory,
-        stream_lsh_dedup,
-    )
-
-    base = docs.filter(F.col("doc_id") < 30).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    b1 = base.collect()
-    # batch 2: copies of docs 3 and 11 under new ids + 5 fresh docs
-    b2 = [
-        (1003, next(r["text"] for r in b1 if r["doc_id"] == 3), "en", "s", 1),
-        (1011, next(r["text"] for r in b1 if r["doc_id"] == 11), "en", "s", 1),
-    ] + [
-        (2000 + i, f"fresh unseen document number {i} " * 5, "en", "s", 1)
-        for i in range(5)
-    ]
-
-    src = tmp_path / "lsh_src"
-    src.mkdir()
-    out_dir = str(tmp_path / "lsh_out")
-    ckpt = str(tmp_path / "lsh_ckpt")
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-
-    def run_available():
-        stream = read_doc_stream(spark, str(src) + "/*")
-        q = (
-            stream_lsh_dedup(stream, threshold=0.5)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(b1, base.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "b1"))
-    run_available()
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(src / "b2")
-    )
-    run_available()
-
-    got = {
-        (r["doc_id"], r["dup_of"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert (1003, 3) in got and (1011, 11) in got, "cross-batch dups missed"
-
-    # independent recomputation: same sig function, arrival order =
-    # (batch, doc_id); pair emitted iff any band chunk identical AND
-    # est >= threshold
-    sig_fn = _py_sig_factory(3, _minhash_perms(32))
-    arrivals = [(0, r["doc_id"], r["text"]) for r in b1] + [
-        (1, t[0], t[1]) for t in b2
-    ]
-    arrivals.sort()
-    sigs = [(doc_id, sig_fn(text)) for _, doc_id, text in arrivals]
-    want = set()
-    for i in range(len(sigs)):
-        for j in range(i):
-            a, b = sigs[i][1], sigs[j][1]
-            shares_band = any(
-                a[k * 4 : (k + 1) * 4] == b[k * 4 : (k + 1) * 4] for k in range(8)
-            )
-            est = sum(1 for x, y in zip(a, b) if x == y) / 32
-            if shares_band and est >= 0.5:
-                want.add((sigs[i][0], sigs[j][0]))
-    assert got == want

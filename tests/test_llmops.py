@@ -296,17 +296,6 @@ def test_source_mixture_rates_math(spark):
         source_mixture_rates(df, "src", "nt", {"a": 0.5, "b": 0.6})
 
 
-def test_cm_sketch_preagg_paths_identical(spark):
-    df = spark.createDataFrame(
-        [(i, "x " * (i % 5 + 1) + f"tok{i % 7}") for i in range(50)],
-        ["doc_id", "text"],
-    )
-    occ = token_stream(df, "text")
-    a = sorted(map(tuple, cm_sketch(occ, pre_aggregate=True).collect()))
-    b = sorted(map(tuple, cm_sketch(occ, pre_aggregate=False).collect()))
-    assert a == b
-
-
 def test_bigram_lm_scores_hand_computed(spark):
     import math
 

@@ -288,17 +288,6 @@ def test_bootstrap_ci_ranks_follow_surviving_count(spark):
     assert r["ci_lo"] <= r["ci_hi"]
 
 
-def test_rollup_rejects_keep_snapshots_zero(spark):
-    from mimic_iv_data_pipeline_spark.streaming.rollup import (
-        stream_incremental_rollup,
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="keep_snapshots"):
-        stream_incremental_rollup(None, ["k"], ["v"], "/tmp/x", "/tmp/y",
-                                  keep_snapshots=0)
-
-
 def test_estimated_jaccard_unrolled_matches_lambda(spark):
     from mimic_iv_data_pipeline_spark.operators.incremental import estimated_jaccard
 
@@ -730,87 +719,3 @@ def test_generate_timeseries_validates_impute_string(spark):
     generate_timeseries(events, cohort, include_hours=4, impute="Mean").count()
     with _pytest.raises(ValueError, match="strategy"):
         generate_timeseries(events, cohort, include_hours=4, impute="meen").count()
-
-
-def test_stream_corpus_filter_scrubs_text_like_batch(spark, tmp_path):
-    """The streamed quality gate must REPLACE text with the scrubbed
-    form (the batch plan's step 3) — emitting redacted as a side
-    column while text kept raw PII persisted unscrubbed PII through
-    the sink (r7 self-review)."""
-    from mimic_iv_data_pipeline_spark.streaming.events import (
-        read_doc_stream,
-        stream_corpus_filter,
-    )
-
-    src = str(tmp_path / "pii_src")
-    sink = str(tmp_path / "pii_sink")
-    ckpt = str(tmp_path / "pii_ckpt")
-    docs = spark.createDataFrame(
-        [(1, "contact me at alice@example.com for the big secret data thing",
-          "en", "web", 60)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    docs.write.mode("overwrite").parquet(src)
-    q = (
-        stream_corpus_filter(read_doc_stream(spark, src))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(sink).collect()
-    assert rows, "the PII doc passed the quality gate"
-    assert "alice@example.com" not in rows[0]["text"]
-    assert "redacted" not in spark.read.parquet(sink).columns
-
-
-def test_warehouse_quarantines_domain_rule_violations(spark):
-    """refuse=False must quarantine rows violating ROW-LOCAL extra
-    rules, not weave them into the SCD-2 history (r7 self-review)."""
-    from datetime import datetime
-
-    from mimic_iv_data_pipeline_spark.operators.profiling import Expectation
-    from mimic_iv_data_pipeline_spark.plans.warehouse import nightly_refresh
-
-    changes = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), 10.0), (2, datetime(2024, 1, 1), -5.0)],
-        "k long, v timestamp, amount double",
-    )
-    facts = spark.createDataFrame(
-        [(1, datetime(2024, 1, 2), 1.0)], "k long, ft timestamp, m double"
-    )
-    out = nightly_refresh(
-        changes, facts=facts,
-        key_cols=["k"], version_col="v", attr_cols=["amount"],
-        fact_time="ft", rollup_keys=["k"], measure_cols=["m"],
-        extra_rules=[Expectation("in_range", ("amount",), lo=0.0)],
-        refuse=False,
-    )
-    assert out.quarantined.count() == 1
-    assert out.quarantined.collect()[0]["k"] == 2
-    hist_keys = {r["k"] for r in out.history.select("k").collect()}
-    assert hist_keys == {1}  # the violating row never reached history
-
-
-def test_warehouse_rejects_colliding_rollup_key(spark):
-    from datetime import datetime
-
-    from mimic_iv_data_pipeline_spark.plans.warehouse import nightly_refresh
-    import pytest as _pytest
-
-    changes = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), "gold")], "k long, v timestamp, tier string"
-    )
-    facts = spark.createDataFrame(
-        [(1, datetime(2024, 1, 2), "stale", 1.0)],
-        "k long, ft timestamp, tier string, m double",
-    )
-    with _pytest.raises(ValueError, match="tier"):
-        nightly_refresh(
-            changes, facts=facts,
-            key_cols=["k"], version_col="v", attr_cols=["tier"],
-            fact_time="ft", rollup_keys=["tier"], measure_cols=["m"],
-            refuse=False,
-        )

@@ -41,9 +41,9 @@ def test_estimated_jaccard_rejects_mismatched_signature_length(spark):
     error loudly, not silently score the first 64 elements / NULL-
     poison the estimate (r7 advice on the unrolled element_at path)."""
     from pyspark.errors import PySparkException
+    from mimic_iv_data_pipeline_spark.operators.dedup import minhash_signatures
     from mimic_iv_data_pipeline_spark.operators.incremental import (
-        build_minhash_index,
-        within_batch_pairs,
+        estimated_jaccard,
     )
 
     docs = spark.createDataFrame(
@@ -51,13 +51,24 @@ def test_estimated_jaccard_rejects_mismatched_signature_length(spark):
          (2, "the quick brown fox jumps over the lazy cat")],
         "doc_id long, text string",
     )
-    banded32 = build_minhash_index(docs, "doc_id", "text", num_hashes=32, bands=8)
+    sig32 = minhash_signatures(docs, "doc_id", "text", num_hashes=32)
+    pair = sig32.alias("a").join(
+        sig32.alias("b"), F.col("a.doc") < F.col("b.doc")
+    ).select(F.col("a.signature").alias("sa"), F.col("b.signature").alias("sb"))
+
+    def scored(num_hashes):
+        return pair.select(
+            estimated_jaccard(
+                F.col("sa"), F.col("sb"), num_hashes=num_hashes
+            ).alias("est")
+        )
+
     # matching length: works and finds the near-dup pair
-    assert within_batch_pairs(banded32, threshold=0.3, num_hashes=32).count() == 1
+    assert scored(32).filter(F.col("est") >= 0.3).count() == 1
     # mismatched length: the runtime guard raises instead of silently
     # scoring only the first 64 (or OOB) elements
     with pytest.raises(PySparkException, match="estimated_jaccard"):
-        within_batch_pairs(banded32, threshold=0.3, num_hashes=64).collect()
+        scored(64).collect()
 
 
 def test_estimated_jaccard_guard_keeps_estimates_exact(spark):
@@ -202,21 +213,6 @@ def test_pq_rejects_mismatched_codebook_dims(spark):
         pq_encode(corpus, books_4d).collect()
     with pytest.raises(ValueError, match="m\\*dsub"):
         pq_topk(corpus.limit(2), corpus=corpus, codebooks=books_4d, k=3).collect()
-
-
-def test_stream_lsh_dedup_rejects_degenerate_banding(spark):
-    """bands > num_hashes (or non-divisible) must raise — the streaming
-    twin of the r7 batch-path fix; rows_per_band=0 would hash the EMPTY
-    slice into one global bucket per band (unbounded state, O(n^2))."""
-    from mimic_iv_data_pipeline_spark.streaming.stateful import stream_lsh_dedup
-
-    docs = spark.readStream.format("rate").load().selectExpr(
-        "value AS doc_id", "CAST(value AS STRING) AS text"
-    )
-    with pytest.raises(ValueError, match="rows_per_band"):
-        stream_lsh_dedup(docs, num_hashes=8, bands=16)
-    with pytest.raises(ValueError, match="rows_per_band"):
-        stream_lsh_dedup(docs, num_hashes=8, bands=3)
 
 
 @pytest.mark.parametrize("driver_cap", [1_000_000, 0])

@@ -60,3 +60,135 @@ def test_driver_shim_exports():
     assert callable(mod.entry)
     assert set(mod.oracle_sql()) <= set(mod.queries())
     assert len(mod.queries()) == len(all_queries())
+
+
+# Package defs that no registered query, pipeline stage, benchmark or
+# script reaches, kept on purpose. Key: "<module under the package>.<def>".
+_KEEP_UNREACHED = {
+    # paper stages (SURVEY.md §2) not yet composed into run_pipeline
+    "plans.features.preproc_diagnoses": "paper stage: diagnoses preprocessing, not yet in run_pipeline",
+    "plans.features.prepare_icd_map": "paper stage: ICD-9→10 map for preproc_diagnoses",
+    "plans.features.preproc_meds": "paper stage: medications preprocessing, not yet in run_pipeline",
+    "plans.timeseries.medication_signal": "paper stage: medication time series, not yet in run_pipeline",
+    "plans.tokenization.lab_tokens": "paper stage: BEHRT lab tokens, not yet in run_pipeline",
+    "plans.tokenization.condition_tokens": "paper stage: BEHRT condition tokens, not yet in run_pipeline",
+    "plans.ml_assembly.train_test_split_ids": "paper stage: the reference's train/test split",
+    "functions.scalars.age_years": "paper stage: cohort age derivation",
+    "functions.scalars.anchor_group_end_year": "paper stage: cohort anchor-year derivation",
+    "functions.scalars.epc_classes": "paper stage: medication EPC classes",
+    "sources.schemas.align_columns": "paper stage: MIMIC-IV v1/v2 column aliasing",
+    "sources.readers.read_csv_gz": "source surface: the reference's csv.gz inputs",
+    "sources.readers.read_tsv_map": "source surface: the reference's TSV mapping tables",
+    "sources.readers.read_glob_csv": "source surface: the reference's csv globs",
+    "sources.sinks.write_csv_gz": "sink surface: the reference's csv.gz stage files",
+    "sources.sinks.write_parquet": "sink surface: partitioned parquet stage files",
+    "sources.sinks.write_summary_text": "sink surface: the reference's cohort summary text",
+    "operators.nlp.entity_summary": "paper stage: notes entity summary",
+    # reference implementations that tests compare kept operators against
+    "operators.windows.impute_cascade": "paper T6 cascade; generate_timeseries inlines it",
+    "operators.history.as_of": "reference that pins pit_join",
+    "operators.bpe._encode_word": "reference for the BPE word encoder",
+}
+
+
+def _package_defs_and_reach():
+    """AST walk: every top-level def of the package, and the defs reached
+    from the query modules, the package's module-level code, and the
+    names that bench.py, perfbench/, scripts/ and __spark_entry__.py use.
+    A name resolves through the module's own defs and its
+    ``from <package module> import name`` statements (re-exports are
+    followed). Returns (defs, reach) where ``reach(roots)`` is the set of
+    defs reachable from ``roots`` plus the fixed entry points."""
+    import ast
+
+    pkg = REPO / "mimic_iv_data_pipeline_spark"
+    trees, imports, defs = {}, {}, {}
+
+    def add(key, tree):
+        trees[key], imports[key] = tree, {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(pkg.name):
+                for a in node.names:
+                    imports[key][a.asname or a.name] = (node.module, a.name)
+
+    def_types = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for path in sorted(pkg.rglob("*.py")):
+        parts = path.relative_to(REPO).with_suffix("").parts
+        mod = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        add(mod, ast.parse(path.read_text()))
+        for node in trees[mod].body:
+            if isinstance(node, def_types):
+                defs[(mod, node.name)] = node
+    external = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    external += sorted((REPO / "perfbench").glob("*.py"))
+    external += sorted((REPO / "scripts").glob("*.py"))
+    for path in external:
+        add(str(path), ast.parse(path.read_text()))
+
+    def resolve(mod, name, attrs):
+        for _ in range(10):  # bounded re-export chase
+            if (mod, name) in defs:
+                return (mod, name)
+            if name not in imports.get(mod, {}):
+                return None
+            src, orig = imports[mod][name]
+            if f"{src}.{orig}" in trees:  # `from pkg import submodule`
+                if not attrs:
+                    return None
+                mod, name, attrs = f"{src}.{orig}", attrs[0], attrs[1:]
+            else:
+                mod, name = src, orig
+        return None
+
+    def refs(mod, node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield resolve(mod, n.id, ())
+            elif isinstance(n, ast.Attribute):
+                chain = []
+                while isinstance(n, ast.Attribute):
+                    chain.append(n.attr)
+                    n = n.value
+                if isinstance(n, ast.Name):
+                    yield resolve(mod, n.id, tuple(reversed(chain)))
+
+    queries = {key for key in defs if key[0].startswith(f"{pkg.name}.queries")}
+    module_code = []  # decorators and non-def statements run at import
+    for mod, tree in trees.items():
+        for node in tree.body:
+            if isinstance(node, def_types):
+                module_code += [(mod, d) for d in node.decorator_list]
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                module_code.append((mod, node))
+
+    def reach(roots):
+        seen = set(roots) | queries
+        work = [(mod, defs[(mod, name)]) for mod, name in seen] + module_code
+        while work:
+            mod, node = work.pop()
+            for key in refs(mod, node):
+                if key is not None and key not in seen:
+                    seen.add(key)
+                    work.append((key[0], defs[key]))
+        return seen
+
+    return defs, reach
+
+
+def test_every_package_function_is_reached():
+    """No package def is dead: each is reached from a registered query,
+    the pipeline, a benchmark or a script, or is on _KEEP_UNREACHED with
+    its reason. The keep list itself names only live, unreached defs."""
+    defs, reach = _package_defs_and_reach()
+    pkg = "mimic_iv_data_pipeline_spark."
+    keep = {(pkg + k.rpartition(".")[0], k.rpartition(".")[2]) for k in _KEEP_UNREACHED}
+
+    def names(keys):
+        return sorted(f"{mod.removeprefix(pkg)}.{name}" for mod, name in keys)
+
+    gone = names(keep - set(defs))
+    assert not gone, f"keep-list entries that no longer exist: {gone}"
+    stale = names(keep & reach(set()))
+    assert not stale, f"keep-list entries now reached (drop them from the list): {stale}"
+    dead = names(set(defs) - reach(keep))
+    assert not dead, f"unreached package defs (delete them or add to _KEEP_UNREACHED): {dead}"

@@ -117,56 +117,3 @@ def test_bloom_prefilter_join_rejects_key_dtype_mismatch(spark):
         facts.withColumn("k", facts["k"].cast("long")), dim, "k"
     )
     assert fixed.count() == 1
-
-
-def test_rollup_partial_snapshot_is_ignored_and_recovered(spark, tmp_path):
-    """Regression (r6 advice): a crash mid-write leaves a v{batch_id}
-    directory WITHOUT _SUCCESS. That partial must (a) be invisible to
-    latest_rollup_snapshot / _snapshot_ids and (b) NOT trigger the
-    idempotent-replay skip — otherwise the replayed batch's delta is
-    silently lost and readers may see corrupt state."""
-    import os
-
-    from mimic_iv_data_pipeline_spark.streaming.rollup import (
-        _snapshot_ids,
-        latest_rollup_snapshot,
-        stream_incremental_rollup,
-    )
-    from mimic_iv_data_pipeline_spark.streaming.events import read_event_stream
-
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    rows = spark.createDataFrame(
-        [(i, i % 3, float(i)) for i in range(30)],
-        "event_id long, k long, value double",
-    ).withColumn("ts", F.to_timestamp(F.lit("2024-01-01 00:00:00"))) \
-     .withColumn("user_id", F.col("event_id") % 5) \
-     .withColumn("event_type", F.concat(F.lit("t"), F.col("k"))) \
-     .withColumn("props", F.lit(None).cast("string"))
-    rows.select("event_id", "ts", "user_id", "event_type", "value", "props") \
-        .write.mode("overwrite").parquet(src)
-
-    # Simulate the crash: a partial snapshot for batch 0 with data
-    # files but NO _SUCCESS marker.
-    partial = os.path.join(state, "v" + "0" * 12)
-    os.makedirs(partial)
-    with open(os.path.join(partial, "part-00000.parquet"), "wb") as f:
-        f.write(b"\x00garbage, not a parquet footer")
-
-    assert _snapshot_ids(state) == []
-    assert latest_rollup_snapshot(spark, state) is None
-
-    q = stream_incremental_rollup(
-        read_event_stream(spark, src), ["event_type"], ["value"], state, ckpt
-    )
-    q.awaitTermination(180)
-
-    # The replayed batch 0 must have overwritten the partial with a
-    # committed snapshot containing the batch's data.
-    assert 0 in _snapshot_ids(state)
-    snap = latest_rollup_snapshot(spark, state)
-    assert snap is not None
-    got = {r["event_type"]: r["n"] for r in snap.collect()}
-    assert got == {"t0": 10, "t1": 10, "t2": 10}
-    assert os.path.exists(os.path.join(partial, "_SUCCESS"))

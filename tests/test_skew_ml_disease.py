@@ -1,12 +1,9 @@
-"""Tests: salted join/agg correctness, disease-cohort filter, ML
-assembly boundary."""
+"""Tests: disease-cohort filter, ML assembly boundary."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from mimic_iv_data_pipeline_spark.operators.skew import salted_agg, salted_join
 from mimic_iv_data_pipeline_spark.plans.cohort import filter_by_diagnosis
 from mimic_iv_data_pipeline_spark.plans.features import prepare_icd_map
 from mimic_iv_data_pipeline_spark.plans.ml_assembly import (
@@ -14,50 +11,6 @@ from mimic_iv_data_pipeline_spark.plans.ml_assembly import (
     ml_feature_matrix,
     train_test_split_ids,
 )
-
-
-def test_salted_join_equals_plain_join(spark):
-    left = spark.range(0, 5000).select(
-        (F.col("id") % 5).alias("k"), F.col("id").alias("v")
-    )
-    right = spark.createDataFrame(
-        [(i, f"r{i}") for i in range(5)], "k long, tag string"
-    )
-    plain = left.join(right, "k").select("k", "v", "tag")
-    salted = salted_join(left, right, on="k").select("k", "v", "tag")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_outer(spark):
-    left = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    right = spark.createDataFrame([(1, "x")], "k long, tag string")
-    out = salted_join(left, right, on="k", how="left").collect()
-    got = {r["k"]: r["tag"] for r in out}
-    assert got == {1: "x", 2: None} and len(out) == 2
-
-
-def test_salted_agg_equals_plain_agg(spark):
-    df = spark.range(0, 10000).select(
-        (F.col("id") % 3).alias("k"), (F.col("id") % 100).cast("double").alias("v")
-    )
-    plain = {
-        r["k"]: (r["s"], r["n"])
-        for r in df.groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    salted = {
-        r["k"]: (r["s"], r["n"])
-        for r in salted_agg(
-            df,
-            ["k"],
-            {
-                "s": (F.sum("v"), F.sum("__p_s")),
-                "n": (F.count(F.lit(1)), F.sum("__p_n")),
-            },
-        ).collect()
-    }
-    assert plain == salted
 
 
 def test_filter_by_diagnosis(spark):

@@ -79,60 +79,3 @@ def test_align_columns_version_drift(spark):
     assert "ethnicity" in aligned.columns and "race" not in aligned.columns
     v1 = spark.createDataFrame([(1, "WHITE")], "subject_id long, ethnicity string")
     assert align_columns(v1, version="v1").columns == v1.columns
-
-
-def test_register_views_sql_surface(spark, sf_smoke):
-    from mimic_iv_data_pipeline_spark.sources.readers import register_views
-
-    register_views(spark, sf_smoke)
-    row = spark.sql(
-        """
-        SELECT l_returnflag, count(*) AS n
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY l_returnflag ORDER BY l_returnflag LIMIT 1
-        """
-    ).first()
-    assert row["n"] > 0
-    # events view carries the nanos→micros shim
-    assert dict(spark.table("events").dtypes)["ts"] == "timestamp"
-
-
-def test_jsonl_roundtrip_and_corrupt_handling(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from mimic_iv_data_pipeline_spark.sources.readers import read_jsonl
-    from mimic_iv_data_pipeline_spark.sources.sinks import write_jsonl
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    df = spark.createDataFrame(
-        [(1, "hello world", "src0"), (2, "goodbye", "src1")], schema=schema
-    )
-    out = str(tmp_path / "corpus")
-    write_jsonl(df, out, compression=None, partition_by=["source"])
-    back = read_jsonl(spark, out, schema)
-    got = sorted(
-        (r["doc_id"], r["text"], r["source"]) for r in back.collect()
-    )
-    assert got == [(1, "hello world", "src0"), (2, "goodbye", "src1")]
-
-    # malformed lines land in _corrupt_record, not a job failure
-    bad = tmp_path / "bad.jsonl"
-    bad.write_text('{"doc_id": 1, "text": "ok", "source": "s"}\nnot json at all\n')
-    parsed = read_jsonl(spark, str(bad), schema)
-    rows = parsed.collect()
-    assert len(rows) == 2
-    corrupt = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(corrupt) == 1 and corrupt[0]["_corrupt_record"] == "not json at all"
-
-    # FAILFAST surfaces the breakage
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
-
-    with _pytest.raises(Exception):
-        read_jsonl(spark, str(bad), schema, mode="FAILFAST").collect()

@@ -1,10 +1,6 @@
-"""SCD-1 upsert semantics, ORC roundtrip, plan-shape pins, and the
-streaming-LSH TTL path."""
+"""SCD-1 upsert semantics and plan-shape pins."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 from mimic_iv_data_pipeline_spark.operators.joins import upsert_latest
 
@@ -33,33 +29,6 @@ def test_upsert_stale_update_loses(spark):
     assert (row["v"], row["version"]) == ("new", 9)
 
 
-def test_orc_roundtrip(spark, tmp_path, sf_smoke):
-    from mimic_iv_data_pipeline_spark.sources.readers import read_orc
-    from mimic_iv_data_pipeline_spark.sources.sinks import write_orc
-
-    nation = spark.read.parquet(f"{sf_smoke}/nation.parquet")
-    path = str(tmp_path / "nation_orc")
-    write_orc(nation, path)
-    back = read_orc(spark, path)
-    assert back.schema == nation.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
-
-
-def test_orc_partitioned_prunes(spark, tmp_path, sf_smoke):
-    """Hive-partitioned ORC must show partition filters in the scan."""
-    from mimic_iv_data_pipeline_spark.sources.readers import read_orc
-    from mimic_iv_data_pipeline_spark.sources.sinks import write_orc
-
-    cust = spark.read.parquet(f"{sf_smoke}/customer.parquet")
-    path = str(tmp_path / "cust_orc")
-    write_orc(cust, path, partition_by=["c_nationkey"])
-    back = read_orc(spark, path).filter(F.col("c_nationkey") == 3)
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "c_nationkey" in plan
-    want = cust.filter(F.col("c_nationkey") == 3).count()
-    assert back.count() == want
-
-
 def test_plan_shape_pins(spark, sf_dir):
     """Pin the physical strategies the scale story depends on: small
     dims broadcast, TakeOrdered instead of global sorts, parquet
@@ -79,53 +48,3 @@ def test_plan_shape_pins(spark, sf_dir):
     # at least one real pushed filter, not an empty list
     pushed = p_q02.split("PushedFilters: [", 1)[1].split("]", 1)[0]
     assert pushed.strip(), "filters must reach the parquet scan"
-
-
-def test_stream_lsh_ttl_path_keeps_results(spark, tmp_path, sf_smoke):
-    """With a TTL far longer than the run, the ProcessingTimeTimeout
-    path must produce the same pairs as NoTimeout (the eviction branch
-    only changes behavior once a bucket idles past the horizon)."""
-    from mimic_iv_data_pipeline_spark.streaming.events import read_doc_stream
-    from mimic_iv_data_pipeline_spark.streaming.stateful import stream_lsh_dedup
-
-    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet").filter(
-        F.col("doc_id") < 20
-    )
-    b1 = docs.collect()
-    b2 = [(1003, next(r["text"] for r in b1 if r["doc_id"] == 3), "en", "s", 1)]
-    src = tmp_path / "ttl_src"
-    src.mkdir()
-    results = {}
-    for label, ttl in (("no_ttl", None), ("ttl", 10_000)):
-        out_dir = str(tmp_path / f"out_{label}")
-        ckpt = str(tmp_path / f"ckpt_{label}")
-
-        def run():
-            stream = read_doc_stream(spark, str(src) + "/*")
-            q = (
-                stream_lsh_dedup(stream, threshold=0.5, state_ttl_minutes=ttl)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        if label == "no_ttl":
-            docs.coalesce(1).write.mode("overwrite").parquet(str(src / "b1"))
-        run()
-        if label == "no_ttl":
-            spark.createDataFrame(
-                b2, "doc_id long, text string, lang string, source string, n_chars long"
-            ).coalesce(1).write.mode("overwrite").parquet(str(src / "b2"))
-            run()
-        else:
-            run()  # second availableNow pass for parity of batch count
-        results[label] = {
-            (r["doc_id"], r["dup_of"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-    assert (1003, 3) in results["no_ttl"]
-    assert results["ttl"] == results["no_ttl"]
