@@ -90,23 +90,20 @@ def clamp_outliers(
     lower_pct: float = 0.05,
     upper_pct: float = 0.95,
     mode: str = "clamp",
-    exact: bool = True,
 ) -> DataFrame:
     """A8: per-group percentile outlier handling.
 
     Reference: ``outlier_removal.py:11-37`` computes ``np.percentile``
     per itemid in a loop and either clamps (impute_outlier) or drops.
     Here: one grouped percentile aggregate, broadcast back, ``when``
-    clamp. ``exact=True`` uses sort-based exact ``percentile`` (linear
-    interpolation — matches numpy/DuckDB ``quantile_cont`` for oracle
-    parity); ``exact=False`` uses ``percentile_approx`` for the 100 TB
-    path where a t-digest sketch is the right trade.
+    clamp. The sort-based exact ``percentile`` (linear interpolation)
+    matches numpy/DuckDB ``quantile_cont``; an approximate sketch would
+    break parity with the reference.
     """
     groups = _cols(group_by)
-    fn = "percentile" if exact else "percentile_approx"
     bounds = df.groupBy(*groups).agg(
-        F.expr(f"{fn}({value_col}, {lower_pct})").alias("__lo"),
-        F.expr(f"{fn}({value_col}, {upper_pct})").alias("__hi"),
+        F.expr(f"percentile({value_col}, {lower_pct})").alias("__lo"),
+        F.expr(f"percentile({value_col}, {upper_pct})").alias("__hi"),
     )
     out = df.join(F.broadcast(bounds), on=groups, how="left")
     if mode == "clamp":
@@ -130,11 +127,10 @@ def majority_unit_clamp(
     lower_pct: float = 0.02,
     upper_pct: float = 0.98,
     mode: str = "clamp",
-    exact: bool = True,
 ) -> DataFrame:
     """Fused A7+A8: ``filter_majority_unit`` followed by
-    ``clamp_outliers`` in ONE aggregate pass over the input (guide
-    §2.4 — shuffle/scan fewer bytes; optimization r11).
+    ``clamp_outliers`` in ONE aggregate pass over the input, so fewer
+    bytes are scanned and shuffled.
 
     The sequential pair scans the (typically join-heavy) event relation
     three times: mode election, post-filter percentile bounds, and the
@@ -162,18 +158,17 @@ def majority_unit_clamp(
     """
     if mode not in ("clamp", "drop"):
         raise ValueError(f"unknown outlier mode: {mode}")
-    fn = "percentile" if exact else "percentile_approx"
     stats = df.groupingSets(
         [[group_col, unit_col], [group_col]], group_col, unit_col
     ).agg(
         F.count(F.lit(1)).alias("__cnt"),
         F.count(unit_col).alias("__cnt_unit"),
-        F.expr(f"{fn}({value_col}, {lower_pct})").alias("__lo"),
-        F.expr(f"{fn}({value_col}, {upper_pct})").alias("__hi"),
+        F.expr(f"percentile({value_col}, {lower_pct})").alias("__lo"),
+        F.expr(f"percentile({value_col}, {upper_pct})").alias("__hi"),
         F.grouping(unit_col).alias("__gflag"),
     )
-    # tail expressions as parsed SQL (r12, guide §5) — identical trees,
-    # one parse per select instead of per-operand py4j chatter
+    # tail expressions as parsed SQL: identical trees, one parse per
+    # select instead of per-operand py4j chatter
     cand = stats.filter(F.expr(f"__gflag = 0 AND `{unit_col}` IS NOT NULL"))
     w = Window.partitionBy(group_col).orderBy(
         F.col("__cnt").desc(), F.col(unit_col).asc()
@@ -1103,7 +1098,6 @@ def roc_pr_curve(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    reuse: bool = True,
 ) -> DataFrame:
     """Full ROC + precision/recall curve at every distinct score
     threshold, with step-interpolated average precision and the
@@ -1125,17 +1119,14 @@ def roc_pr_curve(
     aggregate cross-joined back (literal broadcast), one integer term
     aggregate. No single-partition window over the facts.
 
-    ``reuse=True`` MATERIALIZES the |distinct scores|-row per-score
-    relation once (3 consumers — prefix sums, totals, curve — each
-    would re-run the fact scan without it) via
+    The |distinct scores|-row per-score relation is MATERIALIZED once
+    (3 consumers — prefix sums, totals, curve — each would re-run the
+    fact scan without it) via
     :func:`~mimic_iv_data_pipeline_spark.engine.materialize`
     (localCheckpoint: lineage cut, storage freed by the ContextCleaner
     when the result goes out of scope — it never enters Spark's
     CacheManager, so long-lived sessions calling this on many DISTINCT
-    inputs accumulate NOTHING; the r9 verdict's persist-without-
-    unpersist leak is gone). The cost is one eager job at call time;
-    pass ``reuse=False`` to stay fully lazy (one-shot plans where the
-    caller collects exactly once).
+    inputs accumulate NOTHING). The cost is one eager job at call time.
     """
     from mimic_iv_data_pipeline_spark.engine import materialize
     from mimic_iv_data_pipeline_spark.operators.sampling import global_prefix_sums
@@ -1145,8 +1136,7 @@ def roc_pr_curve(
         F.sum(lab).alias("pos"),
         F.sum(F.lit(1) - lab).alias("neg"),
     )
-    if reuse:
-        by_score = materialize(by_score)
+    by_score = materialize(by_score)
     cum = global_prefix_sums(
         by_score,
         [F.col("score").desc()],

@@ -129,23 +129,21 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.6,
-    prefix_filter: bool | None = None,
-    reuse: bool = True,
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard near-dup pairs above ``threshold``.
 
     Two exactness-preserving physical strategies, picked by selectivity:
 
-    * ``prefix_filter=False`` (default for t < 0.5): inverted-index
-      count join — explode (doc, shingle), self-join on shingle, count
-      common per pair (2-long-int rows, cheap to shuffle), then
-      ``|A∪B| = |A|+|B|−common`` with the doc-size table **broadcast**.
-      Cost is Σ df(shingle)² join rows but each row is tiny.
+    * t < 0.5: inverted-index count join — explode (doc, shingle),
+      self-join on shingle, count common per pair (2-long-int rows,
+      cheap to shuffle), then ``|A∪B| = |A|+|B|−common`` with the
+      doc-size table **broadcast**. Cost is Σ df(shingle)² join rows
+      but each row is tiny.
 
-    * ``prefix_filter=True`` (default for t ≥ 0.5): prefix filtering
-      (PPJoin family — Xiao et al., "Efficient Similarity Joins for
-      Near-Duplicate Detection", WWW'08): order each doc's shingles by
+    * t ≥ 0.5: prefix filtering (PPJoin family — Xiao et al.,
+      "Efficient Similarity Joins for Near-Duplicate Detection",
+      WWW'08): order each doc's shingles by
       ascending global document frequency; a doc only indexes its first
       ``|S| − ⌈t·|S|⌉ + 1`` shingles — sets with J ≥ t must collide on
       a prefix token, so hot shingles (the Σdf² blowup) drop out of the
@@ -167,21 +165,14 @@ def ngram_jaccard_pairs(
     loses essentially nothing while bounding index fan-out to
     Σ min(df, max_df)². Property-tested: capped and uncapped agree on
     the fixture corpus above threshold. ``max_df`` TAKES PRECEDENCE
-    over ``prefix_filter``: when set, the capped inverted-index path
-    runs and the prefix index is not built (the two knobs target the
-    same Σdf² wall from different ends — raise ValueError-worthy
-    confusion is avoided by documenting the priority here; pass
-    ``max_df=None`` to use the PPJoin prefix path).
+    over the threshold's pick: when set, the capped inverted-index path
+    runs and the prefix index is not built (the cap and the prefix
+    target the same Σdf² wall from different ends).
     """
-    if prefix_filter is None:
-        prefix_filter = threshold >= 0.5
-    exploded = exploded_shingles(df, id_col, text_col, n)
-    if reuse:
-        # the exploded relation feeds both join sides AND the size
-        # aggregate — persisting it computes the tokenize+window chain
-        # once (~1s saved per call at 5k docs; LRU-evicted under
-        # pressure). Pass reuse=False to keep the plan fully lazy.
-        exploded = exploded.persist()
+    # the exploded relation feeds both join sides AND the size
+    # aggregate — persisting it computes the tokenize+window chain
+    # once (~1s saved per call at 5k docs; LRU-evicted under pressure)
+    exploded = exploded_shingles(df, id_col, text_col, n).persist()
 
     if max_df is not None:
         # candidate index without hot shingles; exact verify below
@@ -205,7 +196,7 @@ def ngram_jaccard_pairs(
             F.col("jaccard") >= threshold
         )
 
-    if not prefix_filter:
+    if threshold < 0.5:
         a = exploded.alias("a")
         b = exploded.alias("b")
         common = (
@@ -389,7 +380,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     verify_threshold: float = 0.5,
-    reuse: bool = True,
     shingle_hash: str = "xxhash64",
     bucket: str = "hash",
 ) -> DataFrame:
@@ -400,16 +390,14 @@ def minhash_lsh_pairs(
     explode bands, groupBy band bucket); candidates are then verified
     with exact n-gram Jaccard so the output has no false positives.
 
-    ``reuse`` persists the shared (doc, shingle-hash) relation (feeds
-    the sketch aggregate AND the verify join). Spark's CacheManager
-    dedups identical plans, so repeated calls reuse one cache entry
-    rather than accumulating; pass ``reuse=False`` for a fully lazy
-    plan (e.g. one-shot batch jobs where executor memory is tighter
-    than recompute cost).
+    The shared (doc, shingle-hash) relation is persisted (it feeds the
+    sketch aggregate AND the verify join). Spark's CacheManager dedups
+    identical plans, so repeated calls reuse one cache entry rather
+    than accumulating.
 
-    Scale shape (the r3 rewrite): the sketch shuffle ships only
-    ``num_hashes`` map-side-combined mins per doc per partition — the
-    shingle sets needed for exact verification are collected ONLY for
+    Scale shape: the sketch shuffle ships only ``num_hashes``
+    map-side-combined mins per doc per partition — the shingle sets
+    needed for exact verification are collected ONLY for
     documents that appear in some candidate pair (semi-join on the
     candidate id set), so the corpus-wide ``collect_list`` shuffle of
     full shingle text that previously dominated the runtime never
@@ -431,9 +419,7 @@ def minhash_lsh_pairs(
     if bucket not in ("hash", "exact"):
         raise ValueError(f"minhash_lsh_pairs: unknown bucket={bucket!r}")
     exploded = exploded_shingles(df, id_col, text_col, n)
-    base = exploded.select("doc", _shingle_hash64(shingle_hash).alias("__h"))
-    if reuse:
-        base = base.persist()
+    base = exploded.select("doc", _shingle_hash64(shingle_hash).alias("__h")).persist()
     x32 = F.pmod(F.col("__h"), F.lit(_M32))
     sig = (
         base.select("doc", x32.alias("__x"))
@@ -457,8 +443,7 @@ def minhash_lsh_pairs(
     # LSH survivors) fans out to THREE consumers (the id set and both
     # verify-join probes), so persist it — otherwise the banded
     # self-join re-executes per consumer.
-    if reuse:
-        candidates = candidates.persist()
+    candidates = candidates.persist()
     # Shingle-hash sets are built ONLY for docs in some candidate pair
     # (left-semi on the candidate ids), from the cached base relation.
     cand_docs = (
@@ -466,6 +451,7 @@ def minhash_lsh_pairs(
         .union(candidates.select(F.col("id_b").alias("doc")))
         .distinct()
     )
+    # probed twice by _score_pairs (id_a side and id_b side)
     sets_df = (
         base.join(cand_docs, "doc", "left_semi")
         .groupBy("doc")
@@ -473,10 +459,8 @@ def minhash_lsh_pairs(
             F.collect_list("__h").alias("shingles"),
             F.count(F.lit(1)).alias("n_shingles"),
         )
+        .persist()
     )
-    if reuse:
-        # probed twice by _score_pairs (id_a side and id_b side)
-        sets_df = sets_df.persist()
     return _score_pairs(candidates, sets_df).filter(
         F.col("jaccard") >= verify_threshold
     )
@@ -822,8 +806,7 @@ def semantic_dedup(
     seed: int = 42,
     train_sample: int = 262_144,
     centroids=None,
-    reuse: bool = True,
-    pairs: str = "auto",
+    pairs: str = "pandas",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means-cluster the embedding
     space, then deduplicate ONLY within clusters — pairwise cosine is
@@ -842,14 +825,14 @@ def semantic_dedup(
     lets q134 hash-verify everything AROUND the training: assignment,
     within-cell pairing, the cosine-threshold prune, the keep rule).
 
-    ``pairs`` picks the within-cell compare strategy (r11):
+    ``pairs`` picks the within-cell compare strategy:
 
     - ``"join"``: the original cell-key self-join with the expression
-      cosine — interpreted per pair (the r10 HOF-lambda cost), and the
+      cosine — interpreted per pair (the HOF-lambda cost), and the
       pair relation MATERIALIZES as shuffle rows: ~Σ|cell|²/2 rows
-      plus a distinct. The hash-twin reference path.
-    - ``"pandas"``: one ``applyInPandas`` per cell — the Gram products
-      accumulate as dim-count vectorized rank-one updates **in Spark's
+      plus a distinct. The parity reference for ``"pandas"``.
+    - ``"pandas"`` (default): one ``applyInPandas`` per cell — the Gram
+      products accumulate as dim-count vectorized rank-one updates **in Spark's
       exact sequential fold order** (``acc += V[:,d]·V[:,d]``
       reproduces ``aggregate(zip_with(a,b,x*y), 0.0, acc+v)`` element
       for element, and IEEE-754 ops are deterministic given order), so
@@ -863,14 +846,14 @@ def semantic_dedup(
       every threshold; the kernel's isnan branch mirrors it). The pair
       relation never ships: one shuffle on ``cell``, O(largest cell)
       memory per group in bounded row chunks, pruned flags emitted
-      directly. This is deliberately NOT the r10 ANN scorer
+      directly. This is deliberately NOT the ANN scorer
       (``_bucketed_topk_score_pandas``): that kernel uses BLAS matmul
-      whose pairwise summation would flip boundary pairs (the c675103
-      why-not); the per-dimension fold forgoes BLAS to keep the hash
-      contract, and is still vectorized across each cell's pair block.
-    - ``"auto"`` (default): ``"pandas"`` — bit-equality is pinned by
-      the expr==pandas parity suite (tests/test_r11_wave.py) and the
-      q134 fixed-centroid hash twin runs through it.
+      whose pairwise summation would flip boundary pairs; the
+      per-dimension fold forgoes BLAS to keep the hash contract, and is
+      still vectorized across each cell's pair block. Bit-equality with
+      ``"join"`` is pinned by the expr==pandas parity suite
+      (tests/test_r11_wave.py) and the q134 fixed-centroid hash twin
+      runs through it.
     """
     import numpy as np
 
@@ -894,42 +877,31 @@ def semantic_dedup(
     assigned = _assign_cells_pandas(emb, id_col, vec_col, centers, 1).select(
         F.col(id_col).alias("id"), as_double_vec(F.col(vec_col)).alias("__v"), "cell"
     )
-    # three consumers (both self-join sides + the final output join on a
-    # DIFFERENT key) — materialize (localCheckpoint) so the Python/Arrow
-    # assignment pass, the most expensive stage here, runs once. Unlike
-    # persist(), the checkpointed storage is ContextCleaner-freed when
-    # the result goes out of scope and never enters the CacheManager, so
-    # long-lived sessions calling this on many distinct inputs
-    # accumulate nothing (r9 verdict leak fix). ``reuse=False`` stays
-    # fully lazy (no eager job at call time).
-    if pairs not in ("auto", "join", "pandas"):
+    if pairs not in ("join", "pandas"):
         raise ValueError(
-            f"semantic_dedup: pairs must be 'auto', 'join' or 'pandas', got {pairs!r}"
+            f"semantic_dedup: pairs must be 'join' or 'pandas', got {pairs!r}"
         )
-    if pairs == "auto":
-        pairs = "pandas"
+    # the join path has three consumers (both self-join sides + the
+    # final output join on a DIFFERENT key); the pandas path pins too,
+    # sparing a recompute when callers hold the result across actions.
+    # materialize (localCheckpoint) runs the Python/Arrow assignment
+    # pass, the most expensive stage here, once. Unlike persist(), the
+    # checkpointed storage is ContextCleaner-freed when the result goes
+    # out of scope and never enters the CacheManager, so long-lived
+    # sessions calling this on many distinct inputs accumulate nothing.
+    from mimic_iv_data_pipeline_spark.engine import materialize
+
+    assigned = materialize(assigned)
     if pairs == "pandas":
-        if reuse:
-            # one consumer per cell group — but the Python/Arrow
-            # assignment pass upstream still feeds BOTH the grouping
-            # shuffle and nothing else; keep the pin only to spare a
-            # recompute when callers hold the result across actions
-            from mimic_iv_data_pipeline_spark.engine import materialize
-
-            assigned = materialize(assigned)
         return _semantic_prune_pandas(assigned, threshold)
-    if reuse:
-        from mimic_iv_data_pipeline_spark.engine import materialize
-
-        assigned = materialize(assigned)
     a = assigned.alias("a")
     b = assigned.alias("b")
-    # The r10 vectorized ANN scorer (_bucketed_topk_score_pandas) is
-    # still the WRONG tool here — its BLAS matmul sums in pairwise
-    # order and a boundary-straddling pair could flip the prune flag
-    # (the c675103 analysis). The pairs="pandas" kernel above solves
-    # this differently: per-dimension sequential accumulation IS the
-    # expression fold order, so it is bit-identical, not just close.
+    # The vectorized ANN scorer (_bucketed_topk_score_pandas) is the
+    # WRONG tool here — its BLAS matmul sums in pairwise order and a
+    # boundary-straddling pair could flip the prune flag. The
+    # pairs="pandas" kernel above solves this differently:
+    # per-dimension sequential accumulation IS the expression fold
+    # order, so it is bit-identical, not just close.
     pruned_ids = (
         a.join(b, (F.col("a.cell") == F.col("b.cell")) & (F.col("b.id") < F.col("a.id")))
         .where(cosine(F.col("a.__v"), F.col("b.__v")) >= threshold)

@@ -64,7 +64,6 @@ def edit_distance_join(
     str_col: str,
     max_dist: int = 1,
     max_bucket: int | None = 100_000,
-    reuse: bool = True,
 ) -> DataFrame:
     """All pairs ``(id_a, id_b, dist)`` with ``levenshtein ≤ max_dist``,
     ``id_a < id_b``, exact (complete candidate cover + exact verify).
@@ -93,17 +92,13 @@ def edit_distance_join(
       if EVERY variant the two strings share is hot; ed≤1 pairs of
       length-L strings share up to L+2 variants, so only strings whose
       entire neighborhood is saturated (adversarial mass on one name)
-      can hide. **Default 100_000** (r5): a bucket that hot means ≥5e9
+      can hide. **Default 100_000**: a bucket that hot means ≥5e9
       comparisons for ONE key — the 100×-scale killer — and real name
       distributions sit orders of magnitude below it (max observed
       bucket: 38 at sf0.1), so the wall no longer depends on the
       caller knowing the flag exists. Pass ``None`` to opt OUT into
       the exact complete join (adversarial-input-complete, but
       unbounded skew).
-
-    ``reuse=True`` persists the exploded variant relation — it feeds
-    the bucket-count aggregate and both self-join sides; pass False in
-    long-lived sessions that manage caching themselves.
     """
     from mimic_iv_data_pipeline_spark.engine import fan_out
 
@@ -112,35 +107,37 @@ def edit_distance_join(
     # persisted relation, and the levenshtein verify all in ONE task
     # (measured: a single 4.4 s CPU-bound stage at sf0.1); no-op when
     # the input already has ≥ cores partitions
-    sides = fan_out(df.select(id_col, str_col)).select(
-        F.col(id_col).alias("__id"),
-        F.col(str_col).alias("__s"),
-        F.explode(deletion_variants(F.col(str_col), max_dist)).alias("__vs"),
-    ).select(
-        # join on the variant's 64-bit hash, not the string: smaller
-        # shuffle rows + cheaper key compares; a hash collision only
-        # adds a candidate the exact verify below discards
-        F.xxhash64("__vs").alias("__v"),
-        "__id",
-        "__s",
+    # the exploded variant relation feeds up to three consumers (the
+    # max_bucket count, then BOTH self-join sides — differing
+    # projections above the exchange, so ReuseExchange cannot fire);
+    # without the persist the O(L²/2)-variants explode + xxhash64
+    # recomputes per consumer
+    sides = (
+        fan_out(df.select(id_col, str_col))
+        .select(
+            F.col(id_col).alias("__id"),
+            F.col(str_col).alias("__s"),
+            F.explode(deletion_variants(F.col(str_col), max_dist)).alias("__vs"),
+        )
+        .select(
+            # join on the variant's 64-bit hash, not the string: smaller
+            # shuffle rows + cheaper key compares; a hash collision only
+            # adds a candidate the exact verify below discards
+            F.xxhash64("__vs").alias("__v"),
+            "__id",
+            "__s",
+        )
+        .persist()
     )
-    if reuse:
-        # the exploded variant relation feeds up to three consumers
-        # (the max_bucket count, then BOTH self-join sides — differing
-        # projections above the exchange, so ReuseExchange cannot fire);
-        # without the persist the O(L²/2)-variants explode + xxhash64
-        # recomputes per consumer (the dedup.py reuse=True pattern)
-        sides = sides.persist()
     if max_bucket is not None:
-        # Optimization r11 (guide §3.1/§3.2): filter by the HOT-bucket
-        # complement, not the OK-bucket list. ``n <= cap`` keeps almost
-        # every bucket, so joining on the OK list shuffles the full
-        # variant relation against a near-full key list (two more
-        # exchanges on __v); the equivalent ``NOT IN hot`` set is tiny —
-        # at most |sides|/cap keys, zero on every non-adversarial corpus
-        # measured — so it broadcasts and the cap costs one aggregate +
-        # one broadcast anti probe. Survivors identical by definition
-        # (n <= cap ⟺ __v not in hot).
+        # filter by the HOT-bucket complement, not the OK-bucket list.
+        # ``n <= cap`` keeps almost every bucket, so joining on the OK
+        # list shuffles the full variant relation against a near-full
+        # key list (two more exchanges on __v); the equivalent ``NOT IN
+        # hot`` set is tiny — at most |sides|/cap keys, zero on every
+        # non-adversarial corpus measured — so it broadcasts and the cap
+        # costs one aggregate + one broadcast anti probe. Survivors
+        # identical by definition (n <= cap ⟺ __v not in hot).
         hot = (
             sides.groupBy("__v")
             .agg(F.count(F.lit(1)).alias("__n"))

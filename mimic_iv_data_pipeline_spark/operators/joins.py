@@ -224,7 +224,6 @@ def map_codes(
     map_value: str,
     out_col: str | None = None,
     key_expr: Column | None = None,
-    fallback_to_code: bool = True,
 ) -> DataFrame:
     """J9: dimension-table code mapping as a broadcast hash join.
 
@@ -250,11 +249,7 @@ def map_codes(
     joined = df.join(
         F.broadcast(first_match), join_key == F.col("__map_key"), "left"
     )
-    mapped = (
-        F.coalesce(F.col("__map_value"), F.col(code_col))
-        if fallback_to_code
-        else F.col("__map_value")
-    )
+    mapped = F.coalesce(F.col("__map_value"), F.col(code_col))
     return joined.withColumn(out_col, mapped).drop("__map_key", "__map_value")
 
 

@@ -68,11 +68,10 @@ def hashed_linear_score(
     text_col: str,
     weights: list[float],
     bias: float = 0.0,
-    use_bigrams: bool = True,
 ) -> DataFrame:
     """Score each document with a hashed bag-of-n-grams linear model:
-    ``sigmoid(bias + mean_f w[bucket(f)])`` over word unigrams (and
-    bigrams), fastText's inference rule.
+    ``sigmoid(bias + mean_f w[bucket(f)])`` over word unigrams and
+    bigrams, fastText's inference rule.
 
     Output ``(id, n_features, score)``. The weight table broadcasts as
     ONE array literal inside the plan (|w| ≤ ~1M floats — the fastText
@@ -88,7 +87,7 @@ def hashed_linear_score(
         F.concat(
             F.col("__t"),
             F.when(
-                F.lit(use_bigrams) & (F.size("__t") > 1),
+                F.size("__t") > 1,
                 F.expr(
                     "transform(slice(__t, 1, size(__t) - 1), "
                     "(x, i) -> concat(x, ' ', element_at(__t, i + 2)))"

@@ -19,7 +19,6 @@ def pivot_features(
     pivot_col: str,
     agg_expr: Column,
     values: list | None = None,
-    fill: float | None = None,
 ) -> DataFrame:
     """T7: ``pivot_table(index, columns, values, aggfunc)`` equivalent
     (``icu_preprocess_util.py:293-320``).
@@ -30,13 +29,9 @@ def pivot_features(
     papers over with column-set alignment, ``data_generation_icu.py:508``).
     Columns are emitted in sorted order for deterministic schemas.
     """
-    pivoted = (
+    return (
         df.groupBy(*index_cols).pivot(pivot_col, values=sorted(values) if values else None)
     ).agg(agg_expr)
-    if fill is not None:
-        value_cols = [c for c in pivoted.columns if c not in index_cols]
-        pivoted = pivoted.na.fill({c: fill for c in value_cols})
-    return pivoted
 
 
 def assemble_map_tensor(

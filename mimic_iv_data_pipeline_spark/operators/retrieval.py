@@ -38,7 +38,6 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     threshold: float = 0.9,
     max_df: int | None = None,
-    reuse: bool = True,
 ) -> DataFrame:
     """All document pairs whose TF-IDF cosine similarity, quantized to
     6dp (``dround`` — floor(x·1e6+0.5)/1e6), is ≥ ``threshold``. The
@@ -58,16 +57,13 @@ def tfidf_cosine_pairs(
     vanishing score error for capping the largest df² term. Output
     ``(id_a, id_b, cos_sim)`` with ``id_a < id_b``.
 
-    ``reuse=True`` persists the shared ``tf`` and weight relations.
-    CacheManager dedups identical plans (repeat calls on the same
-    input reuse the entries), but each DISTINCT input pins new entries
-    for the session's life — in a long-lived session mining many
-    corpora, pass ``reuse=False`` to stay fully lazy.
+    The shared ``tf`` and weight relations are persisted. CacheManager
+    dedups identical plans (repeat calls on the same input reuse the
+    entries), but each DISTINCT input pins new entries for the
+    session's life.
     """
-    tf = _tf(df, id_col, text_col)
-    if reuse:
-        # feeds the weight relation AND (via it) both join probes
-        tf = tf.persist()
+    # feeds the weight relation AND (via it) both join probes
+    tf = _tf(df, id_col, text_col).persist()
     n_docs = tf.select(F.countDistinct("doc").alias("__n"))
     dfreq = F.count(F.lit(1)).over(Window.partitionBy("token"))
     w = (
@@ -78,9 +74,8 @@ def tfidf_cosine_pairs(
             F.col("tf") * (F.log((1 + F.col("__n")) / (1 + F.col("__df"))) + F.lit(1.0)),
         )
         .select("doc", "token", "w", "__df")
+        .persist()
     )
-    if reuse:
-        w = w.persist()
     norms = w.groupBy("doc").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     indexed = w if max_df is None else w.filter(F.col("__df") <= max_df)
     a = indexed.select(

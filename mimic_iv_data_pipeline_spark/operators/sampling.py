@@ -215,7 +215,6 @@ def dsir_log_weights(
     target_col: str,
     buckets: int = 1024,
     salt: str = "dsir",
-    reuse: bool = True,
 ) -> DataFrame:
     """Data Selection with Importance Resampling (Xie et al., NeurIPS
     2023): per-document log importance weight
@@ -271,12 +270,10 @@ def dsir_log_weights(
     )
     # the ONLY corpus-sized aggregate; __t rides along for free since a
     # doc's rows all share one flag. It feeds BOTH the λ branch and the
-    # scoring join, so ``reuse`` persists it (docs×buckets-bounded —
-    # far smaller than the occurrence stream it summarizes); Spark's
+    # scoring join, so it is persisted (docs×buckets-bounded — far
+    # smaller than the occurrence stream it summarizes); Spark's
     # CacheManager dedups identical plans across repeated calls.
-    per_doc = occ.groupBy("doc", "__t", "bucket").agg(F.count("*").alias("c"))
-    if reuse:
-        per_doc = per_doc.persist()
+    per_doc = occ.groupBy("doc", "__t", "bucket").agg(F.count("*").alias("c")).persist()
     stats = per_doc.groupBy("bucket").agg(
         F.sum("c").alias("cr"),
         F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("ct"),
@@ -676,7 +673,6 @@ def global_prefix_sums(
     values: dict[str, Column],
     bucket_col: str | None = None,
     bucket_desc: bool = False,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Multi-column :func:`global_prefix_sum`: every entry of
     ``values`` gets its exact global running sum over the same total
@@ -684,7 +680,7 @@ def global_prefix_sums(
     window spec, so Spark evaluates them in a single frame walk), with
     the cross-bucket offsets from a groupBy(bucket) to a ≤n_buckets-row
     relation, a prefix window over that tiny relation, and a broadcast
-    join back.
+    join back. ``n_buckets`` is ``spark.sql.shuffle.partitions``.
 
     Bucketing is DETERMINISTIC BY VALUE, not by partitioner:
     ``bucket_col`` (the leading column of ``order_exprs``; numeric or
@@ -695,8 +691,8 @@ def global_prefix_sums(
     ``spark_partition_id()``, but the range partitioner samples its
     bounds with a seed derived from the RDD id, so the totals pass and
     the facts pass could land rows in DIFFERENT partitions — at 20M
-    rows ranks silently duplicated/overshot (caught by the r5d lift
-    probe: an 11th decile). Value bucketing makes every branch agree
+    rows ranks silently duplicated/overshot (a lift probe showed an
+    11th decile). Value bucketing makes every branch agree
     by construction, with no fact-relation materialization and no
     reliance on exchange reuse. Bound quality only affects balance,
     never results — any bounds give correct sums.
@@ -721,8 +717,7 @@ def global_prefix_sums(
             "required — bucketing must be a pure function of the data"
         )
     spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # Sort key: numeric/timestamp cast to double, negated for desc so
     # "ascending key" == the requested total order. Nulls get the
     # infinity that matches Spark's default null ordering.

@@ -711,7 +711,6 @@ def quantize_embeddings_int8(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    reuse: bool = True,
 ) -> DataFrame:
     """Per-dimension min/max scalar quantization of an embedding corpus
     to int8 (the FAISS ``SQ8`` / vector-DB storage recipe: 4× smaller
@@ -724,13 +723,11 @@ def quantize_embeddings_int8(
     Scale shape: the stats pass is a posexplode + dim-keyed aggregate
     (``dims`` groups — trivially small); the per-dim min/max arrays
     come back as ONE broadcast row (no driver collect, no literal-plan
-    centroids — the r1 IVF lesson); quantization itself is a narrow
+    centroids); quantization itself is a narrow
     ``transform`` over each vector, whole-stage codegen, no shuffle.
     """
-    base = emb.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("__x"))
-    if reuse:
-        # feeds the stats aggregate and the quantize map
-        base = base.persist()
+    # feeds the stats aggregate and the quantize map
+    base = emb.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("__x")).persist()
     stats = (
         base.select(F.posexplode("__x").alias("__i", "__v"))
         .groupBy("__i")

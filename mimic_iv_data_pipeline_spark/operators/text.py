@@ -404,13 +404,38 @@ def bpe_pair_counts(
     return agg.orderBy(F.col("n_occurrences").desc(), F.col("pair").asc()).limit(top_k)
 
 
+def _bigram_pairs(df: DataFrame, id_col: str, text_col: str, bos: str) -> DataFrame:
+    """Persisted ``(id, prev, tok)`` bigram rows of the lower-cased,
+    whitespace-split text, ``bos`` before each document's first token.
+    Shuffle-free: ``arrays_zip`` of the token array with its BOS-shifted
+    self, then one explode. Persisted because every bigram scorer reads
+    it twice (the count aggregate and the scoring join probe)."""
+    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    return (
+        df.select(F.col(id_col), w.alias("__w"))
+        .select(
+            id_col,
+            F.explode(
+                F.arrays_zip(
+                    F.concat(
+                        F.array(F.lit(bos)),
+                        F.slice(F.col("__w"), 1, F.greatest(F.size("__w") - 1, F.lit(0))),
+                    ).alias("prev"),
+                    F.col("__w").alias("tok"),
+                )
+            ).alias("p"),
+        )
+        .select(id_col, F.col("p.prev").alias("prev"), F.col("p.tok").alias("tok"))
+        .persist()
+    )
+
+
 def bigram_lm_scores(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     add_k: float = 0.5,
     bos: str = "<s>",
-    reuse: bool = True,
 ) -> DataFrame:
     """Corpus-trained bigram language-model score per document — the
     CCNet-style perplexity quality filter (Wenzek et al., LREC'20)
@@ -429,37 +454,14 @@ def bigram_lm_scores(
     equi-joins on (prev, tok)/(prev) plus a broadcast of the 1-row
     vocabulary size — no driver-side state at any corpus size.
     """
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    pairs = (
-        df.select(F.col(id_col), w.alias("__w"))
-        .select(
-            id_col,
-            F.explode(
-                F.arrays_zip(
-                    F.concat(
-                        F.array(F.lit(bos)),
-                        F.slice(F.col("__w"), 1, F.greatest(F.size("__w") - 1, F.lit(0))),
-                    ).alias("prev"),
-                    F.col("__w").alias("tok"),
-                )
-            ).alias("p"),
-        )
-        .select(id_col, F.col("p.prev").alias("prev"), F.col("p.tok").alias("tok"))
-    )
-    if reuse:
-        # feeds the bigram-count aggregate AND the scoring join probe —
-        # one tokenize pass instead of two (ctx and the vocab size
-        # derive from the count matrix below, r11)
-        pairs = pairs.persist()
-    # Optimization r11 (guide §2.4): c(prev) = Σ_w c(prev, w) and the
-    # vocabulary is the distinct tok set of the count matrix, so both
-    # derive from the vocab²-bounded ``big`` instead of two more passes
-    # over the corpus-sized pair relation (same longs, same doubles).
-    big = pairs.groupBy("prev", "tok").agg(F.count("*").alias("__c2"))
-    if reuse:
-        from mimic_iv_data_pipeline_spark.engine import materialize
+    from mimic_iv_data_pipeline_spark.engine import materialize
 
-        big = materialize(big)
+    pairs = _bigram_pairs(df, id_col, text_col, bos)
+    # c(prev) = Σ_w c(prev, w) and the vocabulary is the distinct tok
+    # set of the count matrix, so both derive from the vocab²-bounded
+    # ``big`` instead of two more passes over the corpus-sized pair
+    # relation (same longs, same doubles).
+    big = materialize(pairs.groupBy("prev", "tok").agg(F.count("*").alias("__c2")))
     ctx = big.groupBy("prev").agg(F.sum("__c2").alias("__c1"))
     voc = big.agg(F.countDistinct("tok").alias("__v"))
     lp = F.log(
@@ -631,7 +633,6 @@ def kneser_ney_scores(
     text_col: str = "text",
     discount: float = 0.75,
     bos: str = "<s>",
-    reuse: bool = True,
 ) -> DataFrame:
     """Interpolated Kneser–Ney bigram LM score per document — the
     smoothing KenLM actually ships (Kneser & Ney 1995; Heafield 2011),
@@ -652,46 +653,23 @@ def kneser_ney_scores(
     and a 1-row broadcast of the distinct-bigram total — all keyed
     shuffles on (prev)/(tok), no driver state.
 
-    ``reuse=True`` persists the exploded ``pairs`` relation (it feeds
-    four aggregates plus the final join probe). Spark's CacheManager
+    The exploded ``pairs`` relation is persisted. Spark's CacheManager
     dedups identical plans, so re-scoring the SAME input reuses one
     cache entry — but each DISTINCT input adds an entry that lives
-    until the session ends or the LRU evicts it. In a long-lived
-    session scoring many different corpora, pass ``reuse=False`` (the
-    recompute costs one extra tokenize scan; nothing is pinned).
+    until the session ends or the LRU evicts it.
     """
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    pairs = (
-        df.select(F.col(id_col), w.alias("__w"))
-        .select(
-            id_col,
-            F.explode(
-                F.arrays_zip(
-                    F.concat(
-                        F.array(F.lit(bos)),
-                        F.slice(F.col("__w"), 1, F.greatest(F.size("__w") - 1, F.lit(0))),
-                    ).alias("prev"),
-                    F.col("__w").alias("tok"),
-                )
-            ).alias("p"),
-        )
-        .select(id_col, F.col("p.prev").alias("prev"), F.col("p.tok").alias("tok"))
-    )
-    if reuse:
-        pairs = pairs.persist()
-    # Optimization r11 (guide §2.4): every KN training statistic is an
-    # exact aggregation of the bigram-count matrix — c(prev) = Σ_w
-    # c(prev, w); N1+(prev,·) = rows per prev of the matrix (it has one
-    # row per seen (prev, w)); N1+(·,w) = rows per tok; N1+(·,·) = its
-    # row count — so they derive from the vocab²-bounded ``big``
-    # instead of three further passes over the corpus-sized pair
-    # relation (pairs' consumers drop 5 → 2). big is pinned under
-    # ``reuse`` so its aggregate runs once for its four consumers.
-    big = pairs.groupBy("prev", "tok").agg(F.count("*").alias("__c2"))
-    if reuse:
-        from mimic_iv_data_pipeline_spark.engine import materialize
+    from mimic_iv_data_pipeline_spark.engine import materialize
 
-        big = materialize(big)
+    pairs = _bigram_pairs(df, id_col, text_col, bos)
+    # every KN training statistic is an exact aggregation of the
+    # bigram-count matrix — c(prev) = Σ_w c(prev, w); N1+(prev,·) =
+    # rows per prev of the matrix (it has one row per seen (prev, w));
+    # N1+(·,w) = rows per tok; N1+(·,·) = its row count — so they
+    # derive from the vocab²-bounded ``big`` instead of three further
+    # passes over the corpus-sized pair relation (pairs' consumers drop
+    # 5 → 2). big is pinned so its aggregate runs once for its four
+    # consumers.
+    big = materialize(pairs.groupBy("prev", "tok").agg(F.count("*").alias("__c2")))
     ctx = big.groupBy("prev").agg(
         F.sum("__c2").alias("__c1"), F.count("*").alias("__n1p_ctx")
     )
@@ -838,13 +816,7 @@ HTML_ENTITIES: list[tuple[str, str]] = [
 ]
 
 
-def clean_web_text(
-    text: Column,
-    strip_tags: bool = True,
-    decode_entities: bool = True,
-    fix_mojibake: bool = True,
-    collapse_whitespace: bool = True,
-) -> Column:
+def clean_web_text(text: Column) -> Column:
     """Crawl-text cleanup as ONE codegen expression chain: drop
     script/style blocks wholesale, strip remaining markup tags, decode
     the common HTML entities, repair classic UTF-8-as-latin-1 mojibake
@@ -860,22 +832,14 @@ def clean_web_text(
     markup can't synthesize repair inputs; both run before whitespace
     collapse so replacements' spacing normalizes too.
     """
-    out = text
-    if strip_tags:
-        # two patterns, not one with a backreference: RE2 (DuckDB) has
-        # no backreferences, and the oracle twin must run the SAME rule
-        out = F.regexp_replace(out, r"(?is)<script[^>]*>.*?</script>", " ")
-        out = F.regexp_replace(out, r"(?is)<style[^>]*>.*?</style>", " ")
-        out = F.regexp_replace(out, r"<[^>]+>", " ")
-    if decode_entities:
-        for ent, rep in HTML_ENTITIES:
-            out = F.replace(out, F.lit(ent), F.lit(rep))
-    if fix_mojibake:
-        for bad, good in MOJIBAKE_MAP:
-            out = F.replace(out, F.lit(bad), F.lit(good))
-    if collapse_whitespace:
-        out = F.trim(F.regexp_replace(out, r"\s+", " "))
-    return out
+    # two patterns, not one with a backreference: RE2 (DuckDB) has
+    # no backreferences, and the oracle twin must run the SAME rule
+    out = F.regexp_replace(text, r"(?is)<script[^>]*>.*?</script>", " ")
+    out = F.regexp_replace(out, r"(?is)<style[^>]*>.*?</style>", " ")
+    out = F.regexp_replace(out, r"<[^>]+>", " ")
+    for ent, rep in HTML_ENTITIES + MOJIBAKE_MAP:
+        out = F.replace(out, F.lit(ent), F.lit(rep))
+    return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
 def pmi_collocations(
@@ -969,8 +933,6 @@ def naive_bayes_scores(
     text_col: str = "text",
     label_col: str = "lang",
     alpha: float = 1.0,
-    reuse: bool = True,
-    broadcast_matrix: bool = True,
 ) -> DataFrame:
     """Multinomial Naive Bayes trained and scored on the corpus itself
     (public: the add-α multinomial NB of Manning/Raghavan/Schütze IR
@@ -998,10 +960,10 @@ def naive_bayes_scores(
     of a (word, class) pair shares one floor'd value): the token
     stream inner-joins only the SPARSE seen (word, class) matrix, so
     emitted rows grow with matrix sparsity — NOT |tokens|·|classes|
-    (the r5 plan materialized the dense product; 120M rows at the
-    500k-doc probe). A class with zero seen overlap can still win via
-    its background line prior_c + n·lp0_c; that side is an argmax over
-    the |C|-row relation per DISTINCT token count (≤ max-doc-length
+    (the dense product was 120M rows at the 500k-doc probe). A class
+    with zero seen overlap can still win via its background line
+    prior_c + n·lp0_c; that side is an argmax over the |C|-row
+    relation per DISTINCT token count (≤ max-doc-length
     rows × |C|, driver-free), unioned as one extra candidate per doc —
     correct because a seen class's full score always dominates its own
     background, so the over-all-classes max equals
@@ -1011,57 +973,45 @@ def naive_bayes_scores(
     winning class's integer micro-nat score including the prior
     (argmax ties break on ascending label).
 
-    ``broadcast_matrix=True`` broadcast-joins the |V|·|C| precomputed
-    log-likelihood matrix onto the token stream (measured 2.4× faster
-    than letting the planner shuffle the 120M-row token side); pass
-    False when the vocabulary is too large to broadcast — the join
-    degrades to a hash shuffle but stays correct.
+    The |V|·|C| precomputed log-likelihood matrix is broadcast-joined
+    onto the token stream (measured 2.4× faster than letting the
+    planner shuffle the 120M-row token side).
 
-    ``reuse=True`` persists the exploded token relation (it feeds the
-    count matrix, the class totals, the vocabulary count, AND the
-    scoring join — four consumers, so an unpersisted plan tokenizes
-    the corpus four times). Same cache-entry caveat as
-    ``kneser_ney_scores``: in a long-lived session scoring many
-    different corpora pass ``reuse=False``.
+    The exploded token relation is persisted (it feeds the stats
+    aggregate AND the scoring join). Same cache-entry caveat as
+    ``kneser_ney_scores``.
     """
     from pyspark.sql.window import Window
+
+    from mimic_iv_data_pipeline_spark.engine import materialize
 
     toks = df.select(
         F.col(id_col), F.col(label_col).alias("__y"), tokens(F.col(text_col)).alias("__w")
     )
-    tok = toks.select(id_col, "__y", F.explode("__w").alias("__t"))
-    if reuse:
-        tok = tok.persist()
+    tok = toks.select(id_col, "__y", F.explode("__w").alias("__t")).persist()
     # training statistics (the corpus is its own training set).
-    # Optimization r11 (guide §2.4): the class totals and the vocabulary
-    # count are EXACT aggregations of the (word, class) count matrix —
-    # N_c = Σ_t c(t, c) and V = |distinct t in wc| — so they derive from
-    # the vocab-bounded wc relation instead of re-scanning the
-    # corpus-sized token relation (two fewer full passes; tok's
-    # consumers drop 5 → 3).
-    # Optimization r12 (guide §2.4, the r11 ledger's deferred item,
-    # profiled first per the verdict): the per-doc token counts fold
-    # into the SAME corpus pass via GROUPING SETS ((token, class),
-    # (id)) — the feared Expand ×2 adds only ~5% to the one pass while
-    # a separate doc-length aggregate costs a full scan plus its own
-    # exchange and job (measured at sf0.1, min-of-3 noop: fresh tok
-    # 0.208 vs 0.389 s, PERSISTED tok 0.169 vs 0.241 s — the fold wins
-    # BOTH regimes, contradicting the r11 risk note). Counts at both
+    # The class totals and the vocabulary count are EXACT aggregations
+    # of the (word, class) count matrix — N_c = Σ_t c(t, c) and
+    # V = |distinct t in wc| — so they derive from the vocab-bounded wc
+    # relation instead of re-scanning the corpus-sized token relation
+    # (two fewer full passes; tok's consumers drop 5 → 3).
+    # The per-doc token counts fold into the SAME corpus pass via
+    # GROUPING SETS ((token, class), (id)) — the Expand ×2 adds only
+    # ~5% to the one pass while a separate doc-length aggregate costs a
+    # full scan plus its own exchange and job (measured at sf0.1,
+    # min-of-3 noop: fresh tok 0.208 vs 0.389 s, PERSISTED tok 0.169 vs
+    # 0.241 s — the fold wins both regimes). Counts at both
     # granularities are exact longs of the same rows, so values are
     # bit-identical (pinned by tests/test_r12_fixes.py). tok's
     # consumers drop 3 → 2 (this pass + the scoring join); the combined
-    # stats relation is pinned (engine.materialize) under reuse so the
-    # aggregate runs once for wc's three consumers and nd's two.
-    stats = tok.groupingSets(
-        [["__t", "__y"], [id_col]], "__t", "__y", id_col
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("__cnt"),
-        F.grouping_id().alias("__gid"),
+    # stats relation is pinned (engine.materialize) so the aggregate
+    # runs once for wc's three consumers and nd's two.
+    stats = materialize(
+        tok.groupingSets([["__t", "__y"], [id_col]], "__t", "__y", id_col).agg(
+            F.count(F.lit(1)).cast("long").alias("__cnt"),
+            F.grouping_id().alias("__gid"),
+        )
     )
-    if reuse:
-        from mimic_iv_data_pipeline_spark.engine import materialize
-
-        stats = materialize(stats)
     # grouping_id bits follow the groupBy column order (__t, __y, id):
     # the (token, class) set aggregates id away -> 0b001 = 1; the (id)
     # set aggregates __t and __y away -> 0b110 = 6.
@@ -1132,7 +1082,7 @@ def naive_bayes_scores(
     # matrix sparsity, not |tokens|·|C|.
     seen_scores = (
         tok.select(id_col, "__t")
-        .join(F.broadcast(delta) if broadcast_matrix else delta, "__t")
+        .join(F.broadcast(delta), "__t")
         .groupBy(id_col, "__c")
         .agg(F.sum("__d").alias("__s"))
     )

@@ -114,8 +114,6 @@ def label_readmission(
     disch_col: str = "dischtime",
     gap_days: int = 30,
     label_col: str = "label",
-    tie_break: str | None = None,
-    assume_nonoverlapping: bool = False,
 ) -> DataFrame:
     """J8/W2: readmission lookahead labeling.
 
@@ -124,36 +122,9 @@ def label_readmission(
     starts after this discharge and within ``gap_days`` of it. Any such
     admission is automatically *later* in admit order (admit₂ > disch₁ ≥
     admit₁), so the loop is exactly an EXISTS over a per-subject range
-    self-join — the default here (property-tested against a brute-force
-    loop in tests/test_cohort_pipeline.py, including overlapping visits).
-
-    ``assume_nonoverlapping=True`` takes the cheaper single-window path
-    (MIN admit over ROWS 1 FOLLOWING..UNBOUNDED decides): one shuffle
-    instead of two, valid when no admit falls inside another visit of
-    the same subject — true for real hospital admissions.
+    self-join (property-tested against a brute-force loop in
+    tests/test_cohort_pipeline.py, including overlapping visits).
     """
-    if assume_nonoverlapping:
-        order = [F.col(admit_col).asc()]
-        if tie_break:
-            order.append(F.col(tie_break).asc())
-        w = (
-            Window.partitionBy(subject_col)
-            .orderBy(*order)
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        next_admit = F.min(admit_col).over(w)
-        within_gap = (
-            next_admit.isNotNull()
-            & (next_admit > F.col(disch_col))
-            & (
-                (F.unix_timestamp(next_admit) - F.unix_timestamp(disch_col))
-                <= gap_days * 86400
-            )
-        )
-        return visits.withColumn(
-            label_col, F.when(within_gap, 1).otherwise(0).cast("int")
-        )
-
     later = visits.select(
         F.col(subject_col).alias("__rs"), F.col(admit_col).alias("__radmit")
     )
@@ -210,23 +181,17 @@ def _funnel_frontiers(
     user_col: str,
     ts_col: str,
     type_col: str,
-    materialize_steps: bool = True,
 ) -> list[DataFrame]:
     """Shared funnel recurrence: per stage i, the (user, reach-time)
     frontier of users who completed stages 0..i in order, with the
     earliest qualifying stage-i time.
 
-    ``materialize_steps=True`` localCheckpoints each frontier (same
-    discipline as pagerank/connected_components): step i+1 joins a
-    materialized |users|-row relation instead of re-deriving the whole
-    chain — the right shape when the caller consumes frontiers through
-    SEVERAL actions. With ``False`` the frontiers stay lazy nested
-    broadcast-join plans; a caller that consumes all of them in ONE
-    action (funnel_conversion's fused count) relies on Spark's
-    ReuseExchange: frontier i's broadcast subtree is canonically
-    identical everywhere it appears, so each stage's type-filtered
-    event pass still runs exactly once per action — with zero eager
-    driver round-trips during construction.
+    Each frontier is localCheckpointed (same discipline as
+    pagerank/connected_components): step i+1 joins a materialized
+    |users|-row relation instead of re-deriving the whole chain, so
+    each stage's type-filtered event pass runs exactly once at any
+    scale, whatever number of actions the caller consumes the
+    frontiers through.
     """
     if not stages:
         raise ValueError("stages must be non-empty")
@@ -237,22 +202,20 @@ def _funnel_frontiers(
         F.col(ts_col).alias("__ts"),
         F.col(type_col).alias("__t"),
     )
-    frontier = ev.filter(F.col("__t") == stages[0]).groupBy("__u").agg(
-        F.min("__ts").alias("__reach")
+    frontier = materialize(
+        ev.filter(F.col("__t") == stages[0]).groupBy("__u").agg(
+            F.min("__ts").alias("__reach")
+        )
     )
-    if materialize_steps:
-        frontier = materialize(frontier)
     frontiers = [frontier]
     for s in stages[1:]:
-        frontier = (
+        frontier = materialize(
             ev.filter(F.col("__t") == s)
             .join(F.broadcast(frontier), "__u")
             .filter(F.col("__ts") >= F.col("__reach"))
             .groupBy("__u")
             .agg(F.min("__ts").alias("__reach"))
         )
-        if materialize_steps:
-            frontier = materialize(frontier)
         frontiers.append(frontier)
     return frontiers
 
@@ -290,8 +253,8 @@ def funnel_conversion(
     from mimic_iv_data_pipeline_spark.functions.rounding import dround
 
     spark = events.sparkSession
-    # One action for ALL stage counts (optimization r12, guide §5 "the
-    # driver should do almost no data work"): the previous shape paid
+    # One action for ALL stage counts (the driver should do almost no
+    # data work): the previous shape paid
     # len(stages) separate count() jobs after the len(stages) eager
     # checkpoint builds; unioning the per-frontier count aggregates
     # into one relation collapses the counts to ONE job over the
@@ -304,9 +267,7 @@ def funnel_conversion(
     # min-of-6 at sf0.1: fused-counts 0.726 s vs stepped 0.780 s.
     # Counts are deterministic — values identical to the stepped form
     # (pinned by tests/test_r12_s3.py).
-    fronts = _funnel_frontiers(
-        events, stages, user_col, ts_col, type_col, materialize_steps=True
-    )
+    fronts = _funnel_frontiers(events, stages, user_col, ts_col, type_col)
     count_parts = [
         f.groupBy()
         .agg(F.count(F.lit(1)).alias("__users"))

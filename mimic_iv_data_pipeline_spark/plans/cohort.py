@@ -139,7 +139,6 @@ def extract_cohort(
             admit_col=admit_col,
             disch_col=disch_col,
             gap_days=gap_days,
-            tie_break="hadm_id" if "hadm_id" in cohort.columns else None,
         )
     raise ValueError(f"unknown label task: {label}")
 

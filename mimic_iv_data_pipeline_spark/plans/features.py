@@ -149,8 +149,6 @@ def preproc_meds(
 def impute_hadm_ids(
     labs: DataFrame,
     admissions: DataFrame,
-    assume_nonnested: bool = False,
-    granularity: str = "day",
 ) -> DataFrame:
     """D3/J7: fill missing ``hadm_id`` on lab rows by locating the
     admission of the same subject whose ``[admittime, dischtime]``
@@ -162,66 +160,35 @@ def impute_hadm_ids(
     Rows that already have an hadm_id pass through untouched; unmatched
     rows keep null (the reference drops them later).
 
-    ``granularity='day'`` (default) matches the reference exactly: it
-    ``.normalize()``-s all three timestamps to midnight before comparing
+    It matches the reference exactly: it ``.normalize()``-s all three
+    timestamps to midnight before comparing
     (``labs_preprocess_util.py:40-57``), i.e. DAY-level containment —
     a lab charted on the admission day but before the admit timestamp
     still imputes, and the tie-break is the smallest chart-date −
     admit-date (equal admit-date ties → max hadm_id, a deterministic
     stand-in for the reference's dict-order stable sort).
-    ``granularity='exact'`` tightens to full-timestamp containment.
-
-    ``assume_nonnested=True`` takes the linear union-strategy path
-    (one shuffle instead of a range join — 46× at 10M rows, PERF.md):
-    since the tie-break IS "latest admit ≤ charttime", that admission
-    is the only candidate unless visits nest (an earlier admission's
-    discharge covering a later admission's span). MIMIC hospital
-    admissions do not nest; keep the default for arbitrary intervals.
     """
-    if granularity not in ("day", "exact"):
-        raise ValueError("granularity must be 'day' or 'exact'")
-    missing = labs.filter(F.col("hadm_id").isNull()).drop("hadm_id")
+    missing = (
+        labs.filter(F.col("hadm_id").isNull())
+        .drop("hadm_id")
+        .withColumn("__chart_t", F.to_date("charttime").cast("timestamp"))
+    )
     have = labs.filter(F.col("hadm_id").isNotNull())
-    adm = admissions.select("subject_id", "hadm_id", "admittime", "dischtime")
-    if granularity == "day":
-        missing = missing.withColumn(
-            "__chart_t", F.to_date("charttime").cast("timestamp")
-        )
-        adm = adm.select(
-            "subject_id",
-            "hadm_id",
-            F.to_date("admittime").cast("timestamp").alias("__adm_t"),
-            F.to_date("dischtime").cast("timestamp").alias("__dis_t"),
-        )
-        t_chart, t_adm, t_dis = "__chart_t", "__adm_t", "__dis_t"
-    else:
-        t_chart, t_adm, t_dis = "charttime", "admittime", "dischtime"
-    if assume_nonnested:
-        matched = asof_join(
-            missing,
-            adm,
-            on="subject_id",
-            left_time=t_chart,
-            right_start=t_adm,
-            direction="backward",
-            strategy="union",
-            union_tie_cols=["hadm_id"],
-        )
-        imputed = matched.withColumn(
-            "hadm_id",
-            F.when(F.col(t_chart) <= F.col(t_dis), F.col("hadm_id")),
-        )
-    else:
-        imputed = asof_join(
-            missing,
-            adm,
-            on="subject_id",
-            left_time=t_chart,
-            right_start=t_adm,
-            right_end=t_dis,
-            # equal-admit ties → max hadm_id, matching the union path
-            tie_break=[F.col("hadm_id").desc()],
-        )
+    adm = admissions.select(
+        "subject_id",
+        "hadm_id",
+        F.to_date("admittime").cast("timestamp").alias("__adm_t"),
+        F.to_date("dischtime").cast("timestamp").alias("__dis_t"),
+    )
+    imputed = asof_join(
+        missing,
+        adm,
+        on="subject_id",
+        left_time="__chart_t",
+        right_start="__adm_t",
+        right_end="__dis_t",
+        tie_break=[F.col("hadm_id").desc()],
+    )
     return have.unionByName(imputed.select(*have.columns))
 
 
@@ -294,8 +261,8 @@ def clean_events(
     handling (A8, ``outlier_removal.py:11-37``).
 
     When BOTH stages are active they run as the fused
-    :func:`~mimic_iv_data_pipeline_spark.operators.aggregates.majority_unit_clamp`
-    (optimization r11): one GROUPING SETS aggregate + one probe instead
+    :func:`~mimic_iv_data_pipeline_spark.operators.aggregates.majority_unit_clamp`:
+    one GROUPING SETS aggregate + one probe instead
     of three scans of the (join-derived) event relation — bit-identical
     values (tests/test_clean_fused.py pins fused == sequential)."""
     out = events
@@ -314,13 +281,10 @@ def clean_events(
             lower_pct=lo,
             upper_pct=hi,
             mode=outlier_mode,
-            exact=True,
         )
     if uom_col is not None:
         out = filter_majority_unit(out, code_col, uom_col, cutoff=uom_cutoff)
     if outlier_pcts is not None:
         lo, hi = outlier_pcts
-        out = clamp_outliers(
-            out, code_col, value_col, lo, hi, mode=outlier_mode, exact=True
-        )
+        out = clamp_outliers(out, code_col, value_col, lo, hi, mode=outlier_mode)
     return out

@@ -29,6 +29,7 @@ from mimic_iv_data_pipeline_spark.plans.ml_assembly import (
     ml_feature_matrix,
 )
 from mimic_iv_data_pipeline_spark.plans.timeseries import generate_timeseries
+from mimic_iv_data_pipeline_spark.sources.sinks import write_parquet
 
 
 @dataclass
@@ -177,7 +178,7 @@ def run_pipeline(
         sc.setJobDescription(f"pipeline: {name} boundary ({handoff})")
         try:
             if handoff == "parquet":
-                df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+                write_parquet(df, os.path.join(out_dir, name))
                 # Re-read with the schema we just wrote (nullable-
                 # normalized: parquet read-back reports every file
                 # column nullable) instead of re-inferring it from the
@@ -204,7 +205,7 @@ def run_pipeline(
                 # descriptions are thread-local: label inside the pool thread
                 sc.setJobDescription(f"pipeline: {n} leaf write")
                 try:
-                    d.write.mode("overwrite").parquet(os.path.join(out_dir, n))
+                    write_parquet(d, os.path.join(out_dir, n))
                 finally:
                     sc.setJobDescription(None)
 

@@ -79,7 +79,7 @@ def q15_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q16_outlier_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out = clamp_outliers(e, "event_type", "value", 0.05, 0.95, mode="clamp", exact=True)
+    out = clamp_outliers(e, "event_type", "value", 0.05, 0.95, mode="clamp")
     return out.select("event_id", dround("value", 6).alias("value_clamped"))
 
 
@@ -1260,9 +1260,9 @@ def q175_roc_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("score"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
-    # default reuse=True materializes the per-score relation once for
-    # the curve's 3 consumers (localCheckpoint — freed with the result,
-    # no CacheManager pin; the r9 leak is fixed in the operator)
+    # the operator materializes the per-score relation once for the
+    # curve's 3 consumers (localCheckpoint — freed with the result, no
+    # CacheManager pin)
     out = roc_pr_curve(ev, "score", "y")
     return out.select(
         dround("score", 6).alias("score"),

@@ -175,9 +175,8 @@ def q86_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q87_semantic_dedup")
 def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # default reuse=True materializes the assignment relation once for
-    # its 3 consumers (localCheckpoint — freed with the result, no
-    # CacheManager pin; the r9 leak is fixed in the operator)
+    # the operator materializes the assignment relation once
+    # (localCheckpoint — freed with the result, no CacheManager pin)
     return semantic_dedup(
         emb, "vec_id", "embedding", n_clusters=16, threshold=0.9
     )

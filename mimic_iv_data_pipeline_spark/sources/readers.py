@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# In-process parquet SCHEMA catalog (optimization r12, guide §5/§6).
+# In-process parquet SCHEMA catalog.
 # ``spark.read.parquet`` without a schema re-resolves the datasource and
 # re-reads a file footer on the DRIVER on every call — measured ~60 ms
 # per read here, paid once per table per query. Production engines put
@@ -27,14 +27,11 @@ from pyspark.sql import types as T
 # are schema-full; this dict is that catalog for the path-addressed
 # testdata layout. It holds ONLY StructType metadata — never data, rows
 # or plans — and self-invalidates when the file changes (key includes
-# size + mtime_ns). Disable with SPARK_GRAFT_SCHEMA_CATALOG=0 to force
-# per-read inference.
+# size + mtime_ns).
 _SCHEMA_CATALOG: dict[tuple[str, int, int], T.StructType] = {}
 
 
 def _catalog_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    if os.environ.get("SPARK_GRAFT_SCHEMA_CATALOG", "1") == "0":
-        return None
     try:
         st = os.stat(path)
     except OSError:

@@ -3,9 +3,7 @@
 The reference sinks intermediate stages as csv.gz files and per-visit
 pickles/CSV directories (``data_generation_icu.py:461-463,680-729``).
 Internally we standardize on Parquet (columnar, splittable, schema'd);
-csv.gz remains available for compatibility. The per-visit
-one-file-per-id layout (S6) becomes ``partitionBy`` — a few thousand
-directories, never millions of tiny files.
+csv.gz remains available for compatibility.
 """
 
 from __future__ import annotations
@@ -13,17 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """S4-S6 replacement: snappy Parquet, optionally hive-partitioned."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """S4-S6 replacement: snappy Parquet, replacing whatever is at
+    ``path`` — every pipeline stage file goes through here."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def write_csv_gz(df: DataFrame, path: str, mode: str = "overwrite") -> None:

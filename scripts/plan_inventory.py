@@ -65,7 +65,7 @@ def inventory(sf_dir: str) -> dict[str, dict[str, int]]:
     spark = get_spark("plan_inventory")
     out: dict[str, dict[str, int]] = {}
     for name, fn in all_queries().items():
-        # Each query plans against a COLD cache: queries with reuse=True
+        # Each query plans against a COLD cache: operators that pin
         # persist subplans, and CacheManager substitutes those
         # InMemoryRelations into any LATER query sharing the subplan —
         # making every plan depend on registry ORDER (the r9 manifest

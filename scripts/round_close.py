@@ -1,10 +1,13 @@
-"""One-command round-close gate (r8 verdict item 7).
+"""One-command round-close gate.
 
 Runs, in order, everything a round must have green before its closing
-commit — so the r7 (two red tests shipped) and r8 (one flaky test
-shipped) failure classes cannot recur from a forgotten step:
+commit — so a red or flaky test cannot ship from a forgotten step:
 
-  1. full pytest suite               (``python -m pytest tests/ -q``)
+  1. full pytest suite               (the ROADMAP Tier-1 command:
+     ``timeout -k 10 2670 python -m pytest tests/ -q
+     --continue-on-collection-errors -p no:cacheprovider`` with
+     ``SPARK_GRAFT_CPUS`` = the usable cores and
+     ``SPARK_LOCAL_DIRS=/tmp/spark-local``)
   2. driver simulation               (``scripts/drive_contract.py`` —
      foreign CWD, sf0.01, every query vs its DuckDB oracle)
   3. plan-drift check                (``scripts/plan_inventory.py
@@ -48,10 +51,10 @@ def _latest(pattern: str) -> str | None:
     return files[-1] if files else None
 
 
-def stage(name: str, cmd: list[str], cwd: str = REPO) -> None:
+def stage(name: str, cmd: list[str], cwd: str = REPO, env: dict | None = None) -> None:
     t0 = time.time()
     print(f"[round_close] {name}: {' '.join(cmd)}", flush=True)
-    proc = subprocess.run(cmd, cwd=cwd)
+    proc = subprocess.run(cmd, cwd=cwd, env=env)
     dt = time.time() - t0
     if proc.returncode != 0:
         print(f"[round_close] {name} FAILED (rc={proc.returncode}, {dt:.0f}s)")
@@ -69,7 +72,21 @@ def main() -> None:
     args = ap.parse_args()
 
     if not args.skip_suite:
-        stage("suite", [sys.executable, "-m", "pytest", "tests/", "-q"])
+        # the usable cores, as `env -u OMP_NUM_THREADS nproc` counts them
+        env = dict(
+            os.environ,
+            SPARK_GRAFT_CPUS=str(len(os.sched_getaffinity(0))),
+            SPARK_LOCAL_DIRS="/tmp/spark-local",
+        )
+        stage(
+            "suite",
+            [
+                "timeout", "-k", "10", "2670",
+                sys.executable, "-m", "pytest", "tests/", "-q",
+                "--continue-on-collection-errors", "-p", "no:cacheprovider",
+            ],
+            env=env,
+        )
 
     # foreign CWD is part of the contract the driver exercises
     stage(

@@ -56,7 +56,6 @@ def test_fused_equals_sequential(fixture_df, mode, cutoff):
         0.02,
         0.98,
         mode=mode,
-        exact=True,
     )
     fus = majority_unit_clamp(
         fixture_df, "itemid", "uom", "val", cutoff, 0.02, 0.98, mode=mode
@@ -140,7 +139,6 @@ def test_clean_events_routes_through_fused(spark):
         0.02,
         0.98,
         mode="clamp",
-        exact=True,
     )
     got = clean_events(df, uom_cutoff=0.95, outlier_pcts=(0.02, 0.98))
     assert _rows(got) == _rows(seq)

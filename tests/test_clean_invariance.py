@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 from mimic_iv_data_pipeline_spark.operators.text import clean_web_text
 
 
-def _clean_one(spark, raw: str, **kwargs) -> str:
+def _clean_one(spark, raw: str) -> str:
     df = spark.createDataFrame([(raw,)], "raw string")
-    return df.select(clean_web_text(F.col("raw"), **kwargs).alias("c")).first()["c"]
+    return df.select(clean_web_text(F.col("raw")).alias("c")).first()["c"]
 
 
 def test_clean_strips_scripts_and_tags(spark):
@@ -34,13 +34,11 @@ def test_clean_repairs_mojibake(spark):
 
 
 def test_clean_stages_are_independent(spark):
-    raw = "<b>x</b> &amp; y"
-    assert _clean_one(spark, raw, strip_tags=False) == "<b>x</b> & y"
-    assert _clean_one(spark, raw, decode_entities=False) == "x &amp; y"
-    assert (
-        _clean_one(spark, "a   b\t c", strip_tags=False, decode_entities=False)
-        == "a b c"
-    )
+    # each rule touches only its own pattern: tags strip before entities
+    # decode, so a decoded "&lt;b&gt;" stays text
+    assert _clean_one(spark, "<b>x</b> &amp; y") == "x & y"
+    assert _clean_one(spark, "&lt;b&gt;x") == "<b>x"
+    assert _clean_one(spark, "a   b\t c") == "a b c"
 
 
 @pytest.mark.parametrize(

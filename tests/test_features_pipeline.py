@@ -107,34 +107,27 @@ def test_impute_hadm_ids(spark):
 
 
 def test_impute_hadm_ids_day_granularity(spark):
-    """Reference parity (ADVICE r1): hadm_imputer .normalize()s all
-    three timestamps to midnight, so a lab charted on the admission DAY
-    but before the admit timestamp still imputes; granularity='exact'
-    keeps the tightened timestamp containment."""
+    """Reference parity: hadm_imputer .normalize()s all three
+    timestamps to midnight, so a lab charted on the admission DAY but
+    before the admit timestamp still imputes."""
     admissions = spark.createDataFrame(
         [(1, 101, ts("2150-01-05T14:00:00"), ts("2150-01-10T09:00:00"), None, 0, "P", "W")],
         "subject_id long, hadm_id long, admittime timestamp, dischtime timestamp, deathtime timestamp, hospital_expire_flag int, insurance string, ethnicity string",
     )
     labs = spark.createDataFrame(
         [
-            # admission day, BEFORE admit timestamp → day: 101, exact: null
+            # admission day, BEFORE admit timestamp → 101
             (1, None, 50912, ts("2150-01-05T08:00:00"), 1.0, "mg/dL"),
-            # discharge day, AFTER discharge timestamp → day: 101, exact: null
+            # discharge day, AFTER discharge timestamp → 101
             (1, None, 50912, ts("2150-01-10T23:00:00"), 2.0, "mg/dL"),
-            # day after discharge → null under both
+            # day after discharge → null
             (1, None, 50912, ts("2150-01-11T00:30:00"), 3.0, "mg/dL"),
         ],
         "subject_id long, hadm_id long, itemid long, charttime timestamp, valuenum double, valueuom string",
     )
-    for nonnested in (False, True):
-        day = impute_hadm_ids(labs, admissions, assume_nonnested=nonnested)
-        got = {r["valuenum"]: r["hadm_id"] for r in day.collect()}
-        assert got == {1.0: 101, 2.0: 101, 3.0: None}, f"nonnested={nonnested}"
-        exact = impute_hadm_ids(
-            labs, admissions, assume_nonnested=nonnested, granularity="exact"
-        )
-        got = {r["valuenum"]: r["hadm_id"] for r in exact.collect()}
-        assert got == {1.0: None, 2.0: None, 3.0: None}, f"nonnested={nonnested}"
+    day = impute_hadm_ids(labs, admissions)
+    got = {r["valuenum"]: r["hadm_id"] for r in day.collect()}
+    assert got == {1.0: 101, 2.0: 101, 3.0: None}
 
 
 def test_preproc_events_sanity_filters(spark):
@@ -237,47 +230,6 @@ def test_features_selection(spark):
     allow = spark.createDataFrame([(10,), (30,)], "itemid long")
     out = features_selection(events, allow, "itemid")
     assert sorted(r["itemid"] for r in out.collect()) == [10, 30]
-
-
-def test_impute_hadm_fast_path_matches_exact(spark):
-    """assume_nonnested union path == exact range join on realistic
-    (overlapping but non-nested) admissions."""
-    import random
-    from datetime import datetime, timedelta
-
-    rng = random.Random(3)
-    base = datetime(2150, 1, 1)
-    adm_rows, lab_rows = [], []
-    hadm = 0
-    for s in range(40):
-        t = 0
-        for _ in range(rng.randint(1, 4)):
-            hadm += 1
-            start = t + rng.randint(0, 20)
-            end = start + rng.randint(1, 15)
-            # next admission may start before this one ends (overlap)
-            # but never inside-and-ending-inside (no nesting)
-            adm_rows.append((s, hadm, base + timedelta(days=start), base + timedelta(days=end)))
-            t = end - rng.randint(0, 1)
-        for _ in range(6):
-            lab_rows.append((s, None, 1, base + timedelta(days=rng.randint(0, 90)), 1.0, "u"))
-    admissions = spark.createDataFrame(
-        [(s, h, a, d, None, 0, "P", "W") for (s, h, a, d) in adm_rows],
-        "subject_id long, hadm_id long, admittime timestamp, dischtime timestamp, deathtime timestamp, hospital_expire_flag int, insurance string, ethnicity string",
-    )
-    labs = spark.createDataFrame(
-        lab_rows,
-        "subject_id long, hadm_id long, itemid long, charttime timestamp, valuenum double, valueuom string",
-    )
-    exact = {
-        (r["subject_id"], r["charttime"]): r["hadm_id"]
-        for r in impute_hadm_ids(labs, admissions).collect()
-    }
-    fast = {
-        (r["subject_id"], r["charttime"]): r["hadm_id"]
-        for r in impute_hadm_ids(labs, admissions, assume_nonnested=True).collect()
-    }
-    assert exact == fast
 
 
 def test_write_summary_text(tmp_path):

@@ -305,7 +305,7 @@ def test_bigram_lm_scores_hand_computed(spark):
     df = spark.createDataFrame(
         [(1, "a b"), (2, "a b a")], ["doc_id", "text"]
     )
-    out = {r["doc_id"]: r for r in bigram_lm_scores(df, reuse=False).collect()}
+    out = {r["doc_id"]: r for r in bigram_lm_scores(df).collect()}
     # pairs: d1 [(<s>,a),(a,b)]  d2 [(<s>,a),(a,b),(b,a)]
     # c(<s>)=2 c(a)=2 c(b)=1; c(<s>,a)=2 c(a,b)=2 c(b,a)=1; V={a,b}=2
     k = 0.5
@@ -331,7 +331,7 @@ def test_quantize_int8_roundtrip(spark):
         (3, [0.5, 0.25, 5.0]),
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {r["vec_id"]: r for r in quantize_embeddings_int8(df, reuse=False).collect()}
+    out = {r["vec_id"]: r for r in quantize_embeddings_int8(df).collect()}
     for vid, vec in rows:
         q = out[vid]["qvec"]
         assert all(-127 <= qi <= 127 for qi in q)

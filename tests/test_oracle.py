@@ -102,6 +102,18 @@ def _canon(rows, cols):
     return sorted(out, key=repr)
 
 
+def _assert_no_cartesian(name, sdf):
+    """Registry-wide physical-plan audit, riding on the plan each test
+    builds anyway: no registered query may plan a CartesianProduct —
+    the one join strategy that cannot survive any scale-up (all-pairs
+    shuffle of both sides). Intentional small-side cross joins (q52's
+    11-row literal temperature grid) must plan as
+    BroadcastNestedLoopJoin, which this audit allows."""
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    bad = [line.strip() for line in plan.splitlines() if "CartesianProduct" in line]
+    assert not bad, f"{name}: CartesianProduct in plan: {bad[:2]}"
+
+
 # Queries whose DOCUMENTED degenerate regime is a specific scale factor
 # (none currently: q112's sf0.1 stopword collapse was fixed in r6 by
 # moving its term space to word bigrams — see the q112 oracle note).
@@ -114,6 +126,7 @@ def test_oracle_match(spark, sf_dir, name):
         if sf_dir.rstrip("/").endswith(suffix.strip("/")):
             pytest.skip(f"{name}: documented degenerate regime at {suffix}")
     sdf = QUERIES[name](spark, sf_dir)
+    _assert_no_cartesian(name, sdf)
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = sdf.columns
     spark_types = {c: _spark_type_class(t) for c, t in sdf.dtypes}
@@ -155,6 +168,7 @@ def test_oracle_match(spark, sf_dir, name):
 def test_no_oracle_queries_run(spark, sf_dir, name):
     """Rows-only check for non-SQL-expressible ops (matches driver)."""
     sdf = QUERIES[name](spark, sf_dir)
+    _assert_no_cartesian(name, sdf)
     assert sdf.count() >= 0
     assert len(sdf.columns) > 0
 

@@ -41,22 +41,6 @@ def test_q01_prunes_columns(spark):
     assert "l_orderkey" not in read_schema and "l_quantity" in read_schema
 
 
-def test_no_cartesian_product_in_any_registered_query(spark):
-    """Registry-wide physical-plan audit: no registered query may plan a
-    CartesianProduct — the one join strategy that cannot survive any
-    scale-up (all-pairs shuffle of both sides). Intentional small-side
-    cross joins (q52's 11-row literal temperature grid) must plan as
-    BroadcastNestedLoopJoin, which this audit allows."""
-    bad = {}
-    for name, fn in all_queries().items():
-        plan = _plan(fn(spark, "/root/testdata/sf0.001"))
-        if "CartesianProduct" in plan:
-            bad[name] = [
-                line.strip() for line in plan.splitlines() if "Cartesian" in line
-            ][:2]
-    assert not bad, f"CartesianProduct in: {bad}"
-
-
 def test_asof_join_is_not_nested_loop(spark):
     """J7's scale guarantee: with broadcast disabled (as at 100 TB), the
     as-of join must plan as an equi sort-merge join with a range

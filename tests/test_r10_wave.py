@@ -1,14 +1,13 @@
 """Round-10 regression pins: the r9 verdict/ADVICE fixes.
 
-1. The roc_pr_curve / semantic_dedup default ``reuse=True`` no longer
-   pins anything in Spark's CacheManager (the r9 "persist without
-   unpersist" leak): reuse now routes through ``engine.materialize``
-   (localCheckpoint), whose storage backs the RESULT relation and is
-   ContextCleaner-reclaimable once the caller drops it — no explicit
-   unpersist required, no CacheManager entry ever created. The pins
-   here are deterministic (plan-node + CacheManager-transition +
-   value-parity assertions); GC-timing assertions were measured flaky
-   (cleanup is async) and are deliberately absent.
+1. roc_pr_curve / semantic_dedup pin nothing in Spark's CacheManager
+   (no "persist without unpersist" leak): their reuse routes through
+   ``engine.materialize`` (localCheckpoint), whose storage backs the
+   RESULT relation and is ContextCleaner-reclaimable once the caller
+   drops it — no explicit unpersist required, no CacheManager entry
+   ever created. The pins here are deterministic (plan-node +
+   CacheManager-transition assertions); GC-timing assertions were
+   measured flaky (cleanup is async) and are deliberately absent.
 2. ``connected_components(local_contract=1)`` raises instead of
    silently behaving as False (identity validation, r9 ADVICE).
 3. ``build_corpus_index`` ranks STRING doc ids on the distributed
@@ -31,7 +30,7 @@ def _optimized_plan(df) -> str:
 
 
 # ---------------------------------------------------------------------------
-# 1. reuse=True leak fix
+# 1. no CacheManager leak
 
 
 def test_roc_pr_curve_reuse_true_no_cache_manager_pin(spark):
@@ -43,21 +42,17 @@ def test_roc_pr_curve_reuse_true_no_cache_manager_pin(spark):
     ).select("score", F.col("y").cast("int").alias("y"))
 
     was_empty = _cache_manager_empty(spark)
-    out = roc_pr_curve(df, "score", "y")  # default reuse=True
+    out = roc_pr_curve(df, "score", "y")
     # materialize (localCheckpoint) cuts lineage to a LogicalRDD; a
     # DataFrame.persist would surface as InMemoryRelation AND register
     # in the CacheManager — both must be absent
     assert "InMemoryRelation" not in _optimized_plan(out)
-    rows_reuse = sorted(tuple(r) for r in out.collect())
+    out.collect()
     if was_empty:
         assert _cache_manager_empty(spark), (
-            "roc_pr_curve(reuse=True) registered a CacheManager entry — "
-            "the r9 pin leak is back"
+            "roc_pr_curve registered a CacheManager entry — "
+            "the persist-without-unpersist leak is back"
         )
-    rows_lazy = sorted(
-        tuple(r) for r in roc_pr_curve(df, "score", "y", reuse=False).collect()
-    )
-    assert rows_reuse == rows_lazy
 
 
 def test_semantic_dedup_reuse_true_no_cache_manager_pin(spark):
@@ -68,7 +63,7 @@ def test_semantic_dedup_reuse_true_no_cache_manager_pin(spark):
         "vec_id long, embedding array<double>",
     )
     # fixed centroids: skip driver-side Lloyd so the test pins ONLY the
-    # reuse seam (q134's fixed-parameterization pattern)
+    # pin seam (q134's fixed-parameterization pattern)
     cents = [[float((c * 3 + d) % 5) - 2.0 for d in range(8)] for c in range(4)]
 
     was_empty = _cache_manager_empty(spark)
@@ -76,25 +71,12 @@ def test_semantic_dedup_reuse_true_no_cache_manager_pin(spark):
         emb, "vec_id", "embedding", n_clusters=4, threshold=0.9, centroids=cents
     )
     assert "InMemoryRelation" not in _optimized_plan(out)
-    rows_reuse = sorted(tuple(r) for r in out.collect())
+    out.collect()
     if was_empty:
         assert _cache_manager_empty(spark), (
-            "semantic_dedup(reuse=True) registered a CacheManager entry — "
-            "the r9 pin leak is back"
+            "semantic_dedup registered a CacheManager entry — "
+            "the persist-without-unpersist leak is back"
         )
-    rows_lazy = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            emb,
-            "vec_id",
-            "embedding",
-            n_clusters=4,
-            threshold=0.9,
-            centroids=cents,
-            reuse=False,
-        ).collect()
-    )
-    assert rows_reuse == rows_lazy
 
 
 # ---------------------------------------------------------------------------

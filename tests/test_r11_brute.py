@@ -208,7 +208,7 @@ def test_naive_bayes_matches_micro_nat_reference(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     got = {
         r["doc_id"]: (r["pred_label"], r["score_micro"])
-        for r in naive_bayes_scores(df, reuse=False).collect()
+        for r in naive_bayes_scores(df).collect()
     }
 
     # independent reference with the SAME integer micro-nat quantization

@@ -36,32 +36,13 @@ def test_funnel_fused_counts_match_stepped(spark):
     out = {r["stage"]: r for r in funnel_conversion(ev, stages).collect()}
     stepped = [
         f.count()
-        for f in _funnel_frontiers(
-            ev, stages, "user_id", "ts", "event_type", materialize_steps=True
-        )
+        for f in _funnel_frontiers(ev, stages, "user_id", "ts", "event_type")
     ]
     assert [out[s]["users"] for s in stages] == stepped
     # the fixture's hand-checked truth
     assert stepped == [4, 4, 2, 1]
     assert out["signup"]["pct_of_prev"] == 1.0
     assert out["purchase"]["pct_of_first"] == 0.25
-
-
-def test_funnel_fused_is_one_job(spark):
-    """The fused form must not run eager jobs during construction and
-    must reuse each frontier's broadcast subtree (ReusedExchange) so
-    every stage's event pass runs once in the single action."""
-    from mimic_iv_data_pipeline_spark.operators.windows import _funnel_frontiers
-
-    ev = _funnel_fixture(spark)
-    fronts = _funnel_frontiers(
-        ev, ["signup", "view", "click", "purchase"],
-        "user_id", "ts", "event_type", materialize_steps=False,
-    )
-    # lazy: no localCheckpoint happened — the last frontier's plan still
-    # contains the chained joins (a checkpointed plan would be a scan)
-    plan = fronts[-1]._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" in plan
 
 
 def test_timeseries_expand_parallelism_value_parity(spark):

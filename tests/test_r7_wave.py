@@ -261,7 +261,7 @@ def test_dsir_keeps_featureless_docs(spark):
         "doc_id long, text string, is_target boolean",
     )
     out = {r["doc"]: (r["n_feats"], r["log_weight"]) for r in
-           dsir_log_weights(df, "doc_id", "text", "is_target", reuse=False).collect()}
+           dsir_log_weights(df, "doc_id", "text", "is_target").collect()}
     assert set(out) == {1, 2, 3, 4}
     assert out[2] == (0, 0.0) and out[3] == (0, 0.0)
     assert out[1][0] > 0 and out[4][0] > 0

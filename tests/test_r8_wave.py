@@ -6,24 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Snapshot the ids of currently-pinned RDDs.
-
-    The reuse=False tests must assert "this call pinned nothing", which
-    a global COUNT equality cannot express safely: Spark's
-    ContextCleaner may garbage-collect an unrelated cached relation
-    mid-test in a shared-session suite run (the r8 flake — the count
-    went DOWN). Comparing id SETS is immune: a concurrent cleanup only
-    removes ids; the assertion is that no NEW id appears.
-    """
-    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = m.keysIterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
 def test_bm25_empty_query_raises(spark):
     """An empty query must raise at call time, not AttributeError at
     plan-build time (r7 advice: the qtf when-chain is never built)."""
@@ -84,25 +66,6 @@ def test_estimated_jaccard_guard_keeps_estimates_exact(spark):
     lam = df.select(estimated_jaccard(F.col("a"), F.col("b")).alias("j"))
     assert unrolled.collect()[0]["j"] == pytest.approx(0.75)
     assert lam.collect()[0]["j"] == pytest.approx(0.75)
-
-
-def test_roc_pr_curve_reuse_false_is_lazy_and_equal(spark):
-    """reuse=False must return identical results without pinning a new
-    cached relation (r7 advice: repeated calls accumulated persists)."""
-    from mimic_iv_data_pipeline_spark.operators.aggregates import roc_pr_curve
-
-    df = spark.createDataFrame(
-        [(0.9, 1), (0.8, 0), (0.8, 1), (0.3, 0), (0.1, 0), (0.1, 1)],
-        "score double, label int",
-    )
-    before = _persistent_rdd_ids(spark)
-    lazy = roc_pr_curve(df, "score", "label", reuse=False)
-    rows_lazy = sorted(lazy.collect(), key=lambda r: r["score"])
-    assert _persistent_rdd_ids(spark) - before == set()
-
-    pinned = roc_pr_curve(df, "score", "label", reuse=True)
-    rows_pinned = sorted(pinned.collect(), key=lambda r: r["score"])
-    assert [tuple(r) for r in rows_lazy] == [tuple(r) for r in rows_pinned]
 
 
 # --- registry_stats.splice_readme (pure function) ---------------------
@@ -298,32 +261,6 @@ def test_plan_inventory_plan_error_is_drift():
     cur = {"q1": {"error": 1, "msg": "boom"}}
     drift, _ = pi.compare(base, cur)
     assert drift and "fails to plan" in drift[0]
-
-
-def test_semantic_dedup_reuse_false_is_lazy_and_equal(spark):
-    """reuse=False must return identical results without pinning a new
-    cached relation (the roc_pr_curve ADVICE class, applied to the one
-    other unconditional persist found in the r8 sweep)."""
-    import numpy as np
-    from mimic_iv_data_pipeline_spark.operators.dedup import semantic_dedup
-
-    rng = np.random.default_rng(5)
-    base = rng.normal(size=(6, 8))
-    rows = []
-    for i in range(6):
-        rows.append((i, [float(x) for x in base[i]]))
-        rows.append((100 + i, [float(x) for x in base[i] * 1.0001]))  # near-dup
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    before = _persistent_rdd_ids(spark)
-    lazy = sorted(
-        tuple(r) for r in semantic_dedup(emb, n_clusters=2, reuse=False).collect()
-    )
-    assert _persistent_rdd_ids(spark) - before == set()
-    pinned = sorted(
-        tuple(r) for r in semantic_dedup(emb, n_clusters=2, reuse=True).collect()
-    )
-    assert lazy == pinned
-    assert any(r[2] for r in lazy)  # the 1.0001-scaled twins are pruned
 
 
 def test_bench_compare_uses_worst_of_start_end_canary():

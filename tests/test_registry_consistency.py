@@ -81,7 +81,6 @@ _KEEP_UNREACHED = {
     "sources.readers.read_tsv_map": "source surface: the reference's TSV mapping tables",
     "sources.readers.read_glob_csv": "source surface: the reference's csv globs",
     "sources.sinks.write_csv_gz": "sink surface: the reference's csv.gz stage files",
-    "sources.sinks.write_parquet": "sink surface: partitioned parquet stage files",
     "sources.sinks.write_summary_text": "sink surface: the reference's cohort summary text",
     "operators.nlp.entity_summary": "paper stage: notes entity summary",
     # reference implementations that tests compare kept operators against
@@ -97,8 +96,10 @@ def _package_defs_and_reach():
     names that bench.py, perfbench/, scripts/ and __spark_entry__.py use.
     A name resolves through the module's own defs and its
     ``from <package module> import name`` statements (re-exports are
-    followed). Returns (defs, reach) where ``reach(roots)`` is the set of
-    defs reachable from ``roots`` plus the fixed entry points."""
+    followed). Returns (defs, reach, calls) where ``reach(roots)`` is the
+    set of defs reachable from ``roots`` plus the fixed entry points, and
+    ``calls`` lists (def, ast.Call) for every call of a package def in
+    that code."""
     import ast
 
     pkg = REPO / "mimic_iv_data_pipeline_spark"
@@ -140,17 +141,19 @@ def _package_defs_and_reach():
                 mod, name = src, orig
         return None
 
+    def target(mod, n):
+        chain = []
+        while isinstance(n, ast.Attribute):
+            chain.append(n.attr)
+            n = n.value
+        if isinstance(n, ast.Name):
+            return resolve(mod, n.id, tuple(reversed(chain)))
+        return None
+
     def refs(mod, node):
         for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                yield resolve(mod, n.id, ())
-            elif isinstance(n, ast.Attribute):
-                chain = []
-                while isinstance(n, ast.Attribute):
-                    chain.append(n.attr)
-                    n = n.value
-                if isinstance(n, ast.Name):
-                    yield resolve(mod, n.id, tuple(reversed(chain)))
+            if isinstance(n, (ast.Name, ast.Attribute)):
+                yield target(mod, n)
 
     queries = {key for key in defs if key[0].startswith(f"{pkg.name}.queries")}
     module_code = []  # decorators and non-def statements run at import
@@ -172,14 +175,20 @@ def _package_defs_and_reach():
                     work.append((key[0], defs[key]))
         return seen
 
-    return defs, reach
+    calls = [
+        (key, n)
+        for mod, tree in trees.items()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and (key := target(mod, n.func)) is not None
+    ]
+    return defs, reach, calls
 
 
 def test_every_package_function_is_reached():
     """No package def is dead: each is reached from a registered query,
     the pipeline, a benchmark or a script, or is on _KEEP_UNREACHED with
     its reason. The keep list itself names only live, unreached defs."""
-    defs, reach = _package_defs_and_reach()
+    defs, reach, _ = _package_defs_and_reach()
     pkg = "mimic_iv_data_pipeline_spark."
     keep = {(pkg + k.rpartition(".")[0], k.rpartition(".")[2]) for k in _KEEP_UNREACHED}
 
@@ -192,3 +201,67 @@ def test_every_package_function_is_reached():
     assert not stale, f"keep-list entries now reached (drop them from the list): {stale}"
     dead = names(set(defs) - reach(keep))
     assert not dead, f"unreached package defs (delete them or add to _KEEP_UNREACHED): {dead}"
+
+
+# Boolean options that no caller outside tests/ sets to anything but the
+# default, kept on purpose. Key: "<module under the package>.<def>.<param>".
+_KEEP_SINGLE_VALUED = {
+    # semantic variants: the flag changes the output, not the implementation
+    "operators.graph.bfs_levels.directed": "semantic variant: undirected reachability",
+    "operators.graph.triangle_count.per_node": "semantic variant: one global count, not per-node rows",
+    "plans.survival.survival_sequences.reverse": "semantic variant: chronological sequences",
+    "plans.ml_assembly.ml_feature_matrix.wide": "semantic variant: long (id, code, feature) rows",
+}
+
+
+def test_every_boolean_option_is_selected():
+    """Every package def parameter with a bool literal default is passed
+    some other expression by at least one call outside tests/ (a call
+    through ``**kwargs`` counts), or is on _KEEP_SINGLE_VALUED with its
+    reason: an option no workload sets is a dead branch. The keep list
+    itself names only live, single-valued options."""
+    import ast
+
+    defs, _, calls = _package_defs_and_reach()
+    pkg = "mimic_iv_data_pipeline_spark."
+    options = {}  # "<module>.<def>.<param>" -> (def key, position or None, default)
+    for (mod, name), node in defs.items():
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = node.args
+        positional = a.posonlyargs + a.args
+        pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+        pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for param, default in pairs:
+            if isinstance(default, ast.Constant) and isinstance(default.value, bool):
+                pos = positional.index(param) if param in positional else None
+                key = f"{mod.removeprefix(pkg)}.{name}.{param.arg}"
+                options[key] = ((mod, name), param.arg, pos, default.value)
+
+    def selects(call, param, pos, default):
+        if any(kw.arg is None for kw in call.keywords):  # **kwargs
+            return True
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                return pos is not None and pos >= i
+            if i == pos:
+                return not (isinstance(arg, ast.Constant) and arg.value is default)
+        for kw in call.keywords:
+            if kw.arg == param:
+                return not (isinstance(kw.value, ast.Constant) and kw.value.value is default)
+        return False
+
+    gone = sorted(set(_KEEP_SINGLE_VALUED) - set(options))
+    assert not gone, f"keep-list entries that no longer exist: {gone}"
+    selected = {
+        key
+        for key, (fn, param, pos, default) in options.items()
+        if any(callee == fn and selects(call, param, pos, default) for callee, call in calls)
+    }
+    stale = sorted(set(_KEEP_SINGLE_VALUED) & selected)
+    assert not stale, f"keep-list entries now selected (drop them from the list): {stale}"
+    single = sorted(set(options) - selected - set(_KEEP_SINGLE_VALUED))
+    assert not single, (
+        "bool options no caller outside tests/ sets (delete the option and its "
+        f"unused branch, or add to _KEEP_SINGLE_VALUED): {single}"
+    )

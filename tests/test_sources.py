@@ -4,7 +4,6 @@ TSV mapping scan, glob source, parquet round-trip, version aliasing."""
 from __future__ import annotations
 
 import gzip
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,13 +63,14 @@ def test_read_glob_csv(spark, srcdir):
     assert sorted(r["subject_id"] for r in df.collect()) == [10, 11, 12]
 
 
-def test_parquet_roundtrip_partitioned(spark, srcdir, tmp_path):
+def test_parquet_roundtrip_overwrites(spark, srcdir, tmp_path):
     df = read_glob_csv(spark, f"{srcdir}/chunk_*.csv", PATIENTS)
     out = str(tmp_path / "pq")
-    write_parquet(df, out, partition_by=["gender"])
+    write_parquet(df, out)
+    write_parquet(df, out)  # a re-run replaces the stage file, never appends
     back = spark.read.parquet(out)
     assert back.count() == 3
-    assert os.path.isdir(os.path.join(out, "gender=M"))
+    assert sorted(back.columns) == sorted(df.columns)
 
 
 def test_align_columns_version_drift(spark):
