@@ -9,10 +9,17 @@ results — only where intermediate state lives and how work is split.
 Deployment seams (set at submit time, no code changes):
 
 ``spark.graft.materialize`` (default ``local``)
-    How iterative operators (connected components, PageRank, LPA,
+    How the package pins a relation. :func:`materialize` is the ONE
+    pin: iterative operators (connected components, PageRank, LPA,
     BFS, Bellman-Ford, k-means, funnel recurrences) cut lineage
-    between rounds — every such operator routes through
-    :func:`materialize`.
+    between rounds with it, and operators and queries pin a relation
+    they read more than once with it. Nothing in the package calls
+    ``persist``/``cache`` (``tests/test_registry_consistency.py``
+    guards this). Lifetime: the pin's job runs at call time, and its
+    blocks back the RETURNED DataFrame only. They never enter Spark's
+    CacheManager, so no later query's plan is rewritten to read them,
+    and the ContextCleaner frees them once that DataFrame is garbage
+    collected — repeated calls on distinct inputs accumulate nothing.
 
     * ``local`` — ``DataFrame.localCheckpoint``: blocks cached on
       executors, no HDFS round-trip. Right for single-app jobs and
@@ -81,10 +88,11 @@ def materialize(df: DataFrame) -> DataFrame:
     between the harness's ``localCheckpoint`` and a fault-tolerant
     cluster ``checkpoint`` (see module docstring; selected by the
     ``spark.graft.materialize`` conf so a deployer flips ONE setting,
-    not every call site).
+    not every call site). Eager: the pin's job runs here.
 
-    Used as ``df.transform(materialize)`` by every iterative operator
-    and multi-consumer plan in the repo.
+    The package's only pin, used as ``df.transform(materialize)`` or
+    ``materialize(df)`` by every iterative operator and multi-consumer
+    relation in the repo.
     """
     mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "local")
     if mode == "reliable":

@@ -1122,11 +1122,8 @@ def roc_pr_curve(
     The |distinct scores|-row per-score relation is MATERIALIZED once
     (3 consumers — prefix sums, totals, curve — each would re-run the
     fact scan without it) via
-    :func:`~mimic_iv_data_pipeline_spark.engine.materialize`
-    (localCheckpoint: lineage cut, storage freed by the ContextCleaner
-    when the result goes out of scope — it never enters Spark's
-    CacheManager, so long-lived sessions calling this on many DISTINCT
-    inputs accumulate NOTHING). The cost is one eager job at call time.
+    :func:`~mimic_iv_data_pipeline_spark.engine.materialize`. The cost
+    is one eager job at call time.
     """
     from mimic_iv_data_pipeline_spark.engine import materialize
     from mimic_iv_data_pipeline_spark.operators.sampling import global_prefix_sums

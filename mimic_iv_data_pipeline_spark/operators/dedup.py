@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mimic_iv_data_pipeline_spark.engine import materialize
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 from pyspark.sql.window import Window
 
@@ -86,10 +87,10 @@ def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> Data
     )
 
 
-def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def shingle_sets(exploded: DataFrame) -> DataFrame:
     """(doc, shingles array, n_shingles) — set form for array-verify
     paths, assembled from the codegen'd exploded relation."""
-    return exploded_shingles(df, id_col, text_col, n).groupBy("doc").agg(
+    return exploded.groupBy("doc").agg(
         F.collect_list("shingle").alias("shingles"),
         F.count(F.lit(1)).alias("n_shingles"),
     )
@@ -136,10 +137,10 @@ def ngram_jaccard_pairs(
     Two exactness-preserving physical strategies, picked by selectivity:
 
     * t < 0.5: inverted-index count join — explode (doc, shingle),
-      self-join on shingle, count common per pair (2-long-int rows,
-      cheap to shuffle), then ``|A∪B| = |A|+|B|−common`` with the
-      doc-size table **broadcast**. Cost is Σ df(shingle)² join rows
-      but each row is tiny.
+      self-join on shingle, count common per pair (4-long-int rows:
+      the pair and both set sizes, which ride each shingle row from a
+      per-doc window), then ``|A∪B| = |A|+|B|−common``. Cost is
+      Σ df(shingle)² join rows but each row is tiny.
 
     * t ≥ 0.5: prefix filtering (PPJoin family — Xiao et al.,
       "Efficient Similarity Joins for Near-Duplicate Detection",
@@ -169,10 +170,10 @@ def ngram_jaccard_pairs(
     runs and the prefix index is not built (the cap and the prefix
     target the same Σdf² wall from different ends).
     """
-    # the exploded relation feeds both join sides AND the size
-    # aggregate — persisting it computes the tokenize+window chain
-    # once (~1s saved per call at 5k docs; LRU-evicted under pressure)
-    exploded = exploded_shingles(df, id_col, text_col, n).persist()
+    # the exploded relation feeds both join sides AND the size window
+    # (or set aggregate) — pinning it computes the tokenize+window
+    # chain once (~1s saved per call at 5k docs)
+    exploded = exploded_shingles(df, id_col, text_col, n).transform(materialize)
 
     if max_df is not None:
         # candidate index without hot shingles; exact verify below
@@ -191,26 +192,22 @@ def ngram_jaccard_pairs(
             .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
             .distinct()
         )
-        sets_df = shingle_sets(df, id_col, text_col, n)
+        sets_df = shingle_sets(exploded)
         return _score_pairs(candidates, sets_df).filter(
             F.col("jaccard") >= threshold
         )
 
     if threshold < 0.5:
-        a = exploded.alias("a")
-        b = exploded.alias("b")
-        common = (
-            a.join(b, on="shingle")
-            .filter(F.col("a.doc") < F.col("b.doc"))
-            .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-        sizes = exploded.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-        sa = sizes.select(F.col("doc").alias("id_a"), F.col("n_shingles").alias("size_a"))
-        sb = sizes.select(F.col("doc").alias("id_b"), F.col("n_shingles").alias("size_b"))
+        # each shingle row carries its doc's set size (a per-doc
+        # window), so the pair count needs no size table joined back
+        sized = exploded.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("doc")))
+        a = sized.select(F.col("doc").alias("id_a"), F.col("__n").alias("size_a"), "shingle")
+        b = sized.select(F.col("doc").alias("id_b"), F.col("__n").alias("size_b"), "shingle")
         return (
-            common.join(F.broadcast(sa), "id_a")
-            .join(F.broadcast(sb), "id_b")
+            a.join(b, "shingle")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b", "size_a", "size_b")
+            .agg(F.count(F.lit(1)).alias("common"))
             .withColumn(
                 "jaccard",
                 dround(
@@ -223,7 +220,8 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b", "jaccard")
         )
 
-    sets_df = shingle_sets(df, id_col, text_col, n).cache()
+    # read by the prefix-length join and both _score_pairs probes
+    sets_df = shingle_sets(exploded).transform(materialize)
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     prefix_len = (
         F.col("n_shingles") - F.ceil(F.lit(threshold) * F.col("n_shingles")) + 1
@@ -390,10 +388,9 @@ def minhash_lsh_pairs(
     explode bands, groupBy band bucket); candidates are then verified
     with exact n-gram Jaccard so the output has no false positives.
 
-    The shared (doc, shingle-hash) relation is persisted (it feeds the
-    sketch aggregate AND the verify join). Spark's CacheManager dedups
-    identical plans, so repeated calls reuse one cache entry rather
-    than accumulating.
+    The shared (doc, shingle-hash) relation is pinned with
+    :func:`~mimic_iv_data_pipeline_spark.engine.materialize` (it feeds
+    the sketch aggregate AND the verify join).
 
     Scale shape: the sketch shuffle ships only ``num_hashes``
     map-side-combined mins per doc per partition — the shingle sets
@@ -419,7 +416,7 @@ def minhash_lsh_pairs(
     if bucket not in ("hash", "exact"):
         raise ValueError(f"minhash_lsh_pairs: unknown bucket={bucket!r}")
     exploded = exploded_shingles(df, id_col, text_col, n)
-    base = exploded.select("doc", _shingle_hash64(shingle_hash).alias("__h")).persist()
+    base = materialize(exploded.select("doc", _shingle_hash64(shingle_hash).alias("__h")))
     x32 = F.pmod(F.col("__h"), F.lit(_M32))
     sig = (
         base.select("doc", x32.alias("__x"))
@@ -441,11 +438,11 @@ def minhash_lsh_pairs(
     # exact verification only on candidates — |candidates| joins, never
     # the full quadratic pair space. The candidate relation (tiny: the
     # LSH survivors) fans out to THREE consumers (the id set and both
-    # verify-join probes), so persist it — otherwise the banded
+    # verify-join probes), so pin it — otherwise the banded
     # self-join re-executes per consumer.
-    candidates = candidates.persist()
+    candidates = candidates.transform(materialize)
     # Shingle-hash sets are built ONLY for docs in some candidate pair
-    # (left-semi on the candidate ids), from the cached base relation.
+    # (left-semi on the candidate ids), from the pinned base relation.
     cand_docs = (
         candidates.select(F.col("id_a").alias("doc"))
         .union(candidates.select(F.col("id_b").alias("doc")))
@@ -459,7 +456,7 @@ def minhash_lsh_pairs(
             F.collect_list("__h").alias("shingles"),
             F.count(F.lit(1)).alias("n_shingles"),
         )
-        .persist()
+        .transform(materialize)
     )
     return _score_pairs(candidates, sets_df).filter(
         F.col("jaccard") >= verify_threshold
@@ -884,13 +881,8 @@ def semantic_dedup(
     # the join path has three consumers (both self-join sides + the
     # final output join on a DIFFERENT key); the pandas path pins too,
     # sparing a recompute when callers hold the result across actions.
-    # materialize (localCheckpoint) runs the Python/Arrow assignment
-    # pass, the most expensive stage here, once. Unlike persist(), the
-    # checkpointed storage is ContextCleaner-freed when the result goes
-    # out of scope and never enters the CacheManager, so long-lived
-    # sessions calling this on many distinct inputs accumulate nothing.
-    from mimic_iv_data_pipeline_spark.engine import materialize
-
+    # materialize runs the Python/Arrow assignment pass, the most
+    # expensive stage here, once.
     assigned = materialize(assigned)
     if pairs == "pandas":
         return _semantic_prune_pandas(assigned, threshold)

@@ -100,17 +100,17 @@ def edit_distance_join(
       the exact complete join (adversarial-input-complete, but
       unbounded skew).
     """
-    from mimic_iv_data_pipeline_spark.engine import fan_out
+    from mimic_iv_data_pipeline_spark.engine import fan_out, materialize
 
     # fan out BEFORE the O(L^k) variant explode: an unsplittable small
     # scan otherwise leaves the explode, the hash-join probe over the
-    # persisted relation, and the levenshtein verify all in ONE task
+    # pinned relation, and the levenshtein verify all in ONE task
     # (measured: a single 4.4 s CPU-bound stage at sf0.1); no-op when
     # the input already has ≥ cores partitions
     # the exploded variant relation feeds up to three consumers (the
     # max_bucket count, then BOTH self-join sides — differing
     # projections above the exchange, so ReuseExchange cannot fire);
-    # without the persist the O(L²/2)-variants explode + xxhash64
+    # without the pin the O(L²/2)-variants explode + xxhash64
     # recomputes per consumer
     sides = (
         fan_out(df.select(id_col, str_col))
@@ -127,7 +127,7 @@ def edit_distance_join(
             "__id",
             "__s",
         )
-        .persist()
+        .transform(materialize)
     )
     if max_bucket is not None:
         # filter by the HOT-bucket complement, not the OK-bucket list.

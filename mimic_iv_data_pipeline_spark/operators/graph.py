@@ -21,10 +21,9 @@ grouped by cell, LSH pairs grouped by bucket): whole clusters collapse
 to stars locally — 7 rounds -> 1 and 3.5x wall-clock on the 6M-edge
 blob probe (PERF r8). On uncorrelated layouts it is a measured ~1%
 pure loss, but buys nothing, so the default stays off. Each
-iteration is ``localCheckpoint``-ed to truncate lineage, which is what
-keeps the plan from growing exponentially in an iterative Spark job;
-on a long-running cluster with executor loss you'd swap in reliable
-``checkpoint()`` with a durable checkpoint dir.
+iteration is pinned with ``engine.materialize`` to truncate lineage,
+which is what keeps the plan from growing exponentially in an
+iterative Spark job.
 """
 
 from __future__ import annotations
@@ -423,10 +422,9 @@ def pagerank(
     relation (edges ⨝ ranks on src — ranks is |N| rows, broadcastable
     for dimension-sized graphs, hash-joined and co-partitioned with the
     edge list on src otherwise) + ONE groupBy(dst) aggregate, plus a
-    1-row global sum for the dangling mass. Ranks are
-    ``localCheckpoint``-ed each iteration to truncate lineage — the
-    same iterative-plan discipline as ``connected_components`` above;
-    at cluster scale swap in reliable ``checkpoint()``. Fixed iteration
+    1-row global sum for the dangling mass. Ranks are materialized
+    each iteration to truncate lineage — the same iterative-plan
+    discipline as ``connected_components`` above. Fixed iteration
     count (not convergence-tested) keeps the job graph static and the
     output deterministic.
 
@@ -616,7 +614,7 @@ def label_propagation(
     list against the |N|-row label relation + ONE (node, label) count
     aggregate + ONE per-node argmax window over that count relation
     (bounded by degree sums, i.e. 2m rows). Labels are
-    localCheckpoint-ed per round — same lineage discipline as
+    materialized per round — same lineage discipline as
     ``pagerank``/``connected_components``. The node set is the
     endpoints of non-self-loop edges (an edge-list representation
     carries no isolated nodes; self-loop-only nodes are dropped with
@@ -635,9 +633,7 @@ def label_propagation(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().repartition("b").transform(materialize)
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=True
-    )
+    labels = nodes.select("node", F.col("node").alias("label")).transform(materialize)
     w = Window.partitionBy("a").orderBy(F.col("__c").desc(), F.col("label").asc())
     for _ in range(iterations):
         neigh = (

@@ -56,14 +56,8 @@ def tfidf_cosine_pairs(
     stopwords contributing near-zero IDF weight, so the bound trades a
     vanishing score error for capping the largest df² term. Output
     ``(id_a, id_b, cos_sim)`` with ``id_a < id_b``.
-
-    The shared ``tf`` and weight relations are persisted. CacheManager
-    dedups identical plans (repeat calls on the same input reuse the
-    entries), but each DISTINCT input pins new entries for the
-    session's life.
     """
-    # feeds the weight relation AND (via it) both join probes
-    tf = _tf(df, id_col, text_col).persist()
+    tf = _tf(df, id_col, text_col)
     n_docs = tf.select(F.countDistinct("doc").alias("__n"))
     dfreq = F.count(F.lit(1)).over(Window.partitionBy("token"))
     w = (
@@ -74,7 +68,8 @@ def tfidf_cosine_pairs(
             F.col("tf") * (F.log((1 + F.col("__n")) / (1 + F.col("__df"))) + F.lit(1.0)),
         )
         .select("doc", "token", "w", "__df")
-        .persist()
+        # feeds the norms aggregate AND both join probes
+        .transform(materialize)
     )
     norms = w.groupBy("doc").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     indexed = w if max_df is None else w.filter(F.col("__df") <= max_df)

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mimic_iv_data_pipeline_spark.engine import fan_out
+from mimic_iv_data_pipeline_spark.engine import fan_out, materialize
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 
 __all__ = [
@@ -236,13 +236,14 @@ def dsir_log_weights(
     the weights back onto the corpus never silently drops documents.
 
     Scale shape: feature extraction is a narrow explode (unigrams +
-    ``arrays_zip``-shifted bigrams) scanned EXACTLY ONCE — the
-    (doc, bucket) count aggregate is the only corpus-sized shuffle, and
-    the target/raw bucket distributions are conditional sums over that
-    already-aggregated relation (``buckets``-bounded, a doc's rows all
-    carry its target flag). The λ table (B rows) and the two totals
-    broadcast into the per-doc scoring aggregate. No driver state, no
-    collect.
+    ``arrays_zip``-shifted bigrams) scanned once for the λ branch and
+    once for the scoring join — the (doc, bucket) count aggregate is
+    the only corpus-sized shuffle, and the target/raw bucket
+    distributions are conditional sums over that already-aggregated
+    relation (``buckets``-bounded, a doc's rows all carry its target
+    flag). The two totals are a window over the B-row bucket
+    relation, and the λ table (B rows) broadcasts into the per-doc
+    scoring aggregate. No driver state, no collect.
     """
     w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     base = df.select(
@@ -270,23 +271,21 @@ def dsir_log_weights(
     )
     # the ONLY corpus-sized aggregate; __t rides along for free since a
     # doc's rows all share one flag. It feeds BOTH the λ branch and the
-    # scoring join, so it is persisted (docs×buckets-bounded — far
-    # smaller than the occurrence stream it summarizes); Spark's
-    # CacheManager dedups identical plans across repeated calls.
-    per_doc = occ.groupBy("doc", "__t", "bucket").agg(F.count("*").alias("c")).persist()
+    # scoring join but is not pinned: a pin would run it even for
+    # callers that never read the weights (a count() prunes the left
+    # join below down to `docs`), and with the totals taken as a window
+    # over the B-row bucket relation it is read twice, not three times.
+    per_doc = occ.groupBy("doc", "__t", "bucket").agg(F.count("*").alias("c"))
     stats = per_doc.groupBy("bucket").agg(
         F.sum("c").alias("cr"),
         F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("ct"),
     )
-    tot = stats.agg(
-        F.sum("ct").alias("__T"),
-        F.sum("cr").alias("__R"),
-    )
-    lam = stats.crossJoin(F.broadcast(tot)).select(
+    every_bucket = Window.partitionBy()
+    lam = stats.select(
         "bucket",
         (
-            F.log((F.col("ct") + 1) / (F.col("__T") + F.lit(buckets)))
-            - F.log((F.col("cr") + 1) / (F.col("__R") + F.lit(buckets)))
+            F.log((F.col("ct") + 1) / (F.sum("ct").over(every_bucket) + F.lit(buckets)))
+            - F.log((F.col("cr") + 1) / (F.sum("cr").over(every_bucket) + F.lit(buckets)))
         ).alias("__lam"),
     )
     scored = (
@@ -1332,8 +1331,6 @@ def build_corpus_index(
             # Boundaries never affect the global rank of a contiguous
             # bucketing, so output values are identical to the other
             # paths (parity-pinned, tests/test_r11_wave.py).
-            from mimic_iv_data_pipeline_spark.engine import materialize
-
             n_b = (
                 range_buckets
                 if range_buckets is not None

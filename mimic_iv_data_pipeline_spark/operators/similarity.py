@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mimic_iv_data_pipeline_spark.engine import materialize
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 from pyspark.sql.window import Window
 
@@ -727,7 +728,7 @@ def quantize_embeddings_int8(
     ``transform`` over each vector, whole-stage codegen, no shuffle.
     """
     # feeds the stats aggregate and the quantize map
-    base = emb.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("__x")).persist()
+    base = materialize(emb.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("__x")))
     stats = (
         base.select(F.posexplode("__x").alias("__i", "__v"))
         .groupBy("__i")

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mimic_iv_data_pipeline_spark.engine import materialize
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 
 # Deterministic marker-word lists for the language-ID heuristic. Tiny on
@@ -405,10 +406,10 @@ def bpe_pair_counts(
 
 
 def _bigram_pairs(df: DataFrame, id_col: str, text_col: str, bos: str) -> DataFrame:
-    """Persisted ``(id, prev, tok)`` bigram rows of the lower-cased,
+    """Pinned ``(id, prev, tok)`` bigram rows of the lower-cased,
     whitespace-split text, ``bos`` before each document's first token.
     Shuffle-free: ``arrays_zip`` of the token array with its BOS-shifted
-    self, then one explode. Persisted because every bigram scorer reads
+    self, then one explode. Pinned because every bigram scorer reads
     it twice (the count aggregate and the scoring join probe)."""
     w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     return (
@@ -426,7 +427,7 @@ def _bigram_pairs(df: DataFrame, id_col: str, text_col: str, bos: str) -> DataFr
             ).alias("p"),
         )
         .select(id_col, F.col("p.prev").alias("prev"), F.col("p.tok").alias("tok"))
-        .persist()
+        .transform(materialize)
     )
 
 
@@ -454,8 +455,6 @@ def bigram_lm_scores(
     equi-joins on (prev, tok)/(prev) plus a broadcast of the 1-row
     vocabulary size — no driver-side state at any corpus size.
     """
-    from mimic_iv_data_pipeline_spark.engine import materialize
-
     pairs = _bigram_pairs(df, id_col, text_col, bos)
     # c(prev) = Σ_w c(prev, w) and the vocabulary is the distinct tok
     # set of the count matrix, so both derive from the vocab²-bounded
@@ -652,14 +651,7 @@ def kneser_ney_scores(
     vocab-bounded distinct aggregates (N1+ per context, N1+ per word)
     and a 1-row broadcast of the distinct-bigram total — all keyed
     shuffles on (prev)/(tok), no driver state.
-
-    The exploded ``pairs`` relation is persisted. Spark's CacheManager
-    dedups identical plans, so re-scoring the SAME input reuses one
-    cache entry — but each DISTINCT input adds an entry that lives
-    until the session ends or the LRU evicts it.
     """
-    from mimic_iv_data_pipeline_spark.engine import materialize
-
     pairs = _bigram_pairs(df, id_col, text_col, bos)
     # every KN training statistic is an exact aggregation of the
     # bigram-count matrix — c(prev) = Σ_w c(prev, w); N1+(prev,·) =
@@ -977,18 +969,15 @@ def naive_bayes_scores(
     onto the token stream (measured 2.4× faster than letting the
     planner shuffle the 120M-row token side).
 
-    The exploded token relation is persisted (it feeds the stats
-    aggregate AND the scoring join). Same cache-entry caveat as
-    ``kneser_ney_scores``.
+    The exploded token relation is pinned (it feeds the stats
+    aggregate AND the scoring join).
     """
     from pyspark.sql.window import Window
-
-    from mimic_iv_data_pipeline_spark.engine import materialize
 
     toks = df.select(
         F.col(id_col), F.col(label_col).alias("__y"), tokens(F.col(text_col)).alias("__w")
     )
-    tok = toks.select(id_col, "__y", F.explode("__w").alias("__t")).persist()
+    tok = materialize(toks.select(id_col, "__y", F.explode("__w").alias("__t")))
     # training statistics (the corpus is its own training set).
     # The class totals and the vocabulary count are EXACT aggregations
     # of the (word, class) count matrix — N_c = Σ_t c(t, c) and

@@ -1261,8 +1261,7 @@ def q175_roc_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
     # the operator materializes the per-score relation once for the
-    # curve's 3 consumers (localCheckpoint — freed with the result, no
-    # CacheManager pin)
+    # curve's 3 consumers
     out = roc_pr_curve(ev, "score", "y")
     return out.select(
         dround("score", 6).alias("score"),

@@ -176,7 +176,6 @@ def q86_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # the operator materializes the assignment relation once
-    # (localCheckpoint — freed with the result, no CacheManager pin)
     return semantic_dedup(
         emb, "vec_id", "embedding", n_clusters=16, threshold=0.9
     )

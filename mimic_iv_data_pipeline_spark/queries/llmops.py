@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mimic_iv_data_pipeline_spark.engine import materialize
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 from mimic_iv_data_pipeline_spark.operators.dedup import (
     ngram_contamination,
@@ -243,8 +244,7 @@ def q66_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q67_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    occ = token_stream(_docs(spark, sf_dir), "text")
-    occ = occ.persist()
+    occ = token_stream(_docs(spark, sf_dir), "text").transform(materialize)
     sketch = cm_sketch(occ, "token", depth=4, width=256)
     words = occ.groupBy("token").agg(F.count("*").cast("long").alias("exact_cnt"))
     est = cm_estimate(sketch, words.select("token"), "token", depth=4, width=256)

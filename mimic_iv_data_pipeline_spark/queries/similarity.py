@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mimic_iv_data_pipeline_spark.engine import materialize
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 
 from mimic_iv_data_pipeline_spark.operators.similarity import (
@@ -321,7 +322,9 @@ def q122_rag_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
-    index = build_chunk_index(docs, window=32, stride=24, dims=64).persist()
+    # the limit leaves the pinned index in one partition; coalesce(1)
+    # tells the planner so, and the top-k window needs no exchange
+    index = materialize(build_chunk_index(docs, window=32, stride=24, dims=64)).coalesce(1)
     probe = index.orderBy("chunk_uid").limit(5).collect()
     queries = spark.createDataFrame(
         [(int(r["chunk_uid"]), r["chunk_text"]) for r in probe],
@@ -568,7 +571,7 @@ def q129_rag_retrieve_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("doc_id") < 100
     )
-    index = build_chunk_index(docs, window=32, stride=24, dims=64).persist()
+    index = materialize(build_chunk_index(docs, window=32, stride=24, dims=64))
     queries = (
         index.orderBy("chunk_uid")
         .limit(5)

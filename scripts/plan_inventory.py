@@ -65,15 +65,6 @@ def inventory(sf_dir: str) -> dict[str, dict[str, int]]:
     spark = get_spark("plan_inventory")
     out: dict[str, dict[str, int]] = {}
     for name, fn in all_queries().items():
-        # Each query plans against a COLD cache: operators that pin
-        # persist subplans, and CacheManager substitutes those
-        # InMemoryRelations into any LATER query sharing the subplan —
-        # making every plan depend on registry ORDER (the r9 manifest
-        # reorder flipped q39/q128 counts with zero code change). A
-        # per-query clear makes the inventory order-independent; a
-        # query's OWN persists still show in its own plan, which is
-        # intrinsic and deterministic.
-        spark.catalog.clearCache()
         try:
             plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # a query that cannot even plan is drift

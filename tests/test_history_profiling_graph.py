@@ -477,3 +477,18 @@ def test_mmr_validates(spark):
         mmr_rerank(df, emb, k=0)
     with pytest.raises(ValueError):
         mmr_rerank(df, emb, k=1, lam=2.0)
+
+
+# --- connected_components argument validation --------------------------------
+
+
+def test_connected_components_rejects_int_local_contract(spark):
+    from mimic_iv_data_pipeline_spark.operators.graph import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    # 1 == True in Python, so a membership check would let int 1 through
+    # and the later `is True` dispatch would silently treat it as False
+    with pytest.raises(ValueError, match="local_contract"):
+        connected_components(pairs, local_contract=1)
+    with pytest.raises(ValueError, match="local_contract"):
+        connected_components(pairs, local_contract=0)

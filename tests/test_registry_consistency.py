@@ -265,3 +265,39 @@ def test_every_boolean_option_is_selected():
         "bool options no caller outside tests/ sets (delete the option and its "
         f"unused branch, or add to _KEEP_SINGLE_VALUED): {single}"
     )
+
+
+def test_every_pin_goes_through_materialize():
+    """``engine.materialize`` is the package's only pin. A
+    ``persist()``/``cache()`` pin enters Spark's CacheManager and is
+    never released (each distinct input adds an entry for the session's
+    life, and later queries' plans read it), and a raw
+    ``localCheckpoint``/``checkpoint`` call bypasses the
+    ``spark.graft.materialize`` seam."""
+    import ast
+
+    pins = {"persist", "cache", "localCheckpoint", "checkpoint"}
+    pkg = REPO / "mimic_iv_data_pipeline_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == pkg / "engine.py":
+            seam = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "materialize"
+            )
+            allowed = {id(n) for n in ast.walk(seam)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in pins
+                and id(node) not in allowed
+            ):
+                where = f"{path.relative_to(REPO)}:{node.func.end_lineno}"
+                found.append(f"{where} .{node.func.attr}(")
+    assert not found, (
+        "pins outside engine.materialize (use df.transform(materialize), or "
+        f"drop the pin if the relation has one consumer): {found}"
+    )

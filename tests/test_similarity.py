@@ -108,3 +108,44 @@ def test_quantizer_samples_partition_order_invariant(spark):
     ivf_b = sorted(map(tuple, ivf_topk(
         q, corpus=shuffled, n_cells=4, n_probe=2, k=3, train_sample=128).collect()))
     assert ivf_a == ivf_b
+
+
+# --- vectorized bucketed ANN scoring == expression path ---------------------
+
+
+def _emb_fixture(spark, n=120, dims=8):
+    return spark.createDataFrame(
+        [
+            (i, [float((i * 13 + d * 7) % 11) - 5.0 for d in range(dims)])
+            for i in range(n)
+        ],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def test_ivf_topk_pandas_score_matches_expr(spark):
+    """score='pandas' (per-cell numpy matmul + map-side top-k) must be
+    row-identical to the interpreted-expression join it replaced —
+    including rounding, tie-breaks and self-exclusion."""
+    from mimic_iv_data_pipeline_spark.operators.similarity import ivf_topk
+
+    emb = _emb_fixture(spark)
+    queries = emb.filter(F.col("vec_id") < 8)
+    cents = [[float((c * 5 + d) % 7) - 3.0 for d in range(8)] for c in range(4)]
+    kw = dict(
+        corpus=emb, n_cells=4, n_probe=2, k=5, centroids=cents
+    )
+    a = sorted(map(tuple, ivf_topk(queries, score="expr", **kw).collect()))
+    b = sorted(map(tuple, ivf_topk(queries, score="pandas", **kw).collect()))
+    assert a == b and len(a) > 0
+
+
+def test_ann_lsh_topk_pandas_score_matches_expr(spark):
+    from mimic_iv_data_pipeline_spark.operators.similarity import ann_lsh_topk
+
+    emb = _emb_fixture(spark)
+    queries = emb.filter(F.col("vec_id") < 8)
+    kw = dict(corpus=emb, dims=8, bits=4, k=5)
+    a = sorted(map(tuple, ann_lsh_topk(queries, score="expr", **kw).collect()))
+    b = sorted(map(tuple, ann_lsh_topk(queries, score="pandas", **kw).collect()))
+    assert a == b and len(a) > 0
