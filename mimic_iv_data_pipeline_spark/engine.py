@@ -93,6 +93,11 @@ def materialize(df: DataFrame) -> DataFrame:
     The package's only pin, used as ``df.transform(materialize)`` or
     ``materialize(df)`` by every iterative operator and multi-consumer
     relation in the repo.
+
+    The pin keeps its PRE-pin size estimate: a 1,000-row relation
+    pinned from a join carries the product of its join inputs (~3.7 TB
+    for the pipeline's cohort), so a join broadcasts a small pin only
+    when the caller hints ``F.broadcast``.
     """
     mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "local")
     if mode == "reliable":

@@ -149,7 +149,11 @@ def majority_unit_clamp(
     cell; otherwise the filtered multiset is the whole group including
     NULL-unit rows, i.e. the (group) cell. ``percentile`` sorts its
     buffer, so equal multisets give bit-identical doubles; the share
-    is the same long/long division as ``mode_per_group``. The extra
+    is the same long/long division as ``mode_per_group``. Both cells
+    come out of ONE per-group aggregate over the grouping-sets result,
+    its only consumer, so it runs once and only moves values it
+    already computed (a second consumer would push its own filter
+    below it and recompute it from another scan). The extra
     cost is the Expand duplicating aggregate input 2× — strictly
     cheaper than re-deriving the event relation per pass once the
     input is join-derived (the e2e clean stage) and neutral enough on
@@ -167,40 +171,29 @@ def majority_unit_clamp(
         F.expr(f"percentile({value_col}, {upper_pct})").alias("__hi"),
         F.grouping(unit_col).alias("__gflag"),
     )
-    # tail expressions as parsed SQL: identical trees, one parse per
-    # select instead of per-operand py4j chatter
-    cand = stats.filter(F.expr(f"__gflag = 0 AND `{unit_col}` IS NOT NULL"))
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("__cnt").desc(), F.col(unit_col).asc()
-    )
-    mode_rows = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.expr("__rn = 1"))
-        .selectExpr(
-            f"`{group_col}`",
-            f"`{unit_col}` AS __mode_unit",
-            "__cnt AS __mode_cnt",
-            "__lo AS __lo_m",
-            "__hi AS __hi_m",
-        )
-    )
-    totals = stats.filter(F.expr("__gflag = 1")).selectExpr(
-        f"`{group_col}`",
-        "__cnt_unit AS __tot_unit",
-        "__lo AS __lo_all",
-        "__hi AS __hi_all",
+    # mode cell: count desc, unit asc — the mode_per_group tie-break
+    per_group = stats.groupBy(group_col).agg(
+        F.expr(
+            f"min_by(struct(`{unit_col}` AS unit, __cnt AS cnt, __lo AS lo,"
+            f" __hi AS hi), struct(-__cnt, `{unit_col}`))"
+            f" FILTER (WHERE __gflag = 0 AND `{unit_col}` IS NOT NULL)"
+        ).alias("__m"),
+        F.expr(
+            "max(struct(__cnt_unit AS tot, __lo AS lo, __hi AS hi))"
+            " FILTER (WHERE __gflag = 1)"
+        ).alias("__all"),
     )
     # share mirrors mode_per_group exactly: top count / non-null total
     # (NULL when the group never elected — all-NULL-unit groups).
     cutoff_sql = f"{float(cutoff)!r}D"
-    info = totals.join(mode_rows, on=group_col, how="left").selectExpr(
+    info = per_group.selectExpr(
         f"`{group_col}`",
-        "__mode_unit",
-        "__mode_cnt / __tot_unit AS __share",
-        f"CASE WHEN __mode_cnt / __tot_unit > {cutoff_sql}"
-        " THEN __lo_m ELSE __lo_all END AS __lo",
-        f"CASE WHEN __mode_cnt / __tot_unit > {cutoff_sql}"
-        " THEN __hi_m ELSE __hi_all END AS __hi",
+        "__m.unit AS __mode_unit",
+        "__m.cnt / __all.tot AS __share",
+        f"CASE WHEN __m.cnt / __all.tot > {cutoff_sql}"
+        " THEN __m.lo ELSE __all.lo END AS __lo",
+        f"CASE WHEN __m.cnt / __all.tot > {cutoff_sql}"
+        " THEN __m.hi ELSE __all.hi END AS __hi",
     )
     out = df.join(F.broadcast(info), on=group_col, how="left").filter(
         F.expr(

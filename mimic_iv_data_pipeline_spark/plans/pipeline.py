@@ -14,6 +14,7 @@ re-run does not resume from earlier stage files.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,13 +76,27 @@ def _as_nullable(schema):
     return _null_type(schema)
 
 
+@contextmanager
+def _job_label(sc, description: str):
+    """Label every job started inside the block (guide §1.5) so the
+    UI/event log attributes the pipeline's wall to stages, not to
+    anonymous actions. Descriptions are thread-local: a pool thread
+    labels its own jobs."""
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
+
+
 def _collect_feature_vocab(dense: DataFrame, cap: int = 50_000) -> list:
     """Distinct feature codes for the pivot, with a hard cap.
 
     Reads the densified stage (whose code set is EXACTLY what the
     matrix must cover — events is a superset when truncation removed
-    codes); the scan is parquet-column-pruned to the single itemid
-    column, so the extra pass costs one small column, not the stage.
+    codes). In parquet mode the scan is column-pruned to the single
+    itemid column, so the extra pass costs one small column, not the
+    stage; a memory-mode pin is read whole.
 
     Spark's pivot needs an explicit value list, so a driver collect is
     unavoidable here — but it must be bounded: a pathological events
@@ -144,6 +159,17 @@ def run_pipeline(
     overlaps the timeseries boundary instead of serializing after it.
     All consumer futures are joined before run_pipeline returns; the
     returned leaf DataFrames are unchanged (still the lazy plans).
+
+    Leaves are handed off in the order summary (after the events
+    boundary), tensors, features: tensors needs no feature vocabulary,
+    so it runs while the driver collects the vocabulary features needs.
+    The dense timeseries boundary is built with one expansion task per
+    core (``sparkContext.defaultParallelism``), so it pins that many
+    partitions and each consumer below it runs one task per core. The
+    shuffle width would give it ``spark.sql.shuffle.partitions`` tiny
+    tasks (that setting is sized for the largest cluster), and AQE
+    left alone would coalesce the n_buckets× expansion by its packed
+    input bytes, down to one task.
     """
     if handoff not in ("parquet", "memory"):
         raise ValueError(f"run_pipeline: handoff must be 'parquet' or 'memory', got {handoff!r}")
@@ -172,11 +198,8 @@ def run_pipeline(
 
     def _boundary(df: DataFrame, name: str) -> DataFrame:
         """Multi-consumer stage boundary: parquet round-trip or an
-        in-memory materialization (computed once either way). Jobs are
-        labelled per stage (guide §1.5) so the UI/REST timeline
-        attributes the pipeline's wall to stages, not anonymous actions."""
-        sc.setJobDescription(f"pipeline: {name} boundary ({handoff})")
-        try:
+        in-memory materialization (computed once either way)."""
+        with _job_label(sc, f"pipeline: {name} boundary ({handoff})"):
             if handoff == "parquet":
                 write_parquet(df, os.path.join(out_dir, name))
                 # Re-read with the schema we just wrote (nullable-
@@ -192,8 +215,6 @@ def run_pipeline(
             from mimic_iv_data_pipeline_spark.engine import materialize
 
             return materialize(df)
-        finally:
-            sc.setJobDescription(None)
 
     def _leaf(df: DataFrame, name: str) -> DataFrame:
         """Terminal stage: written in parquet mode (asynchronously — the
@@ -202,22 +223,15 @@ def run_pipeline(
         if handoff == "parquet":
 
             def _write(d=df, n=name):
-                # descriptions are thread-local: label inside the pool thread
-                sc.setJobDescription(f"pipeline: {n} leaf write")
-                try:
+                with _job_label(sc, f"pipeline: {n} leaf write"):
                     write_parquet(d, os.path.join(out_dir, n))
-                finally:
-                    sc.setJobDescription(None)
 
             leaf_futures.append(pool.submit(_write))
         elif leaf_consumer is not None:
 
             def _consume(d=df, n=name):
-                sc.setJobDescription(f"pipeline: {n} leaf consume")
-                try:
+                with _job_label(sc, f"pipeline: {n} leaf consume"):
                     leaf_consumer(d, n)
-                finally:
-                    sc.setJobDescription(None)
 
             leaf_futures.append(pool.submit(_consume))
         return df
@@ -292,25 +306,21 @@ def _run_pipeline_body(
         bucket_hours=cfg.bucket_hours,
         anchor="last" if cfg.label == "readmission" else "first",
         impute=cfg.impute,
-        # widen the densify/inline expansion tail to the shuffle width
-        # the session was sized for — AQE would coalesce it by packed
-        # BYTES and serialize the n_buckets× expansion (see the
-        # operator comment; 1-task tail observed in the memory twin)
-        expand_parallelism=int(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        ),
+        # one task per core, not per shuffle partition (see docstring)
+        expand_parallelism=spark.sparkContext.defaultParallelism,
     )
     dense = _boundary(dense, "timeseries")
 
-    codes = cfg.feature_codes or _collect_feature_vocab(
-        dense, cap=cfg.max_feature_vocab
-    )
+    tensors = _leaf(dl_tensor_frame(dense, id_col=id_col), "tensors")
+
+    codes = cfg.feature_codes
+    if not codes:
+        with _job_label(spark.sparkContext, f"pipeline: vocab boundary ({handoff})"):
+            codes = _collect_feature_vocab(dense, cap=cfg.max_feature_vocab)
     features = _leaf(
         ml_feature_matrix(dense, id_col=id_col, feature_codes=codes, agg="mean"),
         "features",
     )
-
-    tensors = _leaf(dl_tensor_frame(dense, id_col=id_col), "tensors")
 
     for f in leaf_futures:
         f.result()  # propagate the first write failure, if any

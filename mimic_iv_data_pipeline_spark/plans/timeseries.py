@@ -15,7 +15,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mimic_iv_data_pipeline_spark.operators.temporal import (
-    bucketize_events,
     truncate_observation_window,
 )
 
@@ -45,29 +44,26 @@ def generate_timeseries(
        for that id — the per-visit ``reindex(range(los))`` (``:396-399``);
     4. imputation cascade ffill → bfill → mean/median → 0 (``:404-412``).
 
-    Everything shuffles on (id) or (id, code) — co-partitioned chains,
-    no driver loop, no pivot until presentation.
+    The cohort is broadcast and everything else shuffles on (id,
+    code) — no driver loop, no pivot until presentation.
     """
     # cohort's LOS under a private name: events from preproc_events
     # already carry los_hours, and an unrenamed join made the
-    # anchor='last' (readmission) path fail with AMBIGUOUS_REFERENCE
-    visits = cohort.select(
-        F.col(id_col), F.col(los_hours_col).alias("__ts_los")
+    # anchor='last' (readmission) path fail with AMBIGUOUS_REFERENCE.
+    # Broadcast explicitly: a pinned cohort keeps its pre-pin size
+    # estimate (engine.materialize), so the planner never broadcasts it
+    # and sort-merge-joined two pins, shuffling both on id. Streaming
+    # the events keeps their partition order, so each bucket's double
+    # sum is added in the order the sort-merge join gave it whenever
+    # each id's events sit in one partition — as in run_pipeline's
+    # events pin, whose preproc join streams the cohort.
+    visits = F.broadcast(
+        cohort.select(F.col(id_col), F.col(los_hours_col).alias("__ts_los"))
     )
     evs = events.join(visits, on=id_col, how="inner")
     evs = truncate_observation_window(
         evs, time_col, "__ts_los", include_hours, anchor=anchor
     ).drop("__ts_los")
-    binned = bucketize_events(
-        evs,
-        time_col=time_col,
-        bucket_hours=bucket_hours,
-        group_by=[id_col, code_col],
-        agg_exprs=[
-            F.avg(value_col).alias("value"),
-            F.count(F.lit(1)).alias("n_events"),
-        ],
-    )
     n_buckets = -(-include_hours // bucket_hours)  # ceil
     # Clip to the grid BEFORE building the code universe: truncation
     # keeps t <= include_hours, so an event in the final floored hour
@@ -76,80 +72,67 @@ def generate_timeseries(
     # code) universe, FABRICATING an all-zero series for a code never
     # observed in-window (the reference's reindex(range(los)) likewise
     # drops out-of-range rows without adding columns for them).
-    binned = binned.filter(F.col("bucket") < n_buckets)
-    # Densify + impute per (id, code-observed-for-id) in ARRAY form —
-    # one aggregate keyed by (id, code), then narrow array expressions
-    # (optimization r11, guide §2.4). The previous shape built the grid
-    # as distinct→explode→left join→window cascade: four exchanges
-    # (bucket agg, grid distinct, grid-side join shuffle, window sort
-    # on (id, code)) with the bucket agg subtree consumed twice. Here
-    # the bucket agg keeps its exchange and ONE further exchange packs
-    # each (id, code) series into a bucket→(value, n_events) map; the
-    # dense 0..n_buckets-1 grid, the ffill→bfill→default cascade and
-    # the explode back to long rows are all narrow (2 exchanges total,
-    # and the |ids·codes·buckets| dense relation never shuffles at
-    # all). Values are bit-identical to the join/window form: ffill /
-    # bfill only MOVE existing doubles (no arithmetic), and
-    # coalesce(ffill, bfill, default) ≡ the sequential cascade because
-    # post-ffill nulls exist only before the first observation, where
-    # bfill-of-original equals bfill-of-ffilled (parity pinned by
-    # tests/test_timeseries.py + the pipeline mode-parity suite).
+    # The tumbling bucket is the T3 floor(t / bucket_hours) of
+    # operators.temporal.bucketize_events.
+    evs = evs.withColumn(
+        "bucket", F.floor(F.col(time_col) / F.lit(bucket_hours)).cast("long")
+    ).filter(F.col("bucket") < n_buckets)
+    # Densify + impute per (id, code-observed-for-id): ONE aggregate
+    # keyed by (id, code) packs each series, then narrow expressions
+    # build the dense 0..n_buckets-1 grid, run the ffill→bfill→default
+    # cascade and explode back to long rows — the |ids·codes·buckets|
+    # dense relation never shuffles. Values are bit-identical to the
+    # reference's join/window cascade: ffill / bfill only MOVE existing
+    # doubles (no arithmetic), and coalesce(ffill, bfill, default) ≡ the
+    # sequential cascade because post-ffill nulls exist only before the
+    # first observation, where bfill-of-original equals
+    # bfill-of-ffilled (parity pinned by tests/test_timeseries.py + the
+    # pipeline mode-parity suite).
     if impute is not None and str(impute).lower() not in ("mean", "median"):
         # keep impute_cascade's validation contract on the array path
         raise ValueError(f"unknown impute strategy: {impute}")
-    # Wide codegen path (optimization r11, guide §2.3/§4.1): for the
-    # grids this pipeline actually runs (n_buckets = include_hours /
-    # bucket_hours ≤ 96), pack the series as 2·n_buckets conditional
-    # aggregates — max(when(bucket = b, ...)) per bucket — instead of
-    # the map_from_entries(collect_list(...)) object aggregate. bucket
-    # is unique per (id, code) after bucketize_events, so max() picks
-    # the single observed value and the aggregate is a plain
-    # whole-stage-codegen HashAggregate over primitive buffers (the
-    # map form is an ObjectHashAggregate, outside codegen, and every
-    # grid probe __m[b] is an O(|map|) interpreted scan). The
-    # ffill→bfill→default cascade collapses to per-bucket coalesce
+    # Wide codegen path, for the grids this pipeline actually runs
+    # (n_buckets = include_hours / bucket_hours ≤ 96): the per-bucket
+    # mean and count are 2·n_buckets conditional aggregates —
+    # avg(CASE WHEN bucket = b ...), count(CASE WHEN bucket = b ...) —
+    # computed straight from the events, so the plan has ONE
+    # hash-aggregate exchange (plus the expansion repartition below)
+    # and no separate (id, code, bucket) aggregate. It is a plain
+    # whole-stage-codegen HashAggregate over primitive buffers; each
+    # bucket's double sum sees the same rows, in the same per-map-
+    # partition partials and merge order, as a per-bucket avg would.
+    # The ffill→bfill→default cascade collapses to per-bucket coalesce
     # chains — coalesce(v_b, v_{b-1}..v_0, v_{b+1}.., 0) is exactly
     # "last observation before b, else first after b, else default" —
-    # so the whole densify+impute runs inside codegen with zero
-    # higher-order functions. Values are bit-identical: the fill only
-    # MOVES existing doubles, and both forms read the same bucket agg
-    # (interleaved A/B at sf0.1: 2.12 → 1.38 s noop, 1,823,160-row
-    # multiset parity; tests/test_timeseries.py pins wide == map).
-    # Beyond the width bound the map/HOF form below keeps unbounded
-    # grids working (coalesce chains grow O(n²) in codegen size).
-    # The wide expressions are built as parsed SQL strings, not Column
-    # algebra (optimization r12, guide §5): the Column form issued
-    # O(n_buckets²) py4j round-trips — ~1.5 s of single-threaded DRIVER
-    # time per call at 24 buckets, measured larger than the job's own
-    # executor wall — while one F.expr parse is milliseconds. The parsed
-    # form is plan-identical (DataFrame.sameSemantics == True vs the
-    # Column form; pinned by tests), so executors see the same codegen.
+    # with zero higher-order functions (tests/test_timeseries.py pins
+    # wide == map). Beyond the width bound the map/HOF form below keeps
+    # unbounded grids working (coalesce chains grow O(n²) in codegen
+    # size). The wide expressions are parsed SQL strings, not Column
+    # algebra: the Column form issued O(n_buckets²) py4j round-trips,
+    # ~1.5 s of driver time per call at 24 buckets, while one F.expr
+    # parse is milliseconds.
     if n_buckets <= 96:
         vcols = [
-            F.expr(f"max(CASE WHEN bucket = {b} THEN value END)").alias(f"__v{b}")
+            F.expr(f"avg(CASE WHEN bucket = {b} THEN `{value_col}` END)").alias(f"__v{b}")
             for b in range(n_buckets)
         ]
         ncols = [
-            F.expr(f"max(CASE WHEN bucket = {b} THEN n_events END)").alias(f"__n{b}")
+            F.expr(f"count(CASE WHEN bucket = {b} THEN 1 END)").alias(f"__n{b}")
             for b in range(n_buckets)
         ]
-        packed = binned.groupBy(id_col, code_col).agg(*vcols, *ncols)
-        # Optional explicit width for the expansion tail (optimization
-        # r12, guide §2.5): the packed relation is tiny in BYTES (48
-        # numeric columns per (id, code)) but the stage that consumes
-        # it does ~n_buckets× the work per byte — the coalesce-chain
-        # fill, the n_buckets-struct inline explode (24× the rows out)
-        # and the boundary write/serialize. AQE coalesces the packed
-        # exchange by its byte size, blind to that expansion: at
-        # pipeline scale factors the whole tail collapsed to 1-10
-        # tasks (a 1-task 2.5 s serial region observed in the memory
-        # twin). A caller that knows the regime passes the shuffle
-        # width it sized for the cluster (run_pipeline passes
-        # spark.sql.shuffle.partitions); the explicit user repartition
-        # is exempt from AQE coalescing, the moved bytes are ~1/24 of
-        # the stage's OUTPUT, and packed values are partitioning-
-        # independent (per-group max/conditional aggregates), so the
-        # result is unchanged (pinned by tests/test_r12_s3.py).
+        packed = evs.groupBy(id_col, code_col).agg(*vcols, *ncols)
+        # Optional explicit width for the expansion tail: the packed
+        # relation is tiny in BYTES but the stage that consumes it does
+        # ~n_buckets× the work per byte (coalesce-chain fill, inline
+        # explode, the caller's pin). AQE coalesces the packed exchange
+        # by its byte size, blind to that expansion, and once collapsed
+        # the tail to 1 task. run_pipeline passes the core count, so
+        # every core gets one expansion task and every consumer of its
+        # pinned result runs one task per core, not one per shuffle
+        # partition. The explicit repartition is exempt from AQE
+        # coalescing and runs AFTER the aggregate (a raw-row repartition
+        # before it would reorder the double sums), so values are
+        # unchanged (pinned by tests/test_r12_s3.py).
         if expand_parallelism:
             packed = packed.repartition(
                 int(expand_parallelism), F.col(id_col), F.col(code_col)
@@ -167,12 +150,15 @@ def generate_timeseries(
 
         struct_sql = ", ".join(
             f"named_struct('bucket', {b}, 'value', {_filled_sql(b)}, "
-            f"'n_events', CAST(coalesce(`__n{b}`, 0) AS BIGINT))"
+            f"'n_events', `__n{b}`)"
             for b in range(n_buckets)
         )
         return packed.select(
             id_col, code_col, F.expr(f"inline(array({struct_sql}))")
         )
+    binned = evs.groupBy(id_col, code_col, "bucket").agg(
+        F.avg(value_col).alias("value"), F.count(F.lit(1)).alias("n_events")
+    )
     entries = binned.groupBy(id_col, code_col).agg(
         F.map_from_entries(
             F.collect_list(

@@ -64,6 +64,16 @@ def test_fused_equals_sequential(fixture_df, mode, cutoff):
     assert _rows(seq) == _rows(fus)
 
 
+def test_fused_plan_aggregates_once(fixture_df):
+    """The grouping-sets aggregate has ONE consumer, so its Expand runs
+    once: the input is read by that aggregate and by the final probe,
+    not by a second copy of the aggregate."""
+    plan = majority_unit_clamp(
+        fixture_df, "itemid", "uom", "val"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Expand [") == 1, plan
+
+
 def test_fused_share_at_cutoff_keeps_group(fixture_df):
     """Boundary semantics: share == cutoff is NOT a majority win (the
     filter keeps every row, reference drop_wrong_uom's > comparison) —

@@ -271,6 +271,23 @@ def test_run_pipeline_handoff_modes_value_equal(spark, mimic_fixture, tmp_path):
     assert dt == mt
 
 
+def test_memory_dense_boundary_one_partition_per_core(spark, mimic_fixture, tmp_path):
+    """The pinned dense timeseries has one partition per core, so each
+    consumer below it (vocab, features, tensors) runs one task per core
+    rather than one per shuffle partition."""
+    from mimic_iv_data_pipeline_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    stages = run_pipeline(
+        spark, _pipeline_tables(mimic_fixture), str(tmp_path / "unused"),
+        PipelineConfig(include_hours=24, bucket_hours=2), handoff="memory",
+    )
+    n = stages["timeseries"].rdd.getNumPartitions()
+    assert n == spark.sparkContext.defaultParallelism
+
+
 def test_run_pipeline_joins_leaf_writes_on_exception(spark, mimic_fixture, tmp_path):
     """If a stage AFTER a leaf submit raises, run_pipeline must join the
     in-flight leaf writes before propagating, so caller cleanup can't

@@ -206,6 +206,45 @@ def test_interval_signal_matches_join_form(spark):
         assert out[(gid, t)] == want, (gid, t)
 
 
+def test_pinned_inputs_plan_shape(spark):
+    """run_pipeline hands generate_timeseries two pins derived from
+    joins, whose size estimates (the product of the join inputs) sit far
+    above the broadcast threshold. The wide path must still broadcast
+    the cohort and shuffle only for the (id, code) aggregate and the
+    explicit expansion repartition — no sort-merge join of the pins, no
+    separate per-bucket aggregate."""
+    import re
+
+    from mimic_iv_data_pipeline_spark.engine import materialize
+
+    threshold = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+
+    def pin_from_join(df):
+        pinned = materialize(df.join(df.select("stay_id").distinct(), "stay_id"))
+        est = pinned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert int(est) > threshold, "fixture too small to hide its size"
+        return pinned
+
+    events = pin_from_join(
+        spark.createDataFrame(
+            [(i % 500, 220045 + i % 3, float(i % 24), float(i)) for i in range(3000)],
+            "stay_id long, itemid long, event_time_from_admit double, valuenum double",
+        )
+    )
+    cohort = pin_from_join(
+        spark.createDataFrame([(i, 48.0) for i in range(1000)], "stay_id long, los_hours double")
+    )
+    out = generate_timeseries(
+        events, cohort, include_hours=24, bucket_hours=2, impute="mean",
+        expand_parallelism=4,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert len(re.findall(r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS", plan)) == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning.*REPARTITION_BY_NUM", plan)) == 1, plan
+    assert out.count() == 500 * 3 * 12
+
+
 def test_wide_pack_matches_map_fallback(spark, chart_events, ts_cohort):
     """Optimization r11: generate_timeseries has two implementations —
     the ≤96-bucket wide conditional-aggregate codegen path and the
