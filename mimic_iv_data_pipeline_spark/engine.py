@@ -11,7 +11,7 @@ Deployment seams (set at submit time, no code changes):
 ``spark.graft.materialize`` (default ``local``)
     How the package pins a relation. :func:`materialize` is the ONE
     pin: iterative operators (connected components, PageRank, LPA,
-    BFS, Bellman-Ford, k-means, funnel recurrences) cut lineage
+    BFS, Bellman-Ford, k-means) cut lineage
     between rounds with it, and operators and queries pin a relation
     they read more than once with it. Nothing in the package calls
     ``persist``/``cache`` (``tests/test_registry_consistency.py``

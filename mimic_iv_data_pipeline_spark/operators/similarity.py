@@ -335,6 +335,20 @@ def _train_quantizer(X, k: int, seed: int = 42, iters: int = 10, block: int = 81
     return C
 
 
+def _make_nearest_cells():
+    """The nearest-cell kernel, nested so executor closures pickle it
+    by value (see ``bpe._make_word_encoder``): each row's ``n`` nearest
+    cell ids (at most n_cells) by ``d² = |v|² + |c|² − 2v·c`` as one
+    matmul, ties to the lower cell id (stable argsort)."""
+    import numpy as np
+
+    def nearest(v, centers, c_sq, n: int):
+        d = (v * v).sum(axis=1)[:, None] + c_sq[None, :] - 2.0 * (v @ centers.T)
+        return np.argsort(d, axis=1, kind="stable")[:, :n]
+
+    return nearest
+
+
 def _assign_cells_pandas(
     df: DataFrame, id_col: str, vec_col: str, centers, n: int
 ) -> DataFrame:
@@ -347,9 +361,8 @@ def _assign_cells_pandas(
     the 1k–64k cells real IVF uses. This path has O(1) plan size at any
     ``n_cells``; the per-batch cost is a dense (batch × cells) matmul,
     exactly the shape BLAS is fastest at. Emits each vector's ``n``
-    nearest cell ids (n=1 for corpus vectors, n_probe for queries); ties
-    break on the lower cell id (stable argsort), matching the previous
-    struct-sort ordering.
+    nearest cell ids (``_make_nearest_cells``: ties break on the lower
+    cell id).
     """
     import numpy as np
     import pandas as pd
@@ -359,6 +372,7 @@ def _assign_cells_pandas(
     centers_np = np.asarray(centers, dtype=np.float64)
     c_sq = (centers_np**2).sum(axis=1)
     bc = df.sparkSession.sparkContext.broadcast((centers_np, c_sq))
+    nearest = _make_nearest_cells()
 
     narrow = df.select(id_col, vec_col)
     out_schema = StructType(
@@ -371,8 +385,7 @@ def _assign_cells_pandas(
             if not len(pdf):
                 continue
             v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d = (v * v).sum(axis=1)[:, None] + cc2[None, :] - 2.0 * (v @ cent.T)
-            order = np.argsort(d, axis=1, kind="stable")[:, :n]
+            order = nearest(v, cent, cc2, n)
             reps = order.shape[1]
             yield pd.DataFrame(
                 {
@@ -483,6 +496,19 @@ def _bucketed_topk_score_pandas(
     return scored
 
 
+def _probe_rows(q_rows: list, centers, n_probe: int) -> list[tuple]:
+    """``(id, vec, cell)`` per probed cell of collected ``(id, vec)``
+    rows: the driver twin of ``_assign_cells_pandas(queries, n_probe)``."""
+    import numpy as np
+
+    if not q_rows:
+        return []
+    cent = np.asarray(centers, dtype=np.float64)
+    v = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
+    order = _make_nearest_cells()(v, cent, (cent**2).sum(axis=1), n_probe)
+    return [(r[0], r[1], int(c)) for r, cells in zip(q_rows, order) for c in cells]
+
+
 def ivf_topk(
     queries: DataFrame,
     *,
@@ -525,6 +551,11 @@ def ivf_topk(
     corpus size while assignment stays exact over the full corpus; a
     Spark ML KMeans fit of the same 16-cell quantizer costs ~0.9 s of
     JVM job overhead alone at sf0.1 — more than this whole query.
+
+    With ``score="pandas"`` the query rows are collected for the
+    scorer's broadcast anyway (``max_query_rows`` bounds that collect),
+    so their ``n_probe`` cells are assigned on the driver, with the
+    kernel the corpus side's ``mapInPandas`` runs.
     """
     if centroids is not None:
         import numpy as np
@@ -573,23 +604,12 @@ def ivf_topk(
             # hash-shuffle the whole scored relation for zero dedup effect
         )
     else:
-        # Vectorized scoring (r10): the expression path evaluates its
-        # aggregate/zip_with cosine INTERPRETED per candidate row — at
-        # the 1M-doc mining probe that is 31M × 64-element lambda
-        # evaluations and ~70% of the wall-clock. Here the probed-query
-        # matrices ship per CELL in one broadcast (the same driver
-        # bound the old broadcast-hash join already paid), and each
-        # corpus Arrow batch scores every cell-mate query as one numpy
-        # matmul (see _bucketed_topk_score_pandas — shared with the
-        # LSH path). Identical results to the expression path;
-        # measured 3.9–11.8× at the 1M-doc dial (PERF r10).
-        q_rows = (
-            assign_cells(queries, n_probe)
-            .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), "cell")
-            .limit(max_query_rows * n_probe + 1)
-            .collect()
-        )
-        if len(q_rows) > max_query_rows * n_probe:
+        # The expression path evaluates its cosine interpreted per
+        # candidate row; here the probed-query matrices ship per cell in
+        # one broadcast and each corpus Arrow batch scores its cell-mate
+        # queries as one numpy matmul (_bucketed_topk_score_pandas).
+        q_rows = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
+        if len(q_rows) > max_query_rows:
             raise ValueError(
                 f"ivf_topk broadcasts the probed-query matrices; got > "
                 f"{max_query_rows} query rows — raise max_query_rows or "
@@ -598,7 +618,7 @@ def ivf_topk(
         scored = _bucketed_topk_score_pandas(
             assign_cells(corpus, 1).select(id_col, vec_col, "cell"),
             "cell",
-            q_rows,
+            _probe_rows(q_rows, centers, n_probe),
             id_col,
             vec_col,
             k,

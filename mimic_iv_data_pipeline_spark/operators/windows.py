@@ -15,8 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from mimic_iv_data_pipeline_spark.engine import materialize
-
 
 def _cols(x: str | list[str]) -> list[str]:
     return [x] if isinstance(x, str) else list(x)
@@ -175,49 +173,59 @@ def sessionize(
     return df.withColumn(session_col, F.sum(is_break).over(wsum))
 
 
-def _funnel_frontiers(
+def _funnel_reach(
     events: DataFrame,
     stages: list[str],
     user_col: str,
     ts_col: str,
     type_col: str,
-) -> list[DataFrame]:
-    """Shared funnel recurrence: per stage i, the (user, reach-time)
-    frontier of users who completed stages 0..i in order, with the
-    earliest qualifying stage-i time.
+) -> DataFrame:
+    """Shared funnel recurrence as one lazy relation: one row per user
+    with a funnel-typed event, ``(__u, __stages)``; ``__stages[i]`` is
+    ``(stage_idx, stage, reach_ts, __d)``, the user's earliest
+    qualifying stage-i time and whether it reached stage i.
 
-    Each frontier is localCheckpointed (same discipline as
-    pagerank/connected_components): step i+1 joins a materialized
-    |users|-row relation instead of re-deriving the whole chain, so
-    each stage's type-filtered event pass runs exactly once at any
-    scale, whatever number of actions the caller consumes the
-    frontiers through.
+    ``r0 = min(ts WHERE type = s0)`` and, for i ≥ 1,
+    ``r_i = min(ts WHERE type = s_i AND ts >= r_{i-1})``: unbounded
+    windows chained over ONE hash partitioning on the user, which the
+    closing ``groupBy(user)`` reuses. A null ts gives no reach time and
+    ``>=`` keeps the same-timestamp boundary. As in the oracles' CTE
+    chain, stage 0 counts every user with a stage-0 event, even one
+    whose times are all null, and a null user reaches stage 0 only.
+
+    Scale shape: that of :func:`transition_matrix` — every funnel-typed
+    event is shuffled once by user and the window buffers spill; no
+    per-user state is broadcast, pinned or collected. The shuffle costs
+    more bytes than per-stage joins against pinned frontiers did (q153
+    at sf0.02: 0.25 MB against 0.09 MB) and saves their eager jobs.
     """
     if not stages:
         raise ValueError("stages must be non-empty")
     if len(set(stages)) != len(stages):
         raise ValueError("stages must be distinct")
+    w = Window.partitionBy("__u")
     ev = events.select(
         F.col(user_col).alias("__u"),
         F.col(ts_col).alias("__ts"),
         F.col(type_col).alias("__t"),
-    )
-    frontier = materialize(
-        ev.filter(F.col("__t") == stages[0]).groupBy("__u").agg(
-            F.min("__ts").alias("__reach")
+    ).filter(F.col("__t").isin(stages))
+    for i, s in enumerate(stages):
+        hit = F.col("__t") == s
+        if i:
+            hit = hit & (F.col("__ts") >= F.col(f"__r{i - 1}")) & F.col("__u").isNotNull()
+        ev = ev.withColumn(f"__r{i}", F.min(F.when(hit, F.col("__ts"))).over(w))
+    reach = [F.max(f"__r{i}") for i in range(len(stages))]
+    reached = [F.max(F.col("__t") == stages[0])] + [r.isNotNull() for r in reach[1:]]
+    per_stage = [
+        F.struct(
+            F.lit(i + 1).cast("long").alias("stage_idx"),
+            F.lit(s).alias("stage"),
+            reach[i].alias("reach_ts"),
+            reached[i].alias("__d"),
         )
-    )
-    frontiers = [frontier]
-    for s in stages[1:]:
-        frontier = materialize(
-            ev.filter(F.col("__t") == s)
-            .join(F.broadcast(frontier), "__u")
-            .filter(F.col("__ts") >= F.col("__reach"))
-            .groupBy("__u")
-            .agg(F.min("__ts").alias("__reach"))
-        )
-        frontiers.append(frontier)
-    return frontiers
+        for i, s in enumerate(stages)
+    ]
+    return ev.groupBy("__u").agg(F.array(*per_stage).alias("__stages"))
 
 
 def funnel_conversion(
@@ -238,58 +246,39 @@ def funnel_conversion(
     one with clicks both before and after must — only the sequential
     earliest-qualifying-time recurrence gets both right.
 
-    Scale shape: one conditional aggregate per stage over the
-    events relation, each chained through an equi-join on the
-    |users|-row frontier (broadcastable — the frontier only shrinks).
-    The events scan is filtered to one stage type per step, so
-    predicate pushdown prunes each pass; no windows over the raw event
-    log, no collect. Output is len(stages) rows.
+    Scale shape: the per-user reach relation of ``_funnel_reach`` (one
+    hash shuffle of the funnel-typed events by user, chained windows)
+    and one global count aggregate over it; the ``len(stages)`` output
+    rows are an ``inline`` of that aggregate. Lazy: calling this starts
+    no job.
 
     Returns ``(stage_idx, stage, users, pct_of_first, pct_of_prev)``
     with 6dp-rounded ratios; the first stage's pct_of_prev is 1.0.
     """
-    from functools import reduce
-
     from mimic_iv_data_pipeline_spark.functions.rounding import dround
 
-    spark = events.sparkSession
-    # One action for ALL stage counts (the driver should do almost no
-    # data work): the previous shape paid
-    # len(stages) separate count() jobs after the len(stages) eager
-    # checkpoint builds; unioning the per-frontier count aggregates
-    # into one relation collapses the counts to ONE job over the
-    # already-materialized frontiers. The materialized recurrence
-    # stays — it guarantees each stage's type-filtered event pass runs
-    # exactly once at ANY scale (a fully lazy union was also measured:
-    # AQE's runtime stage reuse deduplicated only 2 of the repeated
-    # frontier subtrees, so the lazy form re-derives part of the chain
-    # — parity locally, a regression risk at scale). Interleaved
-    # min-of-6 at sf0.1: fused-counts 0.726 s vs stepped 0.780 s.
-    # Counts are deterministic — values identical to the stepped form
-    # (pinned by tests/test_r12_s3.py).
-    fronts = _funnel_frontiers(events, stages, user_col, ts_col, type_col)
-    count_parts = [
-        f.groupBy()
-        .agg(F.count(F.lit(1)).alias("__users"))
-        .select(F.lit(i).alias("__i"), "__users")
-        for i, f in enumerate(fronts)
-    ]
-    crows = reduce(DataFrame.unionAll, count_parts).collect()
-    counts = [r["__users"] for r in sorted(crows, key=lambda r: r["__i"])]
-    rows = [
-        (
-            i + 1,
-            s,
-            counts[i],
-            counts[i] / counts[0] if counts[0] else 0.0,
-            (counts[i] / counts[i - 1] if counts[i - 1] else 0.0) if i else 1.0,
-        )
-        for i, s in enumerate(stages)
-    ]
-    out = spark.createDataFrame(
-        rows, "stage_idx long, stage string, users long, __pf double, __pp double"
+    reach = _funnel_reach(events, stages, user_col, ts_col, type_col)
+    c = [F.col(f"__c{i}") for i in range(len(stages))]
+
+    def ratio(num: Column, den: Column) -> Column:
+        return F.when(den != 0, num / den).otherwise(F.lit(0.0))
+
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(i + 1).cast("long").alias("stage_idx"),
+                F.lit(s).alias("stage"),
+                c[i].alias("users"),
+                ratio(c[i], c[0]).alias("__pf"),
+                (ratio(c[i], c[i - 1]) if i else F.lit(1.0)).alias("__pp"),
+            )
+            for i, s in enumerate(stages)
+        ]
     )
-    return out.select(
+    counts = reach.agg(
+        *[F.count_if(F.col("__stages")[i]["__d"]).alias(f"__c{i}") for i in range(len(stages))]
+    )
+    return counts.select(F.inline(rows)).select(
         "stage_idx",
         "stage",
         "users",
@@ -311,22 +300,18 @@ def funnel_times(
     for time-to-convert analyses (median lag between stages, cohort
     comparisons).
 
-    Same recurrence, same scale shape (shared ``_funnel_frontiers``):
-    one type-filtered aggregate per stage chained through broadcast
-    frontiers. Output ``(user_col, stage_idx, stage, reach_ts)``;
-    users appear once per stage they completed.
+    Same recurrence, same scale shape (shared ``_funnel_reach``): an
+    ``inline`` of each user's reached stages, still hash-partitioned
+    by user, so a per-user window over the output adds no exchange.
+    Output ``(user_col, stage_idx, stage, reach_ts)``; users appear
+    once per stage they completed.
     """
-    fronts = _funnel_frontiers(events, stages, user_col, ts_col, type_col)
-    out = None
-    for i, (s, f) in enumerate(zip(stages, fronts)):
-        part = f.select(
-            F.col("__u").alias(user_col),
-            F.lit(i + 1).cast("long").alias("stage_idx"),
-            F.lit(s).alias("stage"),
-            F.col("__reach").alias("reach_ts"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    return (
+        _funnel_reach(events, stages, user_col, ts_col, type_col)
+        .select(F.col("__u").alias(user_col), F.inline("__stages"))
+        .filter(F.col("__d"))
+        .drop("__d")
+    )
 
 
 def transition_matrix(

@@ -551,8 +551,9 @@ def q149_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q153_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered 4-stage funnel over events
-    (operators/windows.py:funnel_conversion — one filtered aggregate
-    per stage chained through a broadcast frontier join)."""
+    (operators/windows.py:funnel_conversion — chained per-user windows
+    over one hash shuffle of the funnel events, then one count
+    aggregate; no pin, collect or driver-built rows)."""
     from mimic_iv_data_pipeline_spark.operators.windows import funnel_conversion
 
     ev = _t(spark, sf_dir, "events")
@@ -889,8 +890,8 @@ def q163_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-transition lag statistics between consecutive funnel stages
 # (signup→view→click→purchase): count, mean and exact p50/p90 of the
 # seconds between each user's earliest-qualifying stage times. Built on
-# the same frontier recurrence as q153 — the oracle rebuilds the
-# frontiers as chained CTEs and the lag percentiles with quantile_cont.
+# the same reach recurrence as q153 — the oracle rebuilds it as chained
+# CTEs and the lag percentiles with quantile_cont.
 @register(
     "q164_funnel_lag",
     oracle="""
@@ -930,31 +931,23 @@ def q163_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q164_funnel_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-convert stats per funnel transition
-    (operators/windows.py:funnel_times — shared frontier recurrence;
-    lags via per-user equi-joins of consecutive frontiers)."""
+    (operators/windows.py:funnel_times — the shared reach relation;
+    each stage's lag is ``lag(reach_ts)`` over the user's stages, a
+    window on the relation's own user partitioning, so no self-join)."""
     from mimic_iv_data_pipeline_spark.operators.windows import funnel_times
 
     ev = _t(spark, sf_dir, "events")
-    stages = ["signup", "view", "click", "purchase"]
-    ft = funnel_times(ev, stages)
-    names = {1: "signup->view", 2: "view->click", 3: "click->purchase"}
-    out = None
-    for i in (1, 2, 3):
-        a = ft.filter(F.col("stage_idx") == i).select(
-            "user_id", F.col("reach_ts").alias("__ta")
-        )
-        b = ft.filter(F.col("stage_idx") == i + 1).select(
-            "user_id", F.col("reach_ts").alias("__tb")
-        )
-        lag = a.join(b, "user_id").select(
-            F.lit(i).cast("long").alias("transition_idx"),
-            F.lit(names[i]).alias("transition"),
-            (
-                (F.unix_micros("__tb") - F.unix_micros("__ta")) / F.lit(1e6)
-            ).alias("lag_s"),
-        )
-        out = lag if out is None else out.unionByName(lag)
-    return out.groupBy("transition_idx", "transition").agg(
+    ft = funnel_times(ev, ["signup", "view", "click", "purchase"])
+    w = Window.partitionBy("user_id").orderBy("stage_idx")
+    lags = ft.select(
+        (F.col("stage_idx") - 1).alias("transition_idx"),
+        F.concat_ws("->", F.lag("stage").over(w), "stage").alias("transition"),
+        (
+            (F.unix_micros("reach_ts") - F.unix_micros(F.lag("reach_ts").over(w)))
+            / F.lit(1e6)
+        ).alias("lag_s"),
+    ).filter(F.col("transition_idx") > 0)
+    return lags.groupBy("transition_idx", "transition").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         dround(F.avg("lag_s"), 6).alias("mean_s"),
         dround(F.expr("percentile(lag_s, 0.5)"), 6).alias("p50_s"),

@@ -149,3 +149,40 @@ def test_ann_lsh_topk_pandas_score_matches_expr(spark):
     a = sorted(map(tuple, ann_lsh_topk(queries, score="expr", **kw).collect()))
     b = sorted(map(tuple, ann_lsh_topk(queries, score="pandas", **kw).collect()))
     assert a == b and len(a) > 0
+
+
+def test_driver_query_cells_match_worker_assignment(spark):
+    """ivf_topk assigns query cells on the driver with the worker's
+    kernel: the cells must equal _assign_cells_pandas' cells, ties
+    going to the lower cell id, and n_probe > n_cells probing all."""
+    from mimic_iv_data_pipeline_spark.operators.similarity import (
+        _assign_cells_pandas,
+        _probe_rows,
+    )
+
+    cents = [[0.0, 0.0], [2.0, 0.0], [0.0, 2.0]]
+    # (1, 0) ties cells 0 and 1 exactly; (1, 1) ties all three
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.9, 0.1]),
+            (3, [-1.0, 3.0]), (4, [1.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for n in (1, 2, 5):
+        worker = sorted(
+            (r["vec_id"], r["cell"])
+            for r in _assign_cells_pandas(df, "vec_id", "embedding", cents, n).collect()
+        )
+        driver = sorted((i, c) for i, _, c in _probe_rows(rows, cents, n))
+        assert driver == worker
+    nearest = {i: c for i, _, c in _probe_rows(rows, cents, 1)}
+    assert nearest[0] == 0 and nearest[4] == 0
+    assert [c for i, _, c in _probe_rows(rows, cents, 5) if i == 4] == [0, 1, 2]
+
+
+def test_ivf_pandas_query_guard_counts_queries(spark):
+    """max_query_rows bounds the collected query side in queries."""
+    emb = _emb_fixture(spark)
+    cents = [[float((c * 5 + d) % 7) - 3.0 for d in range(8)] for c in range(4)]
+    kw = dict(corpus=emb, n_cells=4, n_probe=6, k=3, centroids=cents, score="pandas")
+    queries = emb.filter(F.col("vec_id") < 8)
+    assert ivf_topk(queries, max_query_rows=8, **kw).count() > 0
+    with pytest.raises(ValueError, match="query rows"):
+        ivf_topk(queries, max_query_rows=7, **kw)
