@@ -36,8 +36,8 @@ Deployment seams (set at submit time, no code changes):
     secondary fan-outs from it: the value-bucketed prefix sums
     (``global_prefix_sums``) use it as the bucket count, and
     ``ewma``/``holt_linear`` use 4× it as the series hash-bucket
-    count — both therefore scale automatically when the deployer
-    raises it.
+    count, with no per-call override — both therefore scale
+    automatically when the deployer raises it.
 
 ``spark.sql.autoBroadcastJoinThreshold`` (harness: 64 MB)
     Every dimension/mapping/codebook relation in this repo is below

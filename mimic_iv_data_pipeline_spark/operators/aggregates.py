@@ -1044,15 +1044,16 @@ def ks_statistic(
 
     Scale shape: each side collapses to its (value, count) relation in
     one aggregate; the union of distinct values forms the evaluation
-    grid, per-side CDFs are DISTRIBUTED cumulative sums over that grid
-    (``sampling.global_prefix_sum`` — no single-partition window;
-    right-continuous: F(v) = #{x ≤ v}/n), and D is a 1-row max over
+    grid, both CDFs are DISTRIBUTED cumulative sums over that grid in
+    one pass (``sampling.global_prefix_sums`` — one set of quantile
+    bounds, no single-partition window; right-continuous:
+    F(v) = #{x ≤ v}/n), and D is a 1-row max over
     the grid. The grid is |distinct values| rows — for continuous data
     at extreme scale, pre-round values at the call site (the statistic
     degrades gracefully with binning). Returns ONE row:
     (n_a, n_b, d_stat).
     """
-    from mimic_iv_data_pipeline_spark.operators.sampling import global_prefix_sum
+    from mimic_iv_data_pipeline_spark.operators.sampling import global_prefix_sums
 
     a = df_a.groupBy(F.col(value_col).alias("v")).agg(
         F.count(F.lit(1)).alias("ca")
@@ -1069,8 +1070,9 @@ def ks_statistic(
         )
         .transform(materialize)
     )
-    cum = global_prefix_sum(grid, [F.col("v").asc()], F.col("ca"), "fa", bucket_col="v")
-    cum = global_prefix_sum(cum, [F.col("v").asc()], F.col("cb"), "fb", bucket_col="v")
+    cum = global_prefix_sums(
+        grid, [F.col("v").asc()], {"fa": F.col("ca"), "fb": F.col("cb")}, bucket_col="v"
+    )
     tots = grid.agg(
         F.sum("ca").cast("double").alias("__na"),
         F.sum("cb").cast("double").alias("__nb"),
@@ -1189,20 +1191,19 @@ def lift_gains(
     the remainder rows land; this floor rule is pinned on both sides).
 
     Scale shape: one distributed global rank
-    (:func:`~.sampling.global_prefix_sum` — no single-partition
+    (:func:`~.sampling.global_prefix_sums` — no single-partition
     window over the facts), one B-row bucket aggregate, cumulative
     sums over the B-row relation only. One ``count()`` action for n.
     """
-    from mimic_iv_data_pipeline_spark.operators.sampling import global_prefix_sum
+    from mimic_iv_data_pipeline_spark.operators.sampling import global_prefix_sums
 
     n = df.count()
     if n == 0:
         raise ValueError("lift_gains: empty input")
-    ranked = global_prefix_sum(
+    ranked = global_prefix_sums(
         df,
         [F.col(score_col).desc(), F.col(tie_break).asc()],
-        F.lit(1),
-        "__rank",
+        {"__rank": F.lit(1)},
         bucket_col=score_col,
         bucket_desc=True,
     )
@@ -1864,7 +1865,7 @@ def smd_balance(
     the previous shared ``count(*)`` counted NULL-covariate rows in
     the denominator while the sums skipped them, silently deflating
     that covariate's mean and variance (exactly the anova_oneway
-    complete-case failure mode, pinned in tests/test_r11_wave.py).
+    complete-case failure mode, pinned in tests/test_aggregates.py).
     NULL groups are excluded.
 
     Scale shape: ONE hash aggregate over the facts computing every

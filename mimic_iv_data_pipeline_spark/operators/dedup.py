@@ -849,7 +849,7 @@ def semantic_dedup(
       per-dimension fold forgoes BLAS to keep the hash contract, and is
       still vectorized across each cell's pair block. Bit-equality with
       ``"join"`` is pinned by the expr==pandas parity suite
-      (tests/test_r11_wave.py) and the q134 fixed-centroid hash twin
+      (tests/test_dedup.py) and the q134 fixed-centroid hash twin
       runs through it.
     """
     import numpy as np

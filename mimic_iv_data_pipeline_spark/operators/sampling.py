@@ -642,30 +642,6 @@ def oversample_minority(
     )
 
 
-def global_prefix_sum(
-    df: DataFrame,
-    order_exprs: list,
-    value_col: Column,
-    out_col: str,
-    bucket_col: str | None = None,
-    bucket_desc: bool = False,
-) -> DataFrame:
-    """Exact global running sum of ``value_col`` over the TOTAL order
-    ``order_exprs`` — distributed, with no single-partition window.
-
-    Thin wrapper over :func:`global_prefix_sums` (see there for the
-    recipe and the deterministic-bucketing correctness contract).
-    Output keeps all input columns + ``out_col`` (long).
-    """
-    return global_prefix_sums(
-        df,
-        order_exprs,
-        {out_col: value_col},
-        bucket_col=bucket_col,
-        bucket_desc=bucket_desc,
-    )
-
-
 def global_prefix_sums(
     df: DataFrame,
     order_exprs: list,
@@ -673,9 +649,13 @@ def global_prefix_sums(
     bucket_col: str | None = None,
     bucket_desc: bool = False,
 ) -> DataFrame:
-    """Multi-column :func:`global_prefix_sum`: every entry of
-    ``values`` gets its exact global running sum over the same total
-    order in ONE hash shuffle + ONE window pass (all sums share the
+    """Exact global running sums over the TOTAL order ``order_exprs`` —
+    distributed, with no single-partition window. Each entry
+    ``name: value`` of ``values`` adds a long column ``name``: the sum
+    of ``value`` over every row up to and including this one in that
+    order. Output keeps all input columns.
+
+    All sums ride ONE hash shuffle + ONE window pass (they share the
     window spec, so Spark evaluates them in a single frame walk), with
     the cross-bucket offsets from a groupBy(bucket) to a ≤n_buckets-row
     relation, a prefix window over that tiny relation, and a broadcast
@@ -705,8 +685,9 @@ def global_prefix_sums(
     helper and a negative value would corrupt max-based offsets.
 
     This is the shared engine under :func:`select_token_budget`,
-    :func:`temporal_split`, ``lift_gains`` (global rank = prefix sum
-    of 1) and ``roc_pr_curve`` (cum-TP and cum-FP ride one shuffle).
+    :func:`temporal_split`, :func:`build_corpus_index`, ``lift_gains``
+    (global rank = prefix sum of 1), ``ks_statistic`` (both CDFs ride
+    one shuffle) and ``roc_pr_curve`` (cum-TP and cum-FP likewise).
     """
     if not values:
         raise ValueError("global_prefix_sums: values must be non-empty")
@@ -819,7 +800,7 @@ def select_token_budget(
     inherently sequential and order-fragile; the prefix rule is the
     deterministic, engine-portable contract.)
 
-    Scale shape — delegates to :func:`global_prefix_sum`'s
+    Scale shape — delegates to :func:`global_prefix_sums`'s
     deterministic VALUE-bucketed distributed prefix sum (quantile
     bounds of ``score_col`` collected once and embedded as literals,
     so a row's bucket is a pure function of its value; per-bucket
@@ -836,11 +817,10 @@ def select_token_budget(
     """
     if budget < 0:
         raise ValueError("select_token_budget: budget must be >= 0")
-    cum = global_prefix_sum(
+    cum = global_prefix_sums(
         df,
         [F.col(score_col).desc(), F.col(id_col).asc()],
-        F.col(tokens_col),
-        cum_col,
+        {cum_col: F.col(tokens_col)},
         bucket_col=score_col,
         bucket_desc=True,
     )
@@ -990,17 +970,16 @@ def temporal_split(
     boundary itself matters. Ties at a boundary timestamp are
     resolved by the id tie-break, deterministically.
 
-    Scale shape: one :func:`global_prefix_sum` of 1s (distributed
+    Scale shape: one :func:`global_prefix_sums` of 1s (distributed
     rank — no single-partition window) + one count.
     """
     f_train, f_val = fractions
     if not (0 <= f_train and 0 <= f_val and f_train + f_val <= 1):
         raise ValueError("temporal_split: fractions must be >= 0 and sum <= 1")
-    ranked = global_prefix_sum(
+    ranked = global_prefix_sums(
         df,
         [F.col(ts_col).asc(), F.col(id_col).asc()],
-        F.lit(1),
-        "__rank",
+        {"__rank": F.lit(1)},
         bucket_col=ts_col,
     )
     n = df.count()
@@ -1235,7 +1214,7 @@ def build_corpus_index(
     prefix-sum engine's approxQuantile job + bucket window + broadcast
     join (measured 2.2 s of q220's 3.4 s on a 5k-doc corpus); larger
     corpora use a distributed rank with no single-partition window —
-    :func:`global_prefix_sum` for numeric/timestamp ids, the
+    :func:`global_prefix_sums` for numeric/timestamp ids, the
     build_vocab 2-char-prefix-bucket rank for STRING ids (a prefix is
     contiguous in the binary-collation total order, so per-bucket ranks
     + prefix-summed bucket offsets compose to the exact global rank;
@@ -1259,7 +1238,7 @@ def build_corpus_index(
     and the offsets job must observe ONE bucketing. Output values are
     identical on every path (bucket boundaries never affect the global
     rank of a contiguous bucketing — parity-pinned in
-    tests/test_r11_wave.py), so which path fires is purely a physical
+    tests/test_sampling.py), so which path fires is purely a physical
     choice. ``range_buckets`` defaults to ~n/(window_threshold/4)
     clamped to [64, 4096].
 
@@ -1330,7 +1309,7 @@ def build_corpus_index(
             # nondeterministic to Catalyst) — is the bucket key.
             # Boundaries never affect the global rank of a contiguous
             # bucketing, so output values are identical to the other
-            # paths (parity-pinned, tests/test_r11_wave.py).
+            # paths (parity-pinned, tests/test_sampling.py).
             n_b = (
                 range_buckets
                 if range_buckets is not None
@@ -1360,8 +1339,8 @@ def build_corpus_index(
                 (F.col("__off") + F.col("__r") - 1).alias("__i"), "__doc"
             )
     else:
-        indexed = global_prefix_sum(
-            docs, [F.col("__doc")], F.lit(1), "__cum", bucket_col="__doc"
+        indexed = global_prefix_sums(
+            docs, [F.col("__doc")], {"__cum": F.lit(1)}, bucket_col="__doc"
         ).select((F.col("__cum") - 1).alias("__i"), "__doc")
     return indexed.withColumn("__n", F.lit(n))
 
@@ -1393,7 +1372,7 @@ def negative_sample(
 
     1. the distinct corpus gets a dense 0..N-1 index
        (:func:`build_corpus_index` — window rank for dimension-sized
-       corpora, the distributed :func:`global_prefix_sum` recipe past
+       corpora, the distributed :func:`global_prefix_sums` recipe past
        1M docs); the index carries its size as a constant column;
     2. each query emits ``oversample`` (default ``2k+2``) draw rows
        (narrow explode), each hashed to a target index — ONE equi-join
@@ -1476,8 +1455,6 @@ def hard_negative_sample(
     depth: int = 64,
     query_col: str = "query_id",
     doc_col: str = "doc_id",
-    ann: str = "exact",
-    **ann_kwargs,
 ) -> DataFrame:
     """ANN-mined hard negatives: per query, the ``k`` most-similar
     corpus docs that are NOT known positives (the retrieve-then-
@@ -1486,13 +1463,9 @@ def hard_negative_sample(
     ones from the retriever itself).
 
     ``queries``/``corpus``: ``(vec_id, embedding)`` relations (the
-    repo's ANN shape). Retrieval is top-``depth`` by ``ann``:
-    ``"exact"`` (default) is brute-force cosine via
-    :func:`~.similarity.cosine_topk_pandas`; ``"ivf"`` switches to the
-    cell-pruned :func:`~.similarity.ivf_topk` for corpus scale
-    (``ann_kwargs``: n_cells, n_probe, centroids, ...) — both share
-    the output contract, so the exclusion and ranking below are
-    retriever-agnostic. Positives drop via a left-anti join on
+    repo's ANN shape). The retriever is the exact brute-force cosine
+    top-``depth`` of :func:`~.similarity.cosine_topk_pandas`, so the
+    output is oracle-replayable. Positives drop via a left-anti join on
     (query, doc), and a per-query window over the ≤depth survivors
     ranks the first ``k``.
 
@@ -1503,43 +1476,19 @@ def hard_negative_sample(
     the retriever's k, linear). Self-matches are already excluded by
     the retriever.
 
-    CHOOSING ``n_probe`` FOR ``ann="ivf"`` (measured, 1M docs / 256
-    cells / depth 16 — PERF.md r10+r11 dials): on cluster-structured
-    corpora (256 synthetic blobs + 10% uniform tail, queries from the
-    same distribution) recall vs exact is 0.958 / 0.979 / 0.994 /
-    1.000 at n_probe 8/16/32/64, so **n_probe=16-32 (6-13% of cells)
-    mines 0.98-0.99 of exact's hard negatives at 50-65x less
-    wall-clock**. Uniform random vectors are the measured worst case
-    (0.511 / 0.632 / 0.767 / 0.895 on the same dial) — reserve
-    n_probe=64 (90% of exact at 8.4x) for embeddings with no cluster
-    structure at the quantizer's cell count.
-
     Returns ``(query_col, doc_col, cos_sim, neg_rank)`` with
     ``neg_rank`` 0-based by descending similarity, ties broken by doc
     id ascending — deterministic on any layout.
     """
     from pyspark.sql.window import Window
 
-    from mimic_iv_data_pipeline_spark.operators.similarity import (
-        cosine_topk_pandas,
-        ivf_topk,
-    )
+    from mimic_iv_data_pipeline_spark.operators.similarity import cosine_topk_pandas
 
     if k < 1:
         raise ValueError("hard_negative_sample: k must be >= 1")
     if depth < k:
         raise ValueError(f"hard_negative_sample: depth {depth} < k {k}")
-    # ann picks the retriever; both share the (query_id, neighbor_id,
-    # cos_sim) output contract, so everything downstream is identical.
-    # "exact" = brute-force cosine (the oracle-replayable default);
-    # "ivf" = cell-pruned approximate search for corpus scale —
-    # ann_kwargs pass through (n_cells, n_probe, centroids, ...).
-    if ann == "exact":
-        nn = cosine_topk_pandas(queries, corpus=corpus, k=depth, **ann_kwargs)
-    elif ann == "ivf":
-        nn = ivf_topk(queries, corpus=corpus, k=depth, **ann_kwargs)
-    else:
-        raise ValueError(f"hard_negative_sample: unknown ann={ann!r}")
+    nn = cosine_topk_pandas(queries, corpus=corpus, k=depth)
     pos = positives.select(
         F.col(query_col).alias("query_id"), F.col(doc_col).alias("neighbor_id")
     ).distinct()

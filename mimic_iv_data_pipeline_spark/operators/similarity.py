@@ -424,7 +424,7 @@ def _bucketed_topk_score_pandas(
     ``query_id_type`` / ``neighbor_id_type`` (the query-side and
     corpus-side ``id_col`` DataTypes) are cast back after the map, so
     int/smallint ids do not silently widen relative to the expression
-    path (ADVICE r10).
+    path.
     """
     import numpy as np
     import pandas as pd
@@ -496,6 +496,14 @@ def _bucketed_topk_score_pandas(
     return scored
 
 
+def _integral_ids(queries: DataFrame, corpus: DataFrame, id_col: str) -> bool:
+    """True if both sides' ``id_col`` is integral: the vectorized scorer
+    carries ids through a ``long`` Arrow schema, so any other id type
+    takes the expression path."""
+    integral = ("tinyint", "smallint", "int", "bigint")
+    return all(df.schema[id_col].dataType.simpleString() in integral for df in (queries, corpus))
+
+
 def _probe_rows(q_rows: list, centers, n_probe: int) -> list[tuple]:
     """``(id, vec, cell)`` per probed cell of collected ``(id, vec)``
     rows: the driver twin of ``_assign_cells_pandas(queries, n_probe)``."""
@@ -522,7 +530,6 @@ def ivf_topk(
     max_iter: int = 10,
     train_sample: int = 262_144,
     centroids=None,
-    score: str = "auto",
     max_query_rows: int = 100_000,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means coarse quantizer.
@@ -552,10 +559,15 @@ def ivf_topk(
     Spark ML KMeans fit of the same 16-cell quantizer costs ~0.9 s of
     JVM job overhead alone at sf0.1 — more than this whole query.
 
-    With ``score="pandas"`` the query rows are collected for the
-    scorer's broadcast anyway (``max_query_rows`` bounds that collect),
-    so their ``n_probe`` cells are assigned on the driver, with the
-    kernel the corpus side's ``mapInPandas`` runs.
+    The id type picks the scorer. With integral ids on both sides the
+    query rows are collected (``max_query_rows`` bounds that collect),
+    their ``n_probe`` cells are assigned on the driver with the kernel
+    the corpus side's ``mapInPandas`` runs, and each corpus Arrow batch
+    scores its cell-mate queries as one numpy matmul
+    (:func:`_bucketed_topk_score_pandas`). Any other id type takes the
+    type-generic expression path: a broadcast equi-join on cell id with
+    an interpreted cosine per candidate row. Both give the same top-k
+    (the floor-round absorbs the op-order ulp).
     """
     if centroids is not None:
         import numpy as np
@@ -570,20 +582,7 @@ def ivf_topk(
     def assign_cells(df: DataFrame, n: int) -> DataFrame:
         return _assign_cells_pandas(df, id_col, vec_col, centers, n)
 
-    def _integral(df: DataFrame) -> bool:
-        t = df.schema[id_col].dataType.simpleString()
-        return t in ("tinyint", "smallint", "int", "bigint")
-
-    if score == "auto":
-        # vectorized scoring carries ids through a `long` schema;
-        # non-integral ids keep the type-generic expression path.
-        # Results are identical either way (the floor-round absorbs
-        # the op-order ulp; asserted in tests/test_similarity.py).
-        score = "pandas" if _integral(queries) and _integral(corpus) else "expr"
-    if score not in ("pandas", "expr"):
-        raise ValueError(f"ivf_topk: unknown score={score!r}")
-
-    if score == "expr":
+    if not _integral_ids(queries, corpus, id_col):
         c_assigned = assign_cells(corpus, 1).select(
             F.col(id_col).alias("neighbor_id"), as_double_vec(F.col(vec_col)).alias("cv"), "cell"
         )
@@ -604,10 +603,6 @@ def ivf_topk(
             # hash-shuffle the whole scored relation for zero dedup effect
         )
     else:
-        # The expression path evaluates its cosine interpreted per
-        # candidate row; here the probed-query matrices ship per cell in
-        # one broadcast and each corpus Arrow batch scores its cell-mate
-        # queries as one numpy matmul (_bucketed_topk_score_pandas).
         q_rows = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
         if len(q_rows) > max_query_rows:
             raise ValueError(
@@ -646,19 +641,18 @@ def ann_lsh_topk(
     bits: int = 8,
     k: int = 5,
     plane_hash: str = "xxhash64",
-    score: str = "auto",
     max_query_rows: int = 100_000,
 ) -> DataFrame:
     """Approximate top-k: bucket by hyperplane signature, score only
     within the query's bucket. Recall is tunable via ``bits`` (fewer
     bits → bigger buckets → higher recall, more compute).
 
-    ``score`` mirrors :func:`ivf_topk`'s r10 seam: ``"pandas"``
-    (default via ``"auto"`` for integral ids) scores each corpus Arrow
-    batch's bucket-mates as one numpy matmul via
-    :func:`_bucketed_topk_score_pandas` — identical results to the
-    interpreted-lambda expression join, which remains for non-integral
-    ids (``"expr"``)."""
+    The id type picks the scorer, as in :func:`ivf_topk`: integral ids
+    on both sides collect the bucketed queries (``max_query_rows``
+    bounds that collect) and score each corpus Arrow batch's
+    bucket-mates as one numpy matmul
+    (:func:`_bucketed_topk_score_pandas`); any other id type takes the
+    type-generic expression join. Both give the same top-k."""
     sig = lambda df, idc, vc: df.select(  # noqa: E731
         F.col(id_col).alias(idc),
         as_double_vec(F.col(vec_col)).alias(vc),
@@ -667,16 +661,7 @@ def ann_lsh_topk(
         ).alias("bucket"),
     )
 
-    def _integral(df: DataFrame) -> bool:
-        t = df.schema[id_col].dataType.simpleString()
-        return t in ("tinyint", "smallint", "int", "bigint")
-
-    if score == "auto":
-        score = "pandas" if _integral(queries) and _integral(corpus) else "expr"
-    if score not in ("pandas", "expr"):
-        raise ValueError(f"ann_lsh_topk: unknown score={score!r}")
-
-    if score == "expr":
+    if not _integral_ids(queries, corpus, id_col):
         q = sig(queries, "query_id", "qv")
         c = sig(corpus, "neighbor_id", "cv")
         scored = (

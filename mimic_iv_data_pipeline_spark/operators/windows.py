@@ -395,7 +395,6 @@ def ewma(
     alpha: float,
     tie_break: str | None = None,
     out_col: str = "ewma",
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Per-key exponentially-weighted moving average with the exact
     recursion ``e_t = alpha*x_t + (1-alpha)*e_{t-1}`` (``e_0 = x_0``)
@@ -430,26 +429,23 @@ def ewma(
     "UDFs are the slow path" exception where built-ins genuinely
     cannot express the semantics.
 
-    Grouping is by HASH BUCKET of the key (``n_buckets``, default
-    4×shuffle-partitions), not by the key itself: per-group
+    Grouping is by HASH BUCKET of the key (4 ×
+    ``spark.sql.shuffle.partitions`` buckets), not by the key itself: per-group
     ``applyInPandas`` overhead (~100µs of pandas-frame setup per
     call) dominates when keys number in the hundreds of thousands
     with short series — bucketing amortizes it to one Arrow frame per
     bucket, and the single loop resets state at key boundaries, so
     semantics are identical (all rows of a key hash to one bucket by
-    construction). Memory bound: one BUCKET (≈|rows|/n_buckets plus
+    construction). Memory bound: one BUCKET (≈|rows|/buckets plus
     every row of any single key) must fit in one Python worker —
-    raise ``n_buckets`` with data size; re-key a single epic global
-    series by (key, epoch) and chain epoch boundaries if needed.
+    raise the shuffle partitions with data size; re-key a single epic
+    global series by (key, epoch) and chain epoch boundaries if needed.
     """
     parts = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     sort_cols = parts + [ts_col] + ([tie_break] if tie_break else [])
     a = float(alpha)
     one_minus_a = 1.0 - a
-    if n_buckets is None:
-        n_buckets = 4 * int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    n_buckets = 4 * int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.DoubleType())]
     )
@@ -556,7 +552,6 @@ def holt_linear(
     alpha: float,
     beta: float,
     tie_break: str | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Per-key Holt double exponential smoothing (level + trend) with
     the exact recursion (public: Holt 1957; ``statsmodels``
@@ -584,8 +579,8 @@ def holt_linear(
     key boundaries; replaces the r5 Catalyst ``aggregate`` fold,
     which was interpreted AND O(n²) per key from immutable-array
     append copies). One BUCKET must fit in one Python worker's
-    memory; raise ``n_buckets`` with data size, re-key epic series by
-    (key, epoch) and chain.
+    memory; raise the shuffle partitions with data size, re-key epic
+    series by (key, epoch) and chain.
 
     Output adds ``level``, ``trend``, and ``forecast`` (= level +
     trend, the one-step-ahead prediction) to the carried columns.
@@ -594,10 +589,7 @@ def holt_linear(
     sort_cols = parts + [ts_col] + ([tie_break] if tie_break else [])
     a, b = float(alpha), float(beta)
     one_minus_a, one_minus_b = 1.0 - a, 1.0 - b
-    if n_buckets is None:
-        n_buckets = 4 * int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    n_buckets = 4 * int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     out_schema = T.StructType(
         list(df.schema.fields)
         + [

@@ -129,7 +129,7 @@ def run_pipeline(
     (``handoff="parquet"``) writes each stage under ``out_dir``
     (cohort/, events/, summary/, timeseries/, features/, tensors/).
 
-    ``handoff`` picks the stage-boundary strategy (r10 verdict item 6):
+    ``handoff`` picks the stage-boundary strategy:
 
     * ``"parquet"`` (default) — write + re-read every stage, mirroring
       the reference's csv.gz file handoffs (mainPipeline.ipynb →
@@ -177,21 +177,27 @@ def run_pipeline(
     id_col = "stay_id" if cfg.use_icu else "hadm_id"
     anchor = "intime" if cfg.use_icu else "admittime"
 
-    # Leaf writes overlap (guide §2.6: actions are only sequential
+    # Leaf handoffs overlap (guide §2.6: actions are only sequential
     # because the driver calls them sequentially): summary depends only
-    # on the events boundary, so its write back-fills executors while
+    # on the events boundary, so its leaf job back-fills executors while
     # the timeseries boundary computes; features and tensors (both
     # consumers of the dense boundary) overlap each other. Two in-flight
     # jobs is enough to fill stage tails without fighting for cores.
     # Same writes, same artifacts, same return values — only the
-    # driver-side sequencing changes.
+    # driver-side sequencing changes. ``sink(df, name)`` takes every
+    # leaf: a stage-file write in parquet mode, ``leaf_consumer`` (if
+    # given) in memory mode.
     from concurrent.futures import ThreadPoolExecutor
 
-    pool: ThreadPoolExecutor | None = (
-        ThreadPoolExecutor(max_workers=2)
-        if handoff == "parquet" or leaf_consumer is not None
-        else None
-    )
+    if handoff == "parquet":
+        verb = "write"
+
+        def sink(df: DataFrame, name: str) -> None:
+            write_parquet(df, os.path.join(out_dir, name))
+
+    else:
+        verb, sink = "consume", leaf_consumer
+    pool = ThreadPoolExecutor(max_workers=2) if sink is not None else None
     leaf_futures: list = []
 
     sc = spark.sparkContext
@@ -217,120 +223,102 @@ def run_pipeline(
             return materialize(df)
 
     def _leaf(df: DataFrame, name: str) -> DataFrame:
-        """Terminal stage: written in parquet mode (asynchronously — the
-        futures are joined before run_pipeline returns), lazy in memory
-        mode (handed to ``leaf_consumer`` on the same pool if given)."""
-        if handoff == "parquet":
+        """Terminal stage: handed to ``sink`` on the pool (the futures
+        are joined before run_pipeline returns); returned lazy."""
+        if sink is not None:
 
-            def _write(d=df, n=name):
-                with _job_label(sc, f"pipeline: {n} leaf write"):
-                    write_parquet(d, os.path.join(out_dir, n))
+            def _run(d=df, n=name):
+                with _job_label(sc, f"pipeline: {n} leaf {verb}"):
+                    sink(d, n)
 
-            leaf_futures.append(pool.submit(_write))
-        elif leaf_consumer is not None:
-
-            def _consume(d=df, n=name):
-                with _job_label(sc, f"pipeline: {n} leaf consume"):
-                    leaf_consumer(d, n)
-
-            leaf_futures.append(pool.submit(_consume))
+            leaf_futures.append(pool.submit(_run))
         return df
 
-    # The whole body runs under try/finally (ADVICE r11): if any stage
-    # after a _leaf submit raises (e.g. the feature-vocab cap), the
-    # in-flight leaf writes must be joined before the exception reaches
-    # the caller — otherwise caller cleanup (an rmtree of out_dir)
-    # races the still-running writes and masks the original error with
-    # confusing secondary failures. cancel_futures drops queued-but-
-    # unstarted writes; shutdown(wait=True) joins the running ones.
+    # The whole body runs under try/finally: if any stage after a _leaf
+    # submit raises (e.g. the feature-vocab cap), the in-flight leaf
+    # jobs must be joined before the exception reaches the caller —
+    # otherwise caller cleanup (an rmtree of out_dir) races the
+    # still-running writes and masks the original error with confusing
+    # secondary failures. cancel_futures drops queued-but-unstarted
+    # jobs; shutdown(wait=True) joins the running ones.
     try:
-        return _run_pipeline_body(
-            spark, tables, out_dir, cfg, handoff, id_col, anchor,
-            _boundary, _leaf, leaf_futures,
+        cohort = extract_cohort(
+            tables["visits"],
+            tables["patients"],
+            tables.get("admissions"),
+            use_icu=cfg.use_icu,
+            label=cfg.label,
+            gap_days=cfg.gap_days,
+            los_threshold_hours=cfg.los_threshold_hours,
+            min_age=cfg.min_age,
         )
+        cohort = _boundary(cohort, "cohort")
+
+        raw_events = tables["events"]
+        if (
+            not cfg.use_icu
+            and "hadm_id" in raw_events.columns
+            and "subject_id" in raw_events.columns
+            and "admissions" in tables
+        ):
+            # hosp mode: labevents carry ~30% null hadm_id in real MIMIC —
+            # preproc_events' inner join on the id would silently drop them.
+            # The reference imputes hadm_id FIRST (labs_preprocess_util);
+            # mirror that here (rows that stay null after imputation are
+            # dropped by the join, exactly as the reference drops them).
+            from mimic_iv_data_pipeline_spark.plans.features import impute_hadm_ids
+
+            raw_events = impute_hadm_ids(raw_events, tables["admissions"])
+        events = preproc_events(raw_events, cohort, id_col, "charttime", anchor)
+        events = clean_events(
+            events, uom_cutoff=cfg.uom_cutoff, outlier_pcts=cfg.outlier_pcts
+        )
+        if cfg.feature_codes:
+            from mimic_iv_data_pipeline_spark.plans.features import features_selection
+
+            allow = spark.createDataFrame([(c,) for c in cfg.feature_codes], "itemid long")
+            events = features_selection(events, allow, "itemid")
+        events = _boundary(events, "events")
+
+        summary = _leaf(generate_summary(events, id_col, "itemid", "valuenum"), "summary")
+
+        dense = generate_timeseries(
+            events.withColumnRenamed("event_time_from_admit", "t"),
+            cohort,
+            id_col=id_col,
+            time_col="t",
+            include_hours=cfg.include_hours,
+            bucket_hours=cfg.bucket_hours,
+            anchor="last" if cfg.label == "readmission" else "first",
+            impute=cfg.impute,
+            # one task per core, not per shuffle partition (see docstring)
+            expand_parallelism=spark.sparkContext.defaultParallelism,
+        )
+        dense = _boundary(dense, "timeseries")
+
+        tensors = _leaf(dl_tensor_frame(dense, id_col=id_col), "tensors")
+
+        codes = cfg.feature_codes
+        if not codes:
+            with _job_label(sc, f"pipeline: vocab boundary ({handoff})"):
+                codes = _collect_feature_vocab(dense, cap=cfg.max_feature_vocab)
+        features = _leaf(
+            ml_feature_matrix(dense, id_col=id_col, feature_codes=codes, agg="mean"),
+            "features",
+        )
+
+        for f in leaf_futures:
+            f.result()  # propagate the first leaf failure, if any
+
+        return {
+            "cohort": cohort,
+            "cohort_summary": cohort_summary(cohort),
+            "events": events,
+            "summary": summary,
+            "timeseries": dense,
+            "features": features,
+            "tensors": tensors,
+        }
     finally:
         if pool is not None:
             pool.shutdown(wait=True, cancel_futures=True)
-
-
-def _run_pipeline_body(
-    spark, tables, out_dir, cfg, handoff, id_col, anchor,
-    _boundary, _leaf, leaf_futures,
-) -> dict[str, DataFrame]:
-    cohort = extract_cohort(
-        tables["visits"],
-        tables["patients"],
-        tables.get("admissions"),
-        use_icu=cfg.use_icu,
-        label=cfg.label,
-        gap_days=cfg.gap_days,
-        los_threshold_hours=cfg.los_threshold_hours,
-        min_age=cfg.min_age,
-    )
-    cohort = _boundary(cohort, "cohort")
-
-    raw_events = tables["events"]
-    if (
-        not cfg.use_icu
-        and "hadm_id" in raw_events.columns
-        and "subject_id" in raw_events.columns
-        and "admissions" in tables
-    ):
-        # hosp mode: labevents carry ~30% null hadm_id in real MIMIC —
-        # preproc_events' inner join on the id would silently drop them.
-        # The reference imputes hadm_id FIRST (labs_preprocess_util);
-        # mirror that here (rows that stay null after imputation are
-        # dropped by the join, exactly as the reference drops them).
-        from mimic_iv_data_pipeline_spark.plans.features import impute_hadm_ids
-
-        raw_events = impute_hadm_ids(raw_events, tables["admissions"])
-    events = preproc_events(raw_events, cohort, id_col, "charttime", anchor)
-    events = clean_events(
-        events, uom_cutoff=cfg.uom_cutoff, outlier_pcts=cfg.outlier_pcts
-    )
-    if cfg.feature_codes:
-        from mimic_iv_data_pipeline_spark.plans.features import features_selection
-
-        allow = spark.createDataFrame([(c,) for c in cfg.feature_codes], "itemid long")
-        events = features_selection(events, allow, "itemid")
-    events = _boundary(events, "events")
-
-    summary = _leaf(generate_summary(events, id_col, "itemid", "valuenum"), "summary")
-
-    dense = generate_timeseries(
-        events.withColumnRenamed("event_time_from_admit", "t"),
-        cohort,
-        id_col=id_col,
-        time_col="t",
-        include_hours=cfg.include_hours,
-        bucket_hours=cfg.bucket_hours,
-        anchor="last" if cfg.label == "readmission" else "first",
-        impute=cfg.impute,
-        # one task per core, not per shuffle partition (see docstring)
-        expand_parallelism=spark.sparkContext.defaultParallelism,
-    )
-    dense = _boundary(dense, "timeseries")
-
-    tensors = _leaf(dl_tensor_frame(dense, id_col=id_col), "tensors")
-
-    codes = cfg.feature_codes
-    if not codes:
-        with _job_label(spark.sparkContext, f"pipeline: vocab boundary ({handoff})"):
-            codes = _collect_feature_vocab(dense, cap=cfg.max_feature_vocab)
-    features = _leaf(
-        ml_feature_matrix(dense, id_col=id_col, feature_codes=codes, agg="mean"),
-        "features",
-    )
-
-    for f in leaf_futures:
-        f.result()  # propagate the first write failure, if any
-
-    return {
-        "cohort": cohort,
-        "cohort_summary": cohort_summary(cohort),
-        "events": events,
-        "summary": summary,
-        "timeseries": dense,
-        "features": features,
-        "tensors": tensors,
-    }

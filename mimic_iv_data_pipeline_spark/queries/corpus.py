@@ -587,7 +587,7 @@ def q220_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K=4 uniform negatives per query over the documents corpus,
     positives derived deterministically from events
     (operators/sampling.py:negative_sample — dense corpus index via
-    global_prefix_sum, one draw-resolution equi-join, no cross join)."""
+    global_prefix_sums, one draw-resolution equi-join, no cross join)."""
     from mimic_iv_data_pipeline_spark.operators.sampling import negative_sample
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

@@ -1725,7 +1725,7 @@ def q160_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q161_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """80/10/10 chronological split of the event log
     (operators/sampling.py:temporal_split — distributed global rank via
-    global_prefix_sum, no single-partition window)."""
+    global_prefix_sums, no single-partition window)."""
     from mimic_iv_data_pipeline_spark.operators.sampling import temporal_split
     from mimic_iv_data_pipeline_spark.sources.readers import read_events
 

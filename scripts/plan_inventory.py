@@ -15,6 +15,13 @@ behavior:
 * ``smj`` / ``bhj``   — sort-merge vs broadcast-hash join strategy mix
 * ``cartesian``       — must be 0 (also pinned by
                         tests/test_plans_properties.py)
+* ``build_jobs``      — Spark jobs started while the query function
+                        BUILDS its DataFrame (eager pins, collects,
+                        quantile bounds), counted with a job group after
+                        every testdata table's schema is loaded once.
+                        This is work the returned plan cannot show, so
+                        moving it into the plan reads as drift above
+                        while this count falls.
 
 Usage:
     python scripts/plan_inventory.py --out PLANS_r8.json
@@ -24,7 +31,8 @@ Usage:
 Compare flags queries whose ``exchanges``, ``python_nodes``, or
 ``cartesian`` counts INCREASED vs the baseline (more shuffles or a new
 Python boundary is plan drift a refactor should have to justify);
-decreases and join-mix changes are reported informationally.
+decreases, join-mix and ``build_jobs`` changes are reported
+informationally (a baseline without ``build_jobs`` reports none).
 
 Counting caveat: these are TEXTUAL occurrences in
 ``executedPlan().toString()``, which prints shared subtrees once per
@@ -41,6 +49,7 @@ import json
 import os
 import re
 import sys
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -61,16 +70,28 @@ DRIFT_KEYS = ("exchanges", "python_nodes", "cartesian")
 def inventory(sf_dir: str) -> dict[str, dict[str, int]]:
     from mimic_iv_data_pipeline_spark import get_spark
     from mimic_iv_data_pipeline_spark.queries import all_queries
+    from mimic_iv_data_pipeline_spark.sources.readers import TESTDATA_TABLES, load_table
 
     spark = get_spark("plan_inventory")
+    sc = spark.sparkContext
+    for table in TESTDATA_TABLES:  # schema inference jobs, once, outside any query
+        load_table(spark, sf_dir, table)
     out: dict[str, dict[str, int]] = {}
     for name, fn in all_queries().items():
+        group = f"plan-inventory-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, f"build {name}")
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+            df = fn(spark, sf_dir)
+            build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # a query that cannot even plan is drift
             out[name] = {"error": 1, "msg": str(exc)[:200]}
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         out[name] = {k: len(rx.findall(plan)) for k, rx in COUNTERS.items()}
+        out[name]["build_jobs"] = build_jobs
     return out
 
 
@@ -93,6 +114,11 @@ def compare(base: dict, cur: dict) -> tuple[list[str], list[str]]:
         for k in COUNTERS:
             if k not in DRIFT_KEYS and row.get(k, 0) != b.get(k, 0):
                 info.append(f"{name}: {k} {b.get(k, 0)} -> {row.get(k, 0)}")
+        if "build_jobs" not in b:
+            if row.get("build_jobs"):
+                info.append(f"{name}: build_jobs {row['build_jobs']} (no baseline count)")
+        elif row.get("build_jobs") != b["build_jobs"]:
+            info.append(f"{name}: build_jobs {b['build_jobs']} -> {row.get('build_jobs')}")
     for name in sorted(set(base) - set(cur)):
         info.append(f"REMOVED query {name}")
     return drift, info
@@ -109,7 +135,7 @@ def main() -> None:
     with open(args.out, "w") as f:
         json.dump(inv, f, indent=1, sort_keys=True)
     n_err = sum(1 for r in inv.values() if r.get("error"))
-    tot = {k: sum(r.get(k, 0) for r in inv.values()) for k in COUNTERS}
+    tot = {k: sum(r.get(k, 0) for r in inv.values()) for k in (*COUNTERS, "build_jobs")}
     print(f"{len(inv)} queries inventoried -> {args.out}; totals {tot}; errors {n_err}")
 
     if args.compare:

@@ -30,3 +30,24 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def jobs_started(spark):
+    """``jobs_started(build)``: ids of the Spark jobs that ``build()``
+    starts, read from a job group on the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def started(build) -> list[int]:
+        group = f"plan-guard-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs started while building a plan")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return started

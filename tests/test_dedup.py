@@ -1,6 +1,7 @@
 """Property tests for the dedup family: prefix-filtered Jaccard equals
 the naive quadratic join; MinHash-LSH candidates recover high-Jaccard
-pairs; SimHash invariance."""
+pairs; SimHash invariance; semantic_dedup's pandas kernel equals its
+join reference."""
 
 from __future__ import annotations
 
@@ -269,3 +270,117 @@ def test_connected_components_random_graphs(spark):
             ).collect()
         }
         assert got_lc == expected, f"trial {trial} (local_contract)"
+
+
+# --- semantic_dedup pairs="pandas": the per-cell Gram kernel is
+# BIT-identical to the expression-path self-join ("join", the reference),
+# because per-dimension sequential accumulation reproduces the expression
+# fold's addition order exactly -------------------------------------------------
+
+
+def _sem_rows():
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    centers = rng.normal(size=(4, 16))
+    rows = []
+    for i in range(120):
+        v = centers[i % 4] + rng.normal(scale=0.05, size=16)
+        rows.append((i, [float(x) for x in v]))
+        if i % 3 == 0:  # planted near-dup
+            rows.append(
+                (1000 + i, [float(x) for x in v + rng.normal(scale=0.001, size=16)])
+            )
+    # edge rows: zero vector (try_divide NULL), NULL element (never
+    # prunes), true-NaN element (always prunes — Spark orders NaN above
+    # any threshold), duplicate id (flags OR per id)
+    rows.append((5000, [0.0] * 16))
+    rows.append((5001, [None] + [1.0] * 15))
+    nanv = [float("nan")] + [float(x) for x in centers[0]][1:]
+    rows.append((5002, nanv))
+    rows.append((5003, [float(x) for x in centers[1]]))
+    rows.append((5003, [float(x) for x in centers[2]]))
+    # inf-norm overflow: squares of 1e200 overflow to inf -> cosine
+    # inf/inf = NaN, the one REACHABLE NaN (literal NaN data elements
+    # are laundered to NULL by the assignment pass's Arrow round-trip);
+    # two of them so a smaller-id partner exists in whatever cell the
+    # all-NaN distance row lands in
+    rows.append((5004, [1e200 * float(x) for x in centers[0]]))
+    rows.append((5005, [1e200 * float(x) for x in centers[3]]))
+    cent = [[float(x) + 0.01 for x in centers[i]] for i in range(4)]
+    return rows, cent
+
+
+@pytest.mark.parametrize("thr", [0.95, 0.999999])
+def test_semantic_dedup_pandas_matches_join(spark, thr):
+    from mimic_iv_data_pipeline_spark.operators.dedup import semantic_dedup
+
+    rows, cent = _sem_rows()
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(threshold=thr, centroids=cent)
+    a = semantic_dedup(emb, "vec_id", "embedding", pairs="join", **kw)
+    b = semantic_dedup(emb, "vec_id", "embedding", pairs="pandas", **kw)
+    ra = a.orderBy("id", "cell").collect()
+    rb = b.orderBy("id", "cell").collect()
+    assert ra == rb
+    assert sum(r["pruned"] for r in ra) > 0  # the fixture actually prunes
+    pr = {r["id"]: r["pruned"] for r in rb}
+    assert pr[5000] is False and pr[5001] is False  # zero-norm / NULL element
+    # the NaN-element row is ALSO never pruned — on BOTH paths: the
+    # assignment pass's Arrow round-trip coerces NaN array elements to
+    # NULL before either pair strategy runs, so it degrades to the
+    # NULL-element case (the kernel's isnan branch still guards the
+    # reachable NaN cosines: inf-norm overflow products)
+    assert pr[5002] is False
+    # the inf-overflow rows: NaN cosine vs their smaller-id cellmates
+    # prunes them (NaN >= thr is true under Spark's NaN ordering; the
+    # kernel's isnan branch must agree — it does, on both paths)
+    assert pr[5004] is True and pr[5005] is True
+
+
+def test_semantic_dedup_pandas_exact_boundary_threshold(spark):
+    """Ulp pin: threshold set to a REALIZED pair cosine — >= must keep
+    the pair pruned on both paths; any summation-order deviation in the
+    kernel would flip this bit."""
+    from pyspark.sql import functions as F
+
+    from mimic_iv_data_pipeline_spark.operators.dedup import semantic_dedup
+    from mimic_iv_data_pipeline_spark.operators.similarity import (
+        as_double_vec,
+        cosine,
+    )
+
+    rows, cent = _sem_rows()
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    thr = (
+        emb.alias("a")
+        .crossJoin(emb.alias("b"))
+        .where((F.col("a.vec_id") == 0) & (F.col("b.vec_id") == 1000))
+        .select(
+            cosine(
+                as_double_vec(F.col("a.embedding")),
+                as_double_vec(F.col("b.embedding")),
+            ).alias("c")
+        )
+        .collect()[0]["c"]
+    )
+    a = semantic_dedup(
+        emb, "vec_id", "embedding", threshold=thr, centroids=cent, pairs="join"
+    ).orderBy("id", "cell").collect()
+    b = semantic_dedup(
+        emb, "vec_id", "embedding", threshold=thr, centroids=cent, pairs="pandas"
+    ).orderBy("id", "cell").collect()
+    assert a == b
+    assert {r["id"]: r["pruned"] for r in b}[1000] is True  # inclusive >=
+
+
+def test_semantic_dedup_auto_routes_pandas(spark):
+    from mimic_iv_data_pipeline_spark.operators.dedup import semantic_dedup
+
+    rows, cent = _sem_rows()
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = semantic_dedup(emb, "vec_id", "embedding", centroids=cent)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan  # auto -> the per-cell kernel
+    with pytest.raises(ValueError, match="pairs"):
+        semantic_dedup(emb, "vec_id", "embedding", centroids=cent, pairs="nope")

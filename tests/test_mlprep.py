@@ -3,6 +3,8 @@ oracle-checked via q117/q118.)"""
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +12,7 @@ from mimic_iv_data_pipeline_spark.operators.mlprep import (
     default_hash_weights,
     hashed_linear_score,
     mask_layout,
+    target_encode_kfold,
 )
 
 
@@ -99,3 +102,30 @@ def test_hashed_score_separates_planted_classes(spark):
     # doc 1: 3 of 7 features (unigrams+bigrams) hit the liked bucket →
     # sigmoid(15/7) ≈ 0.895
     assert got[1] > 0.85
+
+
+def test_target_encoding_leakage_safe(spark):
+    data = [(i, "ab"[i % 2], float(i % 3 == 0)) for i in range(200)]
+    df = spark.createDataFrame(data, "id long, cat string, y double")
+    out = target_encode_kfold(
+        df, key_col="id", cat_col="cat", label_col="y", k=4, smoothing=5.0,
+    ).collect()
+    # Python reference from the rows' own fold assignments.
+    folds = {r["id"]: r["fold"] for r in out}
+    s_cf, c_cf, s_f, c_f = (
+        defaultdict(float), defaultdict(int), defaultdict(float), defaultdict(int)
+    )
+    for i, cat, y in data:
+        f = folds[i]
+        s_cf[(cat, f)] += y
+        c_cf[(cat, f)] += 1
+        s_f[f] += y
+        c_f[f] += 1
+    s_g, c_g = sum(s_f.values()), sum(c_f.values())
+    for r in out:
+        cat, f = r["cat"], r["fold"]
+        s_c = sum(v for (c0, _), v in s_cf.items() if c0 == cat)
+        c_c = sum(v for (c0, _), v in c_cf.items() if c0 == cat)
+        prior = (s_g - s_f[f]) / (c_g - c_f[f])
+        want = ((s_c - s_cf[(cat, f)]) + 5.0 * prior) / ((c_c - c_cf[(cat, f)]) + 5.0)
+        assert r["te"] == pytest.approx(want, abs=1e-9)

@@ -5,8 +5,6 @@ reuse.
 
 from __future__ import annotations
 
-import uuid
-
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -123,20 +121,7 @@ def test_funnel_matches_stepped_recurrence(spark, rows, stages):
     assert got == want
 
 
-def _jobs_started(spark, build) -> list[int]:
-    """Ids of the Spark jobs that ``build()`` starts."""
-    sc = spark.sparkContext
-    group = f"plan-guard-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "jobs started while building a plan")
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_funnel_builds_start_no_job(spark, sf_smoke):
+def test_funnel_builds_start_no_job(spark, sf_smoke, jobs_started):
     """Building the funnel relations is lazy: no pin, count collect or
     driver-built rows run at call time."""
     from mimic_iv_data_pipeline_spark.operators.windows import (
@@ -148,11 +133,11 @@ def test_funnel_builds_start_no_job(spark, sf_smoke):
 
     ev = _funnel_fixture(spark)
     stages = ["signup", "view", "click", "purchase"]
-    assert _jobs_started(spark, lambda: funnel_conversion(ev, stages)) == []
-    assert _jobs_started(spark, lambda: funnel_times(ev, stages)) == []
+    assert jobs_started(lambda: funnel_conversion(ev, stages)) == []
+    assert jobs_started(lambda: funnel_times(ev, stages)) == []
     load_table(spark, sf_smoke, "events")  # the schema inference job, once
     q164 = all_queries()["q164_funnel_lag"]
-    assert _jobs_started(spark, lambda: q164(spark, sf_smoke)) == []
+    assert jobs_started(lambda: q164(spark, sf_smoke)) == []
 
 
 def test_funnel_conversion_plan_is_one_user_shuffle(spark, sf_smoke):

@@ -209,44 +209,6 @@ def test_poisson_counts_have_unit_meanish():
     assert var == pytest.approx(1.0, abs=0.06)
 
 
-# ------------------------------------------- global prefix sum determinism
-def test_global_prefix_sum_is_permutation_at_scale(spark):
-    """Regression for the r5 layout-drift bug: ranks over a few million
-    rows must be EXACTLY the permutation 1..n. The old
-    repartitionByRange + spark_partition_id recipe computed partition
-    offsets in a separate action whose sampled range bounds could
-    differ from the final pass, duplicating/overshooting ranks near
-    boundaries (first seen as an 11th decile in the 20M lift probe).
-    Value-bucketing on collected quantile bounds makes the bucket a
-    pure row function, so every branch agrees by construction."""
-    from mimic_iv_data_pipeline_spark.operators.sampling import global_prefix_sum
-
-    df = spark.range(3_000_000).select(
-        F.col("id").alias("rid"),
-        (F.pmod(F.xxhash64("id"), F.lit(100_000)) / 1e3).alias("score"),
-    )
-    ranked = global_prefix_sum(
-        df,
-        [F.col("score").desc(), F.col("rid").asc()],
-        F.lit(1),
-        "rnk",
-        bucket_col="score",
-        bucket_desc=True,
-    )
-    agg = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("rnk").alias("d"),
-        F.min("rnk").alias("mn"),
-        F.max("rnk").alias("mx"),
-    ).first()
-    assert (agg["n"], agg["d"], agg["mn"], agg["mx"]) == (
-        3_000_000,
-        3_000_000,
-        1,
-        3_000_000,
-    )
-
-
 def test_lift_gains_buckets_exact_at_scale(spark):
     """With strict total order, the floor decile rule forces bucket
     sizes of exactly n/10 — the end-to-end symptom check for the same

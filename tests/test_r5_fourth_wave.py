@@ -263,28 +263,3 @@ def test_lift_gains_matches_bruteforce(spark):
         assert g["gain"] == pytest.approx(cum_pos / total_pos)
         assert g["lift"] == pytest.approx((cum_pos / total_pos) / (cum_rows / n))
     assert out[10]["gain"] == pytest.approx(1.0)   # last decile captures all
-
-
-def test_global_prefix_sums_multi_matches_single(spark):
-    from mimic_iv_data_pipeline_spark.operators.sampling import (
-        global_prefix_sum,
-        global_prefix_sums,
-    )
-
-    df = spark.createDataFrame(
-        [(i, (i * 7) % 13, (i * 11) % 5) for i in range(500)],
-        "k long, a long, b long",
-    )
-    multi = global_prefix_sums(
-        df, [F.col("k").asc()], {"ca": F.col("a"), "cb": F.col("b")}, bucket_col="k"
-    )
-    single_a = global_prefix_sum(
-        df, [F.col("k").asc()], F.col("a"), "ca", bucket_col="k"
-    )
-    ma = {r["k"]: (r["ca"], r["cb"]) for r in multi.collect()}
-    sa = {r["k"]: r["ca"] for r in single_a.collect()}
-    run_b = 0
-    for i in range(500):
-        run_b += (i * 11) % 5
-        assert ma[i][0] == sa[i]
-        assert ma[i][1] == run_b

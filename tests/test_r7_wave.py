@@ -173,41 +173,6 @@ def test_canonical_url_is_idempotent(spark):
     assert not bad, f"canonical form not idempotent: {bad[:5]}"
 
 
-def test_ewma_holt_invariant_to_n_buckets(spark):
-    """The hash-bucket count is a pure parallelism knob: every
-    (key, t) output must be BITWISE identical for any n_buckets (all
-    rows of a key land in one bucket by construction, and the loop
-    resets at key boundaries)."""
-    import random
-
-    from mimic_iv_data_pipeline_spark.operators.windows import ewma, holt_linear
-
-    rng = random.Random(11)
-    rows = [
-        (f"k{rng.randrange(17)}", t, rng.choice([None, rng.uniform(-5, 5)]))
-        for t in range(600)
-    ]
-    df = spark.createDataFrame(rows, "k string, t long, x double")
-
-    def emap(n):
-        return {
-            (r["k"], r["t"]): r["e"]
-            for r in ewma(df, "k", "t", "x", 0.25, out_col="e", n_buckets=n).collect()
-        }
-
-    base = emap(1)
-    assert emap(7) == base and emap(64) == base
-
-    def hmap(n):
-        return {
-            (r["k"], r["t"]): (r["level"], r["trend"], r["forecast"])
-            for r in holt_linear(df, "k", "t", "x", 0.5, 0.25, n_buckets=n).collect()
-        }
-
-    hbase = hmap(1)
-    assert hmap(7) == hbase and hmap(64) == hbase
-
-
 # ------------------------------------------------------------------ r7 review
 def test_pareto_front_null_cost_cannot_shadow(spark):
     """A NULL-cost row must neither shadow its quality's true min-cost

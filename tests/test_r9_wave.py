@@ -319,29 +319,3 @@ def test_build_corpus_index_amortized_path(spark):
         build_corpus_index(corpus.filter(F.lit(False)))
     with pytest.raises(ValueError, match="corpus or corpus_index"):
         negative_sample(pos, k=3)
-
-
-def test_hard_negative_sample_ivf_seam(spark):
-    """ann='ivf' must share the exact path's contract: with
-    n_probe == n_cells (no pruning) the triples are identical; an
-    unknown retriever raises."""
-    import numpy as np
-    from mimic_iv_data_pipeline_spark.operators.sampling import (
-        hard_negative_sample,
-    )
-
-    rng = np.random.default_rng(3)
-    base = rng.normal(size=(40, 8))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in base[i]]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    q = emb.filter(F.col("vec_id") < 2)
-    pos = spark.createDataFrame([(0, 5), (1, 6)], "query_id long, doc_id long")
-    exact = sorted(map(tuple, hard_negative_sample(pos, q, emb, k=3, depth=39).collect()))
-    ivf = sorted(map(tuple, hard_negative_sample(
-        pos, q, emb, k=3, depth=39, ann="ivf", n_cells=2, n_probe=2
-    ).collect()))
-    assert exact == ivf
-    with pytest.raises(ValueError, match="unknown ann"):
-        hard_negative_sample(pos, q, emb, ann="hnsw")

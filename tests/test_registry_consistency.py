@@ -203,28 +203,71 @@ def test_every_package_function_is_reached():
     assert not dead, f"unreached package defs (delete them or add to _KEEP_UNREACHED): {dead}"
 
 
-# Boolean options that no caller outside tests/ sets to anything but the
+# Selector options that no caller outside tests/ sets to anything but the
 # default, kept on purpose. Key: "<module under the package>.<def>.<param>".
 _KEEP_SINGLE_VALUED = {
-    # semantic variants: the flag changes the output, not the implementation
+    # semantic variants: the value changes the output, not the implementation
     "operators.graph.bfs_levels.directed": "semantic variant: undirected reachability",
     "operators.graph.triangle_count.per_node": "semantic variant: one global count, not per-node rows",
     "plans.survival.survival_sequences.reverse": "semantic variant: chronological sequences",
     "plans.ml_assembly.ml_feature_matrix.wide": "semantic variant: long (id, code, feature) rows",
+    "operators.history.pit_join.how": "semantic variant: join type (inner drops unmatched left rows)",
+    "operators.sketches.bloom_prefilter_join.how": "semantic variant: join type (semi/anti/inner)",
+    "operators.sampling.oversample_minority.balance": "semantic variant: 'all' lifts every class to the majority",
+    "plans.features.preproc_diagnoses.grouping": "reference notebook's ICD keep/convert/group widget",
+    "plans.ml_assembly.ml_feature_matrix.agg": "reference's mean/max feature aggregates",
+    # reference implementations that tests compare the default path against
+    "operators.dedup.semantic_dedup.pairs": "'join' is the reference the pandas kernel is tested against",
 }
 
 
-def test_every_boolean_option_is_selected():
-    """Every package def parameter with a bool literal default is passed
-    some other expression by at least one call outside tests/ (a call
-    through ``**kwargs`` counts), or is on _KEEP_SINGLE_VALUED with its
-    reason: an option no workload sets is a dead branch. The keep list
-    itself names only live, single-valued options."""
+def _string_selected(node, param):
+    """True if the body of def ``node`` compares ``param`` with string
+    constants: ``==``/``!=`` a string, ``in``/``not in`` a tuple, list or
+    set of strings, or a subscript of a dict literal with string keys."""
+    import ast
+
+    def is_param(n):
+        return isinstance(n, ast.Name) and n.id == param
+
+    def is_str(n):
+        return isinstance(n, ast.Constant) and isinstance(n.value, str)
+
+    for n in ast.walk(node):
+        if isinstance(n, ast.Compare) and len(n.ops) == 1:
+            left, op, right = n.left, n.ops[0], n.comparators[0]
+            if isinstance(op, (ast.Eq, ast.NotEq)):
+                if (is_param(left) and is_str(right)) or (is_str(left) and is_param(right)):
+                    return True
+            elif isinstance(op, (ast.In, ast.NotIn)) and is_param(left):
+                if isinstance(right, (ast.Tuple, ast.List, ast.Set)) and right.elts and all(
+                    is_str(e) for e in right.elts
+                ):
+                    return True
+        if (
+            isinstance(n, ast.Subscript)
+            and isinstance(n.value, ast.Dict)
+            and is_param(n.slice)
+            and n.value.keys
+            and all(k is not None and is_str(k) for k in n.value.keys)
+        ):
+            return True
+    return False
+
+
+def test_every_selector_option_is_selected():
+    """Every package def parameter that selects a branch is passed some
+    other expression by at least one call outside tests/ (a call through
+    ``**kwargs`` counts), or is on _KEEP_SINGLE_VALUED with its reason: an
+    option no workload sets is a dead branch. A selector is a parameter
+    with a bool literal default, or with a str literal default that the
+    def's body compares against string constants (see _string_selected).
+    The keep list itself names only live, single-valued options."""
     import ast
 
     defs, _, calls = _package_defs_and_reach()
     pkg = "mimic_iv_data_pipeline_spark."
-    options = {}  # "<module>.<def>.<param>" -> (def key, position or None, default)
+    options = {}  # "<module>.<def>.<param>" -> (def key, param, position or None, default)
     for (mod, name), node in defs.items():
         if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
@@ -233,10 +276,22 @@ def test_every_boolean_option_is_selected():
         pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
         pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
         for param, default in pairs:
-            if isinstance(default, ast.Constant) and isinstance(default.value, bool):
+            if not isinstance(default, ast.Constant):
+                continue
+            value = default.value
+            if isinstance(value, bool) or (
+                isinstance(value, str) and _string_selected(node, param.arg)
+            ):
                 pos = positional.index(param) if param in positional else None
                 key = f"{mod.removeprefix(pkg)}.{name}.{param.arg}"
-                options[key] = ((mod, name), param.arg, pos, default.value)
+                options[key] = ((mod, name), param.arg, pos, value)
+
+    def is_default(arg, default):
+        return (
+            isinstance(arg, ast.Constant)
+            and type(arg.value) is type(default)
+            and arg.value == default
+        )
 
     def selects(call, param, pos, default):
         if any(kw.arg is None for kw in call.keywords):  # **kwargs
@@ -245,10 +300,10 @@ def test_every_boolean_option_is_selected():
             if isinstance(arg, ast.Starred):
                 return pos is not None and pos >= i
             if i == pos:
-                return not (isinstance(arg, ast.Constant) and arg.value is default)
+                return not is_default(arg, default)
         for kw in call.keywords:
             if kw.arg == param:
-                return not (isinstance(kw.value, ast.Constant) and kw.value.value is default)
+                return not is_default(kw.value, default)
         return False
 
     gone = sorted(set(_KEEP_SINGLE_VALUED) - set(options))
@@ -262,7 +317,7 @@ def test_every_boolean_option_is_selected():
     assert not stale, f"keep-list entries now selected (drop them from the list): {stale}"
     single = sorted(set(options) - selected - set(_KEEP_SINGLE_VALUED))
     assert not single, (
-        "bool options no caller outside tests/ sets (delete the option and its "
+        "selector options no caller outside tests/ sets (delete the option and its "
         f"unused branch, or add to _KEEP_SINGLE_VALUED): {single}"
     )
 

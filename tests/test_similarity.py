@@ -123,20 +123,29 @@ def _emb_fixture(spark, n=120, dims=8):
     )
 
 
-def test_ivf_topk_pandas_score_matches_expr(spark):
-    """score='pandas' (per-cell numpy matmul + map-side top-k) must be
-    row-identical to the interpreted-expression join it replaced —
-    including rounding, tie-breaks and self-exclusion."""
-    from mimic_iv_data_pipeline_spark.operators.similarity import ivf_topk
+def _expr_path_rows(fn, queries, corpus, **kw):
+    """Sorted rows of ``fn``'s expression path. decimal(20,0) ids are
+    not integral, so they take it, and their order is the integer
+    order, so top-k tie-breaks agree; the ids are mapped back to int."""
+    def as_dec(df):
+        return df.withColumn("vec_id", F.col("vec_id").cast("decimal(20,0)"))
 
+    out = fn(as_dec(queries), corpus=as_dec(corpus), **kw)
+    assert out.schema["query_id"].dataType.simpleString() == "decimal(20,0)"
+    return sorted((int(q), int(n), c) for q, n, c in out.collect())
+
+
+def test_ivf_topk_pandas_score_matches_expr(spark):
+    """The integral-id scorer (per-cell numpy matmul + map-side top-k)
+    must be row-identical to the interpreted-expression join that
+    non-integral ids take — including rounding, tie-breaks and
+    self-exclusion."""
     emb = _emb_fixture(spark)
     queries = emb.filter(F.col("vec_id") < 8)
     cents = [[float((c * 5 + d) % 7) - 3.0 for d in range(8)] for c in range(4)]
-    kw = dict(
-        corpus=emb, n_cells=4, n_probe=2, k=5, centroids=cents
-    )
-    a = sorted(map(tuple, ivf_topk(queries, score="expr", **kw).collect()))
-    b = sorted(map(tuple, ivf_topk(queries, score="pandas", **kw).collect()))
+    kw = dict(corpus=emb, n_cells=4, n_probe=2, k=5, centroids=cents)
+    a = _expr_path_rows(ivf_topk, queries, **kw)
+    b = sorted(map(tuple, ivf_topk(queries, **kw).collect()))
     assert a == b and len(a) > 0
 
 
@@ -146,9 +155,33 @@ def test_ann_lsh_topk_pandas_score_matches_expr(spark):
     emb = _emb_fixture(spark)
     queries = emb.filter(F.col("vec_id") < 8)
     kw = dict(corpus=emb, dims=8, bits=4, k=5)
-    a = sorted(map(tuple, ann_lsh_topk(queries, score="expr", **kw).collect()))
-    b = sorted(map(tuple, ann_lsh_topk(queries, score="pandas", **kw).collect()))
+    a = _expr_path_rows(ann_lsh_topk, queries, **kw)
+    b = sorted(map(tuple, ann_lsh_topk(queries, **kw).collect()))
     assert a == b and len(a) > 0
+
+
+def test_ann_pandas_path_preserves_id_type(spark):
+    """The integral-id scorer works in long internally but casts back,
+    so int ids do not widen; its values match the expression path."""
+    import numpy as np
+
+    from mimic_iv_data_pipeline_spark.operators.similarity import ann_lsh_topk
+
+    rng = np.random.default_rng(7)
+    rows = [(int(i), [float(x) for x in rng.normal(size=8)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    centroids = rng.normal(size=(4, 8))
+
+    for fn, kw in (
+        (ivf_topk, {"n_cells": 4, "n_probe": 4, "centroids": centroids}),
+        (ann_lsh_topk, {"dims": 8, "bits": 2}),
+    ):
+        pand = fn(emb, corpus=emb, k=3, **kw)
+        assert pand.schema["query_id"].dataType.simpleString() == "int"
+        assert pand.schema["neighbor_id"].dataType.simpleString() == "int"
+        assert sorted(map(tuple, pand.collect())) == _expr_path_rows(
+            fn, emb, corpus=emb, k=3, **kw
+        )
 
 
 def test_driver_query_cells_match_worker_assignment(spark):
@@ -181,7 +214,7 @@ def test_ivf_pandas_query_guard_counts_queries(spark):
     """max_query_rows bounds the collected query side in queries."""
     emb = _emb_fixture(spark)
     cents = [[float((c * 5 + d) % 7) - 3.0 for d in range(8)] for c in range(4)]
-    kw = dict(corpus=emb, n_cells=4, n_probe=6, k=3, centroids=cents, score="pandas")
+    kw = dict(corpus=emb, n_cells=4, n_probe=6, k=3, centroids=cents)
     queries = emb.filter(F.col("vec_id") < 8)
     assert ivf_topk(queries, max_query_rows=8, **kw).count() > 0
     with pytest.raises(ValueError, match="query rows"):
