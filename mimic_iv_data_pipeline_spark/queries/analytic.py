@@ -29,12 +29,7 @@ from mimic_iv_data_pipeline_spark.operators.windows import (
     topk_per_group,
 )
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from mimic_iv_data_pipeline_spark.sources.readers import load_table
-
-    return load_table(spark, sf_dir, name)
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 # --- q15: mode per group (A7 — drop_wrong_uom's majority-unit) -------------
@@ -51,7 +46,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q15_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
     out = mode_per_group(li, "l_partkey", "l_returnflag")
     return out.select(
         "l_partkey",
@@ -78,7 +73,7 @@ def q15_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q16_outlier_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     out = clamp_outliers(e, "event_type", "value", 0.05, 0.95, mode="clamp")
     return out.select("event_id", dround("value", 6).alias("value_clamped"))
 
@@ -100,8 +95,8 @@ def q16_outlier_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q17_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice", "l_discount")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice", "l_discount")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     per_part = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_partkey")
@@ -131,7 +126,7 @@ def q17_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q18_readmission_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
     out = label_readmission(
         o,
         subject_col="o_custkey",
@@ -159,7 +154,7 @@ def q18_readmission_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q19_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
+    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
     purchases = e.filter(F.col("event_type") == "purchase").drop("event_type")
     signups = e.filter(F.col("event_type") == "signup").drop("event_type")
     # union strategy: linear single-shuffle backward as-of (the join
@@ -200,7 +195,7 @@ def q19_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q20_ffill_bfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "ts",
@@ -233,7 +228,7 @@ def q20_ffill_bfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q21_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    e = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     out = sessionize(e, "user_id", "ts", gap_seconds=1800, tie_break="event_id")
     return out.groupBy("user_id").agg(F.max("session_id").cast("long").alias("n_sessions"))
 
@@ -252,7 +247,7 @@ def q21_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q22_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select("event_type", "value", "event_id")
+    e = load_table(spark, sf_dir, "events").select("event_type", "value", "event_id")
     binned = quantile_bins(e, "event_type", "value", "event_id", n_bins=4)
     return binned.groupBy("event_type", F.col("bin").cast("long").alias("bin")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -276,7 +271,7 @@ def q22_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q23_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.aggregates import histogram_bins
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return histogram_bins(
         e,
         "value",
@@ -320,8 +315,8 @@ def q23_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q24_fairness_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice", "o_orderpriority")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice", "o_orderpriority")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
     return confusion_by_group(
         joined,
@@ -353,7 +348,7 @@ def q24_fairness_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q25_rank_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     scored = emb.select(
         F.element_at("embedding", 1).cast("double").alias("score"),
         F.when(F.col("label") == 2, 1).otherwise(0).alias("y"),
@@ -371,7 +366,7 @@ def q25_rank_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q26_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.orderBy("event_type")
     return (
         e.select("event_type")
@@ -393,7 +388,7 @@ def q26_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q27_global_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_partkey")
         .agg(
@@ -415,7 +410,7 @@ def q27_global_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q28_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
         dround(F.sum("l_quantity"), 4).alias("sum_qty"),
@@ -447,9 +442,8 @@ def q148_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort-month × months-since retention matrix over the event log
     (first event per user defines the cohort; n_active = distinct users
     of that cohort active k months later)."""
-    from mimic_iv_data_pipeline_spark.sources.readers import read_events
 
-    e = read_events(spark, sf_dir).select("user_id", "ts")
+    e = load_table(spark, sf_dir, "events").select("user_id", "ts")
     first = e.groupBy("user_id").agg(F.min("ts").alias("f"))
     months = (F.year("ts") * 12 + F.month("ts")) - (
         F.year("f") * 12 + F.month("f")
@@ -487,7 +481,6 @@ def q148_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q149_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-status and per-priority order summaries plus the grand total
     in one Expand pass, via the SQL surface (GROUP BY GROUPING SETS)."""
-    from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("__q149_orders")
     return spark.sql(
@@ -556,7 +549,7 @@ def q153_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; no pin, collect or driver-built rows)."""
     from mimic_iv_data_pipeline_spark.operators.windows import funnel_conversion
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return funnel_conversion(ev, ["signup", "view", "click", "purchase"])
 
 
@@ -593,7 +586,7 @@ def q156_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast group stats, no window over the facts)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import mad_outliers
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     out = mad_outliers(li, "l_returnflag", "l_extendedprice")
     return out.select(
         "l_returnflag",
@@ -633,7 +626,7 @@ def q157_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/aggregates.py:mutual_information — one fact scan)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import mutual_information
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     out = mutual_information(li, "l_returnflag", "l_linestatus")
     return out.select(
         "n",
@@ -716,7 +709,7 @@ def q158_cuped_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     six moments per variant, arithmetic on a 2-row relation)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import cuped_ab_test
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     pu = ev.groupBy("user_id").agg(
         F.coalesce(
             F.sum(F.when(F.col("event_type") == "purchase", F.col("value"))),
@@ -786,8 +779,8 @@ def q162_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + two windows over the distinct-times relation)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import kaplan_meier
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     ship = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("s"))
     base = orders.join(ship, orders["o_orderkey"] == ship["l_orderkey"]).select(
         "o_orderpriority",
@@ -862,8 +855,8 @@ def q163_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group cumulative windows + one final sum)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import logrank_test
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     ship = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("s"))
     base = (
         orders.filter(F.col("o_orderpriority").isin("1-URGENT", "3-MEDIUM"))
@@ -936,7 +929,7 @@ def q164_funnel_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     window on the relation's own user partitioning, so no self-join)."""
     from mimic_iv_data_pipeline_spark.operators.windows import funnel_times
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ft = funnel_times(ev, ["signup", "view", "click", "purchase"])
     w = Window.partitionBy("user_id").orderBy("stage_idx")
     lags = ft.select(
@@ -996,7 +989,7 @@ def q165_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         chi_square_independence,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     out = chi_square_independence(li, "l_returnflag", "l_linestatus")
     return out.select(
         "n",
@@ -1061,7 +1054,7 @@ def q166_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         population_stability,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     ref = orders.filter(F.col("o_orderdate") < "1998-01-01")
     cur = orders.filter(F.col("o_orderdate") >= "1998-01-01")
     out = population_stability(ref, cur=cur, value_col="o_totalprice", bins=10, alpha=1e-6)
@@ -1110,7 +1103,7 @@ def q167_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed CDF prefix sums)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import ks_statistic
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderdate") < "1998-01-01")
     b = orders.filter(F.col("o_orderdate") >= "1998-01-01")
     out = ks_statistic(a, b, "o_totalprice")
@@ -1145,7 +1138,7 @@ def q169_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair aggregate)."""
     from mimic_iv_data_pipeline_spark.operators.windows import transition_matrix
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     out = transition_matrix(ev, tie_break="event_id")
     return out.select(
         "from_state", "to_state", "n", dround(F.col("prob"), 6).alias("prob")
@@ -1176,7 +1169,7 @@ def q171_rolling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/windows.py:rolling_window — one shuffle, RANGE frame)."""
     from mimic_iv_data_pipeline_spark.operators.windows import rolling_window
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
@@ -1249,7 +1242,7 @@ def q175_roc_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/aggregates.py:roc_pr_curve — integer-exact curve)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import roc_pr_curve
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.col("value").alias("score"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
@@ -1307,7 +1300,7 @@ def q176_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative relation)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import lift_gains
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.col("value").alias("score"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
@@ -1389,7 +1382,7 @@ def q177_grouped_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate, closed-form coefficients)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import grouped_linreg
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.hour("ts").cast("long").alias("x"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("y"),
@@ -1443,7 +1436,7 @@ def q178_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the facts)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import seasonal_zscore
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.hour("ts").cast("long").alias("hr"),
@@ -1516,7 +1509,7 @@ def q179_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     all shifts, exact-sum Pearson per (key, lag))."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import acf
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
             "event_type",
@@ -1593,7 +1586,7 @@ def q180_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/sampling.py:poisson_bootstrap_ci)."""
     from mimic_iv_data_pipeline_spark.operators.sampling import poisson_bootstrap_ci
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("y"),
@@ -1661,7 +1654,7 @@ def q212_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mimic_iv_data_pipeline_spark.operators.windows import transition_matrix
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     trans = transition_matrix(ev, tie_break="event_id").select(
         "from_state", "to_state", "n"
     )

@@ -26,10 +26,7 @@ from mimic_iv_data_pipeline_spark.operators.text import (
     nfc_normalize,
 )
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 # --- q84: Unicode NFC canonicalization --------------------------------------
@@ -62,7 +59,7 @@ _NFC_PRECOMP = " r\u00e9sum\u00e9 na\u00efve"
     """,
 )
 def q84_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     planted = d.select(
         "doc_id",
         F.concat(
@@ -122,7 +119,7 @@ def q84_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q85_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return duplicate_spans(_docs(spark, sf_dir), "doc_id", k=5, min_df=2)
+    return duplicate_spans(load_table(spark, sf_dir, "documents"), "doc_id", k=5, min_df=2)
 
 
 # --- q86: Gopher word-level quality rules -----------------------------------
@@ -157,7 +154,7 @@ def q85_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q86_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = gopher_quality(_docs(spark, sf_dir), min_tokens=20, min_stop_hits=2)
+    out = gopher_quality(load_table(spark, sf_dir, "documents"), min_tokens=20, min_stop_hits=2)
     return out.select(
         "doc_id",
         "g_n_tokens",
@@ -174,7 +171,7 @@ def q86_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is hash-verified against fixed centroids by q134) --------------------------
 @register("q87_semantic_dedup")
 def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     # the operator materializes the assignment relation once
     return semantic_dedup(
         emb, "vec_id", "embedding", n_clusters=16, threshold=0.9
@@ -230,7 +227,7 @@ def q88_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure and filters to cluster representatives."""
     from mimic_iv_data_pipeline_spark.operators.graph import connected_components
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "doc_id", n=3, threshold=0.2)
     cc = connected_components(
         pairs.select("id_a", "id_b"), nodes=docs.select("doc_id")
@@ -278,7 +275,7 @@ def q89_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is taken whole, which is how the q75 mixture solver's epoch>1
     sources surface). The oracle ranks by the same md5-prefix hash, so
     the drawn set matches bit-for-bit."""
-    out = quota_sample(_docs(spark, sf_dir), "doc_id", "source", _QUOTAS)
+    out = quota_sample(load_table(spark, sf_dir, "documents"), "doc_id", "source", _QUOTAS)
     return out.select("doc_id", "source", "sample_rank")
 
 
@@ -318,7 +315,7 @@ def q95_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle anywhere in the plan."""
     from mimic_iv_data_pipeline_spark.operators.text import chunk_documents
 
-    return chunk_documents(_docs(spark, sf_dir), "doc_id", "text",
+    return chunk_documents(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                            window=50, stride=40)
 
 
@@ -367,7 +364,7 @@ def q134_semantic_dedup_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.queries.similarity import _fixed_centroids
 
     cent = _fixed_centroids(16, 64, prefix="sem")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     return semantic_dedup(
         emb, "vec_id", "embedding", n_clusters=16, threshold=0.9, centroids=cent
     )
@@ -434,7 +431,7 @@ def q142_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint-truncated lineage)."""
     from mimic_iv_data_pipeline_spark.operators.graph import pagerank
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = li.selectExpr(
         "l_suppkey % 40 AS src", "l_partkey % 40 AS dst"
     ).filter(F.expr("src != dst"))
@@ -478,7 +475,7 @@ def q151_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(m^{3/2}) wedge bound, no cartesian)."""
     from mimic_iv_data_pipeline_spark.operators.graph import triangle_count
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = li.select(
         (F.col("l_suppkey") % 40).alias("src"), (F.col("l_partkey") % 40).alias("dst")
     ).filter(F.col("src") != F.col("dst"))
@@ -536,7 +533,7 @@ def q159_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node,label) count + one argmax window per round)."""
     from mimic_iv_data_pipeline_spark.operators.graph import label_propagation
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = li.select(
         (F.col("l_suppkey") % 40).alias("src"), (F.col("l_partkey") % 40).alias("dst")
     ).filter(F.col("src") != F.col("dst"))
@@ -590,7 +587,7 @@ def q220_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     global_prefix_sums, one draw-resolution equi-join, no cross join)."""
     from mimic_iv_data_pipeline_spark.operators.sampling import negative_sample
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     pos = (
         ev.filter(F.col("user_id") % 13 == 0)
         .select(
@@ -599,7 +596,7 @@ def q220_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return negative_sample(pos, docs, k=4, oversample=10)
 
 
@@ -657,7 +654,7 @@ def q222_negative_sample_str(spark: SparkSession, sf_dir: str) -> DataFrame:
     dk = lambda c: F.concat(  # noqa: E731
         F.lit("doc-"), F.lpad(c.cast("string"), 8, "0")
     )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     pos = (
         ev.filter(F.col("user_id") % 13 == 0)
         .select(
@@ -666,7 +663,7 @@ def q222_negative_sample_str(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         dk(F.col("doc_id")).alias("doc_key")
     )
     return negative_sample(pos, docs, doc_col="doc_key", k=4, oversample=10)
@@ -739,7 +736,7 @@ def q223_negative_sample_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     dk = lambda c: F.concat(  # noqa: E731
         F.lit("https://corpus.example/doc/"), F.lpad(c.cast("string"), 8, "0")
     )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     pos = (
         ev.filter(F.col("user_id") % 13 == 0)
         .select(
@@ -748,7 +745,7 @@ def q223_negative_sample_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         dk(F.col("doc_id")).alias("doc_key")
     )
     idx = build_corpus_index(

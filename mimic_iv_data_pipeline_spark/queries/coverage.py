@@ -10,12 +10,7 @@ from pyspark.sql import functions as F
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from mimic_iv_data_pipeline_spark.sources.readers import load_table
-
-    return load_table(spark, sf_dir, name)
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 # --- q45: intersect / except (U5, §2.7) ------------------------------------
@@ -37,7 +32,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q45_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     y95 = o.filter(F.year("o_orderdate") == 1995).select(
         F.col("o_custkey").alias("c_custkey")
     )
@@ -68,7 +63,7 @@ def q45_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q46_one_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     segs = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
     aggs = [
         F.max(
@@ -97,7 +92,7 @@ def q46_one_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q47_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     vocab = (
         e.select("event_type")
         .distinct()
@@ -127,7 +122,7 @@ def q47_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q48_group_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_returnflag", "l_orderkey")
     return (
         li.withColumn("per_order", F.count(F.lit(1)).over(w))
@@ -170,7 +165,7 @@ def q49_interval_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_signal,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     anchors = e.select("user_id").distinct().withColumn("grid_len", F.lit(28))
     grid = densify_time_grid(anchors, "user_id", "grid_len", time_col="t")
     intervals = (
@@ -219,7 +214,7 @@ def q49_interval_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q50_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.text import winnowing_fingerprints
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     out = winnowing_fingerprints(docs, "doc_id", k=3, w=4)
     return out.select(F.col("doc").alias("doc_id"), "fingerprint")
 
@@ -245,7 +240,7 @@ def q50_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q51_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     y = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
     p = F.when(F.col("value") > 250, 1).otherwise(0)
     t = e.select(y.alias("y"), p.alias("p"))
@@ -289,7 +284,7 @@ def q51_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q52_temperature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.aggregates import fit_temperature
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     preds = e.select(
         ((F.col("value") - 250.0) / 50.0).alias("logit"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
@@ -307,7 +302,7 @@ def q52_temperature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q54_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -327,7 +322,7 @@ def q54_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q55_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     t_hours = (
         F.unix_timestamp("ts")
         - F.unix_timestamp(F.lit("2024-01-01 00:00:00").cast("timestamp"))
@@ -361,7 +356,7 @@ def q55_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q56_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
         F.countDistinct("l_partkey").alias("exact_parts"),
@@ -398,7 +393,7 @@ def q56_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q57_ece_mce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.aggregates import ece_mce
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     preds = e.select(
         (1.0 / (1.0 + F.exp(-(F.col("value") - 250.0) / 50.0))).alias("p"),
         F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0).alias("y"),
@@ -439,7 +434,7 @@ def q57_ece_mce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q58_survival_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.plans.survival import survival_sequences
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     ev = e.select(
         F.col("user_id").alias("pt_id"),
         F.col("event_type").alias("code"),
@@ -514,7 +509,7 @@ def q61_behrt_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_sequences,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     stream = e.select(
         F.col("user_id").alias("subject_id"),
         F.floor(
@@ -566,7 +561,7 @@ def q61_behrt_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q62_horizontal_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
 
     def branch(etype: str, out: str) -> DataFrame:
         return (
@@ -627,7 +622,7 @@ def q140_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     single aggregate pass (operators/profiling.py:profile_table)."""
     from mimic_iv_data_pipeline_spark.operators.profiling import profile_table
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     prof = profile_table(
         orders, ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
     )
@@ -704,8 +699,8 @@ def q141_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         validate_expectations,
     )
 
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     rules = [
         Expectation("not_null", ("o_custkey",)),
         Expectation("accepted_values", ("o_orderstatus",), values=("O", "F", "P")),
@@ -740,7 +735,7 @@ def q141_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q147_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders melted to (key, measure, value) long form via the native
     unpivot operator."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").cast("double")
     )
     return o.unpivot(

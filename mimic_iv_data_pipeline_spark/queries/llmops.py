@@ -50,10 +50,7 @@ from mimic_iv_data_pipeline_spark.operators.text import (
     with_repetition_metrics,
 )
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 # --- q63: PII redaction -----------------------------------------------------
@@ -101,7 +98,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q63_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     aug = d.select(
         "doc_id",
@@ -145,7 +142,7 @@ def q63_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q64_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = hash_split(
-        _docs(spark, sf_dir), "doc_id",
+        load_table(spark, sf_dir, "documents"), "doc_id",
         {"train": 0.8, "valid": 0.1, "test": 0.1},
     )
     return d.groupBy("split").agg(
@@ -182,7 +179,7 @@ def q64_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q65_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     bench = d.filter(F.col("source") == "src0")
     corpus = d.filter(F.col("source") != "src0")
     return ngram_contamination(corpus, bench, "doc_id", "text", n=3)
@@ -205,7 +202,7 @@ def q65_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q66_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return heavy_hitters(_docs(spark, sf_dir), "text", k=50)
+    return heavy_hitters(load_table(spark, sf_dir, "documents"), "text", k=50)
 
 
 # --- q67: Count-Min sketch estimates ---------------------------------------
@@ -244,7 +241,7 @@ def q66_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q67_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    occ = token_stream(_docs(spark, sf_dir), "text").transform(materialize)
+    occ = token_stream(load_table(spark, sf_dir, "documents"), "text").transform(materialize)
     sketch = cm_sketch(occ, "token", depth=4, width=256)
     words = occ.groupBy("token").agg(F.count("*").cast("long").alias("exact_cnt"))
     est = cm_estimate(sketch, words.select("token"), "token", depth=4, width=256)
@@ -267,7 +264,7 @@ def q67_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q68_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled = stratified_sample(
-        _docs(spark, sf_dir), "doc_id", "lang",
+        load_table(spark, sf_dir, "documents"), "doc_id", "lang",
         {"en": 0.3, "de": 0.7, "fr": 0.7, "es": 0.7, "zh": 0.7},
     )
     return sampled.select("doc_id", "lang")
@@ -296,7 +293,7 @@ def q68_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q69_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", token_count(F.col("text")).alias("n_toks")
     )
     packed = pack_sequences(d, "source", "doc_id", "n_toks", budget=512)
@@ -346,7 +343,7 @@ def q69_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q71_pack_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", token_count(F.col("text")).alias("n_toks")
     )
     packed = pack_sequences(
@@ -385,7 +382,7 @@ def q71_pack_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q70_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_repetition_metrics(_docs(spark, sf_dir), "doc_id", "text")
+    return with_repetition_metrics(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 # --- q72: passage-level (block) dedup ----------------------------------------
@@ -419,7 +416,9 @@ def q70_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q72_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return passage_block_dedup(_docs(spark, sf_dir), "doc_id", "text", block_tokens=20)
+    return passage_block_dedup(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", block_tokens=20
+    )
 
 
 # --- q73: Bloom-filter membership -------------------------------------------
@@ -461,7 +460,7 @@ def q72_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q73_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     corpus_keys = (
         token_stream(d.filter(F.col("doc_id") % 2 == 0), "text")
         .select("token")
@@ -512,7 +511,7 @@ def q73_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q74_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     aug = d.select(
         "doc_id",
@@ -556,7 +555,7 @@ def q74_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q75_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "source", token_count(F.col("text")).alias("n_toks")
     )
     return source_mixture_rates(
@@ -593,7 +592,7 @@ def q75_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q79_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tfidf_topk(_docs(spark, sf_dir), "doc_id", "text", k=3)
+    return tfidf_topk(load_table(spark, sf_dir, "documents"), "doc_id", "text", k=3)
 
 
 # --- q80: DSIR importance weights -------------------------------------------
@@ -635,7 +634,7 @@ def q79_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q80_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).withColumn("__is_tgt", F.col("lang") == "en")
+    d = load_table(spark, sf_dir, "documents").withColumn("__is_tgt", F.col("lang") == "en")
     return dsir_log_weights(d, "doc_id", "text", "__is_tgt", buckets=1024)
 
 
@@ -665,7 +664,7 @@ def q80_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q81_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_pair_counts(_docs(spark, sf_dir), "text", top_k=20)
+    return bpe_pair_counts(load_table(spark, sf_dir, "documents"), "text", top_k=20)
 
 
 # --- q82: length-bucketed batching ------------------------------------------
@@ -695,7 +694,7 @@ def q81_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q82_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", token_count(F.col("text")).alias("n_toks")
     )
     return length_bucketed_batches(d, "doc_id", "n_toks", bucket_width=64, batch_size=32)
@@ -723,7 +722,7 @@ def q82_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q83_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_novelty(_docs(spark, sf_dir), "doc_id", "text", n=5)
+    return ngram_novelty(load_table(spark, sf_dir, "documents"), "doc_id", "text", n=5)
 
 
 # --- q93: full BPE tokenize (rows-only: iterative merge induction has no
@@ -737,7 +736,7 @@ def q93_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counts plus distinct-token counts."""
     from mimic_iv_data_pipeline_spark.operators.bpe import bpe_encode, bpe_train
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train(docs, "text", num_merges=100, max_words=50_000)
     enc = bpe_encode(docs, "doc_id", "text", merges)
     return enc.select(
@@ -767,7 +766,7 @@ def q94_source_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch (the 100 TB path — bounded state, partial-mergeable) against
     the exact p50 within a generous rank-error bound, q56's
     exact+tolerance pattern."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     agg = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.percentile("n_chars", F.lit(0.5)).alias("__p50"),
@@ -810,7 +809,7 @@ def q96_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     step, deterministic across partitionings/retries."""
     from mimic_iv_data_pipeline_spark.operators.sampling import weighted_sample
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return weighted_sample(docs, "doc_id", "n_chars", k=100, salt="es").select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
     )
@@ -831,7 +830,7 @@ def q97_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (reference `model/dl_train.py:94-106` create_kfolds /
     `model/ml_models.py:71` KFold) — the full (id, fold) map, so the
     oracle checks exact membership, not just fold sizes."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     return kfold_ids(cust.select("c_custkey"), "c_custkey", k=5)
 
 
@@ -869,7 +868,7 @@ def q98_oversample(spark: SparkSession, sf_dir: str) -> DataFrame:
     least-frequent language class up to the majority count with
     hash-ordered residual draws; the oracle reproduces the draw
     bit-for-bit, copy indices included."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     out = oversample_minority(
         docs.select("doc_id", "lang"), "doc_id", "lang", balance="minority"
     )
@@ -893,7 +892,7 @@ def q100_stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-addressed hash order — per-stratum fold sizes exactly
     balanced (differ by at most 1), full (id, stratum, fold) map
     checked against the oracle's identical window."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     return kfold_ids(
         cust.select("c_custkey", "c_mktsegment"),
         "c_custkey",
@@ -922,7 +921,7 @@ def q101_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         suppress_small_groups,
     )
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     return suppress_small_groups(
         cust.select("c_custkey", "c_nationkey", "c_mktsegment"),
         ["c_nationkey", "c_mktsegment"],
@@ -944,7 +943,7 @@ def q105_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
         wordpiece_train,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     vocab = wordpiece_train(docs, "text", vocab_size=500, max_words=50_000)
     enc = wordpiece_encode(docs, "doc_id", "text", vocab)
     return enc.select("doc_id", "n_tokens", "n_unk")
@@ -964,7 +963,7 @@ def q106_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_train,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     probs = unigram_train(
         docs, "text", vocab_size=600, max_words=20_000, max_piece_len=6
     )
@@ -988,7 +987,7 @@ def q107_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_against_index,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     index = build_minhash_index(docs.filter(F.col("doc_id") < 250), "doc_id", "text")
     return dedup_against_index(
         docs.filter(F.col("doc_id") >= 250), index, "doc_id", "text", threshold=0.3
@@ -1060,7 +1059,7 @@ def q116_theta_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         theta_set_cardinalities,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sh = exploded_shingles(docs, "doc_id", "text", 3)
     a = sh.filter(F.col("doc") < 250).select("shingle")
     b = sh.filter(F.col("doc") >= 250).select("shingle")
@@ -1118,7 +1117,7 @@ def q117_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return hashed_linear_score(
-        _docs(spark, sf_dir), "doc_id", "text", default_hash_weights(1024)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", default_hash_weights(1024)
     )
 
 
@@ -1159,7 +1158,7 @@ def q118_mask_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.mlprep import mask_layout
 
     return mask_layout(
-        _docs(spark, sf_dir), "doc_id", "text", mask_rate=0.15, span_len=3
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", mask_rate=0.15, span_len=3
     )
 
 
@@ -1258,7 +1257,8 @@ def q126_wordpiece_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     crash its canonicalizer, r3)."""
     from mimic_iv_data_pipeline_spark.operators.wordpiece import wordpiece_encode
 
-    enc = wordpiece_encode(_docs(spark, sf_dir), "doc_id", "text", _WP_FIXED_VOCAB)
+    docs = load_table(spark, sf_dir, "documents")
+    enc = wordpiece_encode(docs, "doc_id", "text", _WP_FIXED_VOCAB)
     return enc.select(
         "doc_id",
         F.array_join(F.col("tokens"), " ").alias("tokens_csv"),
@@ -1362,7 +1362,8 @@ def q127_unigram_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.wordpiece import unigram_encode
 
     enc = unigram_encode(
-        _docs(spark, sf_dir), "doc_id", "text", _ug_fixed_probs(), max_piece_len=8
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", _ug_fixed_probs(),
+        max_piece_len=8,
     )
     return enc.select(
         "doc_id",
@@ -1437,7 +1438,7 @@ def q130_incremental_dedup_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_against_index,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     index = build_minhash_index(
         docs.filter(F.col("doc_id") < 250), "doc_id", "text",
         shingle_hash="md5", bucket="exact",
@@ -1544,7 +1545,7 @@ def q135_bpe_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     production path stays rows-only."""
     from mimic_iv_data_pipeline_spark.operators.bpe import bpe_encode
 
-    enc = bpe_encode(_docs(spark, sf_dir), "doc_id", "text", _BPE_FIXED_MERGES)
+    enc = bpe_encode(load_table(spark, sf_dir, "documents"), "doc_id", "text", _BPE_FIXED_MERGES)
     return enc.select(
         "doc_id",
         F.array_join(F.col("tokens"), " ").alias("tokens_csv"),
@@ -1589,7 +1590,7 @@ def q154_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate broadcast back, no fact-side window)."""
     from mimic_iv_data_pipeline_spark.operators.mlprep import target_encode_kfold
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     df = orders.select(
         "o_orderkey",
         "o_orderpriority",
@@ -1639,7 +1640,7 @@ def q155_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.sampling import select_token_budget
     from mimic_iv_data_pipeline_spark.operators.text import token_count
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -1690,7 +1691,7 @@ def q160_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.sampling import pareto_front_2d
     from mimic_iv_data_pipeline_spark.operators.text import token_count
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -1727,9 +1728,8 @@ def q161_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/sampling.py:temporal_split — distributed global rank via
     global_prefix_sums, no single-partition window)."""
     from mimic_iv_data_pipeline_spark.operators.sampling import temporal_split
-    from mimic_iv_data_pipeline_spark.sources.readers import read_events
 
-    ev = read_events(spark, sf_dir).select("event_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     out = temporal_split(ev, ts_col="ts", id_col="event_id")
     return out.select("event_id", "split")
 
@@ -1771,7 +1771,7 @@ def q168_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mimic_iv_data_pipeline_spark.functions.rounding import dround_sql
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     src = li.selectExpr("l_orderkey AS basket", "l_partkey % 50 AS item")
     out = association_rules(src, "basket", "item", min_support=0.005)
     return out.selectExpr(
@@ -1830,7 +1830,7 @@ def q209_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mimic_iv_data_pipeline_spark.operators.text import tokens
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "source",
         F.size(F.filter(tokens(F.col("text")), lambda x: x != "")).alias(
             "n_toks"
@@ -1876,7 +1876,7 @@ def q216_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         anonymity_risk_report,
     )
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         "c_mktsegment",
         F.floor(F.col("c_acctbal") / 1000.0).cast("long").alias("bal_kb"),
@@ -1916,7 +1916,6 @@ def q217_date_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, no shuffle; within-user intervals preserved
     exactly)."""
     from mimic_iv_data_pipeline_spark.operators.privacy import date_shift
-    from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     out = date_shift(
@@ -1980,7 +1979,7 @@ def q218_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         item,
         F.when(c % 5 == 0, F.lit("#top")).otherwise(F.lit("")),
     )
-    urls = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    urls = load_table(spark, sf_dir, "customer").select(
         messy.alias("url")
     )
     out = urls.select(
@@ -2052,7 +2051,7 @@ def q219_notes_nlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     N exploded entity rows; the oracle is generator ground truth."""
     from mimic_iv_data_pipeline_spark.operators.nlp import extract_entities
 
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
     m = F.pmod(F.col("c_custkey"), F.lit(4))
     text = (
         F.when(m == 0, F.lit(_Q219_NOTE_TEMPLATES[0]))

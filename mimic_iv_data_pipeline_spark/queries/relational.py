@@ -13,12 +13,7 @@ from pyspark.sql import functions as F
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from mimic_iv_data_pipeline_spark.sources.readers import load_table
-
-    return load_table(spark, sf_dir, name)
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 # --- q01: scan + filter + multi-aggregate (S1, P3, A1-A4, F10) -------------
@@ -42,7 +37,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01 00:00:00").cast("timestamp"))
@@ -73,7 +68,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q02_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter((F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 100000))
         .select(
@@ -111,17 +106,17 @@ def q03_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-order partials are exact (sum/count are algebraic). Catalyst
     # can't do this rewrite itself (aggregate pushdown through joins).
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(
             F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("__rev"),
             F.count(F.lit(1)).alias("__cnt"),
         )
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = _t(spark, sf_dir, "region")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    r = load_table(spark, sf_dir, "region")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -146,9 +141,9 @@ def q03_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q04_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     ids = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select(F.col("o_custkey").alias("c_custkey"))
     )
@@ -165,8 +160,8 @@ def q04_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q05_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    ids = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
+    c = load_table(spark, sf_dir, "customer")
+    ids = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
     return c.join(ids, on="c_custkey", how="left_anti").select("c_custkey", "c_mktsegment")
 
 
@@ -188,7 +183,7 @@ def q05_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q06_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.windows import first_row_per_group
 
-    e = _t(spark, sf_dir, "events").select("user_id", "event_type", "event_id", "ts")
+    e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "event_id", "ts")
     out = first_row_per_group(
         e, ["user_id", "event_type"], [F.col("ts").asc(), F.col("event_id").asc()]
     )
@@ -207,7 +202,7 @@ def q06_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q07_conditional_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -234,9 +229,9 @@ def q07_conditional_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q08_outer_join_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     s = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("l_quantity").alias("qty"))
     )
@@ -262,7 +257,7 @@ def q08_outer_join_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q09_union_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     high = c.filter(F.col("c_acctbal") >= 5000).select(
         "c_custkey", F.lit("high").alias("tier")
     )
@@ -285,7 +280,7 @@ def q09_union_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q10_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_suppkey").alias("n_suppliers"),
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -308,7 +303,7 @@ def q10_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q11_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.lower(F.trim(F.col("p_name"))).alias("name_norm"),
@@ -333,7 +328,7 @@ def q11_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q12_date_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").cast("long").alias("order_year"),
@@ -354,7 +349,7 @@ def q12_date_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q13_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("long").alias("k"),
@@ -380,7 +375,7 @@ def q14_code_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.joins import map_codes
     from mimic_iv_data_pipeline_spark.functions.scalars import icd_root
 
-    p = _t(spark, sf_dir, "part").withColumn("type_root_key", icd_root(F.col("p_type")))
+    p = load_table(spark, sf_dir, "part").withColumn("type_root_key", icd_root(F.col("p_type")))
     mapping = spark.createDataFrame(
         [("ECO", "economy"), ("STA", "standard"), ("PRO", "promotional")],
         ["type_root", "type_group"],
@@ -424,7 +419,7 @@ def q119_scd_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot; per-key latest wins."""
     from mimic_iv_data_pipeline_spark.operators.joins import upsert_latest
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderkey", "o_orderstatus", F.lit(1).cast("long").alias("version")
     )
@@ -481,7 +476,7 @@ def q139_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange (operators/history.py)."""
     from mimic_iv_data_pipeline_spark.operators.history import scd2_history
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     v1 = orders.select(
         "o_orderkey", "o_orderstatus", F.lit(1).cast("long").alias("version")
     )
@@ -549,7 +544,7 @@ def q144_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate, no window)."""
     from mimic_iv_data_pipeline_spark.operators.history import pit_join, scd2_history
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     v1 = orders.select(
         "o_orderkey", "o_orderstatus", F.lit(1).cast("long").alias("version")
     )
@@ -568,7 +563,7 @@ def q144_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "effective_from",
         "effective_to",
     )
-    facts = _t(spark, sf_dir, "lineitem").select(
+    facts = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
         (1 + F.col("l_linenumber") % 3).cast("long").alias("as_of_version"),
     )
@@ -599,9 +594,9 @@ def q145_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join)."""
     from mimic_iv_data_pipeline_spark.operators.sketches import bloom_prefilter_join
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     dim = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 450000)
         .select(F.col("o_orderkey").alias("l_orderkey"), "o_totalprice")
     )
@@ -636,7 +631,7 @@ def q146_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rollup_state,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderkey") % 3 != 0)
     b = orders.filter(F.col("o_orderkey") % 3 == 0)
     merged = merge_rollup_state(
@@ -691,7 +686,7 @@ def q170_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete filter, same exchange as the q119 upsert)."""
     from mimic_iv_data_pipeline_spark.operators.joins import apply_cdc
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderkey", "o_orderstatus", F.lit(0).cast("long").alias("version")
     )

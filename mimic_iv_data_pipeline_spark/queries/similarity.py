@@ -17,14 +17,7 @@ from mimic_iv_data_pipeline_spark.operators.similarity import (
     l2_norm,
 )
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT fanned out (optimization r11): interleaved A/B measured the
-    # repartition 1.3–2.3× SLOWER for q42/q53 — the 2k-vector corpus is
-    # too small for the exchange to pay for itself, and the ANN kernels
-    # are Arrow-batched (already amortized per partition)
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 # --- q42: brute-force cosine top-k (exact ANN baseline) ---------------------
@@ -54,7 +47,8 @@ def q42_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # numpy-matmul scoring via mapInPandas — measured ~2.3× the
     # expression-tree variant even at 2k vectors, equal results
     # (tests/test_similarity.py::test_pandas_cosine_matches_expression)
-    emb = _emb(spark, sf_dir)
+    # not repartitioned: the fan-out measured 1.3-2.3x slower for q42/q53 at 2k vectors
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return cosine_topk_pandas(queries, corpus=emb, k=5)
 
@@ -70,7 +64,7 @@ def q42_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q43_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     return emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
         dround(F.avg(l2_norm(as_double_vec(F.col("embedding")))), 4).alias("avg_norm"),
@@ -81,7 +75,7 @@ def q43_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same kernel is hash-verified under the fixed md5 planes by q132) -------
 @register("q44_ann_lsh")
 def q44_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ann_lsh_topk(queries, corpus=emb, dims=64, bits=8, k=5)
 
@@ -91,7 +85,7 @@ def q44_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # step of the fit by q137) -----------------------------------------------
 @register("q53_ann_ivf")
 def q53_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivf_topk(queries, corpus=emb, n_cells=16, n_probe=4, k=5)
 
@@ -117,7 +111,7 @@ def q59_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return embedding_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=0.4, method="exact"
+        load_table(spark, sf_dir, "embeddings"), threshold=0.4, method="exact"
     )
 
 
@@ -131,7 +125,7 @@ def q60_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return embedding_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=0.4, method="lsh", dims=64, bits=4
+        load_table(spark, sf_dir, "embeddings"), threshold=0.4, method="lsh", dims=64, bits=4
     )
 
 
@@ -179,7 +173,7 @@ def q78_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_embeddings_int8,
     )
 
-    q = quantize_embeddings_int8(_emb(spark, sf_dir))
+    q = quantize_embeddings_int8(load_table(spark, sf_dir, "embeddings"))
     return q.select(
         "vec_id",
         F.array_join(F.col("qvec").cast("array<string>"), ",").alias("qvec_csv"),
@@ -196,7 +190,7 @@ def q102_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the driver as CSV (array cells crash its canonicalizer, r3)."""
     from mimic_iv_data_pipeline_spark.operators.pq import pq_encode, pq_train
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     books = pq_train(emb, m=8, k=16)
     enc = pq_encode(emb, books)
     return enc.select(
@@ -213,7 +207,7 @@ def q102_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q103_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.pq import pq_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return pq_topk(queries, corpus=emb, m=8, n_centroids=16, k=5)
 
@@ -225,7 +219,7 @@ def q103_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q104_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.pq import pq_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return pq_topk(queries, corpus=emb, m=8, n_centroids=16, k=5, rerank=100)
 
@@ -239,7 +233,7 @@ def q114_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC scoring + exact re-rank of the shortlist."""
     from mimic_iv_data_pipeline_spark.operators.pq import ivfpq_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivfpq_topk(
         queries, corpus=emb, n_cells=16, n_probe=4, m=8, n_centroids=16, k=5, rerank=50
@@ -258,7 +252,7 @@ def q115_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_fit,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     centers = kmeans_fit(emb, "embedding", k=8, max_iter=5, id_col="vec_id")
     assigned = kmeans_assign(emb, "vec_id", "embedding", centers)
     return (
@@ -292,7 +286,7 @@ def q90_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes are O(partitions · d²), independent of corpus rows."""
     from mimic_iv_data_pipeline_spark.operators.linalg import covariance_matrix
 
-    return covariance_matrix(_emb(spark, sf_dir), "embedding", dims=64)
+    return covariance_matrix(load_table(spark, sf_dir, "embeddings"), "embedding", dims=64)
 
 
 # --- q91: PCA projection (rows-only: eigenvector signs/order are
@@ -305,7 +299,8 @@ def q91_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     one narrow projection pass."""
     from mimic_iv_data_pipeline_spark.operators.linalg import pca_project
 
-    return pca_project(_emb(spark, sf_dir), "vec_id", "embedding", dims=64, k=8)
+    emb = load_table(spark, sf_dir, "embeddings")
+    return pca_project(emb, "vec_id", "embedding", dims=64, k=8)
 
 
 # --- q122: RAG chunk retrieval capstone (rows-only: probabilistic IVF
@@ -321,7 +316,7 @@ def q122_rag_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         retrieve,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
+    docs = load_table(spark, sf_dir, "documents").limit(100)
     # the limit leaves the pinned index in one partition; coalesce(1)
     # tells the planner so, and the top-k window needs no exchange
     index = materialize(build_chunk_index(docs, window=32, stride=24, dims=64)).coalesce(1)
@@ -388,7 +383,7 @@ def q123_pq_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin computing the same 128 subvector distances in SQL."""
     from mimic_iv_data_pipeline_spark.operators.pq import pq_encode
 
-    enc = pq_encode(_emb(spark, sf_dir), _fixed_codebooks())
+    enc = pq_encode(load_table(spark, sf_dir, "embeddings"), _fixed_codebooks())
     return enc.select(
         "vec_id",
         F.array_join(F.col("code").cast("array<string>"), ",").alias("code_csv"),
@@ -452,7 +447,7 @@ def q124_pq_adc_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q103) stays rows-only; the search plumbing is identical."""
     from mimic_iv_data_pipeline_spark.operators.pq import pq_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return pq_topk(queries, corpus=emb, codebooks=_fixed_codebooks(), k=5)
 
@@ -493,7 +488,7 @@ def q125_pq_rerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the SQL twin."""
     from mimic_iv_data_pipeline_spark.operators.pq import pq_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return pq_topk(queries, corpus=emb, codebooks=_fixed_codebooks(), k=5, rerank=100)
 
@@ -568,7 +563,7 @@ def q129_rag_retrieve_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         retrieve,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+    docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 100
     )
     index = materialize(build_chunk_index(docs, window=32, stride=24, dims=64))
@@ -624,7 +619,7 @@ def q132_ann_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket equi-join and rounded-cosine rank all hash-compared against
     a DuckDB twin recomputing the same 8×64 plane parities. The
     xxhash64 production planes (q44) stay rows-only by necessity."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ann_lsh_topk(queries, corpus=emb, dims=64, bits=8, k=5, plane_hash="md5")
 
@@ -697,7 +692,7 @@ def q133_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The k-means-trained production quantizer (q53) stays rows-only —
     Lloyd iterations have no SQL twin; this pins everything around
     them."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivf_topk(
         queries, corpus=emb, n_cells=16, n_probe=4, k=5, centroids=_fixed_centroids()
@@ -800,7 +795,7 @@ def q136_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     hashlib.md5(f"ivfpq_b:{j}:{c}:{t}".encode()).hexdigest()[:8], 16
                 )
                 books[j, c, t] = math.floor((h / float(1 << 31) - 1.0) * 1e6 + 0.5) / 1e6
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivfpq_topk(
         queries, corpus=emb, n_cells=16, n_probe=4, k=5,
@@ -861,7 +856,7 @@ def q137_kmeans_step_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cent = _fixed_centroids(16, 64, prefix="km")
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     centers = kmeans_fit(emb, "embedding", k=16, max_iter=1, init=cent)
     counts = (
         kmeans_assign(emb, "vec_id", "embedding", cent)
@@ -931,7 +926,7 @@ def q138_pca_project_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         mean[d] = math.floor((h / float(1 << 31) - 1.0) * 1e5 + 0.5) / 1e6
     comps = _fixed_centroids(8, 64, prefix="pcc")
     return pca_project(
-        _emb(spark, sf_dir), "vec_id", "embedding", dims=64, k=8,
+        load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding", dims=64, k=8,
         components=(mean, comps),
     )
 
@@ -1014,7 +1009,7 @@ def q143_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         recall_at_k,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     approx = ivf_topk(
         queries, corpus=emb, n_cells=16, n_probe=4, k=5, centroids=_fixed_centroids()
@@ -1101,7 +1096,7 @@ def q150_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         mmr_rerank,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     cand = cosine_topk(queries, corpus=emb, k=8).withColumnRenamed("cos_sim", "rel")
     return mmr_rerank(cand, emb, k=3, lam=0.5)
@@ -1197,7 +1192,7 @@ def q152_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ndcg_at_k,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     approx = ivf_topk(
         queries, corpus=emb, n_cells=16, n_probe=4, k=5, centroids=_fixed_centroids()
@@ -1264,7 +1259,7 @@ def q221_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         hard_negative_sample,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     pos = (
         queries.select(F.col("vec_id").alias("query_id"), F.col("label").alias("ql"))

@@ -17,12 +17,7 @@ from pyspark.sql import functions as F
 
 from mimic_iv_data_pipeline_spark.functions.rounding import dround
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from mimic_iv_data_pipeline_spark.sources.readers import load_table
-
-    return load_table(spark, sf_dir, name)
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 _CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
@@ -89,7 +84,7 @@ def q181_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse; the ordered window runs over distinct values only)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import mann_whitney_u
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.when(F.col("user_id") % 2 == 0, "even").otherwise("odd").alias("g"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
     )
@@ -171,7 +166,7 @@ def q182_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + a |groups|-row re-aggregate)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import anova_oneway
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -233,7 +228,7 @@ def q183_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.sampling import hash_unit
 
     cells = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("event_type", F.hour("ts").cast("long").alias("hr"))
         .distinct()
     )
@@ -301,7 +296,7 @@ def q184_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow bigram build, one pair aggregate, frequent-vocab broadcast)."""
     from mimic_iv_data_pipeline_spark.operators.text import pmi_collocations
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     out = pmi_collocations(docs, "text", min_count=5, top_k=100)
     return out.select(
         "w1", "w2", "n_pair", "n_w1", "n_w2", dround("pmi", 6).alias("pmi")
@@ -353,7 +348,7 @@ def q185_item_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         item_cooccurrence_topk,
     )
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("b"), (F.col("l_partkey") % 100).alias("i")
     )
     out = item_cooccurrence_topk(li, "b", "i", k=5, min_count=5)
@@ -409,7 +404,7 @@ def q186_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier-edge equi-join + one anti-join, localCheckpoint-ed)."""
     from mimic_iv_data_pipeline_spark.operators.graph import bfs_levels
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_quantity") == 1).select(
         (F.col("l_suppkey") % 200).alias("src"),
         (F.col("l_partkey") % 200).alias("dst"),
@@ -452,7 +447,7 @@ def q187_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear per key, bitwise engine-portable)."""
     from mimic_iv_data_pipeline_spark.operators.windows import holt_linear
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
     out = holt_linear(
         ev, "user_id", "ts", "value", alpha=0.5, beta=0.25, tie_break="event_id"
     )
@@ -506,7 +501,7 @@ def q188_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed aggregates)."""
     from mimic_iv_data_pipeline_spark.operators.windows import sessionize
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     sess = sessionize(ev, "user_id", "ts", gap_seconds=1800, tie_break="event_id")
     per_session = sess.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -583,7 +578,7 @@ def q189_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.graph import pagerank
     from mimic_iv_data_pipeline_spark.operators.text import tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(tokens(F.col("text")).alias("__w"))
     pairs = (
         toks.select(
@@ -669,7 +664,7 @@ def q190_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, micro-nat integer scoring)."""
     from mimic_iv_data_pipeline_spark.operators.text import naive_bayes_scores
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return naive_bayes_scores(docs, "doc_id", "text", "lang", alpha=1.0)
 
 
@@ -708,7 +703,7 @@ def q191_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over the |users| relation)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import rfm_scores
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
@@ -771,7 +766,7 @@ def q192_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue (operators/temporal.py:seasonal_decompose)."""
     from mimic_iv_data_pipeline_spark.operators.temporal import seasonal_decompose
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
             "event_type",
@@ -855,7 +850,7 @@ def q193_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window + one aggregate)."""
     from mimic_iv_data_pipeline_spark.operators.windows import attribute_revenue
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
         "event_type",
@@ -938,7 +933,7 @@ def q194_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse + distinct-values window)."""
     from mimic_iv_data_pipeline_spark.operators.mlprep import best_split
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_quantity",
         (F.col("l_returnflag") == "R").cast("int").alias("y"),
     )
@@ -988,7 +983,7 @@ def q195_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast)."""
     from mimic_iv_data_pipeline_spark.operators.mlprep import woe_iv
 
-    od = _t(spark, sf_dir, "orders").select(
+    od = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         (F.col("o_custkey") % 3 == 0).cast("int").alias("y"),
     )
@@ -1054,7 +1049,7 @@ def q196_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
         isotonic_calibration,
     )
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.floor("value").cast("long").alias("s"),
         F.when(F.col("event_id") % 100 < F.floor("value"), 1)
         .otherwise(0)
@@ -1122,7 +1117,7 @@ def q197_smd_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     one multi-covariate exact-sum aggregate)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import smd_balance
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.when(F.col("user_id") % 2 == 0, "even").otherwise("odd").alias("g"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
         F.hour("ts").cast("long").alias("hr"),
@@ -1193,7 +1188,7 @@ def q198_epi_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/aggregates.py:epi_2x2 — one conditional aggregate)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import epi_2x2
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_discount") > 0.05).cast("int").alias("e"),
         (F.col("l_returnflag") == "R").cast("int").alias("o"),
     )
@@ -1276,7 +1271,7 @@ def q199_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type daily revenue (operators/windows.py:forecast_backtest)."""
     from mimic_iv_data_pipeline_spark.operators.windows import forecast_backtest
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
             "event_type",
@@ -1343,7 +1338,7 @@ def q200_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge⨝distance join + two min-aggregates per round)."""
     from mimic_iv_data_pipeline_spark.operators.graph import shortest_paths
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = li.filter(
         (F.col("l_suppkey") % 200) != (F.col("l_partkey") % 200)
     ).select(
@@ -1397,7 +1392,7 @@ def q201_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, arithmetic digit extraction)."""
     from mimic_iv_data_pipeline_spark.operators.profiling import benford_digit_test
 
-    od = _t(spark, sf_dir, "orders").select(
+    od = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"), F.col("o_totalprice").alias("v")
     )
     out = benford_digit_test(od, "v", group_by="grp")
@@ -1444,7 +1439,7 @@ def q202_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed aggregate for all half-lives)."""
     from mimic_iv_data_pipeline_spark.operators.mlprep import time_decay_features
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
@@ -1493,7 +1488,7 @@ def q203_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join + exact haversine, no cross join)."""
     from mimic_iv_data_pipeline_spark.operators.geo import radius_join
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         (52.0 + (F.col("c_custkey") % 100).cast("double") / 1000.0).alias("lat"),
         (
@@ -1551,7 +1546,7 @@ def q204_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id survivorship (plans/mdm.py:golden_records)."""
     from mimic_iv_data_pipeline_spark.plans.mdm import golden_records
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
         "c_nationkey",
@@ -1617,7 +1612,7 @@ def q205_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         concentration_metrics,
     )
 
-    od = _t(spark, sf_dir, "orders").select(
+    od = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("cents"),
     )
@@ -1712,8 +1707,8 @@ def q206_weibull_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         kaplan_meier,
     )
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     ship = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("s"))
     base = orders.join(ship, orders["o_orderkey"] == ship["l_orderkey"]).select(
         "o_orderpriority",
@@ -1793,7 +1788,7 @@ def q207_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     both directions + one keyed rank window)."""
     from mimic_iv_data_pipeline_spark.operators.geo import geo_knn
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         (52.0 + (F.col("c_custkey") % 100).cast("double") / 1000.0).alias("lat"),
         (
@@ -1859,7 +1854,7 @@ def q208_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     |groups|-row relation, broadcast pair join)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import welch_t_pairs
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
     )
@@ -1930,7 +1925,7 @@ def q210_geo_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative connected components)."""
     from mimic_iv_data_pipeline_spark.operators.geo import geo_clusters
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
+    cust = load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey AS id",
         "52.0D + CAST(c_custkey % 300 % 20 AS DOUBLE) * 0.01D"
         " + CAST(c_custkey div 300 AS DOUBLE) * 1e-06D AS lat",
@@ -1977,7 +1972,7 @@ def q211_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     count frames over one sort)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import trimmed_mean
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
@@ -2035,7 +2030,7 @@ def q213_cmh_pooled_or(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to |strata| rows, exact integral stratum terms)."""
     from mimic_iv_data_pipeline_spark.operators.aggregates import cmh_pooled_or
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 4).alias("s"),
         (F.col("event_id") % 2).cast("int").alias("e"),
         (F.col("value") > 50.0).cast("int").alias("y"),
@@ -2096,7 +2091,7 @@ def q214_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         spearman_by_group,
     )
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("x"),
         (F.unix_timestamp("o_orderdate") / F.lit(86400))
@@ -2141,7 +2136,7 @@ def q215_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_percentiles,
     )
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),

@@ -19,14 +19,9 @@ from mimic_iv_data_pipeline_spark.operators.temporal import (
 )
 from mimic_iv_data_pipeline_spark.operators.pivot import pivot_features
 from mimic_iv_data_pipeline_spark.queries import register
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from mimic_iv_data_pipeline_spark.sources.readers import load_table
-
-    return load_table(spark, sf_dir, name)
 
 
 # --- q29: tumbling-window bucket aggregation (T3 — smooth_meds) ------------
@@ -45,7 +40,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q29_bucketize_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.withColumn(
             "bucket", F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss")
@@ -73,7 +68,7 @@ def q29_bucketize_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q30_bucketize_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     hours = e.withColumn(
         "t",
         hours_between(F.col("ts"), F.lit("2024-01-01 00:00:00").cast("timestamp")),
@@ -111,7 +106,7 @@ def q30_bucketize_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q31_dense_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     anchors = e.select("user_id").distinct().withColumn("grid_len", F.lit(720))
     grid = densify_time_grid(anchors, "user_id", "grid_len", time_col="t")
     counts = (
@@ -143,7 +138,7 @@ def q31_dense_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q32_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select("user_id", "event_type", "value")
+    e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
     out = pivot_features(
         e,
         index_cols=["user_id"],
@@ -174,7 +169,7 @@ def q32_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q33_event_time_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
+    e = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     anchored = e.withColumn(
         "first_ts", F.min("ts").over(Window.partitionBy("user_id"))
     )
@@ -231,7 +226,7 @@ def q172_merge_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, no interval self-join)."""
     from mimic_iv_data_pipeline_spark.operators.temporal import merge_intervals
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(F.col("ts")).alias("s"),
         (
@@ -276,7 +271,7 @@ def q173_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/windows.py:ewma — hash-bucketed applyInPandas, linear per key)."""
     from mimic_iv_data_pipeline_spark.operators.windows import ewma
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
     out = ewma(ev, "user_id", "ts", "value", alpha=0.25, tie_break="event_id")
     return out.select("user_id", "event_id", dround("ewma", 6).alias("ewma_val"))
 
@@ -314,7 +309,7 @@ def q174_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/windows.py:cusum — two window passes, no recurrence)."""
     from mimic_iv_data_pipeline_spark.operators.windows import cusum
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
         "event_id",

@@ -27,10 +27,7 @@ from mimic_iv_data_pipeline_spark.operators.text import (
     with_quality_metrics,
 )
 from mimic_iv_data_pipeline_spark.queries import register
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from mimic_iv_data_pipeline_spark.sources.readers import load_table
 
 
 # --- q34: exact dedup via content digest -----------------------------------
@@ -42,7 +39,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q34_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_dedup_groups(_docs(spark, sf_dir), "doc_id")
+    return exact_dedup_groups(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
 # --- q35: token counting ----------------------------------------------------
@@ -57,7 +54,7 @@ def q34_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q35_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -88,7 +85,7 @@ def q35_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q36_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = with_quality_metrics(_docs(spark, sf_dir))
+    out = with_quality_metrics(load_table(spark, sf_dir, "documents"))
     return out.select(
         "doc_id", "n_chars_m", "n_tokens", "mean_token_len", "alpha_ratio", "stopword_ratio"
     )
@@ -127,7 +124,7 @@ def _lang_oracle() -> str:
 
 @register("q37_lang_id", oracle=_lang_oracle())
 def q37_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = predict_language(_docs(spark, sf_dir))
+    out = predict_language(load_table(spark, sf_dir, "documents"))
     return out.select("doc_id", "lang", "pred_lang")
 
 
@@ -140,7 +137,7 @@ def q37_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q38_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
 
 
@@ -171,7 +168,8 @@ def q38_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q39_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), "doc_id", n=3, threshold=0.2)
+    docs = load_table(spark, sf_dir, "documents")
+    return ngram_jaccard_pairs(docs, "doc_id", n=3, threshold=0.2)
 
 
 # --- q40: MinHash + LSH near-dup candidates (rows-only: xxhash64 has no
@@ -180,7 +178,8 @@ def q39_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q40_minhash_lsh")
 def q40_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(
-        _docs(spark, sf_dir), "doc_id", n=3, num_hashes=64, bands=16, verify_threshold=0.2
+        load_table(spark, sf_dir, "documents"), "doc_id",
+        n=3, num_hashes=64, bands=16, verify_threshold=0.2,
     )
 
 
@@ -188,7 +187,7 @@ def q40_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-verified under the fixed md5 family by q131) ----------------------
 @register("q41_simhash")
 def q41_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash(_docs(spark, sf_dir), "doc_id")
+    return simhash(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
 # --- q128: MinHash+LSH with the fixed md5 hash family (full hash oracle) ----
@@ -266,7 +265,7 @@ def q128_minhash_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     all differentially verified (q40's xxhash64 production path stays
     rows-only by necessity)."""
     return minhash_lsh_pairs(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents"),
         "doc_id",
         n=3,
         num_hashes=64,
@@ -322,7 +321,7 @@ def q76_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE computing min-reachable-id per node."""
     from mimic_iv_data_pipeline_spark.operators.graph import connected_components
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "doc_id", n=3, threshold=0.2)
     cc = connected_components(
         pairs.select("id_a", "id_b"), nodes=docs.select("doc_id")
@@ -367,7 +366,7 @@ def q77_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram LM, mean log-prob + perplexity per document."""
     from mimic_iv_data_pipeline_spark.operators.text import bigram_lm_scores
 
-    return bigram_lm_scores(_docs(spark, sf_dir), "doc_id")
+    return bigram_lm_scores(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
 # --- q92: edit-distance fuzzy self-join (SymSpell deletion blocking) --------
@@ -395,7 +394,7 @@ def q92_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``q92_edit_distance_nocap``) so the cap's cost stays measured."""
     from mimic_iv_data_pipeline_spark.operators.fuzzy import edit_distance_join
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     return edit_distance_join(cust, "c_custkey", "c_name", max_dist=1, max_bucket=2_000)
 
 
@@ -424,7 +423,7 @@ def q92_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q99_edit_distance_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.fuzzy import edit_distance_join
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     s = cust.select(
         F.col("c_custkey").alias("id"),
         F.substring(
@@ -474,7 +473,7 @@ def q108_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; the scoring plan is identical)."""
     from mimic_iv_data_pipeline_spark.operators.text import kneser_ney_scores
 
-    return kneser_ney_scores(_docs(spark, sf_dir), "doc_id")
+    return kneser_ney_scores(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
 # --- q109: sentence segmentation stats --------------------------------------
@@ -498,7 +497,7 @@ def q108_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q109_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.text import sentence_stats
 
-    return sentence_stats(_docs(spark, sf_dir), "doc_id")
+    return sentence_stats(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
 # --- q110: Zipf slope per source --------------------------------------------
@@ -523,7 +522,7 @@ def q109_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q110_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.text import zipf_slope
 
-    return zipf_slope(_docs(spark, sf_dir), "source", max_rank=1000)
+    return zipf_slope(load_table(spark, sf_dir, "documents"), "source", max_rank=1000)
 
 
 # --- q111: per-doc token entropy --------------------------------------------
@@ -546,7 +545,7 @@ def q110_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q111_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.text import token_entropy
 
-    return token_entropy(_docs(spark, sf_dir), "doc_id")
+    return token_entropy(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
 # --- q112: TF-IDF cosine near-topic pairs -----------------------------------
@@ -602,7 +601,7 @@ def q112_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.filter(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
     )
-    docs = _docs(spark, sf_dir).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(
             F.size(toks) >= 2,
@@ -656,7 +655,7 @@ def q113_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mimic_iv_data_pipeline_spark.operators.retrieval import bm25_search
 
     return bm25_search(
-        _docs(spark, sf_dir), ["hash", "join", "spark"], "doc_id", top_k=20
+        load_table(spark, sf_dir, "documents"), ["hash", "join", "spark"], "doc_id", top_k=20
     )
 
 
@@ -713,7 +712,7 @@ def q120_clean_web_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own."""
     from mimic_iv_data_pipeline_spark.operators.text import clean_web_text
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.lit('<html><script type="x">junk();</script><p class="c">'),
         F.col("text"),
@@ -756,7 +755,7 @@ def q121_doc_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         embed_hashed_projection,
     )
 
-    emb = embed_hashed_projection(_docs(spark, sf_dir), "doc_id", "text", dims=8)
+    emb = embed_hashed_projection(load_table(spark, sf_dir, "documents"), "doc_id", "text", dims=8)
     return emb.select(
         "doc_id", F.posexplode("embedding").alias("d", "__v")
     ).select("doc_id", F.col("d").cast("long").alias("d"), dround(F.col("__v"), 6).alias("val"))
@@ -795,5 +794,5 @@ def q131_simhash_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Note the occurrence semantics: contributions count every token
     OCCURRENCE (no distinct) — the twin unnests without dedup."""
     return simhash(
-        _docs(spark, sf_dir), "doc_id", bits=16, token_hash="md5"
+        load_table(spark, sf_dir, "documents"), "doc_id", bits=16, token_hash="md5"
     ).withColumnRenamed("doc", "doc_id")

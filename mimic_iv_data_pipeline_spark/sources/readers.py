@@ -10,6 +10,13 @@ On Spark: S2 disappears entirely (partitioned scans bound memory), and
 S1/S3/S8 are one-liner declarative reads with *explicit* schemas — never
 ``inferSchema`` in production, so the scan is single-pass and the plan's
 ``ReadSchema`` only carries the projected columns.
+
+``load_table`` is the one reader for the registered queries'
+path-addressed testdata tables (``queries/`` calls nothing else). A raw
+``spark.read.parquet`` starts a schema-inference job on every build of
+the query that holds it; ``load_table`` pays that job once per table
+per session through the schema catalog below, and sends ``events``
+through the nanos/NTZ timestamp shim.
 """
 
 from __future__ import annotations
@@ -21,27 +28,27 @@ from pyspark.sql import types as T
 
 # In-process parquet SCHEMA catalog.
 # ``spark.read.parquet`` without a schema re-resolves the datasource and
-# re-reads a file footer on the DRIVER on every call — measured ~60 ms
-# per read here, paid once per table per query. Production engines put
-# table schemas in a catalog (metastore) precisely so per-query reads
-# are schema-full; this dict is that catalog for the path-addressed
-# testdata layout. It holds ONLY StructType metadata — never data, rows
-# or plans — and self-invalidates when the file changes (key includes
-# size + mtime_ns).
+# runs a footer-reading Spark job on every call — 80-100 ms per read at
+# sf0.001 on a 4-core host, against 17-31 ms for a catalogued one.
+# Production engines put table schemas in a catalog (metastore)
+# precisely so per-query reads are schema-full; this dict is that
+# catalog for the path-addressed testdata layout. It holds ONLY
+# StructType metadata — never data, rows or plans — and self-invalidates
+# when the file changes (key includes size + mtime_ns).
 _SCHEMA_CATALOG: dict[tuple[str, int, int], T.StructType] = {}
 
 
-def _catalog_schema(spark: SparkSession, path: str) -> T.StructType | None:
+def _scan(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan with the catalogued schema, inferred on first use."""
     try:
         st = os.stat(path)
     except OSError:
-        return None  # glob/remote path — let Spark resolve it
+        return spark.read.parquet(path)  # glob/remote path — let Spark resolve it
     key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
-    schema = _SCHEMA_CATALOG.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CATALOG[key] = schema
-    return schema
+    if key not in _SCHEMA_CATALOG:
+        _SCHEMA_CATALOG[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMA_CATALOG[key]).parquet(path)
+
 
 TESTDATA_TABLES = (
     "region",
@@ -57,7 +64,7 @@ TESTDATA_TABLES = (
 )
 
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events scan, tolerant of nanosecond parquet timestamps.
 
     The driver's events table stores ``ts`` as parquet TIMESTAMP(NANOS),
@@ -70,15 +77,9 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
     # schema catalog: inferred AFTER the nanos shim conf is set, so the
     # cached StructType reflects the same reading the inference did
-    schema = _catalog_schema(spark, path)
-    raw = (
-        spark.read.schema(schema).parquet(path)
-        if schema is not None
-        else spark.read.parquet(path)
-    )
+    raw = _scan(spark, f"{sf_dir}/events.parquet")
     ts_type = dict(raw.dtypes).get("ts")
     if ts_type == "bigint":  # TIMESTAMP(NANOS) read as long under the shim
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -92,14 +93,18 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Single-table loader; routes ``events`` through the nanos shim."""
+    """Read testdata table ``name`` under ``sf_dir`` with its catalogued schema.
+
+    The one table reader for registered queries. A raw
+    ``spark.read.parquet`` infers the schema with a Spark job on every
+    call, so a query holding one starts a job each time it is built;
+    here the inferred schema is cached per file (``_scan``) and later
+    reads start none. ``events`` goes through the nanos/NTZ shim
+    (``_read_events``), so every query sees ``ts`` as a timestamp.
+    """
     if name == "events":
-        return read_events(spark, sf_dir)
-    path = f"{sf_dir}/{name}.parquet"
-    schema = _catalog_schema(spark, path)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    return spark.read.parquet(path)
+        return _read_events(spark, sf_dir)
+    return _scan(spark, f"{sf_dir}/{name}.parquet")
 
 
 def read_csv_gz(

@@ -106,14 +106,11 @@ def compare(base: dict, cur: dict) -> tuple[list[str], list[str]]:
         if row.get("error"):
             drift.append(f"{name}: fails to plan — {row.get('msg')}")
             continue
-        for k in DRIFT_KEYS:
-            if row.get(k, 0) > b.get(k, 0):
-                drift.append(
-                    f"{name}: {k} {b.get(k, 0)} -> {row[k]}"
-                )
         for k in COUNTERS:
-            if k not in DRIFT_KEYS and row.get(k, 0) != b.get(k, 0):
-                info.append(f"{name}: {k} {b.get(k, 0)} -> {row.get(k, 0)}")
+            old, new = b.get(k, 0), row.get(k, 0)
+            if old != new:
+                rise = k in DRIFT_KEYS and new > old
+                (drift if rise else info).append(f"{name}: {k} {old} -> {new}")
         if "build_jobs" not in b:
             if row.get("build_jobs"):
                 info.append(f"{name}: build_jobs {row['build_jobs']} (no baseline count)")

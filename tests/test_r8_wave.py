@@ -113,53 +113,6 @@ def test_splice_readme_malformed_section_raises_clearly():
         rs.splice_readme(broken, SECTION)
 
 
-# --- bench_compare.compare (pure function) -----------------------------
-
-def _load_bench_compare():
-    import importlib.util
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        "bench_compare.py",
-    )
-    spec = importlib.util.spec_from_file_location("bench_compare", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_bench_compare_divides_out_host_contention():
-    bc = _load_bench_compare()
-    old = {"queries": {"q1": 1.0}, "canary_sec": 0.365, "value": 1.0}
-    # 1.39x raw slowdown entirely explained by a 1.39x slower canary
-    new = {"queries": {"q1": 1.39}, "canary_sec": 0.507, "value": 1.39}
-    res = bc.compare(old, new, gate_ratio=1.3, gate_abs=0.2)
-    row = res["rows"][0]
-    assert row["raw_ratio"] == pytest.approx(1.39)
-    assert row["adj_ratio"] == pytest.approx(1.0, abs=0.01)
-    assert not res["flagged"]
-
-
-def test_bench_compare_flags_real_regression_even_on_contended_host():
-    bc = _load_bench_compare()
-    old = {"queries": {"q1": 1.0}, "canary_sec": 0.4, "value": 1.0}
-    # canary says host is 1.1x slower, but the query is 2x slower
-    new = {"queries": {"q1": 2.0}, "canary_sec": 0.44, "value": 2.0}
-    res = bc.compare(old, new, gate_ratio=1.3, gate_abs=0.2)
-    assert res["flagged"] == ["q1"]
-
-
-def test_bench_compare_unadjusted_without_canary():
-    bc = _load_bench_compare()
-    old = {"queries": {"q1": 1.0}, "value": 1.0}
-    new = {"queries": {"q1": 1.2}, "canary_sec": 0.5, "value": 1.2}
-    res = bc.compare(old, new, gate_ratio=1.3, gate_abs=0.2)
-    assert res["canary_ratio"] == 1.0
-    assert res["rows"][0]["adj_ratio"] == pytest.approx(1.2)
-
-
 def test_pq_rejects_mismatched_codebook_dims(spark):
     """Codebooks trained for a smaller dimensionality must raise, not
     silently score only the first m*dsub dims (r8 self-review)."""
@@ -208,68 +161,3 @@ def test_connected_components_local_contract_parity(spark, driver_cap):
     }
     assert contracted == base
     assert contracted[40] == 0 and contracted[999] == 999
-
-
-# --- plan_inventory.compare (pure function) ----------------------------
-
-def _load_plan_inventory():
-    import importlib.util
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        "plan_inventory.py",
-    )
-    spec = importlib.util.spec_from_file_location("plan_inventory", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_plan_inventory_flags_only_increases_in_drift_keys():
-    pi = _load_plan_inventory()
-    base = {"q1": {"exchanges": 2, "python_nodes": 0, "cartesian": 0,
-                   "broadcasts": 1, "smj": 1, "bhj": 0}}
-    cur = {"q1": {"exchanges": 3, "python_nodes": 1, "cartesian": 0,
-                  "broadcasts": 0, "smj": 0, "bhj": 1}}
-    drift, info = pi.compare(base, cur)
-    assert any("exchanges 2 -> 3" in d for d in drift)
-    assert any("python_nodes 0 -> 1" in d for d in drift)
-    # join-mix / broadcast changes are informational, not drift
-    assert not any("smj" in d or "bhj" in d or "broadcasts" in d for d in drift)
-    assert any("smj" in i for i in info)
-
-
-def test_plan_inventory_improvements_and_new_queries_are_not_drift():
-    pi = _load_plan_inventory()
-    base = {"q1": {"exchanges": 3, "python_nodes": 1, "cartesian": 0,
-                   "broadcasts": 0, "smj": 0, "bhj": 0}}
-    cur = {"q1": {"exchanges": 2, "python_nodes": 0, "cartesian": 0,
-                  "broadcasts": 0, "smj": 0, "bhj": 0},
-           "q2": {"exchanges": 9, "python_nodes": 0, "cartesian": 0,
-                  "broadcasts": 0, "smj": 0, "bhj": 0}}
-    drift, info = pi.compare(base, cur)
-    assert not drift
-    assert any("NEW query q2" in i for i in info)
-
-
-def test_plan_inventory_plan_error_is_drift():
-    pi = _load_plan_inventory()
-    base = {"q1": {"exchanges": 1, "python_nodes": 0, "cartesian": 0,
-                   "broadcasts": 0, "smj": 0, "bhj": 0}}
-    cur = {"q1": {"error": 1, "msg": "boom"}}
-    drift, _ = pi.compare(base, cur)
-    assert drift and "fails to plan" in drift[0]
-
-
-def test_bench_compare_uses_worst_of_start_end_canary():
-    bc = _load_bench_compare()
-    old = {"queries": {"q1": 1.0}, "canary_sec": 0.5, "value": 1.0}
-    # start canary looks calm but the end canary caught the burst
-    new = {"queries": {"q1": 1.5}, "canary_sec": 0.5, "canary_end_sec": 0.75,
-           "value": 1.5}
-    res = bc.compare(old, new, gate_ratio=1.3, gate_abs=0.2)
-    assert res["canary_ratio"] == pytest.approx(1.5)
-    assert res["rows"][0]["adj_ratio"] == pytest.approx(1.0)
-    assert not res["flagged"]

@@ -356,3 +356,32 @@ def test_every_pin_goes_through_materialize():
         "pins outside engine.materialize (use df.transform(materialize), or "
         f"drop the pin if the relation has one consumer): {found}"
     )
+
+
+def test_every_query_reads_through_load_table():
+    """``sources.readers.load_table`` is the registered queries' only
+    table reader. A raw ``spark.read`` skips the schema catalog, so the
+    query starts a schema-inference job every time it is built, and an
+    ``events`` read skips the nanos/NTZ timestamp shim."""
+    import ast
+
+    readers = "mimic_iv_data_pipeline_spark.sources.readers"
+    found = []
+    for path in sorted((REPO / "mimic_iv_data_pipeline_spark" / "queries").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                bad = [".read"]
+            elif isinstance(node, ast.ImportFrom) and node.module == readers:
+                bad = [f"imports {a.name}" for a in node.names if a.name != "load_table"]
+            else:
+                continue
+            found += [f"{path.relative_to(REPO)}:{node.lineno} {b}" for b in bad]
+    assert not found, f"table reads that bypass load_table: {found}"
+
+
+def test_query_build_starts_no_job_once_catalogued(spark, sf_smoke, jobs_started):
+    """Once a table's schema is catalogued, building a query over it
+    starts no Spark job (q84 reads ``documents``)."""
+    q84 = all_queries()["q84_nfc_normalize"]
+    q84(spark, sf_smoke)  # catalogues the schema, once
+    assert jobs_started(lambda: q84(spark, sf_smoke)) == []
